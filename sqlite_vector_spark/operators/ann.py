@@ -34,6 +34,7 @@ from pyspark.sql import Column, DataFrame
 
 from sqlite_vector_spark.functions.distance import EPS_SNAP, batch_matrix, distance
 from sqlite_vector_spark.operators.search import full_scan
+from sqlite_vector_spark.operators.topk import topk_per_key
 from sqlite_vector_spark.types import Metric
 
 
@@ -594,20 +595,8 @@ def ivf_knn_join(
     Results are true-domain distances; recall is governed by
     nprobe/C exactly like single-query IVF.
 
-    ``salt``: two-phase top-k for the per-query rank window, identical
-    to knn_join's (r15): the plain window concentrates all of a
-    query's candidates — nprobe/C of the corpus — onto ONE partition;
-    Spark's WindowGroupLimit bounds what each map task emits to k
-    rows per query, but the reduce side still funnels (#map tasks x k)
-    rows per query into a single partition at scale. "auto" (default)
-    sizes the salt from Catalyst's corpus estimate (knn_join._auto_salt):
-    None below one partition-budget (local plans unchanged),
-    ceil(size/budget) capped above it. Results identical — any global
-    top-k row is top-k of its (id mod salt) bucket."""
-    from sqlite_vector_spark.operators.knn_join import _auto_salt
-
-    if salt == "auto":
-        salt = _auto_salt(corpus)
+    ``salt``: skew bound of the per-query rank window, see
+    topk.topk_per_key; "auto" sizes it from ``corpus``."""
     assigned = ivf_assign(corpus, vec_col, centroids, id_col=id_col, metric="L2")
     qx = (
         queries.select(
@@ -621,22 +610,8 @@ def ivf_knn_join(
         assigned.join(F.broadcast(qx), "cluster")
         .select("qid", "id", distance(F.col("vec"), F.col("_qv"), metric).alias("distance"))
     )
-    from pyspark.sql import Window
-
-    if salt is not None and salt > 1:
-        w1 = Window.partitionBy("qid", F.pmod(F.col("id"), F.lit(int(salt)))).orderBy(
-            F.col("distance").asc(), F.col("id").asc()
-        )
-        scored = (
-            scored.withColumn("__r1", F.row_number().over(w1))
-            .where(F.col("__r1") <= k)
-            .drop("__r1")
-        )
-    w = Window.partitionBy("qid").orderBy(F.col("distance").asc(), F.col("id").asc())
-    return (
-        scored.select("qid", "id", "distance", F.row_number().over(w).alias("rank"))
-        .where(F.col("rank") <= k)
-    )
+    order = [F.col("distance").asc(), F.col("id").asc()]
+    return topk_per_key(scored, ["qid"], order, k, salt=salt, size_from=corpus)
 
 
 def ivf_assignment_stats(

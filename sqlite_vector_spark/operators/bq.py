@@ -31,6 +31,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
 from sqlite_vector_spark.functions.distance import batch_matrix
+from sqlite_vector_spark.operators.topk import topk_per_key
 
 
 def _n_words(dim: int) -> int:
@@ -657,7 +658,8 @@ def bq_knn_join(
     m band rows in-plan (the persisted analog is an exploded table
     partitionBy(band)); candidates = band collisions only; one
     Hamming fold per collision, min-agg collapses multi-band hits,
-    rank window (WindowGroupLimit) keeps k per query.
+    rank window keeps k per query (topk.topk_per_key, salt sized from
+    ``codes_df``).
 
     ``planes``: SimHash-plane projected codes instead of raw
     axis-aligned sign bits — the fix for correlated/biased lanes,
@@ -681,8 +683,6 @@ def bq_knn_join(
         raise ValueError(
             f"projected join: dim must equal the plane count, got dim={dim}, p={len(planes)}"
         )
-    from pyspark.sql import Window
-
     q_code = (
         _project_code_col(F.col(q_vec), planes, center, encode_backend)
         if planes is not None
@@ -701,41 +701,8 @@ def bq_knn_join(
         "qid", "id", hamming_pair_col("bits", "qbits").alias("ham")
     )
     scored = cand.groupBy("qid", "id").agg(F.min("ham").alias("hamming"))
-    scored = _salted_hamming_topk(scored, k, codes_df)
-    w_rank = Window.partitionBy("qid").orderBy(F.col("hamming").asc(), F.col("id").asc())
-    return (
-        scored.select("qid", "id", "hamming", F.row_number().over(w_rank).alias("rank"))
-        .where(F.col("rank") <= k)
-    )
-
-
-def _salted_hamming_topk(scored: DataFrame, k: int, size_from: DataFrame) -> DataFrame:
-    """Phase-1 of the two-phase per-query top-k for the MIH joins
-    (r15, the knn_join._auto_salt contract): the plain rank window
-    funnels every distinct band-collision candidate of a query into
-    one partition — at band_bits=16 a uniform corpus still leaves
-    ~corpus/65536 candidates per (query, band), corpus-proportional.
-    Above one partition-budget of ``size_from`` (Catalyst estimate;
-    None/local stays unsalted so local plans are byte-identical), a
-    local top-k within (qid, id mod salt) bounds what the final
-    window's partition receives to salt x k rows per query. Any
-    global top-k row is top-k of its bucket, so results are
-    unchanged."""
-    from pyspark.sql import Window
-
-    from sqlite_vector_spark.operators.knn_join import _auto_salt
-
-    salt = _auto_salt(size_from)
-    if salt is None or salt <= 1:
-        return scored
-    w1 = Window.partitionBy("qid", F.pmod(F.col("id"), F.lit(int(salt)))).orderBy(
-        F.col("hamming").asc(), F.col("id").asc()
-    )
-    return (
-        scored.withColumn("__r1", F.row_number().over(w1))
-        .where(F.col("__r1") <= k)
-        .drop("__r1")
-    )
+    order = [F.col("hamming").asc(), F.col("id").asc()]
+    return topk_per_key(scored, ["qid"], order, k, salt="auto", size_from=codes_df)
 
 
 def bq_band_store(
@@ -838,11 +805,12 @@ def bq_band_join(
     Q x m (b, bv) probe rows (broadcast side), the store side is an
     equi-join on (b, bv) whose ``b`` key enables DYNAMIC partition
     pruning against the ``b=`` directories (plan-pinned in test_bq),
-    then the same min-agg + popcount + rank-window tail. Same result
-    contract as bq_knn_join (complete within Hamming m-1); ``planes``
-    selects projected-code probes for a store built from
-    bq_project_encode codes, and ``encode_backend`` pins the
-    query-side projected encoder exactly as in bq_knn_join.
+    then the same min-agg + popcount + rank-window tail (salt sized
+    from the pruned store scan). Same result contract as bq_knn_join
+    (complete within Hamming m-1); ``planes`` selects projected-code
+    probes for a store built from bq_project_encode codes, and
+    ``encode_backend`` pins the query-side projected encoder exactly
+    as in bq_knn_join.
 
     Scan pruning (r15, axis-aligned path): the query batch is Q rows
     of metadata, so it is collected and encoded DRIVER-SIDE via
@@ -872,8 +840,6 @@ def bq_band_join(
         raise ValueError(
             f"projected join: dim must equal the plane count, got dim={dim}, p={len(planes)}"
         )
-    from pyspark.sql import Window
-
     probe_vals = None
     qenc = None
     if planes is None:
@@ -928,12 +894,8 @@ def bq_band_join(
         "qid", "id", hamming_pair_col("bits", "qbits").alias("ham")
     )
     scored = cand.groupBy("qid", "id").agg(F.min("ham").alias("hamming"))
-    scored = _salted_hamming_topk(scored, k, stored)
-    w_rank = Window.partitionBy("qid").orderBy(F.col("hamming").asc(), F.col("id").asc())
-    return (
-        scored.select("qid", "id", "hamming", F.row_number().over(w_rank).alias("rank"))
-        .where(F.col("rank") <= k)
-    )
+    order = [F.col("hamming").asc(), F.col("id").asc()]
+    return topk_per_key(scored, ["qid"], order, k, salt="auto", size_from=stored)
 
 
 def bq_band_scan(

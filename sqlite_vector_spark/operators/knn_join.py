@@ -39,36 +39,30 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql.functions import broadcast
 
 from sqlite_vector_spark.functions.distance import EPS_SNAP, batch_matrix, distance
+from sqlite_vector_spark.operators.topk import topk_per_key
+from sqlite_vector_spark.sources import plan_size_bytes, widen
 from sqlite_vector_spark.types import Metric, parse_metric
 
 
-#: auto-salt sizing: one window partition holds all of a query's
-#: scored corpus rows, so cap the estimated bytes any single window
-#: partition sees; above the budget the join switches to the two-phase
-#: (salted) window with salt = ceil(size / budget), capped.
-#: Env-overridable (r15) like the other scale gates, so a deployment
-#: can tune the partition budget — and a plan audit can force the
-#: salted shape — without code edits; the default keeps every local
-#: bench plan unchanged.
+#: auto-salt sizing (topk_per_key's salt="auto"): one window partition
+#: holds all of a key's rows, so cap the estimated bytes any single
+#: window partition sees; above the budget the rank window goes
+#: two-phase with salt = ceil(size / budget), capped at SALT_MAX.
+#: Env-overridable so a deployment can tune the budget, and a plan
+#: audit can force the salted shape, without code edits.
 SALT_BYTES_PER_PARTITION = int(
     os.environ.get("SPARK_GRAFT_SALT_BYTES_PER_PARTITION", str(256 << 20))
 )
 SALT_MAX = 64
-#: Catalyst reports spark.sql.defaultSizeInBytes (~Long.MaxValue) for
-#: sources it cannot size (LogicalRDD, localCheckpoint); treat any
-#: estimate that large as UNKNOWN and don't salt on it.
-_SIZE_UNKNOWN = 1 << 59
 
 
 def _auto_salt(corpus: DataFrame) -> int | None:
     """Derive the window salt from Catalyst's size estimate of the
-    corpus plan — no job is run. Returns None (no salting) when the
-    estimate is below one partition-budget or unavailable."""
-    try:
-        size = int(corpus._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    except Exception:
-        return None
-    if size >= _SIZE_UNKNOWN:
+    corpus plan (sources.plan_size_bytes): no job is run. Returns None
+    (no salting) when the estimate is below one partition budget or
+    unavailable."""
+    size = plan_size_bytes(corpus)
+    if size is None:
         return None
     s = -(-size // SALT_BYTES_PER_PARTITION)  # ceil
     return min(SALT_MAX, s) if s >= 2 else None
@@ -87,19 +81,9 @@ def knn_join(
 ) -> DataFrame:
     """Exact top-k per query -> (qid, id, distance, rank).
 
-    ``salt``: two-phase top-k for skew. The plain window shuffles ALL
-    of a query's scored rows to one partition — with few queries over
-    a huge corpus that partition is the whole corpus. Salting first
-    takes a local top-k within (qid, id mod salt) — each bucket holds
-    1/salt of the rows — then the global window ranks only salt x k
-    survivors per query. Results are identical (any global top-k row
-    is also top-k of its bucket), so ``"auto"`` (the default) sizes
-    the salt from Catalyst's corpus size estimate (_auto_salt): no
-    salting under one partition-budget, ceil(size/budget) capped at
-    SALT_MAX above it. Pass an int to pin, None to disable.
+    ``salt``: skew bound of the per-query rank window, see
+    topk.topk_per_key; "auto" sizes it from ``corpus``.
     """
-    if salt == "auto":
-        salt = _auto_salt(corpus)
     q = broadcast(
         queries.where(F.col(query_vec).isNotNull()).select(
             F.col(query_id).cast("bigint").alias("qid"), F.col(query_vec).alias("__qv")
@@ -111,17 +95,8 @@ def knn_join(
     scored = c.crossJoin(q).select(
         "qid", "id", distance(F.col("__cv"), F.col("__qv"), metric).alias("distance")
     )
-    if salt is not None and salt > 1:
-        w1 = Window.partitionBy("qid", F.pmod(F.col("id"), F.lit(int(salt)))).orderBy(
-            F.col("distance").asc(), F.col("id").asc()
-        )
-        scored = scored.withColumn("__r1", F.row_number().over(w1)).where(F.col("__r1") <= k).drop("__r1")
-    w = Window.partitionBy("qid").orderBy(F.col("distance").asc(), F.col("id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("qid", "id", "distance", F.col("rank").cast("int").alias("rank"))
-    )
+    order = [F.col("distance").asc(), F.col("id").asc()]
+    return topk_per_key(scored, ["qid"], order, k, salt=salt, size_from=corpus)
 
 
 def _seq_block_distances(np, mat, qmat, m: Metric):
@@ -194,8 +169,6 @@ def knn_join_blocked(
     qmat = np.asarray([list(v) for _, v in queries_local], dtype=np.float64)  # (Q, dim)
     kk = int(k)
 
-    from sqlite_vector_spark.sources import widen
-
     # widen: the block kernel is CPU-bound per partition; a small
     # single-split scan would run it serial (no-op at real scale)
     src = widen(
@@ -248,12 +221,7 @@ def knn_join_blocked(
         yield pd.DataFrame(rows, columns=["qid", "id", "distance"])
 
     local = src.mapInPandas(part_topk, schema="qid bigint, id bigint, distance double")
-    w = Window.partitionBy("qid").orderBy(F.col("distance").asc(), F.col("id").asc())
-    return (
-        local.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= kk)
-        .select("qid", "id", "distance", F.col("rank").cast("int").alias("rank"))
-    )
+    return topk_per_key(local, ["qid"], [F.col("distance").asc(), F.col("id").asc()], kk)
 
 
 def join_back(results: DataFrame, payload: DataFrame, payload_id: str, result_id: str = "id", how: str = "inner") -> DataFrame:

@@ -53,6 +53,7 @@ from sqlite_vector_spark.functions.distance import (
     squared_l2,
     vector_literal,
 )
+from sqlite_vector_spark.operators.topk import topk_per_key
 from sqlite_vector_spark.types import Metric, parse_metric
 
 Codebooks = Sequence[Sequence[Sequence[float]]]  # [m][ksub][dsub]
@@ -1317,18 +1318,10 @@ def ivf_pq_knn_join(
     of total corpus size in the probe fraction, with per-candidate
     bytes cut by the compression ratio on top.
 
-    ``salt``: two-phase top-k for the rank window, same contract as
-    knn_join / ivf_knn_join (r15): the plain window funnels every
-    candidate of a query into one partition; "auto" sizes from
-    Catalyst's estimate of ``codes_store`` (None below one
-    partition-budget — local plans unchanged). Results identical."""
-    from pyspark.sql import Window
-
+    ``salt``: skew bound of the per-query rank window, see
+    topk.topk_per_key; "auto" sizes it from ``codes_store``."""
     from sqlite_vector_spark.operators.ann import probe_clusters_col
-    from sqlite_vector_spark.operators.knn_join import _auto_salt
 
-    if salt == "auto":
-        salt = _auto_salt(codes_store)
     qx = (
         queries.select(
             F.col(q_id).cast("bigint").alias("qid"),
@@ -1343,17 +1336,5 @@ def ivf_pq_knn_join(
         "id",
         kernel(F.col("_qv"), F.col("cluster"), F.col("codes")).alias("distance"),
     )
-    if salt is not None and salt > 1:
-        w1 = Window.partitionBy("qid", F.pmod(F.col("id"), F.lit(int(salt)))).orderBy(
-            F.col("distance").asc(), F.col("id").asc()
-        )
-        scored = (
-            scored.withColumn("__r1", F.row_number().over(w1))
-            .where(F.col("__r1") <= k)
-            .drop("__r1")
-        )
-    w = Window.partitionBy("qid").orderBy(F.col("distance").asc(), F.col("id").asc())
-    return (
-        scored.select("qid", "id", "distance", F.row_number().over(w).alias("rank"))
-        .where(F.col("rank") <= k)
-    )
+    order = [F.col("distance").asc(), F.col("id").asc()]
+    return topk_per_key(scored, ["qid"], order, k, salt=salt, size_from=codes_store)

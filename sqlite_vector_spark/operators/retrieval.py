@@ -40,6 +40,8 @@ from collections.abc import Sequence
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, Window
 
+from sqlite_vector_spark.operators.topk import topk_per_key
+
 #: classic Robertson/Sparck-Jones constants
 BM25_K1 = 1.2
 BM25_B = 0.75
@@ -326,30 +328,9 @@ def bm25_batch_topk(
         .select("id", F.explode(arr).alias("x"))
         .select(F.col("x.qid").alias("qid"), "id", F.col("x.score").alias("score"))
     )
-    # r15: the exploded frame is |docs| x |queries| rows, so the plain
-    # rank window funnels a full corpus' worth of scored rows into ONE
-    # partition per query at scale — the same shape knn_join's
-    # two-phase salted top-k bounds. Gate on Catalyst's estimate of
-    # the corpus (None locally: plans unchanged); any global top-k row
-    # is top-k of its (id mod salt) bucket, so results are identical.
-    from sqlite_vector_spark.operators.knn_join import _auto_salt
-
-    salt = _auto_salt(docs)
-    if salt is not None and salt > 1:
-        w1 = Window.partitionBy("qid", F.pmod(F.col("id"), F.lit(int(salt)))).orderBy(
-            F.col("score").desc(), F.col("id").asc()
-        )
-        exploded = (
-            exploded.withColumn("__r1", F.row_number().over(w1))
-            .where(F.col("__r1") <= k)
-            .drop("__r1")
-        )
-    w = Window.partitionBy("qid").orderBy(F.col("score").desc(), F.col("id").asc())
-    return (
-        exploded.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("qid", "id", "score", F.col("rank").cast("int").alias("rank"))
-    )
+    # rank window: see topk.topk_per_key; the salt is sized from docs
+    order = [F.col("score").desc(), F.col("id").asc()]
+    return topk_per_key(exploded, ["qid"], order, k, salt="auto", size_from=docs)
 
 
 def rrf_fuse_batch(

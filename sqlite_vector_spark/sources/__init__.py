@@ -83,11 +83,12 @@ def plan_size_bytes(df: DataFrame) -> int | None:
     """Catalyst's size estimate of the optimized plan — plan metadata,
     no job runs. Returns None when the estimate is unavailable or is
     the unknown-size sentinel (spark.sql.defaultSizeInBytes ~
-    Long.MaxValue, reported for LogicalRDD / localCheckpoint sources).
-    The scale-adaptive operators gate on this the way widen() gates on
-    inputFiles(): cheap local-mode behavior below a threshold, the
-    shuffle-bounding shape above it (same estimator knn_join's
-    _auto_salt sizes its two-phase window from)."""
+    Long.MaxValue). On Spark 4.1 parquet scans and localCheckpoint
+    frames (eager or lazy) are sized; a frame built with
+    createDataFrame(rdd, schema) is not. The scale-adaptive operators
+    gate on this the way widen() gates on inputFiles(): cheap
+    local-mode behavior below a threshold, the shuffle-bounding shape
+    above it (knn_join._auto_salt sizes the top-k salt from it too)."""
     try:
         size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
     except Exception:

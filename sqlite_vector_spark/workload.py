@@ -24,6 +24,7 @@ from sqlite_vector_spark.functions.distance import distance, vector_literal
 from sqlite_vector_spark.operators.knn_join import knn_join
 from sqlite_vector_spark.operators.quantize import quantize_codes_column
 from sqlite_vector_spark.operators.search import full_scan, full_scan_stream
+from sqlite_vector_spark.operators.topk import topk_per_key
 from sqlite_vector_spark.sources import plan_size_bytes, table, widen
 
 # ---------------------------------------------------------------- shared constants (oracle.py mirrors these)
@@ -704,23 +705,11 @@ def recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _emb(spark, sf_dir)
     queries = emb.where(F.col("vec_id") < NQ).select(F.col("vec_id").cast("bigint").alias("qid"), F.col("embedding").alias("qvec"))
 
-    w = Window.partitionBy("qid").orderBy(F.col("distance").asc(), F.col("id").asc())
-    # two-phase top-k: local top-k within (qid, id mod SALT) buckets
-    # first, so NQ huge per-query partitions become NQ x SALT small
-    # ones; survivors (SALT x k per query) then take the global rank.
-    # Identical results — any global top-k row is top-k of its bucket.
-    SALT = 16
-    w1 = Window.partitionBy("qid", F.pmod(F.col("id"), F.lit(SALT))).orderBy(
-        F.col("distance").asc(), F.col("id").asc()
-    )
+    order = [F.col("distance").asc(), F.col("id").asc()]
 
-    def topk(scored: DataFrame) -> DataFrame:
-        return (
-            scored.withColumn("__r1", F.row_number().over(w1))
-            .where(F.col("__r1") <= RECALL_K)
-            .withColumn("rn", F.row_number().over(w))
-            .where(F.col("rn") <= RECALL_K)
-        )
+    def topk(scored: DataFrame, keys=("qid",)) -> DataFrame:
+        # fixed salt 16 at any input size; see topk.topk_per_key
+        return topk_per_key(scored, keys, order, RECALL_K, salt=16)
 
     prm = _shared_params(emb)
     est = plan_size_bytes(emb)
@@ -781,18 +770,7 @@ def recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
             .where(F.col("p.keep"))
             .select("qid", "id", F.col("p.arm").alias("arm"), F.col("p.distance").alias("distance"))
         )
-        wa = Window.partitionBy("arm", "qid").orderBy(F.col("distance").asc(), F.col("id").asc())
-        wa1 = Window.partitionBy("arm", "qid", F.pmod(F.col("id"), F.lit(SALT))).orderBy(
-            F.col("distance").asc(), F.col("id").asc()
-        )
-        surv = (
-            arms.withColumn("__r1", F.row_number().over(wa1))
-            .where(F.col("__r1") <= RECALL_K)
-            .withColumn("rn", F.row_number().over(wa))
-            .where(F.col("rn") <= RECALL_K)
-            .select("arm", "qid", "id")
-            .localCheckpoint(eager=True)
-        )
+        surv = topk(arms, ("arm", "qid")).select("arm", "qid", "id").localCheckpoint(eager=True)
         exact = surv.where(F.col("arm") == 0).select("qid", "id")
         approx = surv.where(F.col("arm") == 1).select(
             F.col("qid").alias("aqid"), F.col("id").alias("aid")
@@ -4209,56 +4187,24 @@ def ivf_recall_curve_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pos: 0-based probe position, -1 = cluster not probed (still a
     # pair the exact arm needs). Same true-domain distance expression
     # ivf_knn_join scores with.
-    #
-    # r15 (VERDICT r14 #3): the tier top-K is the knn_join two-phase
-    # SALTED window above one partition-budget of corpus — the plain
-    # (qid, pos) window concentrates the whole corpus x NQ cross
-    # product onto NQ x (max_p+1) partitions at scale (the pos=-1
-    # tier alone holds ~the full corpus per query). Phase 1 takes the
-    # tier top-K within (qid, pos, id mod salt); any global tier
-    # top-K row is top-K of its salt bucket, so phase 2 ranks only
-    # salt x K survivors per tier — results identical (equality
-    # pinned in tests/test_ann.py). _auto_salt sizes from Catalyst's
-    # corpus estimate: None below one budget (local mode unchanged).
-    from sqlite_vector_spark.operators.knn_join import _auto_salt
-
-    tier_salt = _auto_salt(assigned)
-    wt = Window.partitionBy("qid", "pos").orderBy(F.col("distance").asc(), F.col("id").asc())
+    # Tier top-K: see topk.topk_per_key; the salt is sized from the
+    # assigned corpus (pos = -1 alone holds ~the corpus per query).
     scored = assigned.crossJoin(F.broadcast(q2)).select(
         "qid", "id",
         (F.array_position(F.col("_probes"), F.col("cluster")) - F.lit(1)).alias("pos"),
         distance(F.col("vec"), F.col("_qv"), "L2").alias("distance"),
     )
-    if tier_salt is not None and tier_salt > 1:
-        w1 = Window.partitionBy(
-            "qid", "pos", F.pmod(F.col("id"), F.lit(int(tier_salt)))
-        ).orderBy(F.col("distance").asc(), F.col("id").asc())
-        scored = (
-            scored.withColumn("_s1", F.row_number().over(w1))
-            .where(F.col("_s1") <= KNN_K)
-            .drop("_s1")
-        )
+    order = [F.col("distance").asc(), F.col("id").asc()]
     scored = (
-        scored.withColumn("_tr", F.row_number().over(wt))
-        .where(F.col("_tr") <= KNN_K)
-        .drop("_tr")
+        topk_per_key(scored, ["qid", "pos"], order, KNN_K, salt="auto", size_from=assigned)
+        .drop("rank")
         .localCheckpoint(eager=True)
     )
-    we = Window.partitionBy("qid").orderBy(F.col("distance").asc(), F.col("id").asc())
-    exact = (
-        scored.select("qid", "id", F.row_number().over(we).alias("rank"))
-        .where(F.col("rank") <= KNN_K)
-        .select("qid", "id")
-    )
+    exact = topk_per_key(scored, ["qid"], order, KNN_K).select("qid", "id")
     parts = []
     for p in IVF_CURVE:
-        wp = Window.partitionBy("qid").orderBy(F.col("distance").asc(), F.col("id").asc())
-        approx = (
-            scored.where((F.col("pos") >= 0) & (F.col("pos") < F.lit(int(p))))
-            .select("qid", "id", "distance", F.row_number().over(wp).alias("rank"))
-            .where(F.col("rank") <= KNN_K)
-            .select("qid", "id")
-        )
+        probed = scored.where((F.col("pos") >= 0) & (F.col("pos") < F.lit(int(p))))
+        approx = topk_per_key(probed, ["qid"], order, KNN_K).select("qid", "id")
         hits = exact.join(approx, ["qid", "id"], "left_semi")
         parts.append(
             hits.agg(

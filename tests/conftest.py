@@ -7,6 +7,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_SMOKE = "/root/testdata/sf0.001"
 SF_CORRECT = "/root/testdata/sf0.01"
+#: local[N] cores follow SPARK_GRAFT_CPUS; 8 when unset
+CPUS = os.environ.get("SPARK_GRAFT_CPUS", "8")
 
 
 @pytest.fixture(scope="session")
@@ -14,7 +16,7 @@ def spark():
     from pyspark.sql import SparkSession
 
     s = (
-        SparkSession.builder.master("local[8]")
+        SparkSession.builder.master(f"local[{CPUS}]")
         .appName("sqlite-vector-spark-tests")
         .config("spark.sql.shuffle.partitions", "8")
         .config("spark.sql.session.timeZone", "UTC")

@@ -73,12 +73,75 @@ def test_auto_salt_thresholds_and_identical_results(spark, emb):
         assert [tuple(r) for r in salted.orderBy("qid", "rank").collect()] == [
             tuple(r) for r in plain.orderBy("qid", "rank").collect()
         ]
+
+        # Catalyst sizes a localCheckpoint; a createDataFrame(rdd,
+        # schema) frame is unsized and never salts
+        ckpt = emb.select("vec_id", "embedding").localCheckpoint(eager=True)
+        assert kj._auto_salt(ckpt) is not None
+        unsized = spark.createDataFrame(emb.rdd, emb.schema)
+        assert kj._auto_salt(unsized) is None
     finally:
         kj.SALT_BYTES_PER_PARTITION = orig
 
-    # unknown-size sources (localCheckpoint -> LogicalRDD) never salt
-    ckpt = emb.select("vec_id", "embedding").localCheckpoint(eager=True)
-    assert kj._auto_salt(ckpt) is None
+
+def _tiny_join(spark, fn, salt):
+    """Call one of the three salted joins on a 4-dim, 3-row input."""
+    vecs = [(i, [float(i), 0.0, 1.0, float(-i)]) for i in range(3)]
+    queries = spark.createDataFrame(vecs[:1], "qid bigint, qv array<float>")
+    corpus = spark.createDataFrame(vecs, "id bigint, vec array<float>")
+    cents = [[0.0, 0.0, 1.0, 0.0], [2.0, 0.0, 1.0, -2.0]]
+    if fn == "knn_join":
+        return knn_join(queries, corpus, 2, query_vec="qv", corpus_vec="vec", salt=salt)
+    if fn == "ivf_knn_join":
+        from sqlite_vector_spark.operators.ann import ivf_knn_join
+
+        return ivf_knn_join(queries, corpus, cents, 2, salt=salt)
+    from sqlite_vector_spark.operators.pq import ivf_pq_knn_join
+
+    store = spark.createDataFrame(
+        [(i, [0, 1], i % 2) for i in range(3)], "id bigint, codes array<bigint>, cluster int"
+    )
+    books = [[[0.0, 0.0], [1.0, 1.0]], [[0.0, 0.0], [1.0, 1.0]]]
+    return ivf_pq_knn_join(queries, store, cents, books, 2, salt=salt)
+
+
+@pytest.mark.parametrize("salt", ["2", -1, 2.5, True])
+@pytest.mark.parametrize("fn", ["knn_join", "ivf_knn_join", "ivf_pq_knn_join"])
+def test_bad_salt_raises_value_error(spark, fn, salt):
+    """salt accepts only "auto", None or an int >= 1; anything else
+    (a numeric string, a negative, a float, a bool) is rejected while
+    the plan is built, not truncated or silently ignored."""
+    with pytest.raises(ValueError, match="salt"):
+        _tiny_join(spark, fn, salt)
+
+
+def test_topk_per_key_salted_equals_sorted_reference(spark):
+    """topk_per_key on the (arm, qid) two-key shape with a descending
+    order: ties on the score at the k boundary break by id, a group
+    smaller than k keeps all its rows, and salt 3 and no salt both
+    equal a Python sort of each group."""
+    from sqlite_vector_spark.operators.topk import topk_per_key
+
+    k = 3
+    rows = [(a, q, i, float((i * 7 + q) % 5)) for a in (0, 1) for q in (0, 1) for i in range(12)]
+    rows += [(0, 2, 100, 1.0), (0, 2, 101, 1.0)]  # group smaller than k
+    df = spark.createDataFrame(rows, "arm int, qid bigint, id bigint, score double")
+    groups: dict = {}
+    for a, q, i, sc in rows:
+        groups.setdefault((a, q), []).append((sc, i))
+    want = sorted(
+        (a, q, i, sc, r + 1)
+        for (a, q), g in groups.items()
+        for r, (sc, i) in enumerate(sorted(g, key=lambda t: (-t[0], t[1]))[:k])
+    )
+    # the fixture really ties at the boundary: rank k and k+1 share a score
+    g = sorted(groups[(0, 0)], key=lambda t: (-t[0], t[1]))
+    assert g[k - 1][0] == g[k][0]
+    order = [F.col("score").desc(), F.col("id").asc()]
+    for salt in (3, None):
+        got = topk_per_key(df, ["arm", "qid"], order, k, salt=salt)
+        assert got.columns == ["arm", "qid", "id", "score", "rank"]
+        assert sorted(map(tuple, got.collect())) == want
 
 
 def test_router_filtered_knn_join_both_tiers(spark, emb, tmp_path):
