@@ -710,12 +710,9 @@ def ivf_append_with_drift(
     n = int(row["n"])
     if n == 0:
         return IvfDriftReport(0, 0.0, baseline_mean_dist, 0.0, False)
-    from sqlite_vector_spark.sinks import write_partitioned
+    from sqlite_vector_spark.sinks import _relative_drift, write_partitioned
 
     write_partitioned(enriched.drop("_d"), dest, "cluster", mode="append")
     mean_d = float(row["mean_d"])
-    if baseline_mean_dist is None or baseline_mean_dist <= 0.0:
-        drift = 0.0
-    else:
-        drift = max(mean_d / baseline_mean_dist - 1.0, 0.0)
+    drift = _relative_drift(mean_d, baseline_mean_dist)
     return IvfDriftReport(n, mean_d, baseline_mean_dist, drift, drift > drift_threshold)

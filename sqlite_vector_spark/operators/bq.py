@@ -315,15 +315,12 @@ def bq_store_append(
     same frozen-parameter contract as ivf_store_append /
     vector_quantize_update / pq_store_append.
 
-    One pass over the batch (r15): the row count and the per-dim
-    set-bit counts ride the append WRITE as ``observe`` metrics —
-    dim+1 integer aggregates over the packed words — instead of the
-    old localCheckpoint + count job + mapInPandas bit-balance pass
-    (4 jobs and a Python boundary down to an emptiness probe + the
-    write). The bias value is bit-identical: the observed counts are
-    exact int64 sums and the driver finishes with the same NumPy
-    expression bq_bit_bias uses. Very wide codes (dim >
-    ``_OBS_BIAS_MAX_DIM``) keep the O(1)-plan mapInPandas path.
+    One pass over the batch: the row count and the per-dim set-bit
+    counts (dim+1 exact integer aggregates over the packed words) ride
+    the write (sinks.write_observed), and the driver finishes the bias
+    with bq_bit_bias's NumPy expression, so the value is bit-identical.
+    Very wide codes (dim > ``_OBS_BIAS_MAX_DIM``) keep the O(1)-plan
+    path: checkpoint the encoded batch, then one mapInPandas pass.
     ``drift`` is the batch's mean bit bias in excess of
     ``baseline_bit_bias`` (record it at build time via bq_bit_bias);
     crossing ``drift_threshold`` means the frozen per-dim thresholds
@@ -331,20 +328,17 @@ def bq_store_append(
     (embedding_dim_stats means) and rebuild."""
     import numpy as np
 
-    # emptiness probe (limit-1 scan) BEFORE any write: an empty batch
-    # must not commit an empty append (versioned roots would gain a
-    # no-op generation)
-    if new_df.where(F.col(vec_col).isNotNull()).isEmpty():
-        return BqAppendReport(0, 0.0, baseline_bit_bias, 0.0, False)
-    enriched = bq_encode(new_df, vec_col, dim, thresholds, id_col=id_col, backend=backend)
-    obs = None
-    if dim <= _OBS_BIAS_MAX_DIM:
-        from pyspark.sql import Observation
+    from sqlite_vector_spark.sinks import write_observed
 
-        obs = Observation()
+    enriched = bq_encode(new_df, vec_col, dim, thresholds, id_col=id_col, backend=backend)
+    wide = dim > _OBS_BIAS_MAX_DIM
+    exprs = [F.count(F.lit(1)).alias("n")]
+    if wide:
+        enriched = enriched.localCheckpoint(eager=True)
+    else:
         # bit j of the packed code: (bits[w] >> i) & 1 — arithmetic
         # shift is fine, the & 1 keeps only the target bit
-        exprs = [F.count(F.lit(1)).alias("n")] + [
+        exprs += [
             F.sum(
                 F.shiftright(F.element_at(F.col("bits"), j // 64 + 1), j % 64)
                 .bitwiseAND(F.lit(1))
@@ -352,28 +346,17 @@ def bq_store_append(
             ).alias(f"b{j}")
             for j in range(dim)
         ]
-        enriched = enriched.observe(obs, *exprs)
+    got = write_observed(enriched, dest, exprs)
+    if got is None:
+        return BqAppendReport(0, 0.0, baseline_bit_bias, 0.0, False)
+    n = int(got["n"])
+    if wide:
+        bias = bq_bit_bias(enriched, dim)
     else:
-        enriched = enriched.localCheckpoint(eager=True)
-    # versioned roots: append as a new manifest generation — a plain
-    # parquet append would land unreferenced files (silent data loss
-    # at the next vacuum; see versioned.append_versioned)
-    from sqlite_vector_spark.versioned import append_versioned, is_versioned
-
-    if is_versioned(enriched.sparkSession, dest):
-        append_versioned(enriched, dest)
-    else:
-        enriched.write.mode("append").parquet(dest)
-    if obs is not None:
-        got = obs.get
-        n = int(got["n"])
         ones = np.asarray([int(got[f"b{j}"]) for j in range(dim)], dtype=np.int64)
         # same NumPy expression as bq_bit_bias over the same exact
         # integer counts -> bit-identical bias
         bias = float(np.abs(ones / n - 0.5).mean())
-    else:
-        n = enriched.count()
-        bias = bq_bit_bias(enriched, dim)
     # no recorded baseline -> no drift claim (mirrors _pq_append_report:
     # drift is "excess over baseline", and with baseline None the bias
     # itself is still surfaced via mean_bit_bias)
@@ -720,28 +703,11 @@ def bq_band_store(
     skipping on the sorted ``bv`` (PushedFilters) — the persisted
     form of bq_knn_join's in-plan corpus expansion, m x the code
     bytes on disk (16-64 B/row extra at dim 768). Returns the CODE
-    row count, observed on the write itself (r15) so callers that
-    need it (the takedown rebuild arm reports it) don't pay a second
-    full read of the code table."""
-    base = codes_df.where(F.col(bits_col).isNotNull()).select(
-        F.col(id_col).cast("bigint").alias("id"), F.col(bits_col).alias("bits")
-    )
-    from pyspark.sql import Observation
-
-    from sqlite_vector_spark.sinks import write_partitioned
-
-    obs = Observation()
-    # sort_within=["bv"] keeps the min/max row-group skipping
-    # bq_band_scan relies on (the helper prefixes the sort with "b",
-    # the dynamic-partition requirement)
-    write_partitioned(
-        explode_bands(
-            base.observe(obs, F.count(F.lit(1)).alias("n")),
-            F.col("bits"), ["id", "bits"], dim, band_bits,
-        ),
-        dest, "b", sort_within=["bv"],
-    )
-    return int(obs.get["n"])
+    row count, observed on the write (sinks.write_observed) as its
+    band-0 rows — every code row emits exactly one — so callers that
+    need it (the takedown rebuild arm reports it) pay no second read
+    of the code table."""
+    return _write_band_store(codes_df, dim, dest, band_bits, bits_col, id_col, "overwrite")
 
 
 def bq_band_store_append(
@@ -759,30 +725,26 @@ def bq_band_store_append(
     append == rebuild holds exactly — the MIH analog of
     bq_store_append's frozen-threshold contract (bit drift is the
     CODE store's concern; this store derives from codes). One pass
-    over the batch (r15: the code-row count rides the write as an
-    ``observe`` metric behind a limit-1 emptiness probe, replacing
-    the eager localCheckpoint + count pass — no second
-    materialization of the batch in executor memory, same shape as
-    pq_store_append / bq_store_append); the corpus is never re-read.
-    Returns the number of appended code rows."""
-    base = new_codes.where(F.col(bits_col).isNotNull()).select(
+    over the batch, counted like bq_band_store's; the corpus is never
+    re-read. Returns the number of appended code rows."""
+    return _write_band_store(new_codes, dim, dest, band_bits, bits_col, id_col, "append")
+
+
+def _write_band_store(codes_df, dim, dest, band_bits, bits_col, id_col, mode) -> int:
+    from sqlite_vector_spark.sinks import write_observed
+
+    base = codes_df.where(F.col(bits_col).isNotNull()).select(
         F.col(id_col).cast("bigint").alias("id"), F.col(bits_col).alias("bits")
     )
-    if base.isEmpty():
-        return 0
-    from pyspark.sql import Observation
-
-    from sqlite_vector_spark.sinks import write_partitioned
-
-    obs = Observation()
-    write_partitioned(
-        explode_bands(
-            base.observe(obs, F.count(F.lit(1)).alias("n")),
-            F.col("bits"), ["id", "bits"], dim, band_bits,
-        ),
-        dest, "b", mode="append", sort_within=["bv"],
+    # sort_within=["bv"] keeps the min/max row-group skipping
+    # bq_band_scan relies on (the writer prefixes the sort with "b",
+    # the dynamic-partition requirement)
+    got = write_observed(
+        explode_bands(base, F.col("bits"), ["id", "bits"], dim, band_bits), dest,
+        [F.count(F.when(F.col("b") == 0, 1)).alias("n")],
+        mode=mode, partition_col="b", sort_within=["bv"],
     )
-    return int(obs.get["n"])
+    return 0 if got is None else int(got["n"])
 
 
 def bq_band_join(

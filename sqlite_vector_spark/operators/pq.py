@@ -943,11 +943,40 @@ def _pq_append_report(
     baseline: float | None,
     threshold: float,
 ) -> PqAppendReport:
-    if baseline is None or baseline <= 0.0:
-        drift = 0.0
-    else:
-        drift = max(mean_err / baseline - 1.0, 0.0)
+    from sqlite_vector_spark.sinks import _relative_drift
+
+    drift = _relative_drift(mean_err, baseline)
     return PqAppendReport(n, mean_err, baseline, drift, drift > threshold)
+
+
+def _pq_append(
+    df: DataFrame,
+    codebooks: Codebooks,
+    dest: str,
+    baseline: float | None,
+    threshold: float,
+    keep: Sequence[str] = (),
+    partition_col: str | None = None,
+) -> PqAppendReport:
+    """Encode ``df``'s (id, vec, *keep) rows and append (id, codes,
+    *keep) to ``dest``, the count and the mean squared reconstruction
+    error observed on the write (sinks.write_observed)."""
+    from sqlite_vector_spark.sinks import write_observed
+
+    if _pq_backend(codebooks) == "arrow-numpy":
+        codes = pq_encode_arrow_udf(codebooks)(F.col("vec"))
+    else:
+        codes = pq_encode_col(F.col("vec"), codebooks)
+    out = df.select("id", codes.alias("codes"), *keep, "vec").withColumn(
+        "_err", pq_recon_err_arrow_udf(codebooks)(F.col("vec"), F.col("codes"))
+    )
+    got = write_observed(
+        out, dest, [F.count(F.lit(1)).alias("n"), F.avg("_err").alias("e")],
+        partition_col=partition_col, columns=["id", "codes", *keep],
+    )
+    if got is None:
+        return PqAppendReport(0, 0.0, baseline, 0.0, False)
+    return _pq_append_report(int(got["n"]), float(got["e"]), baseline, threshold)
 
 
 def pq_store(
@@ -978,48 +1007,16 @@ def pq_store_append(
     (tests prove it) — same maintenance contract as ivf_store_append /
     vector_quantize_update, completing the ladder's compressed tier.
 
-    One pass over the batch (r15): the count and the
-    reconstruction-error mean ride the WRITE job as an ``observe``
-    metric instead of a separate localCheckpoint + agg pass — the
-    encode and the Arrow recon-err kernel run exactly once, inside
-    the job that appends the codes. ``drift`` compares the batch's
-    mean squared reconstruction error against ``baseline_recon_err``
-    (record it at build time via pq_reconstruction_error); crossing
-    ``drift_threshold`` is the retrain-and-rebuild signal."""
+    One pass over the batch: the count and the reconstruction-error
+    mean ride the write (sinks.write_observed). ``drift`` compares the
+    batch's mean squared reconstruction error against
+    ``baseline_recon_err`` (record it at build time via
+    pq_reconstruction_error); crossing ``drift_threshold`` is the
+    retrain-and-rebuild signal."""
     base = new_df.where(F.col(vec_col).isNotNull()).select(
         F.col(id_col).cast("bigint").alias("id"), F.col(vec_col).alias("vec")
     )
-    # emptiness probe (limit-1 scan) BEFORE any write: an empty batch
-    # must not commit an empty append (versioned roots would gain a
-    # no-op generation)
-    if base.isEmpty():
-        return PqAppendReport(0, 0.0, baseline_recon_err, 0.0, False)
-    if _pq_backend(codebooks) == "arrow-numpy":
-        codes = pq_encode_arrow_udf(codebooks)(F.col("vec"))
-    else:
-        codes = pq_encode_col(F.col("vec"), codebooks)
-    from pyspark.sql import Observation
-
-    obs = Observation()
-    out = (
-        base.select("id", codes.alias("codes"), "vec")
-        .withColumn("_err", pq_recon_err_arrow_udf(codebooks)(F.col("vec"), F.col("codes")))
-        .observe(obs, F.count(F.lit(1)).alias("n"), F.avg("_err").alias("e"))
-        .select("id", "codes")
-    )
-    # versioned roots: append as a new manifest generation (see
-    # versioned.append_versioned — plain appends strand unreferenced
-    # files)
-    from sqlite_vector_spark.versioned import append_versioned, is_versioned
-
-    if is_versioned(out.sparkSession, dest):
-        append_versioned(out, dest)
-    else:
-        out.write.mode("append").parquet(dest)
-    got = obs.get
-    return _pq_append_report(
-        int(got["n"]), float(got["e"]), baseline_recon_err, drift_threshold
-    )
+    return _pq_append(base, codebooks, dest, baseline_recon_err, drift_threshold)
 
 
 def ivf_pq_store_append(
@@ -1043,37 +1040,18 @@ def ivf_pq_store_append(
 
     ``residual=True`` must match the store's build mode — codes then
     quantize (vec - centroid[cluster]) and the reconstruction error is
-    measured on that same residual frame. One batch pass (r15): the
-    count and recon-err mean ride the write job as an ``observe``
-    metric, like pq_store_append."""
+    measured on that same residual frame. One pass over the batch, as
+    in pq_store_append."""
     if residual:
         assigned = ivf_residuals(new_df, vec_col, centroids, id_col=id_col)
     else:
         from sqlite_vector_spark.operators.ann import ivf_assign
 
         assigned = ivf_assign(new_df, vec_col, centroids, id_col=id_col, metric="L2")
-    if assigned.isEmpty():
-        return PqAppendReport(0, 0.0, baseline_recon_err, 0.0, False)
-    if _pq_backend(codebooks) == "arrow-numpy":
-        codes = pq_encode_arrow_udf(codebooks)(F.col("vec"))
-    else:
-        codes = pq_encode_col(F.col("vec"), codebooks)
-    from pyspark.sql import Observation
-
-    obs = Observation()
-    out = (
-        assigned.select("id", codes.alias("codes"), "cluster", "vec")
-        .withColumn("_err", pq_recon_err_arrow_udf(codebooks)(F.col("vec"), F.col("codes")))
-        .observe(obs, F.count(F.lit(1)).alias("n"), F.avg("_err").alias("e"))
-        .select("id", "codes", "cluster")
-    )
-    from sqlite_vector_spark.sinks import write_partitioned
-
-    write_partitioned(out, dest, "cluster", mode="append")
-    got = obs.get
-    return _pq_append_report(
-        int(got["n"]), float(got["e"]), baseline_recon_err, drift_threshold
-    )
+    # _err rides the cluster shuffle: the observe reads it in the
+    # write's result stage, and the files never hold it
+    return _pq_append(assigned, codebooks, dest, baseline_recon_err,
+                      drift_threshold, keep=["cluster"], partition_col="cluster")
 
 
 def pq_reconstruction_error(

@@ -335,14 +335,10 @@ def vector_quantize_update(
     The reference's only maintenance path is a full drop-and-rebuild
     (sqlite-vector.c:1418-1427); at 100 TB a daily-append pipeline
     can't re-encode the whole corpus for a 0.1% delta, so this is the
-    scale path: ONE pass over the new rows — the drift check's
-    min/max/count ride the append WRITE as an ``observe``
-    (CollectMetrics) metric (r15, the same shape as pq_store_append /
-    bq_store_append: the separate agg job re-read the batch's vectors
-    in full), behind a limit-1 emptiness probe so an empty batch
-    still commits nothing. The aggregate expressions are exactly
-    quant_params_agg's (exact min/max/count), so the report is
-    unchanged. The existing files are never read or rewritten.
+    scale path. One pass over the new rows: the drift check's
+    quant_params_agg min/max/count ride the write
+    (sinks.write_observed). The existing files are never read or
+    rewritten.
 
     Frozen params mean values outside the original range SATURATE to
     the lo/hi codes. The report's ``drift`` measures how far the new
@@ -354,10 +350,7 @@ def vector_quantize_update(
     whenever the global min/max is unchanged (tests prove append ==
     rebuild); only the params-deciding extremes make the two differ.
     """
-    base = new_df.where(F.col(column).isNotNull())
-    if base.isEmpty():
-        return QuantUpdateReport(params, 0, None, None, 0.0, False)
-
+    from sqlite_vector_spark.sinks import write_observed
     from sqlite_vector_spark.version import vector_backend
 
     if vector_backend() == "arrow-numpy":
@@ -372,16 +365,12 @@ def vector_quantize_update(
         except KeyError:
             inc = None
     extra = [F.col(c) for c in (inc or [])]
-    from pyspark.sql import Observation
-
-    obs = Observation()
-    (
-        base.observe(obs, *quant_params_agg(column))
-        .select(F.col(id_col).cast("bigint").alias("id"), code_col.alias("qvec"), *extra)
-        .write.mode("append")
-        .parquet(dest_path)
+    row = write_observed(
+        new_df.where(F.col(column).isNotNull()), dest_path, quant_params_agg(column),
+        columns=[F.col(id_col).cast("bigint").alias("id"), code_col.alias("qvec"), *extra],
     )
-    row = obs.get
+    if row is None:
+        return QuantUpdateReport(params, 0, None, None, 0.0, False)
     n_new = int(row["n"])
 
     new_vmin, new_vmax = float(row["vmin"]), float(row["vmax"])

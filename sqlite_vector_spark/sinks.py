@@ -10,6 +10,9 @@ module adds the Spark-native sink layer a pipeline needs:
   instead of tasks x values (every partitioned store writer — IVF,
   LSH, PQ, band, streaming epochs — and the delete/compact rewrites
   route through it; measurements in its docstring).
+- ``write_observed``: the same dispatch for the store appends that
+  report statistics of their batch — an emptiness probe, then one
+  write carrying the statistics as ``observe`` metrics.
 - ``write_bucketed``: hash-bucketed + sorted table -> joins and
   aggregations on the bucket key need NO exchange on either side
   (proved in tests/test_sinks.py). At 100 TB, bucketing both fact
@@ -85,52 +88,112 @@ def write_partitioned(df: DataFrame, path: str, partition_col: str,
     layout always wins, so a caller counting on pruning by a different
     column must hear about it (ADVICE r13 #2); ``num_partitions`` is
     likewise a flat-layout knob."""
-    from sqlite_vector_spark.versioned import (
-        append_versioned,
-        current_manifest,
-        is_versioned,
-        replace_versioned,
-    )
+    _write_store(df, path, mode, partition_col, sort_within,
+                 num_partitions=num_partitions,
+                 max_rows_per_file=max_rows_per_file,
+                 tasks_per_value=tasks_per_value)
+
+
+def write_observed(df: DataFrame, dest: str, metrics, mode: str = "append",
+                   partition_col: str | None = None, sort_within=None,
+                   columns=None):
+    """Write ``df`` to a store and return the ``metrics`` aggregates
+    (Columns over ``df``) observed on that same write, as a dict keyed
+    by alias — or None when an append had nothing to write. The one
+    mechanism behind every store append that reports statistics of its
+    batch (vector_quantize_update, pq_store_append,
+    ivf_pq_store_append, bq_store_append, bq_band_store(_append)): the
+    batch is evaluated by the write job itself, not by a checkpoint
+    plus separate aggregation jobs.
+
+    1. ``mode="append"`` first runs a limit-1 emptiness probe and
+       writes nothing for an empty batch (a versioned root gains no
+       empty generation). Other modes always write.
+    2. The write dispatches like write_partitioned: flat parquet, the
+       one-file-per-value ``partition_col`` layout sorted by
+       ``sort_within``, or a new manifest generation on a versioned
+       root.
+    3. The observe sits on the frame the writer writes, after any
+       repartition and sort, so the metrics are counted in the write's
+       result stage: a re-run map stage cannot count a row twice.
+       ``columns`` (default: all) selects what is written after the
+       observe; the metrics may read the columns left out.
+
+    Deterministic input: the probe and the write each evaluate
+    ``df``, so a nondeterministic source (sampled, ``rand``-filtered,
+    a live read) can pass the probe and then write a different batch —
+    checkpoint or persist such a source before calling."""
+    from pyspark.sql import Observation
+
+    if mode == "append" and df.isEmpty():
+        return None
+    obs = Observation()
+
+    def finish(out: DataFrame) -> DataFrame:
+        out = out.observe(obs, *metrics)
+        return out if columns is None else out.select(*columns)
+
+    _write_store(df, dest, mode, partition_col, sort_within, finish=finish)
+    return obs.get
+
+
+def _write_store(df: DataFrame, path: str, mode: str,
+                 partition_col: str | None = None, sort_within=None,
+                 num_partitions: int | None = None, finish=None,
+                 max_rows_per_file: int | None = None,
+                 tasks_per_value: int = 1) -> None:
+    """The store write behind write_partitioned, write_observed and
+    each versioned generation. A versioned root commits a generation,
+    whose files come back here. A flat root gets the layout step —
+    hash-repartition on ``partition_col`` (salted by
+    ``tasks_per_value``), or round-robin to ``num_partitions`` when
+    unpartitioned, then the within-partition sort, partition column
+    first — then ``finish`` (write_observed's observe), then the
+    parquet write."""
+    from sqlite_vector_spark.versioned import _commit, is_versioned
 
     if is_versioned(df.sparkSession, path):
-        # the versioned dispatch reuses the MANIFEST's layout — a
-        # caller expecting pruning on a different column would get
-        # the manifest column with no error and its pruning would
-        # silently never materialize (ADVICE r13 #2): refuse.
-        _, man = current_manifest(df.sparkSession, path)
-        if man["partition_col"] != partition_col:
+        if mode not in ("append", "overwrite"):
             raise ValueError(
-                f"write_partitioned(partition_col={partition_col!r}) does not "
-                f"match the versioned store at {path!r}, whose manifest is "
-                f"partitioned by {man['partition_col']!r}; versioned writes "
-                "reuse the manifest layout — migrate the store (or pass the "
-                "manifest's partition column) instead"
+                f"mode={mode!r} is not defined for the versioned store at "
+                f"{path!r}; append and overwrite dispatch to the manifest "
+                "scheme, other modes have no versioned form"
             )
-        if mode == "append":
-            append_versioned(df, path, sort_within=sort_within)
-        elif mode == "overwrite":
-            replace_versioned(df, path, sort_within=sort_within)
-        else:
-            raise ValueError(
-                f"write_partitioned(mode={mode!r}) is not defined for the "
-                f"versioned store at {path!r}; append and overwrite dispatch "
-                "to the manifest scheme, other modes have no versioned form"
-            )
+        _commit(df, path, sort_within, append=mode == "append",
+                partition_col=partition_col, finish=finish)
         return
-    n = num_partitions or max(1, df.sparkSession.sparkContext.defaultParallelism)
-    if tasks_per_value > 1:
-        salt = F.pmod(
-            F.xxhash64(*[F.col(c) for c in df.columns]), F.lit(int(tasks_per_value))
-        )
-        out = df.repartition(n, F.col(partition_col), salt)
-    else:
-        out = df.repartition(n, partition_col)
+    out = df
+    if partition_col is not None:
+        n = num_partitions or max(1, df.sparkSession.sparkContext.defaultParallelism)
+        if tasks_per_value > 1:
+            salt = F.pmod(
+                F.xxhash64(*[F.col(c) for c in df.columns]), F.lit(int(tasks_per_value))
+            )
+            out = out.repartition(n, F.col(partition_col), salt)
+        else:
+            out = out.repartition(n, partition_col)
+        sort_within = [partition_col, *sort_within] if sort_within else None
+    elif num_partitions is not None:
+        out = out.repartition(num_partitions)
     if sort_within:
-        out = out.sortWithinPartitions(partition_col, *sort_within)
+        out = out.sortWithinPartitions(*sort_within)
+    if finish is not None:
+        out = finish(out)
     w = out.write
     if max_rows_per_file is not None:
         w = w.option("maxRecordsPerFile", int(max_rows_per_file))
-    w.partitionBy(partition_col).mode(mode).parquet(path)
+    if partition_col is not None:
+        w = w.partitionBy(partition_col)
+    w.mode(mode).parquet(path)
+
+
+def _relative_drift(value: float, baseline: float | None) -> float:
+    """``value / baseline - 1`` floored at 0 — the append reports'
+    drift against a build-time baseline; without a positive baseline
+    there is no drift claim."""
+    if baseline is None or baseline <= 0.0:
+        return 0.0
+    return max(value / baseline - 1.0, 0.0)
 
 
 def write_bucketed(
@@ -389,9 +452,7 @@ def delete_ids(
         kept = df.join(
             F.broadcast(ids_df), key == F.col("_del_id"), "left_anti"
         )
-        if sort_within:
-            kept = kept.sortWithinPartitions(*sort_within)
-        kept.write.mode("overwrite").parquet(tmp)
+        _write_store(kept, tmp, "overwrite", sort_within=sort_within)
         out = spark.read.parquet(tmp)
         after = out.count()
         if fsutil.exists(spark, old):
@@ -1251,16 +1312,10 @@ def compact_store(
         target_files = max(1, int(total_bytes // target_file_bytes) + 1)
     tmp = path.rstrip("/") + "__compacting"
     old = path.rstrip("/") + "__pre_compact"
-    if partition_col is not None:
-        # one write job; files-per-partition bounded by repartitioning
-        # on the partition key (rows of one key land in one task)
-        write_partitioned(df, tmp, partition_col, sort_within=sort_within,
-                          num_partitions=target_files)
-    else:
-        w = df.repartition(target_files)
-        if sort_within:
-            w = w.sortWithinPartitions(*sort_within)
-        w.write.mode("overwrite").parquet(tmp)
+    # one write job; files-per-partition bounded by repartitioning
+    # on the partition key (rows of one key land in one task)
+    _write_store(df, tmp, "overwrite", partition_col, sort_within,
+                 num_partitions=target_files)
     out = spark.read.parquet(tmp)
     if out.count() != rows:
         raise RuntimeError("compaction row-count mismatch — store left untouched")

@@ -322,16 +322,13 @@ def ingest_stream_ivf(
         )
         enriched = assigned.withColumn("_d", d_arr).localCheckpoint(eager=True)
         row = enriched.agg(F.count(F.lit(1)).alias("n"), F.avg("_d").alias("m")).collect()[0]
-        from sqlite_vector_spark.sinks import write_partitioned
+        from sqlite_vector_spark.sinks import _relative_drift, write_partitioned
 
         write_partitioned(
             enriched.drop("_d"), f"{dest}/epoch={epoch_id}", "cluster"
         )
         mean_d = float(row["m"])
-        if baseline_mean_dist is None or baseline_mean_dist <= 0.0:
-            drift = 0.0
-        else:
-            drift = max(mean_d / baseline_mean_dist - 1.0, 0.0)
+        drift = _relative_drift(mean_d, baseline_mean_dist)
         spark.createDataFrame(
             [(int(row["n"]), mean_d, drift, drift > drift_threshold)],
             "n bigint, mean_dist double, drift double, rebuild_recommended boolean",

@@ -255,23 +255,15 @@ def read_versioned_pruned(
 
 def _write_generation(
     df: DataFrame, root: str, version: int, partition_col: str | None,
-    sort_within=None, target_partitions: int | None = None,
+    sort_within=None, target_partitions: int | None = None, finish=None,
 ) -> list[dict]:
     """Write one immutable generation dir and return its entries."""
-    spark = df.sparkSession
-    gen = f"data/g{version:06d}"
-    dest = f"{root.rstrip('/')}/{gen}"
-    if partition_col is not None:
-        from sqlite_vector_spark.sinks import write_partitioned
+    from sqlite_vector_spark.sinks import _write_store
 
-        write_partitioned(df, dest, partition_col, sort_within=sort_within,
-                          num_partitions=max(1, target_partitions or 1))
-    else:
-        w = df if target_partitions is None else df.repartition(target_partitions)
-        if sort_within:
-            w = w.sortWithinPartitions(*sort_within)
-        w.write.mode("overwrite").parquet(dest)
-    return _gen_entries(spark, root, gen, partition_col)
+    gen = f"data/g{version:06d}"
+    _write_store(df, f"{root.rstrip('/')}/{gen}", "overwrite", partition_col,
+                 sort_within, num_partitions=target_partitions, finish=finish)
+    return _gen_entries(df.sparkSession, root, gen, partition_col)
 
 
 def versioned_store_init(
@@ -312,6 +304,33 @@ def versioned_store_init(
     return {"version": ver, "files": len(entries)}
 
 
+def _commit(df: DataFrame, root: str, sort_within=None, append: bool = True,
+            partition_col: str | None = None, finish=None) -> dict:
+    """Write ``df`` as the next generation, then PUT manifest N+1
+    listing it — after the live files BY REFERENCE when ``append``,
+    alone otherwise. The generation reuses the manifest's layout; a
+    caller's ``partition_col`` that disagrees raises rather than
+    silently losing the pruning it expects (ADVICE r13 #2)."""
+    spark = df.sparkSession
+    rootp = root.rstrip("/")
+    ver, man = current_manifest(spark, rootp)
+    pcol = man["partition_col"]
+    if partition_col is not None and partition_col != pcol:
+        raise ValueError(
+            f"partition_col={partition_col!r} does not match the versioned "
+            f"store at {root!r}, whose manifest is partitioned by {pcol!r}; "
+            "versioned writes reuse the manifest layout — migrate the store "
+            "(or pass the manifest's partition column) instead"
+        )
+    n = max(1, min(spark.sparkContext.defaultParallelism, 64))
+    entries = _write_generation(
+        df, rootp, ver + 1, pcol, sort_within, target_partitions=n, finish=finish
+    )
+    _write_manifest(spark, rootp, ver + 1, pcol,
+                    (man["files"] if append else []) + entries)
+    return {"version": ver + 1, "files": len(entries), "partition_col": pcol}
+
+
 def append_versioned(df: DataFrame, root: str, sort_within=None) -> dict:
     """Append rows to a versioned store as a NEW generation: the next
     manifest lists the old files BY REFERENCE plus the new
@@ -322,21 +341,13 @@ def append_versioned(df: DataFrame, root: str, sort_within=None) -> dict:
     parquet append would drop files next to the generations where no
     manifest references them — invisible to every reader and
     reclaimed as orphans by the next vacuum, i.e. silent data loss
-    (sinks.write_partitioned and the flat append verbs dispatch here
-    automatically, r13). Each append widens the read union by one
-    generation until compact_versioned folds it — the same bounded
-    growth story as the streaming epochs."""
-    spark = df.sparkSession
-    rootp = root.rstrip("/")
-    ver, man = current_manifest(spark, rootp)
-    pcol = man["partition_col"]
-    n = max(1, min(spark.sparkContext.defaultParallelism, 64))
-    entries = _write_generation(
-        df, rootp, ver + 1, pcol, sort_within, target_partitions=n
-    )
-    _write_manifest(spark, rootp, ver + 1, pcol, man["files"] + entries)
-    return {"version": ver + 1, "appended_files": len(entries),
-            "partition_col": pcol}
+    (sinks.write_partitioned and sinks.write_observed, behind every
+    append verb, dispatch here automatically). Each append widens the
+    read union by one generation until compact_versioned folds it —
+    the same bounded growth story as the streaming epochs."""
+    rep = _commit(df, root, sort_within)
+    return {"version": rep["version"], "appended_files": rep["files"],
+            "partition_col": rep["partition_col"]}
 
 
 def replace_versioned(df: DataFrame, root: str, sort_within=None) -> dict:
@@ -350,16 +361,7 @@ def replace_versioned(df: DataFrame, root: str, sort_within=None) -> dict:
     flat, or readers break mid-swap); the dispatching writers
     (sinks.write_partitioned, the label-state rewrite, the bucket
     store) route here instead."""
-    spark = df.sparkSession
-    rootp = root.rstrip("/")
-    ver, man = current_manifest(spark, rootp)
-    pcol = man["partition_col"]
-    n = max(1, min(spark.sparkContext.defaultParallelism, 64))
-    entries = _write_generation(
-        df, rootp, ver + 1, pcol, sort_within, target_partitions=n
-    )
-    _write_manifest(spark, rootp, ver + 1, pcol, entries)
-    return {"version": ver + 1, "files": len(entries), "partition_col": pcol}
+    return _commit(df, root, sort_within, append=False)
 
 
 def migrate_to_versioned(

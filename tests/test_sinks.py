@@ -518,3 +518,169 @@ def test_write_partitioned_tasks_per_value_parallelizes_hot_value(spark, tmp_pat
     p3 = str(tmp_path / "unsalted")
     write_partitioned(df, p3, "cell")
     assert len(files(p3, 0)) == 1  # default keeps one file per value
+
+
+def _vectors(spark, lo, hi, dim=16):
+    import numpy as np
+
+    rng = np.random.default_rng(lo)
+    rows = [(i, [float(x) for x in rng.normal(size=dim)]) for i in range(lo, hi)]
+    return spark.createDataFrame(rows, "id long, vec array<double>")
+
+
+def _write_plans(spark, fn):
+    """Run ``fn``; return its result and the executed plan text of
+    every SQL execution it ran that wrote files (the status store keeps
+    them with the UI off)."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    n0 = store.executionsList().size()
+    out = fn()
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    ex = store.executionsList()
+    plans = [ex.apply(i).physicalPlanDescription() for i in range(n0, ex.size())]
+    return out, [p for p in plans if "WriteFiles" in p]
+
+
+def _exchange_between_write_and_observe(plan: str) -> bool:
+    """True when, in any plan tree of ``plan`` (final and initial), an
+    Exchange sits between WriteFiles and the CollectMetrics below it."""
+    tree = plan.split("\n\n")[0].splitlines()
+    starts = [i for i, line in enumerate(tree) if "WriteFiles" in line]
+    assert starts, plan
+    for i in starts:
+        j = next(k for k in range(i, len(tree)) if "CollectMetrics" in tree[k])
+        if any("Exchange" in line for line in tree[i:j]):
+            return True
+    return False
+
+
+def test_observed_write_counts_in_result_stage(spark, tmp_path):
+    """ADVICE r15 #1: write_observed observes the frame the writer
+    writes, after the layout shuffle, so the metrics are counted in
+    the write's result stage (a re-run map stage cannot count a row
+    twice). Pinned on the partitioned writers — the band store, its
+    append, the IVF-PQ append — and on a versioned-root append, whose
+    generation write repartitions too."""
+    from sqlite_vector_spark.operators.bq import bq_band_store, bq_band_store_append, bq_encode
+    from sqlite_vector_spark.operators.pq import (
+        ivf_pq_store,
+        ivf_pq_store_append,
+        pq_fit,
+        pq_store,
+        pq_store_append,
+    )
+    from sqlite_vector_spark.versioned import migrate_to_versioned
+
+    dim = 16
+    df, batch = _vectors(spark, 0, 200, dim), _vectors(spark, 200, 250, dim)
+    books = pq_fit(df, "vec", 4, 8, dim, iters=2)
+    cents = [r.vec for r in df.limit(4).collect()]
+    mih, ivfpq = str(tmp_path / "mih"), str(tmp_path / "ivfpq")
+    ivf_pq_store(df, "vec", cents, books, ivfpq)
+    pq_store(df, "vec", books, str(tmp_path / "pq"))
+    migrate_to_versioned(spark, str(tmp_path / "pq"), str(tmp_path / "pq_v"))
+    calls = [
+        ("bq_band_store", 200,
+         lambda: bq_band_store(bq_encode(df, "vec", dim), dim, mih)),
+        ("bq_band_store_append", 50,
+         lambda: bq_band_store_append(bq_encode(batch, "vec", dim), dim, mih)),
+        ("ivf_pq_store_append", 50,
+         lambda: ivf_pq_store_append(batch, "vec", cents, books, ivfpq).n_appended),
+        ("pq_store_append (versioned)", 50,
+         lambda: pq_store_append(batch, "vec", books, str(tmp_path / "pq_v")).n_appended),
+    ]
+    for name, want, fn in calls:
+        got, plans = _write_plans(spark, fn)
+        assert got == want, name
+        assert len(plans) == 1 and "CollectMetrics" in plans[0], (name, plans)
+        assert not _exchange_between_write_and_observe(plans[0]), (name, plans[0][:3000])
+
+
+_RETRY_SCRIPT = r"""
+import json, os, sys
+
+import numpy as np
+import pyspark.sql.functions as F
+from pyspark.sql import SparkSession
+
+from sqlite_vector_spark.operators.bq import bq_band_store, bq_band_store_append, bq_encode
+from sqlite_vector_spark.operators.pq import (
+    ivf_pq_store, ivf_pq_store_append, pq_fit, pq_store, pq_store_append,
+)
+from sqlite_vector_spark.sinks import read_store
+
+root = sys.argv[1]
+spark = (SparkSession.builder.master("local[4,2]")
+         .config("spark.ui.enabled", "false")
+         .config("spark.sql.shuffle.partitions", "4").getOrCreate())
+spark.sparkContext.setLogLevel("OFF")
+dim = 16
+rng = np.random.default_rng(0)
+rows = [(i, [float(x) for x in rng.normal(size=dim)]) for i in range(1000)]
+df = spark.createDataFrame(rows[:600], "id long, vec array<double>")
+new = spark.createDataFrame(rows[600:], "id long, vec array<double>").repartition(2)
+
+
+def failing(verb):
+    # each verb's write fails one task once, mid-partition, after
+    # earlier rows of the task have already streamed through
+    marker = os.path.join(root, verb + ".failed")
+
+    @F.udf("array<double>")
+    def fail_once(i, v):
+        if i % 200 == 150 and not os.path.exists(marker):
+            open(marker, "w").close()
+            raise RuntimeError("injected task failure")
+        return v
+
+    return new.select("id", fail_once("id", "vec").alias("vec"))
+
+
+books = pq_fit(df, "vec", 4, 8, dim, iters=2)
+cents = [r.vec for r in df.limit(4).collect()]
+pq_store(df, "vec", books, f"{root}/pq")
+ivf_pq_store(df, "vec", cents, books, f"{root}/ivfpq")
+bq_band_store(bq_encode(df, "vec", dim), dim, f"{root}/mih")
+out = {
+    "pq_store_append": pq_store_append(
+        failing("pq"), "vec", books, f"{root}/pq").n_appended,
+    "ivf_pq_store_append": ivf_pq_store_append(
+        failing("ivfpq"), "vec", cents, books, f"{root}/ivfpq").n_appended,
+    "bq_band_store_append": bq_band_store_append(
+        bq_encode(failing("mih"), "vec", dim), dim, f"{root}/mih"),
+}
+written = {
+    "pq_store_append": read_store(spark, f"{root}/pq").count() - 600,
+    "ivf_pq_store_append": read_store(spark, f"{root}/ivfpq").count() - 600,
+    "bq_band_store_append": read_store(spark, f"{root}/mih").where("b = 0").count() - 600,
+}
+failed = sorted(f for f in os.listdir(root) if f.endswith(".failed"))
+print(json.dumps({"reported": out, "written": written, "failed": failed}))
+spark.stop()
+"""
+
+
+def test_observed_counts_exact_under_task_retry(tmp_path):
+    """A write task that fails once and is retried (``local[4,2]``:
+    up to 2 attempts per task) must not count its rows twice: each
+    append's reported count equals the rows it wrote. Runs in its own
+    Spark process because the session fixture's master allows no
+    retries."""
+    import json
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = {**os.environ, "PYTHONPATH": os.pathsep.join(
+        p for p in (repo, os.environ.get("PYTHONPATH")) if p)}
+    proc = subprocess.run(
+        [sys.executable, "-c", _RETRY_SCRIPT, str(tmp_path)],
+        cwd=repo, env=env, capture_output=True, text=True, timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    got = json.loads(proc.stdout.strip().splitlines()[-1])
+    assert got["failed"] == ["ivfpq.failed", "mih.failed", "pq.failed"]
+    assert got["reported"] == got["written"] == {
+        "pq_store_append": 400, "ivf_pq_store_append": 400, "bq_band_store_append": 400,
+    }

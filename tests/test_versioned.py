@@ -572,31 +572,97 @@ def test_versioned_append_generation(spark, tmp_path):
     assert _rows(read_store(spark, path)) == _rows(_frame(spark, 140))
 
 
-def test_versioned_flat_append_verbs_dispatch(spark, tmp_path):
-    """The flat-layout append verbs (bq_store_append) route through
-    append_versioned on a versioned code store — appended rows are
-    manifest-visible and survive vacuum."""
+def _vec_frame(spark, lo, hi, dim=64):
     import numpy as np
 
-    from sqlite_vector_spark.operators.bq import bq_encode, bq_store_append
+    rng = np.random.default_rng(lo)
+    rows = [(i, [float(x) for x in rng.normal(size=dim)]) for i in range(lo, hi)]
+    return spark.createDataFrame(rows, "id long, vec array<double>")
+
+
+def _versioned_tier(spark, tmp_path, verb, dim=64):
+    """Build verb's flat store from 100 vectors, migrate it to a
+    versioned root, and return (root, append) where ``append(batch)``
+    runs the verb against that root."""
+    from sqlite_vector_spark.operators.bq import (
+        bq_band_store,
+        bq_band_store_append,
+        bq_encode,
+        bq_store,
+        bq_store_append,
+    )
+    from sqlite_vector_spark.operators.pq import (
+        ivf_pq_store,
+        ivf_pq_store_append,
+        pq_fit,
+        pq_store,
+        pq_store_append,
+    )
+    from sqlite_vector_spark.operators.quantize import vector_quantize, vector_quantize_update
+    from sqlite_vector_spark.versioned import migrate_to_versioned
+
+    df = _vec_frame(spark, 0, 100, dim)
+    flat, root = str(tmp_path / f"{verb}_flat"), str(tmp_path / f"{verb}_v")
+    sort_within = None
+    if verb == "vector_quantize_update":
+        params = vector_quantize(df, "vec", flat)
+        append = lambda b: vector_quantize_update(b, "vec", root, params)
+    elif verb == "bq_store_append":
+        bq_store(df, "vec", dim, flat)
+        append = lambda b: bq_store_append(b, "vec", dim, root)
+    elif verb == "bq_band_store_append":
+        bq_band_store(bq_encode(df, "vec", dim), dim, flat)
+        sort_within = ["bv"]
+        append = lambda b: bq_band_store_append(bq_encode(b, "vec", dim), dim, root)
+    else:
+        books = pq_fit(df, "vec", 4, 8, dim, iters=2)
+        if verb == "pq_store_append":
+            pq_store(df, "vec", books, flat)
+            append = lambda b: pq_store_append(b, "vec", books, root)
+        else:
+            cents = [r.vec for r in df.limit(4).collect()]
+            ivf_pq_store(df, "vec", cents, books, flat)
+            append = lambda b: ivf_pq_store_append(b, "vec", cents, books, root)
+    migrate_to_versioned(spark, flat, root, sort_within=sort_within)
+    return root, append
+
+
+@pytest.mark.parametrize(
+    "verb", ["bq_store_append", "pq_store_append", "vector_quantize_update"]
+)
+def test_versioned_flat_append_verbs_dispatch(spark, tmp_path, verb):
+    """The flat-layout append verbs commit a new manifest generation
+    on a versioned code store: ``n_appended`` equals the growth
+    ``read_store`` sees, and the rows survive vacuum. A plain parquet
+    append reports the rows but strands them unreferenced at the root
+    (vector_quantize_update did, until it wrote through
+    sinks.write_observed)."""
     from sqlite_vector_spark.sinks import read_store, vacuum_store
-    from sqlite_vector_spark.versioned import versioned_store_init
 
-    dim = 64
-    rng = np.random.default_rng(3)
-    rows = [(i, [float(x) for x in rng.normal(size=dim)]) for i in range(100)]
-    df = spark.createDataFrame(rows, "id long, vec array<double>")
-    path = str(tmp_path / "bqv")
-    versioned_store_init(bq_encode(df, "vec", dim), path, partition_col=None)
-
-    new_rows = [(i, [float(x) for x in rng.normal(size=dim)]) for i in range(100, 130)]
-    new_df = spark.createDataFrame(new_rows, "id long, vec array<double>")
-    rep = bq_store_append(new_df, "vec", dim, path)
+    root, append = _versioned_tier(spark, tmp_path, verb)
+    rep = append(_vec_frame(spark, 100, 130))
     assert rep.n_appended == 30
-    assert read_store(spark, path).count() == 130
-    vacuum_store(path, spark=spark)
-    assert read_store(spark, path).count() == 130
-    assert sorted(r.id for r in read_store(spark, path).select("id").collect()) == list(range(130))
+    assert read_store(spark, root).count() == 100 + rep.n_appended
+    vacuum_store(root, spark=spark)
+    assert read_store(spark, root).count() == 100 + rep.n_appended
+    assert sorted(r.id for r in read_store(spark, root).select("id").collect()) == list(range(130))
+
+
+@pytest.mark.parametrize(
+    "verb",
+    ["vector_quantize_update", "pq_store_append", "ivf_pq_store_append",
+     "bq_store_append", "bq_band_store_append"],
+)
+def test_versioned_empty_append_commits_nothing(spark, tmp_path, verb):
+    """An empty batch on a versioned root reports zero rows and
+    commits no manifest: the emptiness probe runs before any write."""
+    from sqlite_vector_spark.versioned import current_manifest
+
+    root, append = _versioned_tier(spark, tmp_path, verb)
+    ver, _ = current_manifest(spark, root)
+    rep = append(_vec_frame(spark, 100, 130).where(F.lit(False)))
+    assert (rep if verb == "bq_band_store_append" else rep.n_appended) == 0
+    assert current_manifest(spark, root)[0] == ver
 
 
 def test_read_versioned_pruned_unpartitioned_fallback(spark, tmp_path):
