@@ -104,6 +104,9 @@ class VectorCatalog:
     def __init__(self, root: str | None = None):
         self.root = root
         self._contexts: dict[tuple[str, str], VectorContext] = {}
+        #: schemas of the stores this catalog's queries have read, so a
+        #: repeated read skips Spark's inference job (sinks.read_parquet)
+        self.store_schemas: dict = {}
         if root:
             os.makedirs(root, exist_ok=True)
 

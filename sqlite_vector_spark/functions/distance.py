@@ -23,12 +23,17 @@ Scale notes:
   reads with pruned schema.
 - ``distance_pandas_udf`` is the Arrow/NumPy batch path (the analog of
   the reference's SIMD kernels, distance-cpu.c:755-812): one Arrow
-  batch in, vectorized NumPy out. Use when dim is large (>512) and the
-  per-element codegen overhead dominates; benchmark both (bench.py).
+  batch in, vectorized NumPy out. The default "auto" backend picks it
+  for literal-query distances at dim >= AUTO_DIM (32), except on scans
+  known to read less than AUTO_SCAN_BYTES (4 MiB), where the Python
+  round trip costs more than the fold; both constants and their
+  measurements are in version.py.
 """
 
 from __future__ import annotations
 
+import math
+import re
 from collections.abc import Sequence
 
 import pandas as pd
@@ -41,6 +46,36 @@ from sqlite_vector_spark.types import Metric, parse_metric
 EPS_SNAP = 8 * 1.1920928955078125e-07
 
 
+def literal_sql(x) -> str:
+    """Spark SQL text of a literal that parses back to the same value:
+    a float is a DOUBLE (repr is the shortest round-trip decimal; the D
+    suffix keeps it DOUBLE, a bare 0.1 parses as DECIMAL), an int a
+    BIGINT, a sequence an array. NaN and ±Inf have no literal syntax
+    and a cast from a string is nullable, which would make the array's
+    ``containsNull`` true, so the cast sits in a coalesce with a
+    non-null literal; constant folding reduces it to the same Literal."""
+    if isinstance(x, float):
+        if math.isnan(x):
+            return "coalesce(double('NaN'), 0D)"
+        if math.isinf(x):
+            return f"coalesce(double('{'-' if x < 0 else ''}Infinity'), 0D)"
+        return f"{x!r}D"
+    if isinstance(x, int):
+        return f"{x}L"
+    return f"array({', '.join(map(literal_sql, x))})"
+
+
+def array_literal(values: Sequence) -> Column:
+    """An ARRAY literal column built in ONE JVM call (one SQL string)
+    instead of one py4j call per element (64 doubles: 0.3 ms against
+    33 ms). Python floats become DOUBLE, ints BIGINT, nested sequences
+    nested arrays; the optimized plan equals the F.array(*[F.lit(x)])
+    form's, bit for bit, with ``containsNull`` false. As an array
+    Literal the values reach generated code by reference, so queries
+    that differ only in these values reuse one compiled class."""
+    return F.expr(literal_sql(values))
+
+
 def vector_literal(values: Sequence[float]) -> Column:
     """An ARRAY<DOUBLE> literal column for a query vector.
 
@@ -49,7 +84,7 @@ def vector_literal(values: Sequence[float]) -> Column:
     scoring (mirrors the hidden-column argument passing of the
     reference's TVFs, sqlite-vector.c:1850-1880).
     """
-    return F.array(*[F.lit(float(v)) for v in values])
+    return array_literal([float(v) for v in values])
 
 
 def _col(c: str | Column) -> Column:
@@ -128,27 +163,96 @@ _BUILDERS = {
     Metric.L1: l1,
 }
 
+# The same trees as SQL text, node for node (lambda arguments are
+# named x, y by position, as PySpark names them): a distance over a
+# named column and a literal query is then ONE F.expr call instead of
+# the ~100 py4j calls PySpark spends building the lambdas above
+# (~65 ms of a single query's plan build). test_distance pins the
+# optimized plans of both forms equal for every metric.
 
-def distance(a: str | Column, b: str | Column | Sequence[float], metric: str | Metric = Metric.L2) -> Column:
+_NAME = re.compile(r"[A-Za-z_][A-Za-z0-9_]*")
+
+
+def sql_operand(x) -> str | None:
+    """SQL text of a distance operand that has one: a plain column
+    name (quoted, so a keyword still names the column), or a literal
+    vector (as one DOUBLE array literal)."""
+    if isinstance(x, str):
+        return f"`{x}`" if _NAME.fullmatch(x) else None
+    if isinstance(x, (list, tuple)):
+        return literal_sql([float(v) for v in x])
+    return None
+
+
+def fold_sum_sql(pairs: str) -> str:
+    return f"aggregate({pairs}, 0.0D, (x, y) -> x + y)"
+
+
+def _dot_sum_sql(a: str, b: str) -> str:
+    return fold_sum_sql(f"zip_with({a}, {b}, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE))")
+
+
+def _squared_l2_sql(a: str, b: str) -> str:
+    diff = "(CAST(x AS DOUBLE) - CAST(y AS DOUBLE))"
+    return fold_sum_sql(f"zip_with({a}, {b}, (x, y) -> {diff} * {diff})")
+
+
+def let_sql(value: str, body: str) -> str:
+    """_let as SQL: ``body`` refers to the bound value as ``x``."""
+    return f"transform(array({value}), x -> {body})[0]"
+
+
+def _cosine_sql(a: str, b: str) -> str:
+    denom = f"sqrt({_dot_sum_sql(a, a)}) * sqrt({_dot_sum_sql(b, b)})"
+    return let_sql(denom, f"CASE WHEN x = 0.0D THEN 1.0D ELSE 1.0D - {_dot_sum_sql(a, b)} / x END")
+
+
+def snap_zero_sql(d: str) -> str:
+    return let_sql(d, f"CASE WHEN abs(x) <= {literal_sql(EPS_SNAP)} THEN 0.0D ELSE x END")
+
+
+_SQL_BUILDERS = {
+    Metric.L2: lambda a, b: f"sqrt({_squared_l2_sql(a, b)})",
+    Metric.SQUARED_L2: _squared_l2_sql,
+    Metric.COSINE: _cosine_sql,
+    Metric.DOT: lambda a, b: f"-({_dot_sum_sql(a, b)})",
+    Metric.L1: lambda a, b: fold_sum_sql(
+        f"zip_with({a}, {b}, (x, y) -> abs(CAST(x AS DOUBLE) - CAST(y AS DOUBLE)))"
+    ),
+}
+
+
+def distance(
+    a: str | Column,
+    b: str | Column | Sequence[float],
+    metric: str | Metric = Metric.L2,
+    size_bytes: int | None = None,
+) -> Column:
     """Distance between two vector columns (or a column and a Python
     query vector), with the reference's zero-snap applied.
 
     This is the single entry point all operators compose; it is a pure
     Catalyst expression → fused into whole-stage codegen at the scan.
+    ``size_bytes`` is what a scan knows of its input's size (see
+    version.resolve_backend); None keeps the per-dim rule.
     """
     m = parse_metric(metric) if isinstance(metric, str) else metric
     if isinstance(b, (list, tuple)):
         # runtime backend dispatch, mirroring init_distance_functions
         # (reference distance-cpu.c:797-812): the Arrow/NumPy kernel
         # only exists for literal query vectors (column-vs-column stays
-        # codegen). The default "auto" resolves by dim at plan-build
-        # time. NB: NumPy's pairwise summation is not bit-identical to
-        # the sequential fold — oracle-gated paths pin "codegen"
-        # (__spark_entry__._pinned); ranks agree (test_distance).
+        # codegen). The default "auto" resolves by dim and scan size at
+        # plan-build time. NB: NumPy's pairwise summation is not
+        # bit-identical to the sequential fold — oracle-gated paths pin
+        # "codegen" (__spark_entry__._pinned); ranks agree (test_distance).
         from sqlite_vector_spark.version import resolve_backend
 
-        if resolve_backend(len(b)) == "arrow-numpy":
+        if resolve_backend(len(b), size_bytes) == "arrow-numpy":
             return distance_pandas_udf(m, b)(_col(a))
+    sa, sb = sql_operand(a), sql_operand(b)
+    if sa is not None and sb is not None:
+        return F.expr(snap_zero_sql(_SQL_BUILDERS[m](sa, sb)))
+    if isinstance(b, (list, tuple)):
         b = vector_literal(b)
     return snap_zero(_BUILDERS[m](a, b))
 

@@ -148,9 +148,11 @@ def _assign_backend(centroids: Sequence[Sequence[float]]) -> str:
     which has a much later crossover than the per-distance dim
     threshold — a tiny C=2 x dim=16 case is still firmly codegen
     territory (the Python round-trip dominates), so "auto" dispatches
-    on AUTO_ASSIGN_LITERALS, not AUTO_DIM. Oracle-gated runs pin
-    "codegen" (__spark_entry__._pinned) and keep the bit-exact
-    literal fold."""
+    on AUTO_ASSIGN_LITERALS, not AUTO_DIM. The "codegen" arm is one
+    distance() per centroid, and under "auto" those follow the
+    per-distance dim rule: at dim >= AUTO_DIM each is an Arrow UDF, so
+    the arm is the bit-exact literal fold only when "codegen" is
+    pinned, as oracle-gated runs do (__spark_entry__._pinned)."""
     from sqlite_vector_spark.version import AUTO_ASSIGN_LITERALS, vector_backend
 
     active = vector_backend()
@@ -443,13 +445,10 @@ def lsh_bucket_scan(
     VERSIONED store prunes the same probes via its manifest when it is
     partitioned by bucket, and falls back to the row-level filter when
     not (r14, ADVICE r13 #1)."""
-    from sqlite_vector_spark.versioned import is_versioned, read_versioned_pruned
+    from sqlite_vector_spark.sinks import read_store
 
     probes = [int(b) for b in lsh_probe_buckets(query, planes, hamming)]
-    if is_versioned(spark, dest):
-        pruned = read_versioned_pruned(spark, dest, "bucket", probes)
-    else:
-        pruned = spark.read.parquet(dest).where(F.col("bucket").isin(probes))
+    pruned = read_store(spark, dest, "bucket", probes)
     return full_scan(pruned, "vec", [float(x) for x in query], k, metric, id_col="id")
 
 
@@ -531,25 +530,21 @@ def ivf_stored_scan(
     k: int,
     nprobe: int = 2,
     metric: str | Metric = "L2",
+    schemas: dict | None = None,
 ) -> DataFrame:
     """Approximate top-k over an ivf_store directory: probe-cluster
     IN filter (partition pruning), exact top-k within the probes.
 
-    r13: a store migrated to the VERSIONED manifest layout resolves
-    through read_versioned_pruned with the probed clusters as the
-    manifest filter — the same pruning (only probed partitions' files
-    enter the plan) without listing the data prefix, so swap mode stays
-    invisible to the IVF tier too (router contract). A versioned store
-    NOT partitioned by cluster gets the row-level fallback instead of
-    a silently-empty manifest filter (r14, ADVICE r13 #1)."""
-    from sqlite_vector_spark.versioned import is_versioned, read_versioned_pruned
+    The store is read through sinks.read_store, so a store migrated to
+    the VERSIONED manifest layout prunes to the probed clusters by its
+    manifest (no listing of the data prefix; a row-level filter for a
+    store not partitioned by cluster) and swap mode stays invisible to
+    the IVF tier (router contract). ``schemas``: see
+    sinks.read_parquet."""
+    from sqlite_vector_spark.sinks import read_store
 
     probes = [int(c) for c in probe_clusters([float(x) for x in query], centroids, nprobe)]
-    if is_versioned(spark, dest):
-        pruned = read_versioned_pruned(spark, dest, "cluster", probes)
-    else:
-        stored = spark.read.parquet(dest)
-        pruned = stored.where(F.col("cluster").isin(probes))
+    pruned = read_store(spark, dest, "cluster", probes, schemas=schemas)
     return full_scan(pruned, "vec", [float(x) for x in query], k, metric, id_col="id")
 
 

@@ -30,7 +30,12 @@ import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
-from sqlite_vector_spark.functions.distance import batch_matrix
+from sqlite_vector_spark.functions.distance import (
+    array_literal,
+    batch_matrix,
+    literal_sql,
+    sql_operand,
+)
 from sqlite_vector_spark.operators.topk import topk_per_key
 
 
@@ -147,15 +152,18 @@ def bq_query_words(query: Sequence[float], thresholds: Sequence[float] | None = 
 
 def hamming_col(bits: str | Column, query_words: Sequence[int]) -> Column:
     """BIGINT Hamming distance: Σ_w popcount(bits[w] XOR q[w]) in word
-    order — integer-exact, mirrored by the oracle's ordered fold."""
+    order — integer-exact, mirrored by the oracle's ordered fold. The
+    query words ride in as ONE array literal zipped with the code
+    words: a per-word ``long`` literal would be inlined into the
+    generated code, so every new query would compile a new class."""
+    q = [int(w) for w in query_words]
+    name = sql_operand(bits)
+    if name is not None:  # one F.expr call, the same tree as below
+        terms = f"zip_with({name}, {literal_sql(q)}, (x, y) -> CAST(bit_count(x ^ y) AS BIGINT))"
+        return F.expr(f"aggregate({terms}, CAST(0 AS BIGINT), (x, y) -> x + y)")
     b = F.col(bits) if isinstance(bits, str) else bits
-    acc = None
-    for w, qw in enumerate(query_words):
-        term = F.bit_count(
-            F.element_at(b, w + 1).bitwiseXOR(F.lit(int(qw)).cast("long"))
-        ).cast("long")
-        acc = term if acc is None else acc + term
-    return acc
+    terms = F.zip_with(b, array_literal(q), lambda x, y: F.bit_count(x.bitwiseXOR(y)).cast("long"))
+    return F.aggregate(terms, F.lit(0).cast("long"), lambda acc, t: acc + t)
 
 
 def bq_scan(
@@ -198,6 +206,7 @@ def bq_rerank_scan(
     a persisted ``codes_df`` in production (same contract as
     pq_rerank_scan)."""
     from sqlite_vector_spark.functions.distance import distance
+    from sqlite_vector_spark.sources import plan_size_bytes
 
     dim = len(query)
     codes = (
@@ -209,9 +218,17 @@ def bq_rerank_scan(
     full = df.where(F.col(vec_col).isNotNull()).select(
         F.col(id_col).cast("bigint").alias("id"), F.col(vec_col).alias("vec")
     )
+    # the rerank scores at most ``prefilter`` rows (an 8-byte id and
+    # dim doubles each) and at most the whole frame: the smaller known
+    # bound sizes its backend
+    rerank_bytes = prefilter * 8 * (dim + 1)
+    full_bytes = plan_size_bytes(full)
+    if full_bytes is not None:
+        rerank_bytes = min(rerank_bytes, full_bytes)
     return (
         full.join(F.broadcast(cand), "id", "left_semi")
-        .select("id", distance(F.col("vec"), [float(x) for x in query], metric).alias("distance"))
+        .select("id", distance("vec", [float(x) for x in query], metric,
+                               size_bytes=rerank_bytes).alias("distance"))
         .orderBy(F.col("distance").asc(), F.col("id").asc())
         .limit(k)
     )

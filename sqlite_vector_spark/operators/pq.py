@@ -49,7 +49,11 @@ from pyspark.sql import Column, DataFrame
 from sqlite_vector_spark.functions.distance import (
     EPS_SNAP,
     batch_matrix,
+    fold_sum_sql,
+    literal_sql,
     snap_zero,
+    snap_zero_sql,
+    sql_operand,
     squared_l2,
     vector_literal,
 )
@@ -77,18 +81,22 @@ def subvector(vec: str | Column, s: int, dsub: int) -> Column:
     return F.slice(v, s * dsub + 1, dsub)
 
 
-def _pq_backend(codebooks: Codebooks) -> str:
+def _pq_backend(codebooks: Codebooks, size_bytes: int | None = None) -> str:
     """codegen (bit-exact literal folds — the oracle path) vs
     arrow-numpy (O(1) plan size). Same dispatch contract as
     ann._assign_backend: honour a pinned backend; auto routes on the
     m*ksub FOLD count — each codebook entry is its own argmin
     expression tree, so fold count (not raw literals) drives the
-    codegen cost (AUTO_PQ_FOLDS, measured in version.py)."""
-    from sqlite_vector_spark.version import AUTO_PQ_FOLDS, vector_backend
+    codegen cost (AUTO_PQ_FOLDS, measured in version.py). A scan that
+    passes ``size_bytes`` below AUTO_SCAN_BYTES stays codegen at any
+    fold count (see pq_scan)."""
+    from sqlite_vector_spark.version import AUTO_PQ_FOLDS, small_scan, vector_backend
 
     active = vector_backend()
     if active != "auto":
         return active
+    if small_scan(size_bytes):
+        return "codegen"
     m, ksub, _dsub = _check_codebooks(codebooks)
     return "arrow-numpy" if m * ksub >= AUTO_PQ_FOLDS else "codegen"
 
@@ -373,20 +381,23 @@ def adc_lut(query: Sequence[float], codebooks: Codebooks) -> list[list[float]]:
     ]
 
 
-def adc_distance_col(codes: str | Column, luts: Sequence[Sequence[float]], metric: str | Metric = "L2") -> Column:
+def adc_distance_col(codes: str, luts: Sequence[Sequence[float]], metric: str | Metric = "L2") -> Column:
     """Approximate distance from PQ codes: sequential left fold of
-    LUT[s][code_s] in subspace order (F.aggregate preserves array
+    LUT[s][code_s] in subspace order (aggregate preserves array
     order — the oracle mirrors with the same ordered fold), then
     sqrt for L2. Only L2/SQUARED_L2 decompose additively over
-    subspaces; other metrics must rerank in full precision."""
+    subspaces; other metrics must rerank in full precision. ``codes``
+    names the code column: the expression, LUT literal included, is
+    one F.expr call."""
     m = parse_metric(metric) if isinstance(metric, str) else metric
     if m not in (Metric.L2, Metric.SQUARED_L2):
         raise ValueError(f"ADC supports L2/SQUARED_L2 (additive over subspaces), got {m}")
-    c = F.col(codes) if isinstance(codes, str) else codes
-    lut_arr = F.array(*[F.array(*[F.lit(float(v)) for v in lut_s]) for lut_s in luts])
-    terms = F.zip_with(c, lut_arr, lambda code, l: F.element_at(l, (code + 1).cast("int")))
-    d2 = F.aggregate(terms, F.lit(0.0), lambda acc, x: acc + x)
-    return snap_zero(F.sqrt(d2) if m is Metric.L2 else d2)
+    c = sql_operand(codes)
+    if c is None:
+        raise ValueError(f"codes must be a plain column name, got {codes!r}")
+    lut = literal_sql([[float(v) for v in lut_s] for lut_s in luts])
+    d2 = fold_sum_sql(f"zip_with({c}, {lut}, (x, y) -> element_at(y, CAST(x + 1 AS INT)))")
+    return F.expr(snap_zero_sql(f"sqrt({d2})" if m is Metric.L2 else d2))
 
 
 def adc_distance_arrow_udf(luts: Sequence[Sequence[float]], metric: str | Metric = "L2"):
@@ -469,12 +480,17 @@ def pq_scan(
     """Compressed-domain top-k over a PQ code table -> (id, distance
     ascending, id tiebreak). The scan touches only the ~M-byte code
     rows; TakeOrderedAndProject keeps P*k rows leaving the executors.
-    Backend-dispatched on the LUT literal footprint (M*KSUB)."""
+    Backend-dispatched on the code table's size, then on M*KSUB: the
+    codegen form is one LUT array literal, ``zip_with`` and
+    ``aggregate`` at any M*KSUB, so a table Catalyst sizes below
+    AUTO_SCAN_BYTES is scored in the JVM."""
+    from sqlite_vector_spark.sources import plan_size_bytes
+
     if k < 0:
         raise ValueError("k must be >= 0")
     luts = adc_lut([float(x) for x in query], codebooks)
     base = codes_df.where(F.col(codes_col).isNotNull())
-    if _pq_backend(codebooks) == "arrow-numpy":
+    if _pq_backend(codebooks, plan_size_bytes(codes_df)) == "arrow-numpy":
         dist = adc_distance_arrow_udf(luts, metric)(F.col(codes_col))
     else:
         dist = adc_distance_col(codes_col, luts, metric)
@@ -1099,22 +1115,14 @@ def ivf_pq_stored_scan(
     the same M-term fold either way."""
     q = [float(x) for x in query]
     from sqlite_vector_spark.operators.ann import probe_clusters
-    from sqlite_vector_spark.versioned import is_versioned, read_versioned_pruned
+    from sqlite_vector_spark.sinks import read_store
 
     probes = [int(p) for p in probe_clusters(q, centroids, nprobe)]
-    if is_versioned(spark, dest):
-        # manifest-pruned to the probed clusters (r13): both arms only
-        # ever read probe partitions — the residual arm's per-probe
-        # cluster filters operate within this pruned set. r14: a store
-        # not partitioned by cluster falls back to the row-level
-        # filter instead of a silently-empty manifest filter.
-        stored = read_versioned_pruned(spark, dest, "cluster", probes)
-    else:
-        stored = spark.read.parquet(dest)
+    # both arms only ever read probe partitions — the residual arm's
+    # per-probe cluster filters operate within this pruned set
+    stored = read_store(spark, dest, "cluster", probes)
     if not residual:
-        pruned = stored.where(F.col("cluster").isin(probes))
-        return pq_scan(pruned, q, codebooks, k, metric)
-
+        return pq_scan(stored, q, codebooks, k, metric)
     return ivf_pq_residual_adc_scan(stored, q, centroids, codebooks, k, nprobe, metric)
 
 

@@ -32,6 +32,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
 from sqlite_vector_spark.functions.distance import distance
+from sqlite_vector_spark.sources import plan_size_bytes
 from sqlite_vector_spark.types import Metric
 
 
@@ -65,12 +66,18 @@ def full_scan_stream(
     id_col: str = "id",
 ) -> DataFrame:
     """Pipelined exact scoring of every row (no k, no sort) ->
-    DataFrame(id, distance). A narrow projection: zero shuffles."""
+    DataFrame(id, distance). A narrow projection: zero shuffles.
+
+    A literal query on an input Catalyst sizes below
+    version.AUTO_SCAN_BYTES is scored by the codegen fold at any dim:
+    a single-query scan that small finishes sooner in the JVM than an
+    Arrow UDF job's Python round trip (measurements in version.py)."""
+    size = None if isinstance(query, Column) else plan_size_bytes(df)
     return (
         df.where(F.col(column).isNotNull())
         .select(
             F.col(id_col).cast("bigint").alias("id"),
-            distance(F.col(column), query, metric).alias("distance"),
+            distance(column, query, metric, size_bytes=size).alias("distance"),
         )
     )
 
@@ -115,9 +122,11 @@ def full_scan_normalized_cosine(
     scored = df.where(F.col(column).isNotNull()).select(
         F.col(id_col).cast("bigint").alias("id"),
         # distance(DOT) is the NEGATED dot (smaller = closer) and
-        # keeps the session's backend dispatch (codegen fold vs Arrow
+        # keeps full_scan's backend dispatch (codegen fold vs Arrow
         # matmul); 1 + it == 1 − a·q̂ == cosine for unit rows
-        snap_zero(F.lit(1.0) + distance(F.col(column), qn, Metric.DOT)).alias("distance"),
+        snap_zero(
+            F.lit(1.0) + distance(column, qn, Metric.DOT, size_bytes=plan_size_bytes(df))
+        ).alias("distance"),
     )
     if k == 0:
         return scored.limit(0)

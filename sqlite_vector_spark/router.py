@@ -107,7 +107,10 @@ def knn(
     if prefer == "ivf":
         from sqlite_vector_spark.operators.ann import ivf_stored_scan
 
-        return ivf_stored_scan(spark, ctx.ivf_path, query, ctx.ivf_centroids, k, nprobe=nprobe, metric=m)
+        return ivf_stored_scan(
+            spark, ctx.ivf_path, query, ctx.ivf_centroids, k, nprobe=nprobe, metric=m,
+            schemas=catalog.store_schemas,
+        )
     # OPQ-aware: when the catalog holds a learned rotation
     # (set_pq_index rotation=), the PQ code tables live in the rotated
     # basis — the router rotates the QUERY with the exact driver fold
@@ -128,13 +131,13 @@ def knn(
         from sqlite_vector_spark.operators.pq import pq_scan
         from sqlite_vector_spark.sinks import read_store
 
-        codes = read_store(spark, ctx.pq_path)
+        codes = read_store(spark, ctx.pq_path, schemas=catalog.store_schemas)
         return pq_scan(codes, _pq_query(), ctx.pq_codebooks, k, m)
     if prefer == "bq":
         from sqlite_vector_spark.operators.bq import bq_rerank_scan
         from sqlite_vector_spark.sinks import read_store
 
-        codes = read_store(spark, ctx.bq_path)
+        codes = read_store(spark, ctx.bq_path, schemas=catalog.store_schemas)
         return bq_rerank_scan(
             spark.table(table), column, query, k, prefilter or 10 * k,
             ctx.bq_thresholds, m, id_col=id_col, codes_df=codes,
@@ -190,7 +193,7 @@ def knn(
         # plan as before (one FS exists() probe decides).
         from sqlite_vector_spark.sinks import read_store
 
-        codes = read_store(spark, ctx.quantized_path)
+        codes = read_store(spark, ctx.quantized_path, schemas=catalog.store_schemas)
         if where is not None:
             import pyspark.sql.functions as F
             from pyspark.errors import AnalysisException
@@ -274,7 +277,7 @@ def knn_join(
 
         # same swap-mode-agnostic resolve as knn (versioned replicas
         # route through their live manifest)
-        codes = read_store(spark, ctx.quantized_path)
+        codes = read_store(spark, ctx.quantized_path, schemas=catalog.store_schemas)
         if where is not None:
             try:
                 codes = codes.where(F.expr(where))

@@ -171,6 +171,7 @@ def read_versioned(
     root: str,
     partition_values=None,
     _manifest: dict | None = None,
+    schemas: dict | None = None,
 ) -> DataFrame:
     """DataFrame over the LIVE generation set (newest manifest),
     optionally pruned to a set of partition values — pruning is a
@@ -183,7 +184,14 @@ def read_versioned(
     written without ``partition_col`` no entry carries a value, so the
     filter would silently select nothing — raise instead and point the
     caller at :func:`read_versioned_pruned`, which falls back to a
-    row-level filter (ADVICE r13 #1)."""
+    row-level filter (ADVICE r13 #1).
+
+    ``schemas`` (see sinks.read_parquet) is used for whole-generation
+    reads only: a pruned read infers the partition column's type from
+    the probed values alone, so it may differ from another probe
+    set's, and one entry per probe set would grow without bound."""
+    from sqlite_vector_spark.sinks import read_parquet
+
     rootp = root.rstrip("/")
     man = _manifest if _manifest is not None else current_manifest(spark, rootp)[1]
     pcol = man["partition_col"]
@@ -213,12 +221,12 @@ def read_versioned(
     for e in entries:
         gen = "/".join(e["path"].split("/")[:2])  # "data/g000123"
         by_gen.setdefault(gen, []).append(f"{rootp}/{e['path']}")
+    if partition_values is not None:
+        schemas = None
     df = None
     for gen in sorted(by_gen):
-        r = spark.read
-        if pcol is not None:
-            r = r.option("basePath", f"{rootp}/{gen}")
-        d = r.parquet(*by_gen[gen])
+        base = f"{rootp}/{gen}" if pcol is not None else None
+        d = read_parquet(spark, by_gen[gen], schemas, base_path=base)
         df = d if df is None else df.unionByName(d)
     if df is None:
         raise ValueError(f"versioned store {root!r}: live manifest lists no files")
@@ -230,6 +238,7 @@ def read_versioned_pruned(
     root: str,
     column: str,
     values,
+    schemas: dict | None = None,
 ) -> DataFrame:
     """Live-set read pruned to ``values`` of ``column`` — the probe
     readers' versioned entry point (IVF clusters, LSH/BQ buckets).
@@ -246,9 +255,12 @@ def read_versioned_pruned(
     rootp = root.rstrip("/")
     _, man = current_manifest(spark, rootp)
     if man["partition_col"] == column:
-        return read_versioned(spark, rootp, partition_values=values, _manifest=man)
+        return read_versioned(spark, rootp, partition_values=values, _manifest=man,
+                              schemas=schemas)
     vals = list(values)
-    return read_versioned(spark, rootp, _manifest=man).where(F.col(column).isin(vals))
+    return read_versioned(spark, rootp, _manifest=man, schemas=schemas).where(
+        F.col(column).isin(vals)
+    )
 
 
 # ---- writes ----------------------------------------------------------

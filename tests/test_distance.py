@@ -141,3 +141,93 @@ def test_backend_dispatch_arrow_numpy(spark, emb):
     assert [r.id for r in alt] == [r.id for r in base]
     for a, b in zip(alt, base):
         assert a.distance == pytest.approx(b.distance, rel=1e-12)
+
+
+def _normalized_plan(df) -> str:
+    """Optimized plan text with expression ids and PySpark's lambda
+    variable numbers (x_12 -> x) normalized."""
+    import re
+
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    return re.sub(r"\b([xyz])_\d+\b", r"\1", re.sub(r"#\d+L?", "#", plan))
+
+
+def test_array_literal_is_bit_exact_one_call_form(spark):
+    """vector_literal / array_literal build one SQL array literal. It
+    must equal the per-element F.lit form bit for bit on the values a
+    decimal rendering can get wrong, with the same type: array<double>
+    (array<bigint> for ints) and containsNull false."""
+    import struct
+
+    from pyspark.sql.types import ArrayType, DoubleType, LongType
+
+    from sqlite_vector_spark.functions.distance import array_literal, vector_literal
+
+    vals = [float("nan"), float("inf"), float("-inf"), -0.0, 5e-324,
+            1.7976931348623157e308, 1e-05, 0.1, -2.5]
+    one = spark.range(1).select(vector_literal(vals).alias("a"))
+    ref = spark.range(1).select(F.array(*[F.lit(x) for x in vals]).alias("a"))
+    assert one.schema["a"].dataType == ArrayType(DoubleType(), containsNull=False)
+    assert ref.schema["a"].dataType == one.schema["a"].dataType
+
+    def bits(df):
+        return [struct.pack(">d", x) for x in df.collect()[0]["a"]]
+
+    assert bits(one) == bits(ref) == [struct.pack(">d", x) for x in vals]
+
+    words = [-(1 << 63), (1 << 63) - 1, -1, 0, 1 << 40]
+    w = spark.range(1).select(array_literal(words).alias("w"))
+    assert w.schema["w"].dataType == ArrayType(LongType(), containsNull=False)
+    assert w.collect()[0]["w"] == words
+
+
+def test_one_call_scan_plans_equal_column_api_plans(spark, emb):
+    """The one-call SQL forms of the scan expressions (distance over a
+    named column and a literal query, the PQ ADC fold, the BQ Hamming
+    fold) give the optimized plans that the Column-API builders with
+    per-element F.lit literals give, once expression ids and lambda
+    variable numbers are normalized. full_scan and pq_scan are checked
+    whole, under set_backend("codegen")."""
+    from sqlite_vector_spark.functions.distance import _BUILDERS, snap_zero
+    from sqlite_vector_spark.operators import pq as pq_mod
+    from sqlite_vector_spark.operators.bq import bq_encode, hamming_col
+    from sqlite_vector_spark.operators.search import full_scan
+    from sqlite_vector_spark.types import Metric
+    from sqlite_vector_spark.version import set_backend
+
+    def lits(values):
+        return F.array(*[F.lit(float(v)) for v in values])
+
+    def scan(df, score):
+        return (df.where(F.col("embedding").isNotNull())
+                .select(F.col("vec_id").cast("bigint").alias("id"), score.alias("distance"))
+                .orderBy(F.col("distance").asc(), F.col("id").asc()).limit(10))
+
+    q = [math.sin(i * 0.37) for i in range(64)]
+    set_backend("codegen")
+    try:
+        for m in Metric:
+            got = emb.select(distance("embedding", q, m).alias("d"))
+            want = emb.select(snap_zero(_BUILDERS[m](F.col("embedding"), lits(q))).alias("d"))
+            assert _normalized_plan(got) == _normalized_plan(want), m
+        want = scan(emb, snap_zero(_BUILDERS[Metric.L2](F.col("embedding"), lits(q))))
+        assert _normalized_plan(full_scan(emb, "embedding", q, 10, "L2", id_col="vec_id")) == \
+            _normalized_plan(want)
+
+        books = pq_mod.pq_codebooks_first(emb, "embedding", 8, 4, 64, id_col="vec_id")
+        codes = pq_mod.pq_encode(emb, "embedding", books, id_col="vec_id")
+        luts = pq_mod.adc_lut(q, books)
+        terms = F.zip_with(F.col("codes"), F.array(*[lits(row) for row in luts]),
+                           lambda code, lut: F.element_at(lut, (code + 1).cast("int")))
+        adc = snap_zero(F.sqrt(F.aggregate(terms, F.lit(0.0), lambda acc, t: acc + t)))
+        want = (codes.where(F.col("codes").isNotNull())
+                .select(F.col("id").cast("bigint").alias("id"), adc.alias("distance"))
+                .orderBy(F.col("distance").asc(), F.col("id").asc()).limit(10))
+        assert _normalized_plan(pq_mod.pq_scan(codes, q, books, 10)) == _normalized_plan(want)
+    finally:
+        set_backend("auto")
+
+    bits = bq_encode(emb, "embedding", 64, id_col="vec_id")
+    words = [-(1 << 63), 12345]
+    assert _normalized_plan(bits.select(hamming_col("bits", words).alias("h"))) == \
+        _normalized_plan(bits.select(hamming_col(F.col("bits"), words).alias("h")))

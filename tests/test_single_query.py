@@ -1,0 +1,184 @@
+"""Single-query kNN on small inputs stays in the JVM.
+
+router.knn on the five store tiers (exact, quantized, ivf, bq, pq) at
+dim >= AUTO_DIM: a sized input below version.AUTO_SCAN_BYTES is scored
+by the codegen folds (no Arrow UDF), the plan is built without a Spark
+job once the catalog has read each store's schema, and queries that
+differ only in their vector reuse the compiled classes. Inputs above
+the gate keep the Arrow kernel, and the schema reuse never hides a
+rebuilt or appended store.
+"""
+
+from __future__ import annotations
+
+import numpy as np
+import pyarrow as pa
+import pyarrow.parquet as pq
+import pytest
+
+from sqlite_vector_spark import router
+from sqlite_vector_spark.catalog import VectorCatalog
+from sqlite_vector_spark.operators.ann import ivf_store, ivf_store_append
+from sqlite_vector_spark.operators.bq import bq_rerank_scan, bq_store
+from sqlite_vector_spark.operators.pq import pq_fit, pq_store
+from sqlite_vector_spark.operators.quantize import vector_quantize, vector_quantize_update
+from sqlite_vector_spark.operators.search import full_scan
+from sqlite_vector_spark.sources import plan_size_bytes
+from sqlite_vector_spark.version import AUTO_DIM, AUTO_SCAN_BYTES, set_backend, vector_backend
+
+N, DIM, C = 600, 64, 8
+TIERS = ("exact", "quantized", "ivf", "bq", "pq")
+
+
+def _write_vectors(path, ids, vecs, **cols):
+    arr = pa.FixedSizeListArray.from_arrays(vecs.astype(np.float32).ravel(), vecs.shape[1])
+    pq.write_table(pa.table({"id": ids, "vec": arr.cast(pa.list_(pa.float32())), **cols}), path)
+
+
+@pytest.fixture(scope="module")
+def tiers(spark, tmp_path_factory):
+    """A 600 x 64 corpus registered as table sq_corpus with all five
+    tiers built; returns (catalog, root, vectors, centroids)."""
+    root = str(tmp_path_factory.mktemp("single_query"))
+    rng = np.random.default_rng(7)
+    centers = rng.normal(0.0, 1.0, (C, DIM))
+    vecs = centers[rng.integers(0, C, N)] + 0.3 * rng.normal(0.0, 1.0, (N, DIM))
+    _write_vectors(f"{root}/corpus.parquet", np.arange(N), vecs, label=np.arange(N) % 3)
+    df = spark.read.parquet(f"{root}/corpus.parquet")
+    df.createOrReplaceTempView("sq_corpus")
+    cat = VectorCatalog(f"{root}/catalog")
+    cat.vector_init(df, "sq_corpus", "vec", f"type=FLOAT32,dimension={DIM},distance=L2")
+    vector_quantize(df, "vec", f"{root}/quantized", catalog=cat, table="sq_corpus")
+    ivf_store(df, "vec", centers.tolist(), f"{root}/ivf")
+    cat.set_ivf_index("sq_corpus", "vec", path=f"{root}/ivf", centroids=centers.tolist())
+    bq_store(df, "vec", DIM, f"{root}/bq")
+    cat.set_bq_index("sq_corpus", "vec", path=f"{root}/bq")
+    books = pq_fit(df, "vec", 8, 16, DIM, iters=2)
+    pq_store(df, "vec", books, f"{root}/pq")
+    cat.set_pq_index("sq_corpus", "vec", path=f"{root}/pq", codebooks=books)
+    return cat, root, vecs, centers
+
+
+@pytest.fixture(autouse=True)
+def auto_backend():
+    """Every case here is about the default "auto" dispatch, whatever
+    backend an earlier test left set."""
+    prev = vector_backend()
+    set_backend("auto")
+    yield
+    set_backend(prev)
+
+
+def _query(vecs, i):
+    return (vecs[i] + 0.01).tolist()
+
+
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_gate_sizes_the_fixture_small(spark, tiers):
+    cat, root, _, _ = tiers
+    assert DIM >= AUTO_DIM
+    size = plan_size_bytes(spark.table("sq_corpus"))
+    assert size is not None and size < AUTO_SCAN_BYTES
+
+
+@pytest.mark.parametrize("tier", TIERS)
+def test_small_tier_builds_without_jobs_or_arrow(spark, tiers, tier):
+    """Once the catalog has read the tier's store, building the query
+    starts no Spark job (no schema inference, no hidden action) and
+    its plan has no Python UDF."""
+    cat, _, vecs, _ = tiers
+    sc = spark.sparkContext
+    router.knn(spark, cat, "sq_corpus", "vec", _query(vecs, 0), 10, prefer=tier)
+    group = f"sq-build-{tier}"
+    sc.setJobGroup(group, "router.knn build")
+    try:
+        res = router.knn(spark, cat, "sq_corpus", "vec", _query(vecs, 1), 10, prefer=tier)
+        jobs = list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert jobs == []
+    assert "EvalPython" not in _plan(res)
+    assert len(res.collect()) == 10
+
+
+@pytest.mark.parametrize("tier", TIERS)
+def test_steady_state_queries_compile_no_classes(spark, tiers, tier):
+    """Queries that differ only in their vector generate the same code:
+    query values reach it as array literals by reference, never inlined,
+    so five fresh queries after a warm one compile zero classes."""
+    cat, _, vecs, _ = tiers
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    router.knn(spark, cat, "sq_corpus", "vec", _query(vecs, 2), 10, prefer=tier).collect()
+    before = metrics.METRIC_COMPILATION_TIME().getCount()
+    for i in range(3, 8):
+        router.knn(spark, cat, "sq_corpus", "vec", _query(vecs, i * 37), 10, prefer=tier).collect()
+    assert metrics.METRIC_COMPILATION_TIME().getCount() - before == 0
+
+
+def test_input_above_gate_keeps_arrow(spark, tiers, tmp_path):
+    """A scan Catalyst sizes at or above AUTO_SCAN_BYTES, and a BQ
+    rerank whose candidates (prefilter, bounded by the frame) are that
+    large, keep the Arrow kernel."""
+    rng = np.random.default_rng(11)
+    n = 20000
+    _write_vectors(str(tmp_path / "big.parquet"), np.arange(n), rng.normal(0.0, 1.0, (n, DIM)))
+    big = spark.read.parquet(str(tmp_path / "big.parquet"))
+    assert plan_size_bytes(big) >= AUTO_SCAN_BYTES
+    q = rng.normal(0.0, 1.0, DIM).tolist()
+    assert "ArrowEvalPython" in _plan(full_scan(big, "vec", q, 10))
+
+    wide = AUTO_SCAN_BYTES // (8 * (DIM + 1)) + 1
+    assert "ArrowEvalPython" in _plan(bq_rerank_scan(big, "vec", q, 10, wide))
+    assert "ArrowEvalPython" not in _plan(bq_rerank_scan(big, "vec", q, 10, 100))
+    # a prefilter wider than a small frame is bounded by the frame
+    small = spark.table("sq_corpus")
+    assert "ArrowEvalPython" not in _plan(bq_rerank_scan(small, "vec", q, 10, wide))
+
+
+def test_rebuilt_replica_columns_are_seen(spark, tiers, tmp_path):
+    """A replica rebuilt at the same path with an extra include_cols
+    column is read with its new schema: the schema the catalog kept
+    from the first build does not outlive the files it came from."""
+    cat, _, vecs, _ = tiers
+    src = spark.table("sq_corpus")
+    dest = str(tmp_path / "replica")
+    cat2 = VectorCatalog(str(tmp_path / "catalog"))
+    cat2.vector_init(src, "sq_corpus", "vec", f"type=FLOAT32,dimension={DIM},distance=L2")
+    vector_quantize(src, "vec", dest, catalog=cat2, table="sq_corpus")
+    q = _query(vecs, 3)
+    assert len(router.knn(spark, cat2, "sq_corpus", "vec", q, 10, prefer="quantized").collect()) == 10
+    with pytest.raises(ValueError, match="cannot answer"):
+        router.knn(spark, cat2, "sq_corpus", "vec", q, 10, prefer="quantized", where="label = 1")
+
+    vector_quantize(src, "vec", dest, catalog=cat2, table="sq_corpus", include_cols=["label"])
+    rows = router.knn(spark, cat2, "sq_corpus", "vec", q, 10, prefer="quantized",
+                      where="label = 1").collect()
+    assert len(rows) == 10 and all(r["id"] % 3 == 1 for r in rows)
+
+
+def test_appended_rows_are_seen(spark, tiers, tmp_path):
+    """After an append to the quantized replica and to the IVF store,
+    a self-query for the appended vector returns its id."""
+    cat, root, vecs, centers = tiers
+    src = spark.table("sq_corpus")
+    cat2 = VectorCatalog(str(tmp_path / "catalog"))
+    cat2.vector_init(src, "sq_corpus", "vec", f"type=FLOAT32,dimension={DIM},distance=L2")
+    params = vector_quantize(src, "vec", str(tmp_path / "quantized"), catalog=cat2, table="sq_corpus")
+    ivf_store(src, "vec", centers.tolist(), str(tmp_path / "ivf"))
+    cat2.set_ivf_index("sq_corpus", "vec", path=str(tmp_path / "ivf"), centroids=centers.tolist())
+    new_vec = (centers[0] + 0.05).tolist()
+    for tier in ("quantized", "ivf"):
+        assert len(router.knn(spark, cat2, "sq_corpus", "vec", new_vec, 5, prefer=tier).collect()) == 5
+
+    _write_vectors(str(tmp_path / "new.parquet"), np.array([N + 1]), np.array([new_vec]))
+    batch = spark.read.parquet(str(tmp_path / "new.parquet"))
+    vector_quantize_update(batch, "vec", str(tmp_path / "quantized"), params)
+    ivf_store_append(batch, "vec", centers.tolist(), str(tmp_path / "ivf"))
+    for tier in ("quantized", "ivf"):
+        ids = [r["id"] for r in
+               router.knn(spark, cat2, "sq_corpus", "vec", new_vec, 5, prefer=tier).collect()]
+        assert N + 1 in ids, tier

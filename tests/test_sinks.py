@@ -533,11 +533,18 @@ def _write_plans(spark, fn):
     every SQL execution it ran that wrote files (the status store keeps
     them with the UI off)."""
     store = spark._jsparkSession.sharedState().statusStore()
-    n0 = store.executionsList().size()
+    ex = store.executionsList()
+    # by execution id, not list position: the store keeps only the
+    # newest spark.sql.ui.retainedExecutions, so positions shift
+    last = ex.apply(ex.size() - 1).executionId() if ex.size() else -1
     out = fn()
     spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
     ex = store.executionsList()
-    plans = [ex.apply(i).physicalPlanDescription() for i in range(n0, ex.size())]
+    plans = []
+    i = ex.size() - 1
+    while i >= 0 and ex.apply(i).executionId() > last:
+        plans.insert(0, ex.apply(i).physicalPlanDescription())
+        i -= 1
     return out, [p for p in plans if "WriteFiles" in p]
 
 
