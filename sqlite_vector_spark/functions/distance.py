@@ -1,4 +1,4 @@
-"""Distance kernels as Catalyst Column expressions (+ NumPy backend).
+"""Distance kernels: one SQL-text tree per metric (+ NumPy backend).
 
 Semantics ground truth: the reference CPU kernels (SURVEY.md §2.5;
 /root/reference/src/distance-cpu.c):
@@ -16,6 +16,19 @@ sequential left fold (``aggregate``), so results are deterministic and
 bit-reproducible — the same fold the DuckDB oracle performs via
 ``list_reduce``. Only IEEE-exact ops (+ - * / sqrt abs) appear in the
 value path, so Spark and any IEEE-754 oracle agree bitwise.
+
+One tree per metric: ``distance_tree_sql`` writes each metric's
+snapped fold as Spark SQL text over two operand texts. ``distance()``
+parses it in one F.expr call, the ``vector_distance`` macro (sql.py)
+expands to it, and the PQ encoder and the dedup cosine folds are
+built from its parts. No operand text sits inside a lambda whose
+variable could shadow a column it reads (``lambda_var``).
+
+Operand rule (``sql_operand``): a ``str`` names a column the way
+F.col reads it; a list or tuple is a literal vector; an F.col(...) or
+F.expr(...) Column is read back from its JVM node. Any other Column
+(``F.slice(...)``, ``df["x"]``, a cast) raises TypeError: project it
+under a name first, or write it as F.expr text.
 
 Scale notes:
 - The HOF path is whole-stage-codegen'd: the distance computation runs
@@ -87,46 +100,59 @@ def vector_literal(values: Sequence[float]) -> Column:
     return array_literal([float(v) for v in values])
 
 
-def _col(c: str | Column) -> Column:
-    return F.col(c) if isinstance(c, str) else c
+# one part of a column name as F.col splits it (Spark's
+# UnresolvedAttribute.parseAttributeName): backtick-quoted, a doubled
+# backtick inside standing for one, or bare up to the next dot
+_NAME_PART = r"`((?:[^`]|``)*)`|([^.`]+)"
+_NAME = re.compile(rf"(?:{_NAME_PART})(?:\.(?:{_NAME_PART}))*")
 
 
-def _d(x: Column) -> Column:
-    return x.cast("double")
+def _quote_name(parts) -> str:
+    return ".".join("`" + p.replace("`", "``") + "`" for p in parts)
 
 
-def _fold_sum(pairs: Column) -> Column:
-    # sequential left fold in DOUBLE — deterministic accumulation order,
-    # mirrored by list_reduce(list_prepend(0.0, ...)) in the oracle SQL
-    return F.aggregate(pairs, F.lit(0.0), lambda acc, x: acc + x)
+def sql_operand(x) -> str:
+    """SQL text of a vector operand (the module docstring's operand
+    rule): a ``str`` is a column name, read the way F.col reads it,
+    each part quoted so a keyword still names the column; a list or
+    tuple is a DOUBLE array literal; an F.col(...) or F.expr(...)
+    Column is read back from its JVM node. Any other Column raises
+    TypeError: project it under a name first and pass the name."""
+    if isinstance(x, str):
+        if not _NAME.fullmatch(x):
+            raise ValueError(f"not a column name: {x!r}")
+        return _quote_name(q.replace("``", "`") if q else p for q, p in re.findall(_NAME_PART, x))
+    if isinstance(x, (list, tuple)):
+        return literal_sql([float(v) for v in x])
+    if isinstance(x, Column):
+        node = x._jc.node()
+        kind = node.getClass().getSimpleName()
+        if kind == "SqlExpression":
+            return node.expression()
+        if kind == "UnresolvedAttribute":
+            return _quote_name(node.nameParts().mkString("\0").split("\0"))
+    raise TypeError(
+        f"vector operand {x!r} is not a column name, F.col(...), F.expr(...) or a "
+        "literal vector; project it under a name first (df.withColumn('v', ...)) "
+        "and pass the name"
+    )
 
 
-def _dot_sum(a: Column, b: Column) -> Column:
-    return _fold_sum(F.zip_with(a, b, lambda x, y: _d(x) * _d(y)))
+def lambda_var(name: str, *outer: str) -> str:
+    """``name`` for a lambda variable whose body also holds the SQL
+    texts ``outer``, with ``_`` prepended until no identifier in them
+    reads the same: in the body the variable would shadow a column of
+    its name (names resolve case-insensitively)."""
+    used = {t.lower() for o in outer for t in re.findall(r"\w+", o)}
+    while name.lower() in used:
+        name = "_" + name
+    return name
 
 
-def squared_l2(a: str | Column, b: str | Column) -> Column:
-    a, b = _col(a), _col(b)
-    return _fold_sum(F.zip_with(a, b, lambda x, y: (_d(x) - _d(y)) * (_d(x) - _d(y))))
-
-
-def l2(a: str | Column, b: str | Column) -> Column:
-    return F.sqrt(squared_l2(a, b))
-
-
-def l1(a: str | Column, b: str | Column) -> Column:
-    a, b = _col(a), _col(b)
-    return _fold_sum(F.zip_with(a, b, lambda x, y: F.abs(_d(x) - _d(y))))
-
-
-def dot(a: str | Column, b: str | Column) -> Column:
-    # negated so that smaller = more similar (distance-cpu.c:112-136)
-    return -_dot_sum(_col(a), _col(b))
-
-
-def _let(value: Column, body) -> Column:
-    """Bind ``value`` once, reference it many times: single-element
-    array + transform = a let-binding in Catalyst expression space.
+def let_sql(value: str, var: str, body: str) -> str:
+    """Bind ``value`` once as ``var``, reference it many times in
+    ``body``: single-element array + transform = a let-binding in
+    Catalyst expression space.
 
     Why: a CASE whose branches repeat a subexpression (snap_zero, the
     cosine zero-norm guard) duplicates the whole fold subtree, and
@@ -135,18 +161,12 @@ def _let(value: Column, body) -> Column:
     Cross-operator common-subexpression elimination doesn't exist, so
     we eliminate it by construction. Same IEEE ops, same order →
     bit-identical to the unbound form (oracle hashes unchanged)."""
+    return f"transform(array({value}), {var} -> {body})[0]"
+
+
+def _let(value: Column, body) -> Column:
+    """let_sql for composed Columns (snap_zero)."""
     return F.transform(F.array(value), body)[0]
-
-
-def cosine(a: str | Column, b: str | Column) -> Column:
-    # 1 − dot/(‖a‖·‖b‖); zero-norm → 1.0 (distance-cpu.c:105-107)
-    a, b = _col(a), _col(b)
-    num = _dot_sum(a, b)
-    denom = F.sqrt(_dot_sum(a, a)) * F.sqrt(_dot_sum(b, b))
-    return _let(
-        denom,
-        lambda dn: F.when(dn == F.lit(0.0), F.lit(1.0)).otherwise(F.lit(1.0) - num / dn),
-    )
 
 
 def snap_zero(d: Column) -> Column:
@@ -155,71 +175,62 @@ def snap_zero(d: Column) -> Column:
     return _let(d, lambda v: F.when(F.abs(v) <= F.lit(EPS_SNAP), F.lit(0.0)).otherwise(v))
 
 
-_BUILDERS = {
-    Metric.L2: l2,
-    Metric.SQUARED_L2: squared_l2,
-    Metric.COSINE: cosine,
-    Metric.DOT: dot,
-    Metric.L1: l1,
-}
-
-# The same trees as SQL text, node for node (lambda arguments are
-# named x, y by position, as PySpark names them): a distance over a
-# named column and a literal query is then ONE F.expr call instead of
-# the ~100 py4j calls PySpark spends building the lambdas above
-# (~65 ms of a single query's plan build). test_distance pins the
-# optimized plans of both forms equal for every metric.
-
-_NAME = re.compile(r"[A-Za-z_][A-Za-z0-9_]*")
-
-
-def sql_operand(x) -> str | None:
-    """SQL text of a distance operand that has one: a plain column
-    name (quoted, so a keyword still names the column), or a literal
-    vector (as one DOUBLE array literal)."""
-    if isinstance(x, str):
-        return f"`{x}`" if _NAME.fullmatch(x) else None
-    if isinstance(x, (list, tuple)):
-        return literal_sql([float(v) for v in x])
-    return None
+def snap_zero_sql(d: str) -> str:
+    return let_sql(d, "v", f"CASE WHEN abs(v) <= {literal_sql(EPS_SNAP)} THEN 0.0D ELSE v END")
 
 
 def fold_sum_sql(pairs: str) -> str:
-    return f"aggregate({pairs}, 0.0D, (x, y) -> x + y)"
+    # sequential left fold in DOUBLE — deterministic accumulation order,
+    # mirrored by list_reduce(list_prepend(0.0, ...)) in the oracle SQL
+    return f"aggregate({pairs}, 0.0D, (acc, x) -> acc + x)"
 
 
-def _dot_sum_sql(a: str, b: str) -> str:
-    return fold_sum_sql(f"zip_with({a}, {b}, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE))")
+def _zip_fold_sql(a: str, b: str, term) -> str:
+    """Σ term(x, y) over the lanes of a and b in order, each lane
+    widened to DOUBLE."""
+    return fold_sum_sql(f"zip_with({a}, {b}, (x, y) -> {term('CAST(x AS DOUBLE)', 'CAST(y AS DOUBLE)')})")
 
 
-def _squared_l2_sql(a: str, b: str) -> str:
-    diff = "(CAST(x AS DOUBLE) - CAST(y AS DOUBLE))"
-    return fold_sum_sql(f"zip_with({a}, {b}, (x, y) -> {diff} * {diff})")
+def dot_sum_sql(a: str, b: str) -> str:
+    return _zip_fold_sql(a, b, lambda x, y: f"{x} * {y}")
 
 
-def let_sql(value: str, body: str) -> str:
-    """_let as SQL: ``body`` refers to the bound value as ``x``."""
-    return f"transform(array({value}), x -> {body})[0]"
+def norm_sql(a: str) -> str:
+    """‖a‖: the square root of the sequential self-dot fold."""
+    return f"sqrt({dot_sum_sql(a, a)})"
 
 
 def _cosine_sql(a: str, b: str) -> str:
-    denom = f"sqrt({_dot_sum_sql(a, a)}) * sqrt({_dot_sum_sql(b, b)})"
-    return let_sql(denom, f"CASE WHEN x = 0.0D THEN 1.0D ELSE 1.0D - {_dot_sum_sql(a, b)} / x END")
+    # 1 − dot/(‖a‖·‖b‖); zero-norm → 1.0 (distance-cpu.c:105-107). The
+    # dot fold sits in the let body, so the bound name must not shadow
+    # a column the operands read.
+    dn = lambda_var("dn", a, b)
+    return let_sql(
+        f"{norm_sql(a)} * {norm_sql(b)}",
+        dn,
+        f"CASE WHEN {dn} = 0.0D THEN 1.0D ELSE 1.0D - {dot_sum_sql(a, b)} / {dn} END",
+    )
 
 
-def snap_zero_sql(d: str) -> str:
-    return let_sql(d, f"CASE WHEN abs(x) <= {literal_sql(EPS_SNAP)} THEN 0.0D ELSE x END")
+def _squared_l2_sql(a: str, b: str) -> str:
+    return _zip_fold_sql(a, b, lambda x, y: f"({x} - {y}) * ({x} - {y})")
 
 
-_SQL_BUILDERS = {
+_TREES = {
     Metric.L2: lambda a, b: f"sqrt({_squared_l2_sql(a, b)})",
     Metric.SQUARED_L2: _squared_l2_sql,
     Metric.COSINE: _cosine_sql,
-    Metric.DOT: lambda a, b: f"-({_dot_sum_sql(a, b)})",
-    Metric.L1: lambda a, b: fold_sum_sql(
-        f"zip_with({a}, {b}, (x, y) -> abs(CAST(x AS DOUBLE) - CAST(y AS DOUBLE)))"
-    ),
+    # negated so that smaller = more similar (distance-cpu.c:112-136)
+    Metric.DOT: lambda a, b: f"-({dot_sum_sql(a, b)})",
+    Metric.L1: lambda a, b: _zip_fold_sql(a, b, lambda x, y: f"abs({x} - {y})"),
 }
+
+
+def distance_tree_sql(a: str, b: str, metric: str | Metric = Metric.L2) -> str:
+    """The one distance tree: SQL text of the snapped ``metric``
+    distance between the vector operand texts ``a`` and ``b``."""
+    m = parse_metric(metric) if isinstance(metric, str) else metric
+    return snap_zero_sql(_TREES[m](a, b))
 
 
 def distance(
@@ -229,7 +240,8 @@ def distance(
     size_bytes: int | None = None,
 ) -> Column:
     """Distance between two vector columns (or a column and a Python
-    query vector), with the reference's zero-snap applied.
+    query vector), with the reference's zero-snap applied. Operands
+    follow sql_operand's rule.
 
     This is the single entry point all operators compose; it is a pure
     Catalyst expression → fused into whole-stage codegen at the scan.
@@ -237,6 +249,7 @@ def distance(
     version.resolve_backend); None keeps the per-dim rule.
     """
     m = parse_metric(metric) if isinstance(metric, str) else metric
+    sa = sql_operand(a)
     if isinstance(b, (list, tuple)):
         # runtime backend dispatch, mirroring init_distance_functions
         # (reference distance-cpu.c:797-812): the Arrow/NumPy kernel
@@ -248,13 +261,8 @@ def distance(
         from sqlite_vector_spark.version import resolve_backend
 
         if resolve_backend(len(b), size_bytes) == "arrow-numpy":
-            return distance_pandas_udf(m, b)(_col(a))
-    sa, sb = sql_operand(a), sql_operand(b)
-    if sa is not None and sb is not None:
-        return F.expr(snap_zero_sql(_SQL_BUILDERS[m](sa, sb)))
-    if isinstance(b, (list, tuple)):
-        b = vector_literal(b)
-    return snap_zero(_BUILDERS[m](a, b))
+            return distance_pandas_udf(m, b)(F.col(a) if isinstance(a, str) else a)
+    return F.expr(distance_tree_sql(sa, sql_operand(b), m))
 
 
 def batch_matrix(col, dtype="float64"):

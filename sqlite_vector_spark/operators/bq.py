@@ -157,12 +157,10 @@ def hamming_col(bits: str | Column, query_words: Sequence[int]) -> Column:
     words: a per-word ``long`` literal would be inlined into the
     generated code, so every new query would compile a new class."""
     q = [int(w) for w in query_words]
-    name = sql_operand(bits)
-    if name is not None:  # one F.expr call, the same tree as below
-        terms = f"zip_with({name}, {literal_sql(q)}, (x, y) -> CAST(bit_count(x ^ y) AS BIGINT))"
+    if isinstance(bits, str):  # one F.expr call, the same tree as below
+        terms = f"zip_with({sql_operand(bits)}, {literal_sql(q)}, (x, y) -> CAST(bit_count(x ^ y) AS BIGINT))"
         return F.expr(f"aggregate({terms}, CAST(0 AS BIGINT), (x, y) -> x + y)")
-    b = F.col(bits) if isinstance(bits, str) else bits
-    terms = F.zip_with(b, array_literal(q), lambda x, y: F.bit_count(x.bitwiseXOR(y)).cast("long"))
+    terms = F.zip_with(bits, array_literal(q), lambda x, y: F.bit_count(x.bitwiseXOR(y)).cast("long"))
     return F.aggregate(terms, F.lit(0).cast("long"), lambda acc, t: acc + t)
 
 

@@ -31,7 +31,7 @@ import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
-from sqlite_vector_spark.functions.distance import distance
+from sqlite_vector_spark.functions.distance import distance, dot_sum_sql, norm_sql, snap_zero_sql
 from sqlite_vector_spark.functions.text import HASH_P, polyhash, shingles_from_words, words
 
 # deterministic MinHash permutation parameters (a*h + b) mod P
@@ -1137,6 +1137,25 @@ def _hyperplane_bucket_arrow(planes: Sequence[Sequence[float]]):
     return _kernel
 
 
+def _pair_sides(base: DataFrame, metric: str, *keep: str) -> tuple[DataFrame, DataFrame, Column]:
+    """The (a, va, ...) and (b, vb, ...) sides of a pair join over
+    ``base`` (id, v), with ``keep`` columns, and the pair distance.
+    COSINE folds each row's norm ONCE (na, nb) before the pair join, so
+    the per-pair expression folds only the dot product (3x less work);
+    numerically identical to folding the norms per pair, since the
+    per-row fold is the same expression."""
+    if str(metric).upper() != "COSINE":
+        a, b = (base.select(F.col("id").alias(s), F.col("v").alias(f"v{s}"), *keep) for s in "ab")
+        return a, b, distance("va", "vb", metric)
+    base = base.withColumn("nrm", F.expr(norm_sql("v")))
+    a, b = (
+        base.select(F.col("id").alias(s), F.col("v").alias(f"v{s}"), F.col("nrm").alias(f"n{s}"), *keep)
+        for s in "ab"
+    )
+    cos = f"CASE WHEN na * nb = 0.0D THEN 1.0D ELSE 1.0D - {dot_sum_sql('va', 'vb')} / (na * nb) END"
+    return a, b, F.expr(snap_zero_sql(cos))
+
+
 def embedding_neardup_pairs(
     df: DataFrame,
     id_col: str,
@@ -1201,32 +1220,11 @@ def embedding_neardup_pairs(
             .select("bucket")
         )
         base = base.join(hot, "bucket", "left_semi")
-    if str(metric).upper() == "COSINE":
-        # precompute each row's norm ONCE before the pair join — the
-        # per-pair expression then folds only the dot product (3x less
-        # work); numerically identical to folding na/nb per pair since
-        # the per-row fold is the same expression
-        from sqlite_vector_spark.functions.distance import _dot_sum, snap_zero
-
-        base = base.withColumn("nrm", F.sqrt(_dot_sum(F.col("v"), F.col("v"))))
-        left = base.select(F.col("id").alias("a"), F.col("v").alias("va"), F.col("nrm").alias("na"), "bucket")
-        right = base.select(F.col("id").alias("b"), F.col("v").alias("vb"), F.col("nrm").alias("nb"), "bucket")
-        denom = F.col("na") * F.col("nb")
-        cos = F.when(denom == F.lit(0.0), F.lit(1.0)).otherwise(
-            F.lit(1.0) - _dot_sum(F.col("va"), F.col("vb")) / denom
-        )
-        return (
-            left.join(right, "bucket")
-            .where(F.col("a") < F.col("b"))
-            .select("a", "b", snap_zero(cos).alias("distance"))
-            .where(F.col("distance") < threshold)
-        )
-    left = base.select(F.col("id").alias("a"), F.col("v").alias("va"), "bucket")
-    right = base.select(F.col("id").alias("b"), F.col("v").alias("vb"), "bucket")
+    left, right, dist = _pair_sides(base, metric, "bucket")
     return (
         left.join(right, "bucket")
         .where(F.col("a") < F.col("b"))
-        .select("a", "b", distance(F.col("va"), F.col("vb"), metric).alias("distance"))
+        .select("a", "b", dist.alias("distance"))
         .where(F.col("distance") < threshold)
     )
 
@@ -1366,28 +1364,8 @@ def embedding_pair_distances(
         # corpus twice (r14, same shape as jaccard_pairs' token sets)
         .localCheckpoint(eager=False)
     )
-    if str(metric).upper() == "COSINE":
-        from sqlite_vector_spark.functions.distance import _dot_sum, snap_zero
-
-        base = base.withColumn("nrm", F.sqrt(_dot_sum(F.col("v"), F.col("v"))))
-        left = base.select(F.col("id").alias("a"), F.col("v").alias("va"), F.col("nrm").alias("na"))
-        right = base.select(F.col("id").alias("b"), F.col("v").alias("vb"), F.col("nrm").alias("nb"))
-        denom = F.col("na") * F.col("nb")
-        cos = F.when(denom == F.lit(0.0), F.lit(1.0)).otherwise(
-            F.lit(1.0) - _dot_sum(F.col("va"), F.col("vb")) / denom
-        )
-        return (
-            candidates.join(left, "a").join(right, "b")
-            .select("a", "b", snap_zero(cos).alias("distance"))
-        )
-    from sqlite_vector_spark.functions.distance import distance as _dist
-
-    left = base.select(F.col("id").alias("a"), F.col("v").alias("va"))
-    right = base.select(F.col("id").alias("b"), F.col("v").alias("vb"))
-    return (
-        candidates.join(left, "a").join(right, "b")
-        .select("a", "b", _dist(F.col("va"), F.col("vb"), metric).alias("distance"))
-    )
+    left, right, dist = _pair_sides(base, metric)
+    return candidates.join(left, "a").join(right, "b").select("a", "b", dist.alias("distance"))
 
 
 def chunk_dedup_stats(

@@ -49,13 +49,11 @@ from pyspark.sql import Column, DataFrame
 from sqlite_vector_spark.functions.distance import (
     EPS_SNAP,
     batch_matrix,
+    distance_tree_sql,
     fold_sum_sql,
     literal_sql,
-    snap_zero,
     snap_zero_sql,
     sql_operand,
-    squared_l2,
-    vector_literal,
 )
 from sqlite_vector_spark.operators.topk import topk_per_key
 from sqlite_vector_spark.types import Metric, parse_metric
@@ -73,12 +71,6 @@ def _check_codebooks(codebooks: Codebooks) -> tuple[int, int, int]:
         if len(cb) != ksub or any(len(e) != dsub for e in cb):
             raise ValueError(f"codebooks ragged at subspace {s}: need uniform [m][ksub][dsub]")
     return m, ksub, dsub
-
-
-def subvector(vec: str | Column, s: int, dsub: int) -> Column:
-    """Subspace s of a vector column (1-based slice, length dsub)."""
-    v = F.col(vec) if isinstance(vec, str) else vec
-    return F.slice(v, s * dsub + 1, dsub)
 
 
 def _pq_backend(codebooks: Codebooks, size_bytes: int | None = None) -> str:
@@ -108,16 +100,17 @@ def pq_encode_col(vec: str | Column, codebooks: Codebooks) -> Column:
     """ARRAY<BIGINT> of per-subspace nearest-codebook-entry ids —
     the codegen literal-fold path (snapped SQUARED_L2 per entry,
     first-minimum = lowest-index tiebreak, mirrored by the SQL
-    row_number ORDER BY d, j in oracle.pq_codes_q)."""
+    row_number ORDER BY d, j in oracle.pq_codes_q). One F.expr per
+    subspace; ``vec`` follows distance's operand rule."""
     m, ksub, dsub = _check_codebooks(codebooks)
-    v = F.col(vec) if isinstance(vec, str) else vec
+    v = sql_operand(vec)
     cols = []
     for s in range(m):
-        sub = subvector(v, s, dsub)
-        d_arr = F.array(
-            *[snap_zero(squared_l2(sub, vector_literal(e))) for e in codebooks[s]]
+        sub = f"slice({v}, {s * dsub + 1}, {dsub})"
+        d_arr = ", ".join(
+            distance_tree_sql(sub, literal_sql([float(x) for x in e]), Metric.SQUARED_L2) for e in codebooks[s]
         )
-        cols.append((F.array_position(d_arr, F.array_min(d_arr)) - 1).cast("bigint"))
+        cols.append(F.expr(f"CAST(array_position(array({d_arr}), array_min(array({d_arr}))) - 1 AS BIGINT)"))
     return F.array(*cols)
 
 
@@ -358,7 +351,7 @@ def _pq_partial_sums_kernel(codebooks: Codebooks, m: int, ksub: int, dsub: int, 
 
 def _py_sq_l2(a: Sequence[float], b: Sequence[float]) -> float:
     """Driver-side snapped sequential-fold SQUARED_L2 — bit-identical
-    to functions.distance.squared_l2 (codegen) and oracle.dist_sql:
+    to functions.distance.distance_tree_sql (codegen) and oracle.dist_sql:
     same lane order, same IEEE double ops, same eps-snap."""
     acc = 0.0
     for x, y in zip(a, b):
@@ -393,8 +386,6 @@ def adc_distance_col(codes: str, luts: Sequence[Sequence[float]], metric: str | 
     if m not in (Metric.L2, Metric.SQUARED_L2):
         raise ValueError(f"ADC supports L2/SQUARED_L2 (additive over subspaces), got {m}")
     c = sql_operand(codes)
-    if c is None:
-        raise ValueError(f"codes must be a plain column name, got {codes!r}")
     lut = literal_sql([[float(v) for v in lut_s] for lut_s in luts])
     d2 = fold_sum_sql(f"zip_with({c}, {lut}, (x, y) -> element_at(y, CAST(x + 1 AS INT)))")
     return F.expr(snap_zero_sql(f"sqrt({d2})" if m is Metric.L2 else d2))

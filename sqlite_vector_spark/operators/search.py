@@ -31,7 +31,7 @@ from collections.abc import Sequence
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
-from sqlite_vector_spark.functions.distance import distance
+from sqlite_vector_spark.functions.distance import distance, sql_operand
 from sqlite_vector_spark.sources import plan_size_bytes
 from sqlite_vector_spark.types import Metric
 
@@ -166,11 +166,15 @@ def matryoshka_scan(
         raise ValueError("coarse_dim must be in 1..len(query)")
     if coarse_m < k:
         raise ValueError("coarse_m must be >= k (rerank cannot widen)")
+    # both passes pick their backend by the corpus's size, as full_scan
+    # does, so that a coarse_m covering the corpus gives full_scan's values
+    size = plan_size_bytes(df)
+    prefix = F.expr(f"slice({sql_operand(column)}, 1, {coarse_dim})")
     coarse = (
         df.where(F.col(column).isNotNull())
         .select(
             F.col(id_col).cast("bigint").alias("id"),
-            distance(F.slice(F.col(column), 1, coarse_dim), list(query)[:coarse_dim], metric).alias("cd"),
+            distance(prefix, list(query)[:coarse_dim], metric, size_bytes=size).alias("cd"),
         )
         .orderBy(F.col("cd").asc(), F.col("id").asc())
         .limit(coarse_m)
@@ -181,7 +185,7 @@ def matryoshka_scan(
         .join(F.broadcast(coarse), F.col(id_col).cast("bigint") == coarse["id"], "left_semi")
         .select(
             F.col(id_col).cast("bigint").alias("id"),
-            distance(F.col(column), query, metric).alias("distance"),
+            distance(column, query, metric, size_bytes=size).alias("distance"),
         )
         .orderBy(F.col("distance").asc(), F.col("id").asc())
         .limit(k)

@@ -1517,7 +1517,7 @@ def _pq_sub_sq(a: str, b: str, sub: str, dsub: int = PQ_DSUB) -> str:
     """Snapped sequential-fold SQUARED_L2 between subspace ``sub`` of
     two vectors indexed in place (no list slicing): lane i of subspace
     s is element i + s*dsub — identical lane order and IEEE ops to
-    functions.distance.squared_l2 over F.slice and to pq._py_sq_l2."""
+    functions.distance.distance_tree_sql over slice() and to pq._py_sq_l2."""
     x = f"CAST({a}[i + {sub}*{dsub}] AS DOUBLE)"
     y = f"CAST({b}[i + {sub}*{dsub}] AS DOUBLE)"
     return snap(_fold(f"list_transform(range(1, {dsub + 1}), i -> ({x} - {y}) * ({x} - {y}))"))

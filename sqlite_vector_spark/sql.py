@@ -10,8 +10,9 @@ none is required):
 1. ``expand_vector_sql(sql)`` — a textual macro: every
    ``vector_distance(a, b[, 'metric'])`` call is expanded into the
    equivalent Spark SQL higher-order-function expression
-   (``aggregate(zip_with(...))`` — the same sequential DOUBLE fold as
-   functions/distance.py, bit-identical results). The expanded text is
+   (``aggregate(zip_with(...))``): ``distance_sql`` calls the one
+   distance tree of functions/distance.py, so the fold is the one
+   ``distance()`` builds, bit-identical results. The expanded text is
    plain Spark SQL: whole-stage-codegen'd, filter-pushdown-friendly,
    no UDF, works in ANY query shape (WHERE/JOIN/GROUP BY).
 
@@ -52,70 +53,24 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
-from sqlite_vector_spark.functions.distance import EPS_SNAP
+from sqlite_vector_spark.functions.distance import distance_tree_sql
 from sqlite_vector_spark.types import Metric, parse_metric
 
-# ---------------------------------------------------------------- macro templates
-# Each mirrors functions/distance.py exactly: sequential left fold in
-# DOUBLE (aggregate), per-pair IEEE ops via zip_with, the single-eval
-# let-binding (transform(array(x), v -> body)[0]) for cosine's denom
-# and the zero-snap — so macro-expanded SQL is bit-identical to the
-# Column-built codegen path AND to the DuckDB oracle's list_reduce
-# fold (oracle.py dist_sql).
-
-_D0 = "CAST(0.0 AS DOUBLE)"
-_D1 = "CAST(1.0 AS DOUBLE)"
-
-
-def _fold(pairs: str) -> str:
-    return f"aggregate({pairs}, {_D0}, (acc, x) -> acc + x)"
-
-
-def _ad(v: str) -> str:
-    # element casts hoisted to ONE array-level cast: for a literal
-    # array argument the cast constant-folds to a DOUBLE-array literal
-    # (a per-element CAST inside the lambda re-ran on every row —
-    # measured 3.7x slower at 1M x 768, SCALE.md §SQL surface); for a
-    # column argument it is the same per-row widening either way.
-    # Value-exact: identical IEEE conversion, identical fold.
-    return f"CAST({v} AS ARRAY<DOUBLE>)"
-
-
-def _sq(a: str, b: str) -> str:
-    return _fold(f"zip_with({_ad(a)}, {_ad(b)}, (x, y) -> (x - y) * (x - y))")
-
-
-def _dotp(a: str, b: str) -> str:
-    return _fold(f"zip_with({_ad(a)}, {_ad(b)}, (x, y) -> x * y)")
-
-
-def _snap(d: str) -> str:
-    eps = f"CAST('{EPS_SNAP!r}' AS DOUBLE)"
-    return f"transform(array({d}), v -> CASE WHEN abs(v) <= {eps} THEN {_D0} ELSE v END)[0]"
+# ---------------------------------------------------------------- macro template
 
 
 def distance_sql(a: str, b: str, metric: str | Metric = Metric.L2) -> str:
     """The Spark SQL text of ``distance(a, b, metric)`` — reference
-    kernel semantics (distance-cpu.c:39-159 + eps-snap 994-996)."""
-    m = parse_metric(metric) if isinstance(metric, str) else metric
-    if m is Metric.SQUARED_L2:
-        d = _sq(a, b)
-    elif m is Metric.L2:
-        d = f"sqrt({_sq(a, b)})"
-    elif m is Metric.L1:
-        d = _fold(f"zip_with({_ad(a)}, {_ad(b)}, (x, y) -> abs(x - y))")
-    elif m is Metric.DOT:
-        d = f"(- {_dotp(a, b)})"
-    elif m is Metric.COSINE:
-        num = _dotp(a, b)
-        denom = f"sqrt({_dotp(a, a)}) * sqrt({_dotp(b, b)})"
-        d = (
-            f"transform(array({denom}), dn -> CASE WHEN dn = {_D0} THEN {_D1}"
-            f" ELSE {_D1} - ({num}) / dn END)[0]"
-        )
-    else:  # pragma: no cover
-        raise ValueError(m)
-    return _snap(d)
+    kernel semantics (distance-cpu.c:39-159 + eps-snap 994-996). It is
+    functions/distance.py's one tree over operands cast to
+    ARRAY<DOUBLE>: for a literal array argument the cast constant-folds
+    to a DOUBLE-array literal, and the per-lane casts in the tree then
+    simplify away (a per-element CAST of a literal re-ran on every row
+    — measured 3.7x slower at 1M x 768, SCALE.md §SQL surface); for a
+    column argument it is the same per-row widening either way. So
+    macro-expanded SQL is bit-identical to distance() and to the DuckDB
+    oracle's list_reduce fold (oracle.py dist_sql)."""
+    return distance_tree_sql(f"CAST({a} AS ARRAY<DOUBLE>)", f"CAST({b} AS ARRAY<DOUBLE>)", metric)
 
 
 # ---------------------------------------------------------------- call-site scanner

@@ -792,7 +792,7 @@ def recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         approx = topk(
             codes.crossJoin(F.broadcast(qcodes))
-            .select("qid", "id", distance(F.col("qvec").cast("array<double>"), F.col("qq"), "L2").alias("distance"))
+            .select("qid", "id", distance(F.expr("CAST(qvec AS ARRAY<DOUBLE>)"), "qq", "L2").alias("distance"))
         ).select(F.col("qid").alias("aqid"), F.col("id").alias("aid"))
 
     hits = exact.join(approx, (exact["qid"] == approx["aqid"]) & (exact["id"] == approx["aid"]), "left")
@@ -1544,11 +1544,14 @@ def normalize_vectors(emb: DataFrame, vec_col: str = "embedding") -> F.Column:
     """L2-unit-normalized copy of ``vec_col`` as an ARRAY<DOUBLE> column
     (zero vectors pass through). Library form — map-only, the norm
     folded once per row."""
-    from sqlite_vector_spark.functions.distance import _dot_sum
+    from sqlite_vector_spark.functions.distance import lambda_var, norm_sql, sql_operand
 
-    nrm = F.sqrt(_dot_sum(F.col(vec_col), F.col(vec_col)))
-    return F.when(nrm == F.lit(0.0), F.col(vec_col).cast("array<double>")).otherwise(
-        F.transform(F.col(vec_col), lambda x: x.cast("double") / nrm)
+    v = sql_operand(vec_col)
+    nrm = norm_sql(v)
+    x = lambda_var("x", nrm)
+    return F.expr(
+        f"CASE WHEN {nrm} = 0.0D THEN CAST({v} AS ARRAY<DOUBLE>)"
+        f" ELSE transform({v}, {x} -> CAST({x} AS DOUBLE) / {nrm}) END"
     )
 
 

@@ -40,6 +40,17 @@ def spark():
     s.stop()
 
 
+@pytest.fixture(autouse=True)
+def restore_backend():
+    """Every test ends on the distance backend it started on, so a test
+    that pins one (set_backend) cannot leak it into later tests."""
+    from sqlite_vector_spark.version import set_backend, vector_backend
+
+    prev = vector_backend()
+    yield
+    set_backend(prev)
+
+
 @pytest.fixture(scope="session")
 def emb(spark):
     return spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet")

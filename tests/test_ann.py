@@ -183,7 +183,6 @@ def test_arrow_assignment_matches_codegen(spark, emb):
         ref = {r.id: r.cluster for r in ivf_assign(emb, "embedding", cent, id_col="vec_id", metric=metric).collect()}
         set_backend("arrow-numpy")
         got = {r.id: r.cluster for r in ivf_assign(emb, "embedding", cent, id_col="vec_id", metric=metric).collect()}
-        set_backend("auto")
         diff = {k for k in ref if ref[k] != got[k]}
         # identical corpora, well-separated clusters: exact agreement
         assert not diff, (metric, len(diff))
@@ -203,7 +202,6 @@ def test_arrow_probe_selection_matches_codegen(spark, emb):
     ref = {r.vec_id: list(r.p) for r in qdf.select("vec_id", probe_clusters_col("embedding", cent, 3).alias("p")).collect()}
     set_backend("arrow-numpy")
     got = {r.vec_id: list(r.p) for r in qdf.select("vec_id", probe_clusters_col("embedding", cent, 3).alias("p")).collect()}
-    set_backend("auto")
     assert ref == got
 
 

@@ -706,12 +706,10 @@ def test_hyperplane_bucket_backends_agree(spark, emb):
 
     # auto under the oracle gate's pinned codegen == the exact fold plan
     set_backend("codegen")
-    try:
-        pinned = hyperplane_bucket("v", planes)
-        assert "aggregate" in base.select(pinned.alias("b"))._jdf.queryExecution().analyzed().toString().lower()
-    finally:
-        set_backend("auto")
+    pinned = hyperplane_bucket("v", planes)
+    assert "aggregate" in base.select(pinned.alias("b"))._jdf.queryExecution().analyzed().toString().lower()
     # auto at dim >= AUTO_DIM routes to the Arrow kernel (the _kernel UDF)
+    set_backend("auto")
     routed = base.select(hyperplane_bucket("v", planes).alias("b"))
     assert "_kernel(" in routed._jdf.queryExecution().analyzed().toString()
 

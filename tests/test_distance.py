@@ -7,7 +7,17 @@ import numpy as np
 import pyspark.sql.functions as F
 import pytest
 
-from sqlite_vector_spark.functions.distance import EPS_SNAP, distance, distance_pandas_udf
+from sqlite_vector_spark.functions.distance import (
+    EPS_SNAP,
+    _let,
+    distance,
+    distance_pandas_udf,
+    literal_sql,
+    snap_zero,
+)
+from sqlite_vector_spark.plans import normalized_plan
+from sqlite_vector_spark.types import Metric
+from sqlite_vector_spark.version import set_backend
 
 VECS = [
     (1, [1.0, 2.0, 3.0, 4.0]),
@@ -92,13 +102,9 @@ def test_distance_is_codegen_plan_when_pinned(spark, emb):
     """under the pinned codegen backend (the oracle-gate setting) the
     hot path stays JVM-side: no Python eval in the plan."""
     from sqlite_vector_spark.plans import assert_not_in_plan
-    from sqlite_vector_spark.version import set_backend
 
     set_backend("codegen")
-    try:
-        df = emb.select(distance("embedding", [0.0] * 64, "L2").alias("d"))
-    finally:
-        set_backend("auto")
+    df = emb.select(distance("embedding", [0.0] * 64, "L2").alias("d"))
     assert_not_in_plan(df, "BatchEvalPython", "ArrowEvalPython")
 
 
@@ -125,31 +131,15 @@ def test_backend_dispatch_arrow_numpy(spark, emb):
     import pytest
 
     from sqlite_vector_spark.operators.search import full_scan
-    from sqlite_vector_spark.version import set_backend
 
     q = [0.1] * 64
     set_backend("codegen")
-    try:
-        base = full_scan(emb, "embedding", q, 50, "L2", id_col="vec_id").collect()
-    finally:
-        set_backend("auto")
+    base = full_scan(emb, "embedding", q, 50, "L2", id_col="vec_id").collect()
     set_backend("arrow-numpy")
-    try:
-        alt = full_scan(emb, "embedding", q, 50, "L2", id_col="vec_id").collect()
-    finally:
-        set_backend("auto")
+    alt = full_scan(emb, "embedding", q, 50, "L2", id_col="vec_id").collect()
     assert [r.id for r in alt] == [r.id for r in base]
     for a, b in zip(alt, base):
         assert a.distance == pytest.approx(b.distance, rel=1e-12)
-
-
-def _normalized_plan(df) -> str:
-    """Optimized plan text with expression ids and PySpark's lambda
-    variable numbers (x_12 -> x) normalized."""
-    import re
-
-    plan = df._jdf.queryExecution().optimizedPlan().toString()
-    return re.sub(r"\b([xyz])_\d+\b", r"\1", re.sub(r"#\d+L?", "#", plan))
 
 
 def test_array_literal_is_bit_exact_one_call_form(spark):
@@ -181,22 +171,62 @@ def test_array_literal_is_bit_exact_one_call_form(spark):
     assert w.collect()[0]["w"] == words
 
 
+# The Column-API trees the library built before its one SQL-text tree
+# (functions/distance.py): the reference the SQL forms' plans are held to.
+
+
+def _d(x):
+    return x.cast("double")
+
+
+def _fold_sum(pairs):
+    return F.aggregate(pairs, F.lit(0.0), lambda acc, x: acc + x)
+
+
+def _dot_sum(a, b):
+    return _fold_sum(F.zip_with(a, b, lambda x, y: _d(x) * _d(y)))
+
+
+def _squared_l2(a, b):
+    return _fold_sum(F.zip_with(a, b, lambda x, y: (_d(x) - _d(y)) * (_d(x) - _d(y))))
+
+
+def _cosine(a, b):
+    num = _dot_sum(a, b)
+    denom = F.sqrt(_dot_sum(a, a)) * F.sqrt(_dot_sum(b, b))
+    return _let(denom, lambda dn: F.when(dn == F.lit(0.0), F.lit(1.0)).otherwise(F.lit(1.0) - num / dn))
+
+
+_COLUMN_TREES = {
+    Metric.L2: lambda a, b: F.sqrt(_squared_l2(a, b)),
+    Metric.SQUARED_L2: _squared_l2,
+    Metric.COSINE: _cosine,
+    Metric.DOT: lambda a, b: -_dot_sum(a, b),
+    Metric.L1: lambda a, b: _fold_sum(F.zip_with(a, b, lambda x, y: F.abs(_d(x) - _d(y)))),
+}
+
+
+def _column_distance(a, b, m):
+    return snap_zero(_COLUMN_TREES[m](a, b))
+
+
+def _lits(values):
+    return F.array(*[F.lit(float(v)) for v in values])
+
+
 def test_one_call_scan_plans_equal_column_api_plans(spark, emb):
-    """The one-call SQL forms of the scan expressions (distance over a
-    named column and a literal query, the PQ ADC fold, the BQ Hamming
-    fold) give the optimized plans that the Column-API builders with
-    per-element F.lit literals give, once expression ids and lambda
-    variable numbers are normalized. full_scan and pq_scan are checked
-    whole, under set_backend("codegen")."""
-    from sqlite_vector_spark.functions.distance import _BUILDERS, snap_zero
+    """Every SQL-text form gives the optimized plan that the Column-API
+    tree with per-element F.lit literals gives, once expression ids and
+    lambda-variable names are erased: distance() over a named column and
+    a literal query and over two columns, the vector_distance macro,
+    pq_encode_col, the dedup norm-precomputed cosine, the PQ ADC fold and
+    the BQ Hamming fold. full_scan and pq_scan are checked whole, under
+    set_backend("codegen")."""
     from sqlite_vector_spark.operators import pq as pq_mod
     from sqlite_vector_spark.operators.bq import bq_encode, hamming_col
+    from sqlite_vector_spark.operators.dedup import _pair_sides
     from sqlite_vector_spark.operators.search import full_scan
-    from sqlite_vector_spark.types import Metric
-    from sqlite_vector_spark.version import set_backend
-
-    def lits(values):
-        return F.array(*[F.lit(float(v)) for v in values])
+    from sqlite_vector_spark.sql import distance_sql
 
     def scan(df, score):
         return (df.where(F.col("embedding").isNotNull())
@@ -204,30 +234,115 @@ def test_one_call_scan_plans_equal_column_api_plans(spark, emb):
                 .orderBy(F.col("distance").asc(), F.col("id").asc()).limit(10))
 
     q = [math.sin(i * 0.37) for i in range(64)]
+    pairs = emb.select("embedding", F.reverse("embedding").alias("e2"))
+    e, e2 = F.col("embedding"), F.col("e2")
     set_backend("codegen")
-    try:
-        for m in Metric:
-            got = emb.select(distance("embedding", q, m).alias("d"))
-            want = emb.select(snap_zero(_BUILDERS[m](F.col("embedding"), lits(q))).alias("d"))
-            assert _normalized_plan(got) == _normalized_plan(want), m
-        want = scan(emb, snap_zero(_BUILDERS[Metric.L2](F.col("embedding"), lits(q))))
-        assert _normalized_plan(full_scan(emb, "embedding", q, 10, "L2", id_col="vec_id")) == \
-            _normalized_plan(want)
+    for m in Metric:
+        got = emb.select(distance("embedding", q, m).alias("d"))
+        assert normalized_plan(got) == normalized_plan(emb.select(_column_distance(e, _lits(q), m).alias("d"))), m
+        got = pairs.select(distance("embedding", e2, m).alias("d"))
+        assert normalized_plan(got) == normalized_plan(pairs.select(_column_distance(e, e2, m).alias("d"))), m
+        got = emb.select(F.expr(distance_sql("embedding", literal_sql(q), m.value)).alias("d"))
+        want = _column_distance(e.cast("array<double>"), _lits(q).cast("array<double>"), m)
+        assert normalized_plan(got) == normalized_plan(emb.select(want.alias("d"))), m
+    want = scan(emb, _column_distance(e, _lits(q), Metric.L2))
+    assert normalized_plan(full_scan(emb, "embedding", q, 10, "L2", id_col="vec_id")) == normalized_plan(want)
 
-        books = pq_mod.pq_codebooks_first(emb, "embedding", 8, 4, 64, id_col="vec_id")
-        codes = pq_mod.pq_encode(emb, "embedding", books, id_col="vec_id")
-        luts = pq_mod.adc_lut(q, books)
-        terms = F.zip_with(F.col("codes"), F.array(*[lits(row) for row in luts]),
-                           lambda code, lut: F.element_at(lut, (code + 1).cast("int")))
-        adc = snap_zero(F.sqrt(F.aggregate(terms, F.lit(0.0), lambda acc, t: acc + t)))
-        want = (codes.where(F.col("codes").isNotNull())
-                .select(F.col("id").cast("bigint").alias("id"), adc.alias("distance"))
-                .orderBy(F.col("distance").asc(), F.col("id").asc()).limit(10))
-        assert _normalized_plan(pq_mod.pq_scan(codes, q, books, 10)) == _normalized_plan(want)
-    finally:
-        set_backend("auto")
+    books = pq_mod.pq_codebooks_first(emb, "embedding", 8, 16, 64, id_col="vec_id")
+    cols = []
+    for s in range(8):
+        d_arr = F.array(*[_column_distance(F.slice(e, s * 8 + 1, 8), _lits(c), Metric.SQUARED_L2)
+                          for c in books[s]])
+        cols.append((F.array_position(d_arr, F.array_min(d_arr)) - 1).cast("bigint"))
+    assert normalized_plan(emb.select(pq_mod.pq_encode_col("embedding", books).alias("c"))) == \
+        normalized_plan(emb.select(F.array(*cols).alias("c")))
+
+    base = emb.select(F.col("vec_id").alias("id"), F.col("embedding").alias("v"), F.lit(0).alias("g"))
+    a, b, dist = _pair_sides(base, "COSINE", "g")
+    got = a.join(b, "g").select("a", "b", dist.alias("distance"))
+    nb = base.withColumn("nrm", F.sqrt(_dot_sum(F.col("v"), F.col("v"))))
+    a = nb.select(F.col("id").alias("a"), F.col("v").alias("va"), F.col("nrm").alias("na"), "g")
+    b = nb.select(F.col("id").alias("b"), F.col("v").alias("vb"), F.col("nrm").alias("nb"), "g")
+    denom = F.col("na") * F.col("nb")
+    cos = F.when(denom == F.lit(0.0), F.lit(1.0)).otherwise(F.lit(1.0) - _dot_sum(F.col("va"), F.col("vb")) / denom)
+    want = a.join(b, "g").select("a", "b", snap_zero(cos).alias("distance"))
+    assert normalized_plan(got) == normalized_plan(want)
+
+    books = pq_mod.pq_codebooks_first(emb, "embedding", 8, 4, 64, id_col="vec_id")
+    codes = pq_mod.pq_encode(emb, "embedding", books, id_col="vec_id")
+    luts = pq_mod.adc_lut(q, books)
+    terms = F.zip_with(F.col("codes"), F.array(*[_lits(row) for row in luts]),
+                       lambda code, lut: F.element_at(lut, (code + 1).cast("int")))
+    adc = snap_zero(F.sqrt(F.aggregate(terms, F.lit(0.0), lambda acc, t: acc + t)))
+    want = (codes.where(F.col("codes").isNotNull())
+            .select(F.col("id").cast("bigint").alias("id"), adc.alias("distance"))
+            .orderBy(F.col("distance").asc(), F.col("id").asc()).limit(10))
+    assert normalized_plan(pq_mod.pq_scan(codes, q, books, 10)) == normalized_plan(want)
 
     bits = bq_encode(emb, "embedding", 64, id_col="vec_id")
     words = [-(1 << 63), 12345]
-    assert _normalized_plan(bits.select(hamming_col("bits", words).alias("h"))) == \
-        _normalized_plan(bits.select(hamming_col(F.col("bits"), words).alias("h")))
+    assert normalized_plan(bits.select(hamming_col("bits", words).alias("h"))) == \
+        normalized_plan(bits.select(hamming_col(F.col("bits"), words).alias("h")))
+
+
+SHADOW_NAMES = ["x", "y", "v", "dn", "acc"]
+
+
+@pytest.mark.parametrize("metric", ["L2", "SQUARED_L2", "COSINE", "DOT", "L1"])
+def test_column_named_like_a_lambda_variable(spark, metric):
+    """A vector column named like one of the trees' lambda variables
+    gives the values the same data gives under an ordinary name, through
+    distance() (str and F.col, literal query and column-vs-column) and
+    through the vector_distance macro."""
+    from sqlite_vector_spark.sql import expand_vector_sql
+
+    q_sql = "array(" + ", ".join(map(repr, Q)) + ")"
+
+    def values(name):
+        df = _df(spark).select("id", F.col("v").alias(name), F.reverse("v").alias(name + "_r"))
+        df.createOrReplaceTempView("shadow_t")
+        macro = spark.sql(expand_vector_sql(
+            f"SELECT id, vector_distance({name}, {q_sql}, '{metric}') AS m, "
+            f"vector_distance({name}, {name}_r, '{metric}') AS mc FROM shadow_t"))
+        rows = (
+            df.select(
+                "id",
+                distance(name, Q, metric).alias("s"),
+                distance(F.col(name), Q, metric).alias("c"),
+                distance(name, name + "_r", metric).alias("sc"),
+            )
+            .join(macro, "id")
+            .orderBy("id")
+            .collect()
+        )
+        return [tuple(r) for r in rows]
+
+    want = values("embedding")
+    assert all(r[1] == r[2] == r[4] and r[3] == r[5] for r in want)
+    for name in SHADOW_NAMES:
+        assert values(name) == want, name
+
+
+def test_operand_rule(spark):
+    """distance() reads a str the way F.col does (keywords, struct
+    fields, backtick-quoted dots), F.col(...) and F.expr(...) Columns
+    from their JVM node, and refuses any other Column with a TypeError
+    that says how to pass it instead."""
+    from sqlite_vector_spark.functions.distance import vector_literal
+
+    df = _df(spark).select(
+        "id",
+        F.col("v").alias("select"),
+        F.struct(F.col("v").alias("v")).alias("s"),
+        F.col("v").alias("a.b"),
+    )
+    want = [r.d for r in _df(spark).orderBy("id").select(distance("v", Q, "L2").alias("d")).collect()]
+    for operand in ("select", F.col("select"), "s.v", F.col("s.v"), "`a.b`", F.col("`a.b`"),
+                    F.expr("`select`")):
+        got = [r.d for r in df.orderBy("id").select(distance(operand, Q, "L2").alias("d")).collect()]
+        assert got == want, operand
+    got = df.orderBy("id").select(distance(F.expr("slice(`select`, 1, 4)"), vector_literal(Q), "L2").alias("d"))
+    assert [r.d for r in got.collect()] == want
+    for bad in (F.slice("select", 1, 2), df["select"]):
+        with pytest.raises(TypeError, match="project it under a name"):
+            distance(bad, Q, "L2")

@@ -117,10 +117,7 @@ def test_quantize_numpy_backend_codes_identical(spark, emb, tmp_path):
     a_path, b_path = str(tmp_path / "a"), str(tmp_path / "b")
     pa = vector_quantize(emb, "embedding", a_path, id_col="vec_id")
     set_backend("arrow-numpy")
-    try:
-        pb = vector_quantize(emb, "embedding", b_path, id_col="vec_id")
-    finally:
-        set_backend("codegen")
+    pb = vector_quantize(emb, "embedding", b_path, id_col="vec_id")
     assert (pa.qtype, pa.scale, pa.offset) == (pb.qtype, pb.scale, pb.offset)
     rows_a = {r.id: list(r.qvec) for r in spark.read.parquet(a_path).collect()}
     rows_b = {r.id: list(r.qvec) for r in spark.read.parquet(b_path).collect()}

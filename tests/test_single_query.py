@@ -24,7 +24,7 @@ from sqlite_vector_spark.operators.pq import pq_fit, pq_store
 from sqlite_vector_spark.operators.quantize import vector_quantize, vector_quantize_update
 from sqlite_vector_spark.operators.search import full_scan
 from sqlite_vector_spark.sources import plan_size_bytes
-from sqlite_vector_spark.version import AUTO_DIM, AUTO_SCAN_BYTES, set_backend, vector_backend
+from sqlite_vector_spark.version import AUTO_DIM, AUTO_SCAN_BYTES
 
 N, DIM, C = 600, 64, 8
 TIERS = ("exact", "quantized", "ivf", "bq", "pq")
@@ -57,16 +57,6 @@ def tiers(spark, tmp_path_factory):
     pq_store(df, "vec", books, f"{root}/pq")
     cat.set_pq_index("sq_corpus", "vec", path=f"{root}/pq", codebooks=books)
     return cat, root, vecs, centers
-
-
-@pytest.fixture(autouse=True)
-def auto_backend():
-    """Every case here is about the default "auto" dispatch, whatever
-    backend an earlier test left set."""
-    prev = vector_backend()
-    set_backend("auto")
-    yield
-    set_backend(prev)
 
 
 def _query(vecs, i):

@@ -3,6 +3,15 @@
 The plan-shape tests (tests/test_plan_shapes.py) assert these
 properties; this artifact shows the actual plans for review.
 Usage: python tools/dump_plans.py [sf_dir] > PLANS.md
+
+``--plans-dir DIR`` instead writes the optimized logical plan of every
+``__spark_entry__.queries()`` entry to ``DIR/<name>.txt``, normalized
+(expression ids, plan ids, lambda-variable names, temp paths erased)
+so that two trees' dumps diff clean when their plans are the same:
+
+    python tools/dump_plans.py --plans-dir /tmp/plans_a   # in tree A
+    python tools/dump_plans.py --plans-dir /tmp/plans_b   # in tree B
+    diff -r /tmp/plans_a /tmp/plans_b
 """
 
 from __future__ import annotations
@@ -13,7 +22,26 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+PLANS_DIR = None
+if "--plans-dir" in sys.argv:
+    _i = sys.argv.index("--plans-dir")
+    PLANS_DIR = sys.argv[_i + 1]
+    del sys.argv[_i : _i + 2]
 SF = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
+
+
+def dump_query_plans(spark, sf: str, out_dir: str) -> None:
+    from __spark_entry__ import queries
+    from sqlite_vector_spark.plans import normalized_plan
+
+    os.makedirs(out_dir, exist_ok=True)
+    for name, fn in queries().items():
+        try:
+            text = normalized_plan(fn(spark, sf))
+        except Exception as e:  # a failing entry is a diff too
+            text = f"ERROR {type(e).__name__}: {str(e).splitlines()[0] if str(e) else ''}"
+        with open(os.path.join(out_dir, f"{name}.txt"), "w") as f:
+            f.write(text + "\n")
 
 
 def condense(plan: str, max_lines: int = 40) -> str:
@@ -44,6 +72,10 @@ def main():
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")
+    if PLANS_DIR:
+        dump_query_plans(spark, SF, PLANS_DIR)
+        spark.stop()
+        return
 
     from sqlite_vector_spark import workload as w
 
