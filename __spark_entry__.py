@@ -34,11 +34,11 @@ def entry(spark: SparkSession) -> DataFrame:
 def _pinned(fn: Callable[[SparkSession, str], DataFrame]) -> Callable[[SparkSession, str], DataFrame]:
     """Build the plan with the bit-exact codegen distance backend.
 
-    The default "auto" backend routes literal-query distances through
-    the Arrow/NumPy kernel (throughput path), whose pairwise summation
-    is not bit-identical to the sequential fold the DuckDB oracle
-    folds with. Correctness-gated plans pin codegen at build time;
-    user/bench paths keep auto (ranks agree — test_distance)."""
+    The default "auto" backend routes centroid assignment and PQ
+    encoding through Arrow/NumPy kernels (throughput path), whose BLAS
+    and pairwise sums are not bit-identical to the sequential fold the
+    DuckDB oracle folds with. Correctness-gated plans pin codegen at
+    build time; user/bench paths keep auto."""
 
     def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
         from sqlite_vector_spark.version import set_backend, vector_backend

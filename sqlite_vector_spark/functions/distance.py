@@ -40,7 +40,8 @@ Scale notes:
   for literal-query distances at dim >= AUTO_DIM (32), except on scans
   known to read less than AUTO_SCAN_BYTES (4 MiB), where the Python
   round trip costs more than the fold; both constants and their
-  measurements are in version.py.
+  measurements are in version.py. It folds each lane in the tree's
+  order, so the two backends give bit-identical distances.
 """
 
 from __future__ import annotations
@@ -255,9 +256,7 @@ def distance(
         # (reference distance-cpu.c:797-812): the Arrow/NumPy kernel
         # only exists for literal query vectors (column-vs-column stays
         # codegen). The default "auto" resolves by dim and scan size at
-        # plan-build time. NB: NumPy's pairwise summation is not
-        # bit-identical to the sequential fold — oracle-gated paths pin
-        # "codegen" (__spark_entry__._pinned); ranks agree (test_distance).
+        # plan-build time; both backends give bit-identical values.
         from sqlite_vector_spark.version import resolve_backend
 
         if resolve_backend(len(b), size_bytes) == "arrow-numpy":
@@ -265,7 +264,7 @@ def distance(
     return F.expr(distance_tree_sql(sa, sql_operand(b), m))
 
 
-def batch_matrix(col, dtype="float64"):
+def batch_matrix(col, dtype="float64", lanes: bool = False):
     """(B, dim) matrix from an Arrow-batch pandas Series of
     fixed-length array rows.
 
@@ -275,50 +274,74 @@ def batch_matrix(col, dtype="float64"):
     200k x 768 L2 scan: 4.8 s -> 1.1 s end to end, SCALE.md §backend).
     Value-exact either way: f32 -> f64 widening is the same IEEE
     conversion whether it happens per-element in Python or in the
-    vectorized astype."""
+    vectorized astype. ``lanes=True`` lays the matrix out lane-major
+    (each column contiguous), the layout ``fold_distances`` reads."""
     import numpy as np
 
     arr = col.to_numpy()
     if len(arr) == 0:
         return np.empty((0, 0), dtype=dtype)
+    if lanes:
+        return np.stack(arr, axis=1).astype(dtype, copy=False).T
     return np.stack(arr).astype(dtype, copy=False)
+
+
+def fold_distances(np, mat, qmat, m: Metric):
+    """(B, Q) distances with SEQUENTIAL dim-order accumulation: every
+    output lane folds `acc = acc + term_i` in index order — the exact
+    rounding of the scalar left fold in distance_tree_sql and the
+    oracle's list_reduce (per-lane terms are rounded once, like
+    `(x-y)*(x-y)`). Vectorized over the B x Q block; only the dim axis
+    is a Python loop (~dim array ops per batch)."""
+    b, dim = mat.shape
+    nq = qmat.shape[0]
+    acc = np.zeros((b, nq))
+    if m in (Metric.L2, Metric.SQUARED_L2):
+        for i in range(dim):
+            diff = mat[:, i, None] - qmat[None, :, i]
+            acc += diff * diff
+        return np.sqrt(acc) if m is Metric.L2 else acc
+    if m is Metric.L1:
+        for i in range(dim):
+            acc += np.abs(mat[:, i, None] - qmat[None, :, i])
+        return acc
+    if m is Metric.DOT:
+        for i in range(dim):
+            acc += mat[:, i, None] * qmat[None, :, i]
+        return -acc
+    if m is Metric.COSINE:
+        cn = np.zeros(b)
+        qn = np.zeros(nq)
+        for i in range(dim):
+            acc += mat[:, i, None] * qmat[None, :, i]
+            cn += mat[:, i] * mat[:, i]
+            qn += qmat[:, i] * qmat[:, i]
+        denom = np.sqrt(cn)[:, None] * np.sqrt(qn)[None, :]
+        with np.errstate(divide="ignore", invalid="ignore"):
+            return np.where(denom == 0.0, 1.0, 1.0 - acc / denom)
+    raise ValueError(m)  # pragma: no cover
 
 
 def distance_pandas_udf(metric: str | Metric, query: Sequence[float]):
     """Arrow/NumPy batch kernel: the 'SIMD' backend.
 
     Returns a pandas UDF ``ARRAY<FLOAT/...> -> DOUBLE`` computing the
-    metric against a fixed query vector. NumPy reduces each Arrow batch
-    with BLAS-grade vectorization — the Spark analog of the reference's
-    AVX2/NEON kernels (distance-avx2.c, distance-neon.c). Accumulation
-    order differs from the codegen path (pairwise NumPy sum), so use
-    for speed, not for bit-exact oracle parity.
+    metric against a fixed query vector, one vectorized NumPy op per
+    lane over each Arrow batch — the Spark analog of the reference's
+    AVX2/NEON kernels (distance-avx2.c, distance-neon.c). It folds in
+    the codegen tree's order (fold_distances), so its distances are
+    bit-identical to the fold's and the backend choice never changes
+    a value.
     """
     import numpy as np
     from pyspark.sql.functions import pandas_udf
 
     m = parse_metric(metric) if isinstance(metric, str) else metric
-    q = np.asarray(list(query), dtype=np.float64)
+    q = np.asarray([list(query)], dtype=np.float64)  # (1, dim)
 
     @pandas_udf("double")
     def _kernel(col: pd.Series) -> pd.Series:
-        mat = batch_matrix(col)  # (batch, dim)
-        if m is Metric.SQUARED_L2:
-            d = ((mat - q) ** 2).sum(axis=1)
-        elif m is Metric.L2:
-            d = np.sqrt(((mat - q) ** 2).sum(axis=1))
-        elif m is Metric.L1:
-            d = np.abs(mat - q).sum(axis=1)
-        elif m is Metric.DOT:
-            d = -(mat @ q)
-        elif m is Metric.COSINE:
-            num = mat @ q
-            denom = np.sqrt((mat * mat).sum(axis=1)) * np.sqrt((q * q).sum())
-            with np.errstate(divide="ignore", invalid="ignore"):
-                d = np.where(denom == 0.0, 1.0, 1.0 - num / denom)
-        else:  # pragma: no cover
-            raise ValueError(m)
-        d = np.where(np.abs(d) <= EPS_SNAP, 0.0, d)
-        return pd.Series(d)
+        d = fold_distances(np, batch_matrix(col, lanes=True), q, m)[:, 0]
+        return pd.Series(np.where(np.abs(d) <= EPS_SNAP, 0.0, d))
 
     return _kernel

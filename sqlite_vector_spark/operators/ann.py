@@ -69,8 +69,7 @@ def _pairwise_dists(mat, cm, m: Metric):
     Gram-matrix forms for L2/SQ/DOT/COSINE (one BLAS matmul); L1 walks
     centroid blocks to bound the (B, blk, dim) broadcast at ~32 MB.
     Accumulation order differs from the sequential codegen fold —
-    throughput backend, not the oracle path (same contract as
-    distance_pandas_udf)."""
+    throughput backend, not the oracle path."""
     import numpy as np
 
     if m in (Metric.L2, Metric.SQUARED_L2):

@@ -33,6 +33,7 @@ from pyspark.sql import Column, DataFrame
 
 from sqlite_vector_spark.functions.distance import distance, dot_sum_sql, norm_sql, snap_zero_sql
 from sqlite_vector_spark.functions.text import HASH_P, polyhash, shingles_from_words, words
+from sqlite_vector_spark.types import Metric, parse_metric
 
 # deterministic MinHash permutation parameters (a*h + b) mod P
 MINHASH_A = (2, 3, 5, 7, 11, 13, 17, 19)
@@ -1111,8 +1112,7 @@ def _hyperplane_bucket_arrow(planes: Sequence[Sequence[float]]):
     (batch x dim) @ (dim x planes) matmul per Arrow batch, sign bits
     packed with a bool-matrix @ power-of-two vector. Accumulation
     order differs from the codegen fold (BLAS pairwise sum), so use
-    for speed, not for bit-exact oracle parity — same contract as
-    distance_pandas_udf."""
+    for speed, not for bit-exact oracle parity."""
     import numpy as np
     from pyspark.sql.functions import pandas_udf
 
@@ -1137,14 +1137,14 @@ def _hyperplane_bucket_arrow(planes: Sequence[Sequence[float]]):
     return _kernel
 
 
-def _pair_sides(base: DataFrame, metric: str, *keep: str) -> tuple[DataFrame, DataFrame, Column]:
+def _pair_sides(base: DataFrame, metric: str | Metric, *keep: str) -> tuple[DataFrame, DataFrame, Column]:
     """The (a, va, ...) and (b, vb, ...) sides of a pair join over
     ``base`` (id, v), with ``keep`` columns, and the pair distance.
     COSINE folds each row's norm ONCE (na, nb) before the pair join, so
     the per-pair expression folds only the dot product (3x less work);
     numerically identical to folding the norms per pair, since the
     per-row fold is the same expression."""
-    if str(metric).upper() != "COSINE":
+    if (parse_metric(metric) if isinstance(metric, str) else metric) is not Metric.COSINE:
         a, b = (base.select(F.col("id").alias(s), F.col("v").alias(f"v{s}"), *keep) for s in "ab")
         return a, b, distance("va", "vb", metric)
     base = base.withColumn("nrm", F.expr(norm_sql("v")))

@@ -24,9 +24,9 @@ row count. Results match the window path to float tolerance: the
 NumPy block kernel reduces with pairwise summation, not the window
 path's sequential left fold, so distances can differ in the final
 ulp and top-k membership could in principle flip on a near-exact-tie
-k boundary (same caveat as distance.py's arrow-numpy backend).
-Equality is verified in tests on real data; callers needing
-bit-parity with the oracle use the window path.
+k boundary. Equality is verified in tests on real data; callers
+needing bit-parity with the oracle use the window path or
+``accumulate="sequential"``.
 """
 
 from __future__ import annotations
@@ -38,7 +38,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 from pyspark.sql.functions import broadcast
 
-from sqlite_vector_spark.functions.distance import EPS_SNAP, batch_matrix, distance
+from sqlite_vector_spark.functions.distance import EPS_SNAP, batch_matrix, distance, fold_distances
 from sqlite_vector_spark.operators.topk import topk_per_key
 from sqlite_vector_spark.sources import plan_size_bytes, widen
 from sqlite_vector_spark.types import Metric, parse_metric
@@ -99,41 +99,6 @@ def knn_join(
     return topk_per_key(scored, ["qid"], order, k, salt=salt, size_from=corpus)
 
 
-def _seq_block_distances(np, mat, qmat, m: Metric):
-    """(B, Q) distances with SEQUENTIAL dim-order accumulation: every
-    output lane folds `acc = acc + term_i` in index order — the exact
-    rounding of the scalar left fold in the codegen expressions and
-    the oracle's list_reduce (per-lane terms are rounded once, like
-    `(x-y)*CAST((x-y) AS DOUBLE)`)."""
-    b, dim = mat.shape
-    nq = qmat.shape[0]
-    acc = np.zeros((b, nq))
-    if m in (Metric.L2, Metric.SQUARED_L2):
-        for i in range(dim):
-            diff = mat[:, i, None] - qmat[None, :, i]
-            acc += diff * diff
-        return np.sqrt(acc) if m is Metric.L2 else acc
-    if m is Metric.L1:
-        for i in range(dim):
-            acc += np.abs(mat[:, i, None] - qmat[None, :, i])
-        return acc
-    if m is Metric.DOT:
-        for i in range(dim):
-            acc += mat[:, i, None] * qmat[None, :, i]
-        return -acc
-    if m is Metric.COSINE:
-        cn = np.zeros(b)
-        qn = np.zeros(nq)
-        for i in range(dim):
-            acc += mat[:, i, None] * qmat[None, :, i]
-            cn += mat[:, i] * mat[:, i]
-            qn += qmat[:, i] * qmat[:, i]
-        denom = np.sqrt(cn)[:, None] * np.sqrt(qn)[None, :]
-        with np.errstate(divide="ignore", invalid="ignore"):
-            return np.where(denom == 0.0, 1.0, 1.0 - acc / denom)
-    raise ValueError(m)  # pragma: no cover
-
-
 def knn_join_blocked(
     queries_local: Sequence[tuple[int, Sequence[float]]],
     corpus: DataFrame,
@@ -185,9 +150,9 @@ def knn_join_blocked(
             if pdf.empty:
                 continue
             ids = pdf["id"].to_numpy(dtype=np.int64)
-            mat = batch_matrix(pdf["vec"])  # (B, dim)
+            mat = batch_matrix(pdf["vec"], lanes=seq)  # (B, dim)
             if seq:
-                d = _seq_block_distances(np, mat, qmat, m)
+                d = fold_distances(np, mat, qmat, m)
             elif m is Metric.SQUARED_L2:
                 d = ((mat[:, None, :] - qmat[None, :, :]) ** 2).sum(axis=2)
             elif m is Metric.L2:

@@ -395,7 +395,7 @@ def adc_distance_arrow_udf(luts: Sequence[Sequence[float]], metric: str | Metric
     """Arrow-batched ADC: ARRAY<BIGINT> codes -> DOUBLE. One fancy-
     index gather + row sum per batch; the LUT rides in the closure so
     the plan stays O(1) at any M*KSUB. Throughput backend (NumPy sum
-    order), not the oracle path — same contract as distance_pandas_udf."""
+    order), not the oracle path."""
     from pyspark.sql.functions import pandas_udf
 
     import numpy as np

@@ -170,16 +170,10 @@ def score_stream(
 ) -> DataFrame:
     """Continuous exact scoring of a vector stream: the streaming form
     of vector_full_scan_stream. Stateless projection — one output row
-    per input row, any trigger, no watermark needed.
-
-    A stream has no size while its plan is built, and each micro-batch
-    holds what one trigger admits, so under "auto" it is scored like a
-    scan known to be small: by the codegen fold at any dim. A stream
-    then gives the values full_scan_stream gives a batch replay of its
-    rows below AUTO_SCAN_BYTES."""
+    per input row, any trigger, no watermark needed."""
     return stream.where(F.col(vec_col).isNotNull()).select(
         F.col(id_col).cast("bigint").alias("id"),
-        distance(vec_col, list(query), metric, size_bytes=0).alias("distance"),
+        distance(vec_col, list(query), metric).alias("distance"),
     )
 
 

@@ -1548,7 +1548,7 @@ def normalize_vectors(emb: DataFrame, vec_col: str = "embedding") -> F.Column:
 
     v = sql_operand(vec_col)
     nrm = norm_sql(v)
-    x = lambda_var("x", nrm)
+    x = lambda_var("x", v)
     return F.expr(
         f"CASE WHEN {nrm} = 0.0D THEN CAST({v} AS ARRAY<DOUBLE>)"
         f" ELSE transform({v}, {x} -> CAST({x} AS DOUBLE) / {nrm}) END"

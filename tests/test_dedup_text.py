@@ -95,6 +95,12 @@ def test_embedding_neardup_finds_identical_vectors(spark):
     )
     pairs = embedding_neardup_pairs(df, "id", "v", planes, threshold=0.01).collect()
     assert [(p.a, p.b, p.distance) for p in pairs] == [(1, 2, 0.0)]
+    # the metric as an enum takes the same norm-precomputed cosine plan
+    from sqlite_vector_spark.plans import normalized_plan
+    from sqlite_vector_spark.types import Metric
+
+    enum = embedding_neardup_pairs(df, "id", "v", planes, threshold=0.01, metric=Metric.COSINE)
+    assert normalized_plan(enum) == normalized_plan(embedding_neardup_pairs(df, "id", "v", planes, threshold=0.01))
 
 
 def test_embedding_neardup_prefilter_gate_identical(spark, emb):

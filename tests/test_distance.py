@@ -88,14 +88,21 @@ def test_metric_aliases(spark):
 
 
 @pytest.mark.parametrize("metric", ["L2", "SQUARED_L2", "COSINE", "DOT", "L1"])
-def test_pandas_udf_backend_agrees(spark, metric):
-    """arrow-numpy backend ≡ codegen backend (up to accumulation order)."""
-    df = _df(spark)
-    kernel = distance_pandas_udf(metric, Q)
-    got = {r.id: r.d for r in df.select("id", kernel("v").alias("d")).collect()}
-    want = {r.id: r.d for r in df.select("id", distance("v", Q, metric).alias("d")).collect()}
-    for i in got:
-        assert got[i] == pytest.approx(want[i], rel=1e-12, abs=1e-12)
+def test_pandas_udf_backend_agrees(spark, emb, metric):
+    """arrow-numpy backend ≡ codegen backend, bit for bit: the kernel
+    folds each lane in the tree's order (zero and identical vectors,
+    one-row batches and real float32 rows at dim 64 alike)."""
+    q = [0.1 * ((i % 7) - 3) for i in range(64)]
+    frames = [
+        (_df(spark).repartition(4), "v", Q),
+        (emb.select(F.col("vec_id").alias("id"), "embedding"), "embedding", q),
+    ]
+    for df, col, query in frames:
+        got = {r.id: r.d for r in df.select("id", distance_pandas_udf(metric, query)(col).alias("d")).collect()}
+        set_backend("codegen")
+        want = {r.id: r.d for r in df.select("id", distance(col, query, metric).alias("d")).collect()}
+        set_backend("auto")
+        assert got == want, metric
 
 
 def test_distance_is_codegen_plan_when_pinned(spark, emb):

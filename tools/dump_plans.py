@@ -12,6 +12,9 @@ so that two trees' dumps diff clean when their plans are the same:
     python tools/dump_plans.py --plans-dir /tmp/plans_a   # in tree A
     python tools/dump_plans.py --plans-dir /tmp/plans_b   # in tree B
     diff -r /tmp/plans_a /tmp/plans_b
+
+It exits non-zero when any entry fails to build, so an identical
+failure in both trees cannot pass for an identical plan.
 """
 
 from __future__ import annotations
@@ -30,18 +33,25 @@ if "--plans-dir" in sys.argv:
 SF = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
 
 
-def dump_query_plans(spark, sf: str, out_dir: str) -> None:
+def dump_query_plans(spark, sf: str, out_dir: str) -> int:
+    """Write every entry's normalized plan; return how many entries
+    failed to build (each written as one ERROR line, which would diff
+    clean against the same failure in the other tree)."""
     from __spark_entry__ import queries
     from sqlite_vector_spark.plans import normalized_plan
 
     os.makedirs(out_dir, exist_ok=True)
+    errors = 0
     for name, fn in queries().items():
         try:
             text = normalized_plan(fn(spark, sf))
-        except Exception as e:  # a failing entry is a diff too
+        except Exception as e:
+            errors += 1
             text = f"ERROR {type(e).__name__}: {str(e).splitlines()[0] if str(e) else ''}"
+            print(f"{name}: {text}", file=sys.stderr)
         with open(os.path.join(out_dir, f"{name}.txt"), "w") as f:
             f.write(text + "\n")
+    return errors
 
 
 def condense(plan: str, max_lines: int = 40) -> str:
@@ -73,9 +83,10 @@ def main():
     )
     spark.sparkContext.setLogLevel("ERROR")
     if PLANS_DIR:
-        dump_query_plans(spark, SF, PLANS_DIR)
+        errors = dump_query_plans(spark, SF, PLANS_DIR)
         spark.stop()
-        return
+        print(f"{errors} entries failed to build", file=sys.stderr)
+        sys.exit(1 if errors else 0)
 
     from sqlite_vector_spark import workload as w
 
