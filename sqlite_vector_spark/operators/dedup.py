@@ -783,18 +783,12 @@ def _takedown_relabel(
     from ``df``); connected_components_min_label picks the solve
     engine (driver union-find under fast_path_max, the distributed
     min-label loop beyond)."""
+    from sqlite_vector_spark.sinks import _id_batch
+
     lab = labels.select(
         F.col("id").cast("bigint").alias("id"), F.col("cluster").cast("bigint").alias("cluster")
     )
-    if isinstance(deleted_ids, DataFrame):
-        del_df = deleted_ids.select(
-            F.col(deleted_ids.columns[0]).cast("bigint").alias("id")
-        )
-    else:
-        del_df = labels.sparkSession.createDataFrame(
-            [(int(i),) for i in deleted_ids], "id bigint"
-        )
-    del_df = del_df.distinct().localCheckpoint(eager=True)
+    del_df = _id_batch(labels.sparkSession, deleted_ids).select(F.col("_del_id").alias("id"))
     affected = lab.join(F.broadcast(del_df), "id", "left_semi").select("cluster").distinct()
     untouched = lab.join(F.broadcast(affected), "cluster", "left_anti")
     survivors = (
@@ -867,46 +861,42 @@ def write_label_state(labels: DataFrame, path: str, params: dict) -> None:
     write_params_sidecar(path, params)
 
 
-def _rewrite_label_state(spark, new_labels: DataFrame, path: str) -> dict:
-    """Swap a label-state directory to the re-solved labeling (same
-    tmp-write + rename + retained ``__pre_delete`` + sidecar-preserve
-    contract as sinks.delete_ids' unpartitioned arm). The walk goes
-    through the FS layer (r13), so a label state rooted at a
-    scheme-carrying path (hdfs:/s3a:/mock:) swaps too — a label state
-    is tiny, so the object-store copy-rename cost is negligible. A
-    VERSIONED label state replaces via the manifest scheme instead
-    (rename-free; a directory swap would silently downgrade its
-    layout to flat)."""
-    from sqlite_vector_spark import fsutil
-    from sqlite_vector_spark.sinks import _preserve_sidecars
-    from sqlite_vector_spark.versioned import is_versioned, replace_versioned
+def _label_state_takedown(spark, path: str, deleted_ids, resolve) -> dict:
+    """The state-level takedown shared by the text and embedding label
+    states. One pass over the state counts its rows and the deleted
+    members; with no member hit the labeling already is the
+    post-takedown fixed point (untouched clusters pass through
+    byte-identical) and nothing is rewritten. Otherwise
+    ``resolve(labels, batch)`` re-solves the affected components and
+    the result replaces the state, its row count observed on the
+    write: a flat state through sinks._flat_swap (a label state is
+    tiny, so the rename's copy cost on a scheme-carrying root is
+    negligible), a VERSIONED one as a new manifest generation (a
+    directory swap would silently downgrade its layout to flat)."""
+    from sqlite_vector_spark.sinks import _flat_swap, _id_batch, read_store, write_observed
+    from sqlite_vector_spark.versioned import current_manifest, is_versioned
 
+    batch = _id_batch(spark, deleted_ids)
+    labels0 = read_store(spark, path)  # versioned states resolve via manifest
+    n, hit = (
+        labels0.select(F.col("id").cast("bigint").alias("_k"))
+        .join(F.broadcast(batch), F.col("_k") == F.col("_del_id"), "left_outer")
+        .agg(F.count(F.lit(1)), F.count("_del_id"))
+        .first()
+    )
+    if not hit:
+        return {"labels_before": n, "labels_after": n, "skipped": "no_member_match"}
+    # the re-solve's equi-joins put the join key (cluster) first; the
+    # persisted state stays (id, cluster)
+    new = resolve(labels0, batch).localCheckpoint(eager=True).select("id", "cluster")
+    count = [F.count(F.lit(1)).alias("n")]
     if is_versioned(spark, path):
-        # reads resolve via the live manifest (a root read would also
-        # scan retained generations)
-        from sqlite_vector_spark.sinks import read_store
-
-        before = read_store(spark, path).count()
-        rep = replace_versioned(new_labels.select("id", "cluster"), path)
-        after = read_store(spark, path).count()
+        after = write_observed(new, path, count, mode="overwrite")["n"]
         spark.catalog.refreshByPath(path)
-        return {"labels_before": before, "labels_after": after,
-                "version": rep["version"]}
-
-    root = fsutil.norm_root(path)
-    tmp, old = root + "__deleting", root + "__pre_delete"
-    before = spark.read.parquet(path).count()
-    # normalize column order: the re-solve's equi-joins put the join
-    # key (cluster) first; the persisted state stays (id, cluster)
-    new_labels.select("id", "cluster").write.mode("overwrite").parquet(tmp)
-    after = spark.read.parquet(tmp).count()
-    if fsutil.exists(spark, old):
-        fsutil.delete(spark, old, recursive=True)
-    fsutil.rename(spark, root, old)
-    fsutil.rename(spark, tmp, root)
-    _preserve_sidecars(old, root)
-    spark.catalog.refreshByPath(path)
-    return {"labels_before": before, "labels_after": after}
+        return {"labels_before": n, "labels_after": after,
+                "version": current_manifest(spark, path)[0]}
+    after = _flat_swap(spark, path, lambda tmp: write_observed(new, tmp, count, mode="overwrite"))
+    return {"labels_before": n, "labels_after": after["n"]}
 
 
 def delete_labels_state(
@@ -938,14 +928,8 @@ def delete_labels_state(
         "num_hashes": num_hashes, "bands": bands,
         "rows_per_band": rows_per_band, "shingle_n": shingle_n,
     })
-    from sqlite_vector_spark.sinks import read_store
-
-    labels0 = read_store(spark, path)  # versioned states resolve via manifest
-    skipped = _labels_unaffected(spark, labels0, deleted_ids, path)
-    if skipped is not None:
-        return skipped
-    new = delete_labels(
-        labels0, docs, deleted_ids,
+    return _label_state_takedown(spark, path, deleted_ids, lambda labels0, batch: delete_labels(
+        labels0, docs, batch,
         id_col=prm.get("id_col", "doc_id"),
         text_col=prm.get("text_col", "text"),
         jaccard_t=prm.get("jaccard_t", 0.8),
@@ -955,32 +939,7 @@ def delete_labels_state(
         shingle_n=prm.get("shingle_n", SHINGLE_N),
         hash_fn=hash_fn,
         fast_path_max=fast_path_max,
-    ).localCheckpoint(eager=True)
-    return _rewrite_label_state(spark, new, path)
-
-
-def _labels_unaffected(spark, labels0: DataFrame, deleted_ids, path: str) -> dict | None:
-    """Short-circuit for the state-level takedowns: when NO deleted id
-    is a label member, the labeling is already the post-takedown fixed
-    point (untouched clusters pass through byte-identical and there
-    are no affected components) — one broadcast semi-join count
-    instead of a full re-solve + directory swap. Returns the report
-    dict when unaffected, None when the re-solve must run."""
-    if isinstance(deleted_ids, DataFrame):
-        del_df = deleted_ids.select(
-            F.col(deleted_ids.columns[0]).cast("bigint").alias("id")
-        )
-    else:
-        del_df = spark.createDataFrame([(int(i),) for i in deleted_ids], "id bigint")
-    hit = (
-        labels0.select(F.col("id").cast("bigint").alias("id"))
-        .join(F.broadcast(del_df.distinct()), "id", "left_semi")
-        .count()
-    )
-    if hit:
-        return None
-    n = labels0.count()
-    return {"labels_before": n, "labels_after": n, "skipped": "no_member_match"}
+    ))
 
 
 def delete_labels_embedding_state(
@@ -1012,21 +971,16 @@ def delete_labels_embedding_state(
             "delete_labels_embedding_state: no plane family/threshold — pass them "
             "or use a label state written by write_label_state (sidecar)"
         )
-    from sqlite_vector_spark.sinks import read_store
-
-    labels0 = read_store(spark, path)  # versioned states resolve via manifest
-    skipped = _labels_unaffected(spark, labels0, deleted_ids, path)
-    if skipped is not None:
-        return skipped
-    new = delete_labels_embedding(
-        labels0, vectors, deleted_ids,
-        prm["planes"], prm["threshold"],
-        id_col=prm.get("id_col", "vec_id"),
-        vec_col=prm.get("vec_col", "embedding"),
-        metric=prm.get("metric", "COSINE"),
-        fast_path_max=fast_path_max,
-    ).localCheckpoint(eager=True)
-    return _rewrite_label_state(spark, new, path)
+    return _label_state_takedown(spark, path, deleted_ids, lambda labels0, batch: (
+        delete_labels_embedding(
+            labels0, vectors, batch,
+            prm["planes"], prm["threshold"],
+            id_col=prm.get("id_col", "vec_id"),
+            vec_col=prm.get("vec_col", "embedding"),
+            metric=prm.get("metric", "COSINE"),
+            fast_path_max=fast_path_max,
+        )
+    ))
 
 
 def random_hyperplanes(n_planes: int, dim: int, seed: int = 0) -> list[list[float]]:

@@ -359,15 +359,78 @@ def _preserve_sidecars(old_root: str, new_root: str) -> None:
                 shutil.copy2(os.path.join(old_root, fname), dest)
 
 
-def delete_ids(
-    spark,
-    path: str,
-    ids,
-    id_col: str = "id",
-    partition_col: str | None = None,
-    sort_within: list[str] | None = None,
-    remote_ok: bool = False,
-) -> dict:
+def _id_batch(spark, ids) -> DataFrame:
+    """The delete family's id batch: ``ids`` (an iterable of ids or a
+    single-column DataFrame) as the distinct ``_del_id bigint`` frame
+    every probe, rewrite and verify broadcasts. An iterable is
+    deduplicated on the driver into a local relation (deterministic,
+    no checkpoint); a DataFrame is checkpointed once, so the probe and
+    the rewrite see the same batch. The batch carries its id count as
+    ``_sv_id_batch`` and passes through unchanged, so the verbs a
+    takedown calls reuse the one batch it built."""
+    if getattr(ids, "_sv_id_batch", None) is not None:
+        return ids
+    if isinstance(ids, DataFrame):
+        from pyspark.sql import Observation
+
+        obs = Observation()
+        batch = (
+            ids.select(F.col(ids.columns[0]).cast("bigint").alias("_del_id"))
+            .distinct()
+            .observe(obs, F.count(F.lit(1)).alias("n"))
+            .localCheckpoint(eager=True)
+        )
+        n = obs.get["n"]
+    else:
+        import pyarrow as pa
+
+        uniq = list(dict.fromkeys(int(i) for i in ids))
+        batch = spark.createDataFrame(pa.table({"_del_id": pa.array(uniq, pa.int64())}))
+        n = len(uniq)
+    batch._sv_id_batch = n
+    return batch
+
+
+def _refuse_remote_flat(spark, path: str) -> None:
+    """Refuse a directory swap of a FLAT store on a remote filesystem,
+    before anything is written: there the swap's rename is a copy."""
+    from sqlite_vector_spark import fsutil
+
+    if fsutil.is_remote(path, spark=spark):
+        raise ValueError(
+            "delete_ids: this FLAT store is on a remote filesystem, where the "
+            "directory swap's rename is a copy; migrate it to a versioned "
+            "store (sqlite_vector_spark.versioned.versioned_store_init) — its "
+            "manifest pointer-flip swap needs no rename and runs on any "
+            "Hadoop-supported object store — or pass remote_ok=True to accept "
+            "the bounded copy cost (the streaming-state verbs do: one "
+            "micro-batch epoch dir per swap)"
+        )
+
+
+def _flat_swap(spark, path: str, write):
+    """The delete family's whole-directory swap, through fsutil on any
+    scheme: ``write(tmp)`` stages ``<root>__deleting``, the previous
+    ``<root>__pre_delete`` is dropped, the root moves there (kept for
+    draining readers until the next delete), the staged dir takes its
+    place, ``_sv_*.json`` sidecars carry over and cached listings are
+    refreshed. Returns what ``write`` returned."""
+    from sqlite_vector_spark import fsutil
+
+    root = fsutil.norm_root(path)
+    tmp, old = root + "__deleting", root + "__pre_delete"
+    out = write(tmp)
+    if fsutil.exists(spark, old):
+        fsutil.delete(spark, old, recursive=True)
+    fsutil.rename(spark, root, old)
+    fsutil.rename(spark, tmp, root)
+    _preserve_sidecars(old, root)
+    spark.catalog.refreshByPath(path)
+    return out
+
+
+def delete_ids(spark, path: str, ids, id_col: str = "id", partition_col: str | None = None,
+               sort_within: list[str] | None = None, remote_ok: bool = False) -> dict:
     """Hard-delete rows by id from a persisted parquet store — the
     lifecycle verb the append/compact family lacked (takedowns,
     licensing, right-to-be-forgotten). The reference's only delete
@@ -381,40 +444,39 @@ def delete_ids(
     NOT re-fit — same frozen-params contract as the append family;
     re-fit means rebuild.
 
-    ``ids``: an iterable of ids or a single-column DataFrame. The id
-    set is broadcast (a takedown batch is bounded, like the append
-    family's batch); the affected-partition probe is a column-pruned
-    scan of (id_col, partition_col) only.
+    ``ids``: see _id_batch. A versioned root dispatches to
+    versioned.delete_ids_versioned. A FLAT store on a remote
+    (non-``file:``) filesystem, where rename is a copy, refuses
+    (_refuse_remote_flat) unless ``remote_ok=True`` — the
+    streaming-state takedown passes it (one epoch dir per swap).
 
-    ``remote_ok``: the directory swap is a filesystem ``rename`` —
-    atomic and free locally/on HDFS, a copy-then-delete on S3-class
-    stores. A remote (non-``file:`` scheme) FLAT store therefore
-    refuses by default and points at the rename-free versioned
-    layout; pass ``remote_ok=True`` when the copy cost is bounded and
-    acceptable — the streaming-state takedown does (each swap moves
-    one micro-batch epoch dir, r13 VERDICT r12 #2). All filesystem
-    walks go through the Hadoop FS layer, so with the flag the verb
-    runs unchanged on any supported scheme.
+    Shape: an unpartitioned store is rewritten whole and swapped by
+    _flat_swap. A partitioned store finds the partition directories
+    holding ids with one column-pruned probe, re-reads and rewrites
+    ONLY those (planning-time pruning) and swaps each by rename; a
+    partition whose rows are all deleted is removed. Single
+    maintenance writer, like compact_store; superseded data is kept
+    at ``<path>__pre_delete`` until the next delete.
 
-    Shape: for a partitioned store, (1) semi-join finds the affected
-    partition directories (an id-keyed store touches one; a band
-    store touches every band — the probe discovers either), (2) only
-    those partitions are re-read (planning-time pruning on the isin
-    filter), anti-joined against the broadcast id set, and rewritten,
-    (3) each affected directory is swapped via a filesystem rename
-    (the Hadoop FS layer — os-identical locally) — untouched
-    partitions are never read or written. A partition whose rows are
-    all deleted is removed. Unpartitioned stores rewrite wholesale
-    (same swap as compact_store). Single maintenance writer — the
-    same concurrency contract as compact_store; the superseded data
-    is retained at ``<path>__pre_delete`` until the next delete.
-
-    Returns {"deleted_rows", "rows_after", "partitions_rewritten"}.
+    Returns {"deleted_rows", "rows_after", "partitions_rewritten"},
+    counted on the rewrite (observed metrics in its result stage).
     ``rows_after`` is the store total for an unpartitioned rewrite
     (partitions_rewritten = -1) but only the REWRITTEN partitions'
     remainder for a partitioned one — a full-store count on every
     takedown would read 100 TB to report a number nobody needs.
     """
+    return _delete_ids(spark, path, _id_batch(spark, ids), id_col, partition_col,
+                       sort_within, remote_ok)
+
+
+def _delete_ids(spark, path: str, batch: DataFrame, id_col: str = "id",
+                partition_col: str | None = None, sort_within=None,
+                remote_ok: bool = False, schemas: dict | None = None) -> dict:
+    """delete_ids over an id batch. The store is read through
+    ``schemas`` (read_parquet's cache), which then records the schema
+    the rewrite wrote, so the next read infers nothing."""
+    from pyspark.sql import Observation
+
     from sqlite_vector_spark import fsutil
     from sqlite_vector_spark.versioned import delete_ids_versioned, is_versioned
 
@@ -422,64 +484,47 @@ def delete_ids(
         # manifest pointer-flip swap: rename-free, works on any Hadoop
         # scheme; partition_col comes from the manifest
         return delete_ids_versioned(
-            spark, path, ids, id_col=id_col, sort_within=sort_within
+            spark, path, batch, id_col=id_col, sort_within=sort_within
         )
-    if isinstance(ids, DataFrame):
-        ids_df = ids.select(F.col(ids.columns[0]).cast("bigint").alias("_del_id"))
-    else:
-        ids_df = spark.createDataFrame(
-            [(int(i),) for i in ids], "_del_id bigint"
-        )
-    ids_df = ids_df.distinct().localCheckpoint(eager=True)
-    df = spark.read.parquet(path)
-    if fsutil.is_remote(path, spark=spark) and not remote_ok:
-        raise ValueError(
-            "delete_ids: this FLAT store is on a remote filesystem, where the "
-            "directory swap's rename is a copy; migrate it to a versioned "
-            "store (sqlite_vector_spark.versioned.versioned_store_init) — its "
-            "manifest pointer-flip swap needs no rename and runs on any "
-            "Hadoop-supported object store — or pass remote_ok=True to accept "
-            "the bounded copy cost (the streaming-state verbs do: one "
-            "micro-batch epoch dir per swap)"
-        )
+    if not remote_ok:
+        _refuse_remote_flat(spark, path)
+    df = read_store(spark, path, schemas=schemas)
     key = F.col(id_col).cast("bigint")
-    root = fsutil.norm_root(path)
-    old = root + "__pre_delete"
-    tmp = root + "__deleting"
+    obs = Observation()
 
     if partition_col is None:
-        before = df.count()
-        kept = df.join(
-            F.broadcast(ids_df), key == F.col("_del_id"), "left_anti"
-        )
-        _write_store(kept, tmp, "overwrite", sort_within=sort_within)
-        out = spark.read.parquet(tmp)
-        after = out.count()
-        if fsutil.exists(spark, old):
-            fsutil.delete(spark, old, recursive=True)
-        fsutil.rename(spark, root, old)
-        fsutil.rename(spark, tmp, root)
-        _preserve_sidecars(old, root)
-        spark.catalog.refreshByPath(path)
+        # one pass: a left join flags the batch's rows, the observe
+        # counts all rows and flagged rows, the filter drops the latter
+        flagged = df.join(F.broadcast(batch), key == F.col("_del_id"), "left_outer")
+
+        def finish(out):
+            return (
+                out.observe(obs, F.count(F.lit(1)).alias("before"),
+                            F.count("_del_id").alias("deleted"))
+                .where(F.col("_del_id").isNull())
+                .drop("_del_id")
+            )
+
+        _flat_swap(spark, path, lambda tmp: _write_store(
+            flagged, tmp, "overwrite", sort_within=sort_within, finish=finish))
+        _remember_schema(spark, path, df.schema, schemas)
+        m = obs.get
         return {
-            "deleted_rows": before - after,
-            "rows_after": after,
+            "deleted_rows": m["deleted"],
+            "rows_after": m["before"] - m["deleted"],
             "partitions_rewritten": -1,
         }
 
     # (1) column-pruned probe: which partition directories hold ids,
-    # and how many rows? ONE pass over the store (the r10 shape —
-    # checkpoint, then distinct + count — inherited the scan's
-    # partitioning and re-scheduled ~C near-empty tasks per follow-up
-    # job, which at C=4096 made the probe 3x its scan cost; measured
-    # r11, SCALE.md), folded to per-partition counts EXECUTOR-side so
-    # the driver holds #affected-partitions rows, not |ids| x
-    # rows-per-id — a band-expanded layout (MIH/LSH holds every id in
-    # all m bands) would otherwise materialize millions of Row
-    # objects on the driver for a large takedown batch (advisor r11).
+    # and how many rows? ONE pass over the store, folded to
+    # per-partition counts EXECUTOR-side so the driver holds
+    # #affected-partitions rows, not |ids| x rows-per-id — a
+    # band-expanded layout (MIH/LSH holds every id in all m bands)
+    # would otherwise materialize millions of Row objects on the driver
+    # for a large takedown batch (SCALE.md, r11).
     hit = (
         df.select(key.alias("_k"), F.col(partition_col))
-        .join(F.broadcast(ids_df), F.col("_k") == F.col("_del_id"), "left_semi")
+        .join(F.broadcast(batch), F.col("_k") == F.col("_del_id"), "left_semi")
         .groupBy(partition_col)
         .agg(F.count(F.lit(1)).alias("_n"))
         .collect()
@@ -496,7 +541,8 @@ def delete_ids(
     # compact_store's snapshot stat gate).
     from urllib.parse import unquote
 
-    pruned = df.where(F.col(partition_col).isin(affected))
+    root = fsutil.norm_root(path)
+    old, tmp = root + "__pre_delete", root + "__deleting"
     prefix = f"{partition_col}="
     by_value = {
         unquote(d[len(prefix):]): d
@@ -510,10 +556,13 @@ def delete_ids(
             f"{unmatched[:3]!r} under {root!r}; aborting before any rewrite"
         )
     part_dirs = {by_value[str(v)] for v in affected}
-    before = pruned.count()
-    kept = pruned.join(F.broadcast(ids_df), key == F.col("_del_id"), "left_anti")
-    write_partitioned(kept, tmp, partition_col, sort_within=sort_within,
-                      num_partitions=max(1, len(part_dirs)))
+    kept = (
+        df.where(F.col(partition_col).isin(affected))
+        .join(F.broadcast(batch), key == F.col("_del_id"), "left_anti")
+    )
+    _write_store(kept, tmp, "overwrite", partition_col, sort_within,
+                 num_partitions=max(1, len(part_dirs)),
+                 finish=lambda out: out.observe(obs, F.count(F.lit(1)).alias("rows")))
     # (3) per-directory swap: superseded dirs retained under __pre_delete
     if fsutil.exists(spark, old):
         fsutil.delete(spark, old, recursive=True)
@@ -525,9 +574,10 @@ def delete_ids(
             fsutil.rename(spark, f"{tmp}/{d}", f"{root}/{d}")
     fsutil.delete(spark, tmp, recursive=True)
     spark.catalog.refreshByPath(path)
+    _remember_schema(spark, path, df.schema, schemas)
     return {
         "deleted_rows": deleted,
-        "rows_after": before - deleted,  # within the rewritten partitions
+        "rows_after": obs.get["rows"],  # within the rewritten partitions
         "partitions_rewritten": len(part_dirs),
     }
 
@@ -588,24 +638,17 @@ def delete_ids_everywhere(
     with bq registered the rebuild arm reads whatever state the code
     table is in — takedown always selects ("bq", "mih") together."""
     ctx = catalog.get(table, column)
+    batch = _id_batch(spark, ids)
+    schemas = catalog.store_schemas
     reports: dict = {}
-    stores = [
-        ("quantized", ctx.quantized_path, None),
-        ("ivf", ctx.ivf_path, None),
-        ("pq", ctx.pq_path, None),
-        ("bq", ctx.bq_path, None),
-        ("mih", ctx.mih_path, ["bv"]),
-    ]
-    if tiers is not None:
-        stores = [s for s in stores if s[0] in set(tiers)]
-    for name, path, sort_within in stores:
-        if path is None:
+    for name, path, sort_within in _registered_stores(ctx):
+        if path is None or name not in _VECTOR_TIERS or (tiers is not None and name not in tiers):
             continue
         from sqlite_vector_spark.versioned import is_versioned
 
         if (
             name == "mih" and ctx.bq_path is not None and ctx.mih_planes is None
-            and not is_versioned(spark, ctx.mih_path)  # rebuild swap is os.rename
+            and not is_versioned(spark, ctx.mih_path)  # the rebuild is a flat swap
         ):
             # bq_path was already processed above (list order), so the
             # code table is post-delete here; when the batch matched
@@ -614,61 +657,50 @@ def delete_ids_everywhere(
             if reports.get("bq", {}).get("deleted_rows") == 0:
                 reports[name] = {"strategy": "skipped_no_match", "deleted_rows": 0}
             else:
-                reports[name] = _rebuild_band_store_from_codes(spark, ctx)
+                reports[name] = _rebuild_band_store_from_codes(spark, ctx, schemas)
             continue
-        pcol = _detect_partition_col(path)
-        reports[name] = delete_ids(
-            spark, path, ids, id_col=id_col,
-            partition_col=pcol, sort_within=sort_within,
+        reports[name] = _delete_ids(
+            spark, path, batch, id_col, _detect_partition_col(path), sort_within,
+            schemas=schemas,
         )
         reports[name]["strategy"] = "in_place"
     return reports
 
 
-def _rebuild_band_store_from_codes(spark, ctx) -> dict:
+def _rebuild_band_store_from_codes(spark, ctx, schemas: dict | None = None) -> dict:
     """Rebuild the MIH band store from the post-delete BQ code table —
     the cheaper delete arm (the band expansion depends only on the
     frozen (dim, band_bits) layout, so rebuild == in-place delete
-    exactly; equality-pinned in tests/test_sinks.py). Same swap +
-    ``__pre_delete`` retention as delete_ids."""
-    import os
-    import shutil
-
+    exactly; equality-pinned in tests/test_sinks.py). Same _flat_swap
+    and ``__pre_delete`` retention as delete_ids, and the same refusal
+    of a remote flat band store, before anything is written."""
     from sqlite_vector_spark.operators.bq import bq_band_store
 
-    root = os.path.abspath(ctx.mih_path.rstrip("/"))
-    tmp, old = root + "__deleting", root + "__pre_delete"
+    _refuse_remote_flat(spark, ctx.mih_path)
     # read_store: a VERSIONED bq tier must resolve through its live
     # manifest — a direct root read would scan superseded generations
-    codes = read_store(spark, ctx.bq_path).select("id", "bits")
-    # r15: the code-row count rides the rebuild write as an observe
-    # metric inside bq_band_store — the separate count() was a second
-    # full read of the code table
-    n = bq_band_store(
-        codes, int(ctx.dimension), tmp,
-        band_bits=int(ctx.mih_band_bits or 16),
-    )
-    if os.path.exists(old):
-        shutil.rmtree(old)
-    os.rename(root, old)
-    os.rename(tmp, root)
-    _preserve_sidecars(old, root)
-    spark.catalog.refreshByPath(ctx.mih_path)
+    codes = read_store(spark, ctx.bq_path, schemas=schemas).select("id", "bits")
+    # the code-row count rides the rebuild write as an observe metric
+    # inside bq_band_store
+    n = _flat_swap(spark, ctx.mih_path, lambda tmp: bq_band_store(
+        codes, int(ctx.dimension), tmp, band_bits=int(ctx.mih_band_bits or 16),
+    ))
     return {"strategy": "rebuild_from_codes", "code_rows": n}
 
 
-def _mirror_id_col(name: str, *sidecar_paths: str) -> str:
+def _mirror_id_col(ctx, tier: str) -> str:
     """Resolve a mirror table's id column from the first registered
-    state sidecar that records one — never guess: deleting a mirror
-    on a wrong id column silently deletes nothing."""
-    for p in sidecar_paths:
-        if p is None:
-            continue
-        prm = read_params_sidecar(p)
+    sidecar that records one (the mirror's, its label state's, its
+    band/bucket store's) — never guess: deleting a mirror on a wrong
+    id column silently deletes nothing."""
+    text = tier == "docs_mirror"
+    for p in (ctx.docs_mirror_path, ctx.text_labels_path, ctx.band_store_path) if text else (
+            ctx.vectors_mirror_path, ctx.embedding_labels_path, ctx.bucket_store_path):
+        prm = read_params_sidecar(p) if p is not None else None
         if prm and prm.get("id_col"):
             return prm["id_col"]
     raise ValueError(
-        f"takedown: cannot resolve the id column for the {name} — none of the "
+        f"takedown: cannot resolve the id column for the {tier.replace('_', ' ')} — none of the "
         "registered states carries an id_col sidecar; rebuild the state with the "
         "r11 store writers (lsh_band_store / embedding_bucket_store / "
         "write_label_state) or delete the mirror explicitly with sinks.delete_ids"
@@ -707,8 +739,8 @@ def takedown(
        (takedown_stream_state_embedding: per-epoch bucket/vec/label
        rewrite), params from each state's sidecar.
 
-    The id batch is normalized + checkpointed ONCE and broadcast into
-    every tier's anti-join. Params are read from each state's
+    The id batch is normalized once (_id_batch) and shared by every
+    tier and the verify. Params are read from each state's
     sidecar, never re-passed — the orchestrator cannot re-solve with
     wrong defaults, and it cannot forget a tier it doesn't know
     about: registration IS the completeness contract (a store created
@@ -716,9 +748,9 @@ def takedown(
     {tier: report}.
 
     ``verify=True`` runs verify_ids_absent over the same registry
-    afterwards — column-pruned residual counts per tier — and RAISES
-    if any tier still holds one of the ids (the compliance receipt;
-    the counts ride in the report under "verified").
+    afterwards and RAISES if any tier still holds one of the ids (the
+    compliance receipt; the counts ride in the report under
+    "verified").
 
     ``audit_dir=`` appends one JSON line per takedown to
     ``<audit_dir>/takedown_audit.jsonl`` — timestamp, table.column,
@@ -740,11 +772,8 @@ def takedown(
     (default) and the parallel path produce identical reports —
     equality-pinned in tests."""
     ctx = catalog.get(table, column)
-    if isinstance(ids, DataFrame):
-        ids_df = ids.select(F.col(ids.columns[0]).cast("bigint").alias("_del_id"))
-    else:
-        ids_df = spark.createDataFrame([(int(i),) for i in ids], "_del_id bigint")
-    ids_df = ids_df.distinct().localCheckpoint(eager=True)
+    ids_df = _id_batch(spark, ids)
+    schemas = catalog.store_schemas
 
     # validation BEFORE any mutation or thread launch: a label state
     # registered without its corpus mirror must refuse deterministically
@@ -771,34 +800,25 @@ def takedown(
             spark, catalog, table, column, ids_df, id_col=id_col, tiers=tiers
         )
 
+    def _delete(path, col, sort_within=None):
+        return _delete_ids(spark, path, ids_df, col, _detect_partition_col(path),
+                           sort_within, schemas=schemas)
+
     def _band_chain():
-        return {"band_store": delete_ids(
-            spark, ctx.band_store_path, ids_df, id_col="id",
-            partition_col=_detect_partition_col(ctx.band_store_path),
-        )}
+        return {"band_store": _delete(ctx.band_store_path, "id")}
 
     def _bucket_chain():
-        return {"bucket_store": delete_ids(
-            spark, ctx.bucket_store_path, ids_df, id_col="id",
-            partition_col=_detect_partition_col(ctx.bucket_store_path),
-            sort_within=["bucket"],
-        )}
+        return {"bucket_store": _delete(ctx.bucket_store_path, "id", ["bucket"])}
 
     def _text_chain():
         out = {}
         if ctx.docs_mirror_path:
-            dcol = _mirror_id_col(
-                "docs mirror", ctx.docs_mirror_path, ctx.text_labels_path,
-                ctx.band_store_path,
-            )
-            out["docs_mirror"] = delete_ids(
-                spark, ctx.docs_mirror_path, ids_df, id_col=dcol,
-                partition_col=_detect_partition_col(ctx.docs_mirror_path),
-            )
+            out["docs_mirror"] = _delete(ctx.docs_mirror_path,
+                                         _mirror_id_col(ctx, "docs_mirror"))
         if ctx.text_labels_path:
             from sqlite_vector_spark.operators.dedup import delete_labels_state
 
-            docs = read_store(spark, ctx.docs_mirror_path)
+            docs = read_store(spark, ctx.docs_mirror_path, schemas=schemas)
             out["text_labels"] = delete_labels_state(
                 spark, ctx.text_labels_path, docs, ids_df
             )
@@ -807,18 +827,12 @@ def takedown(
     def _embedding_chain():
         out = {}
         if ctx.vectors_mirror_path:
-            vcol = _mirror_id_col(
-                "vectors mirror", ctx.vectors_mirror_path,
-                ctx.embedding_labels_path, ctx.bucket_store_path,
-            )
-            out["vectors_mirror"] = delete_ids(
-                spark, ctx.vectors_mirror_path, ids_df, id_col=vcol,
-                partition_col=_detect_partition_col(ctx.vectors_mirror_path),
-            )
+            out["vectors_mirror"] = _delete(ctx.vectors_mirror_path,
+                                            _mirror_id_col(ctx, "vectors_mirror"))
         if ctx.embedding_labels_path:
             from sqlite_vector_spark.operators.dedup import delete_labels_embedding_state
 
-            vectors = read_store(spark, ctx.vectors_mirror_path)
+            vectors = read_store(spark, ctx.vectors_mirror_path, schemas=schemas)
             out["embedding_labels"] = delete_labels_embedding_state(
                 spark, ctx.embedding_labels_path, vectors, ids_df
             )
@@ -884,7 +898,7 @@ def takedown(
                 "ts": time.time(),
                 "table": table,
                 "column": column,
-                "n_ids": ids_df.count(),
+                "n_ids": ids_df._sv_id_batch,
                 "tiers": {k: v for k, v in reports.items() if k != "verified"},
                 "verified": reports.get("verified"),
             }) + "\n")
@@ -897,79 +911,56 @@ def verify_ids_absent(spark, catalog, table: str, column: str, ids, id_col: str 
     given ids — all zeros after a successful ``takedown``. This is the
     compliance half of right-to-be-forgotten: the takedown mutates,
     this verifies, and they share the registry walk so a tier the
-    orchestrator would delete is exactly a tier this audits. Each
-    check is a column-pruned scan (id column only, plus the epoch
-    layout for streaming state) with a broadcast semi-join count —
-    no full-width reads. Mirrors resolve their id column from the
-    state sidecars like the orchestrator does."""
+    orchestrator would delete is exactly a tier this audits. ONE job:
+    the column-pruned, tier-tagged id projections of every store and
+    every streaming epoch dir are unioned, semi-joined once against
+    the broadcast id batch and counted per tier. Mirrors resolve their
+    id column from the state sidecars like the orchestrator does."""
     import os
+    from functools import reduce
+
+    from sqlite_vector_spark.streaming.scoring import _epoch_ids
 
     ctx = catalog.get(table, column)
-    if isinstance(ids, DataFrame):
-        ids_df = ids.select(F.col(ids.columns[0]).cast("bigint").alias("_del_id"))
-    else:
-        ids_df = spark.createDataFrame([(int(i),) for i in ids], "_del_id bigint")
-    ids_df = ids_df.distinct().localCheckpoint(eager=True)
-
-    def residual(path: str, col: str) -> int:
-        df = read_store(spark, path)  # versioned roots resolve via manifest
-        return (
-            df.select(F.col(col).cast("bigint").alias("_k"))
-            .join(F.broadcast(ids_df), F.col("_k") == F.col("_del_id"), "left_semi")
-            .count()
-        )
-
+    batch = _id_batch(spark, ids)
     report: dict = {}
-    for tier, path, col in [
-        ("quantized", ctx.quantized_path, id_col),
-        ("ivf", ctx.ivf_path, id_col),
-        ("pq", ctx.pq_path, id_col),
-        ("bq", ctx.bq_path, id_col),
-        ("mih", ctx.mih_path, id_col),
-        ("band_store", ctx.band_store_path, "id"),
-        ("bucket_store", ctx.bucket_store_path, "id"),
-        ("text_labels", ctx.text_labels_path, "id"),
-        ("embedding_labels", ctx.embedding_labels_path, "id"),
-    ]:
+    tagged = []
+
+    def scan(tier: str, path: str, col: str, schemas=catalog.store_schemas) -> None:
+        report.setdefault(tier, 0)
+        df = read_store(spark, path, schemas=schemas)  # versioned: live manifest
+        tagged.append(df.select(F.lit(tier).alias("_tier"),
+                                F.col(col).cast("bigint").alias("_k")))
+
+    for tier, path, _sort in _registered_stores(ctx):
         if path is not None:
-            report[tier] = residual(path, col)
-    if ctx.docs_mirror_path:
-        dcol = _mirror_id_col(
-            "docs mirror", ctx.docs_mirror_path, ctx.text_labels_path, ctx.band_store_path
-        )
-        report["docs_mirror"] = residual(ctx.docs_mirror_path, dcol)
-    if ctx.vectors_mirror_path:
-        vcol = _mirror_id_col(
-            "vectors mirror", ctx.vectors_mirror_path,
-            ctx.embedding_labels_path, ctx.bucket_store_path,
-        )
-        report["vectors_mirror"] = residual(ctx.vectors_mirror_path, vcol)
-    def _stream_residual(state_dir: str, subs) -> int:
+            scan(tier, path, id_col if tier in _VECTOR_TIERS else
+                 _mirror_id_col(ctx, tier) if tier.endswith("_mirror") else "id")
+    for tier, state_dir, subs in [
+        ("stream_state", ctx.stream_state_dir,
+         (("bands", "id"), ("docs", None), ("labels", "id"))),
+        ("embedding_stream_state", ctx.embedding_stream_state_dir,
+         (("buckets", "id"), ("vecs", None), ("labels", "id"))),
+    ]:
+        if not state_dir:
+            continue
         # the shared epoch lister walks scheme-carrying state roots
         # through the Hadoop FS layer (r13), so a remote state's
         # residuals are audited, not silently skipped as "no dir"
-        from sqlite_vector_spark.streaming.scoring import _epoch_ids
-
-        prm = read_params_sidecar(state_dir) or {}
-        scol = prm.get("id_col", "doc_id")
-        total = 0
+        scol = (read_params_sidecar(state_dir) or {}).get("id_col", "doc_id")
+        report[tier] = 0
         for sub, col in subs:
             sroot = os.path.join(state_dir, sub)
             for e in _epoch_ids(sroot, spark=spark):
-                total += residual(
-                    os.path.join(sroot, f"epoch={e}"), scol if col is None else col
-                )
-        return total
-
-    if ctx.stream_state_dir:
-        report["stream_state"] = _stream_residual(
-            ctx.stream_state_dir, (("bands", "id"), ("docs", None), ("labels", "id"))
+                # no schema cache: one entry per epoch would grow unbounded
+                scan(tier, os.path.join(sroot, f"epoch={e}"), col or scol, None)
+    if tagged:
+        hits = (
+            reduce(lambda a, b: a.union(b), tagged)
+            .join(F.broadcast(batch), F.col("_k") == F.col("_del_id"), "left_semi")
+            .groupBy("_tier").agg(F.count(F.lit(1))).collect()
         )
-    if ctx.embedding_stream_state_dir:
-        report["embedding_stream_state"] = _stream_residual(
-            ctx.embedding_stream_state_dir,
-            (("buckets", "id"), ("vecs", None), ("labels", "id")),
-        )
+        report.update({r[0]: r[1] for r in hits})
     return report
 
 
@@ -992,23 +983,13 @@ def migrate_tier_to_versioned(
     from sqlite_vector_spark.versioned import migrate_to_versioned
 
     ctx = catalog.get(table, column)
-    paths = {
-        "quantized": ctx.quantized_path, "ivf": ctx.ivf_path,
-        "pq": ctx.pq_path, "bq": ctx.bq_path, "mih": ctx.mih_path,
-        "band_store": ctx.band_store_path,
-        "bucket_store": ctx.bucket_store_path,
-        "docs_mirror": ctx.docs_mirror_path,
-        "vectors_mirror": ctx.vectors_mirror_path,
-        "text_labels": ctx.text_labels_path,
-        "embedding_labels": ctx.embedding_labels_path,
-    }
-    if tier not in paths:
-        raise ValueError(f"tier must be one of {sorted(paths)}, got {tier!r}")
-    src = paths[tier]
+    stores = {name: (path, sort) for name, path, sort in _registered_stores(ctx)}
+    if tier not in stores:
+        raise ValueError(f"tier must be one of {sorted(stores)}, got {tier!r}")
+    src, sort_within = stores[tier]
     if src is None:
         raise ValueError(f"{table}.{column} has no registered {tier} store")
     destp = (dest or src.rstrip("/") + "__versioned").rstrip("/")
-    sort_within = {"mih": ["bv"], "bucket_store": ["bucket"]}.get(tier)
     rep = migrate_to_versioned(spark, src, destp, sort_within=sort_within)
     if tier == "quantized":
         catalog.set_quant_params(
@@ -1094,20 +1075,31 @@ def read_parquet(spark, paths: list[str], schemas: dict | None = None,
     def reader():  # a DataFrameReader is mutable: one per read
         return spark.read if base_path is None else spark.read.option("basePath", base_path)
 
-    def file_set(df):
-        files = df._jdf.inputFiles()
-        return spark._jvm.scala.collection.mutable.ArraySeq.make(files).toSet()
-
     key = (base_path, *paths)
     hit = schemas.get(key) if schemas is not None else None
     if hit is not None:
         df = reader().schema(hit[0]).parquet(*paths)
-        if file_set(df).equals(hit[1]):
+        if _file_set(df).equals(hit[1]):
             return df
     df = reader().parquet(*paths)
     if schemas is not None:
-        schemas[key] = (df.schema, file_set(df))
+        schemas[key] = (df.schema, _file_set(df))
     return df
+
+
+def _file_set(df: DataFrame):
+    """The JVM set of data files a parquet read lists."""
+    jvm = df.sparkSession._jvm
+    return jvm.scala.collection.mutable.ArraySeq.make(df._jdf.inputFiles()).toSet()
+
+
+def _remember_schema(spark, path: str, schema, schemas: dict | None) -> None:
+    """After a rewrite of the flat or directory-partitioned store
+    ``path``, record ``schema`` — the schema the rewrite wrote — for
+    the store's new file set in read_parquet's cache, so the next read
+    of the store runs no inference job."""
+    if schemas is not None:
+        schemas[(None, path)] = (schema, _file_set(spark.read.schema(schema).parquet(path)))
 
 
 def vacuum_store(path: str, spark=None) -> dict:
@@ -1181,6 +1173,9 @@ def dir_bytes(path: str) -> int:
         for dp, _, fs in os.walk(path)
         for f in fs
     )
+
+
+_VECTOR_TIERS = ("quantized", "ivf", "pq", "bq", "mih")
 
 
 def _registered_stores(ctx) -> list:

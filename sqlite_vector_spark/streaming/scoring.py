@@ -494,11 +494,12 @@ def takedown_stream_state(
     import os
 
     from sqlite_vector_spark.operators.dedup import delete_labels
-    from sqlite_vector_spark.sinks import check_frozen_params, delete_ids
+    from sqlite_vector_spark.sinks import _id_batch, check_frozen_params, delete_ids
 
     prm = check_frozen_params(state_dir, {
         "id_col": id_col, "text_col": text_col, "jaccard_min": jaccard_min,
     })
+    doc_ids = _id_batch(spark, doc_ids)  # one batch for every epoch rewrite
     id_col = prm.get("id_col", "doc_id")
     text_col = prm.get("text_col", "text")
     jaccard_min = prm.get("jaccard_min", 0.8)
@@ -691,7 +692,7 @@ def takedown_stream_state_embedding(
     import os
 
     from sqlite_vector_spark.operators.dedup import delete_labels_embedding
-    from sqlite_vector_spark.sinks import check_frozen_params, delete_ids
+    from sqlite_vector_spark.sinks import _id_batch, check_frozen_params, delete_ids
 
     prm = check_frozen_params(state_dir, {
         "id_col": id_col, "vec_col": vec_col,
@@ -709,6 +710,7 @@ def takedown_stream_state_embedding(
             "state root carries them when written by "
             "ingest_stream_embedding_neardup; otherwise pass them explicitly"
         )
+    vec_ids = _id_batch(spark, vec_ids)  # one batch for every epoch rewrite
 
     buckets_root = os.path.join(state_dir, "buckets")
     vecs_root = os.path.join(state_dir, "vecs")

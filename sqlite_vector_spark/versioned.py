@@ -438,14 +438,12 @@ def delete_ids_versioned(
     manifest is the commit, no rename anywhere. The superseded
     manifest keeps the old generation set readable (``__pre_delete``
     semantics) until vacuum_versioned."""
+    from sqlite_vector_spark.sinks import _id_batch
+
     rootp = root.rstrip("/")
     ver, man = current_manifest(spark, rootp)
     pcol = man["partition_col"]
-    if isinstance(ids, DataFrame):
-        ids_df = ids.select(F.col(ids.columns[0]).cast("bigint").alias("_del_id"))
-    else:
-        ids_df = spark.createDataFrame([(int(i),) for i in ids], "_del_id bigint")
-    ids_df = ids_df.distinct().localCheckpoint(eager=True)
+    ids_df = _id_batch(spark, ids)
     key = F.col(id_col).cast("bigint")
 
     if pcol is None:

@@ -566,8 +566,9 @@ def test_observed_write_counts_in_result_stage(spark, tmp_path):
     writes, after the layout shuffle, so the metrics are counted in
     the write's result stage (a re-run map stage cannot count a row
     twice). Pinned on the partitioned writers — the band store, its
-    append, the IVF-PQ append — and on a versioned-root append, whose
-    generation write repartitions too."""
+    append, the IVF-PQ append — on a versioned-root append, whose
+    generation write repartitions too, and on delete_ids' receipts
+    over a flat and a directory-partitioned store."""
     from sqlite_vector_spark.operators.bq import bq_band_store, bq_band_store_append, bq_encode
     from sqlite_vector_spark.operators.pq import (
         ivf_pq_store,
@@ -576,6 +577,7 @@ def test_observed_write_counts_in_result_stage(spark, tmp_path):
         pq_store,
         pq_store_append,
     )
+    from sqlite_vector_spark.sinks import delete_ids
     from sqlite_vector_spark.versioned import migrate_to_versioned
 
     dim = 16
@@ -586,6 +588,9 @@ def test_observed_write_counts_in_result_stage(spark, tmp_path):
     ivf_pq_store(df, "vec", cents, books, ivfpq)
     pq_store(df, "vec", books, str(tmp_path / "pq"))
     migrate_to_versioned(spark, str(tmp_path / "pq"), str(tmp_path / "pq_v"))
+    flat, parted = str(tmp_path / "flat"), str(tmp_path / "parted")
+    df.write.parquet(flat)
+    df.withColumn("part", F.col("id") % 4).write.partitionBy("part").parquet(parted)
     calls = [
         ("bq_band_store", 200,
          lambda: bq_band_store(bq_encode(df, "vec", dim), dim, mih)),
@@ -595,6 +600,12 @@ def test_observed_write_counts_in_result_stage(spark, tmp_path):
          lambda: ivf_pq_store_append(batch, "vec", cents, books, ivfpq).n_appended),
         ("pq_store_append (versioned)", 50,
          lambda: pq_store_append(batch, "vec", books, str(tmp_path / "pq_v")).n_appended),
+        ("delete_ids (flat)",
+         {"deleted_rows": 4, "rows_after": 196, "partitions_rewritten": -1},
+         lambda: delete_ids(spark, flat, [1, 2, 3, 5, 5])),
+        ("delete_ids (partitioned)",
+         {"deleted_rows": 4, "rows_after": 146, "partitions_rewritten": 3},
+         lambda: delete_ids(spark, parted, [1, 2, 3, 5, 5], partition_col="part")),
     ]
     for name, want, fn in calls:
         got, plans = _write_plans(spark, fn)

@@ -601,3 +601,82 @@ def test_takedown_over_fully_versioned_registry(spark, emb, docs, tmp_path, full
     # and the surviving mirrors hold no victim rows
     assert read_store(spark, ctx.docs_mirror_path).where(
         F.col("doc_id").isin(victims)).count() == 0
+
+
+@pytest.fixture()
+def vector_tiers(spark, emb, tmp_path):
+    """Quantized, IVF (4 cells), PQ and BQ tiers over the smoke
+    embeddings, registered in a fresh catalog."""
+    from sqlite_vector_spark.catalog import VectorCatalog
+    from sqlite_vector_spark.operators.ann import ivf_store
+    from sqlite_vector_spark.operators.bq import bq_store
+    from sqlite_vector_spark.operators.pq import pq_fit, pq_store
+    from sqlite_vector_spark.operators.quantize import vector_quantize
+
+    emb.createOrReplaceTempView("td_jobs")
+    cat = VectorCatalog(str(tmp_path / "cat"))
+    cat.vector_init(emb, "td_jobs", "embedding", f"type=FLOAT32,dimension={DIM},distance=L2")
+    vector_quantize(emb, "embedding", str(tmp_path / "rep"), id_col="vec_id",
+                    catalog=cat, table="td_jobs")
+    cents = [list(r.embedding) for r in emb.where(F.col("vec_id") < 4).orderBy("vec_id").collect()]
+    ivf_store(emb, "embedding", cents, str(tmp_path / "ivf"), id_col="vec_id")
+    cat.set_ivf_index("td_jobs", "embedding", path=str(tmp_path / "ivf"), centroids=cents)
+    books = pq_fit(emb, "embedding", 8, 16, DIM, iters=2, id_col="vec_id")
+    pq_store(emb, "embedding", books, str(tmp_path / "pq"), id_col="vec_id")
+    cat.set_pq_index("td_jobs", "embedding", path=str(tmp_path / "pq"), codebooks=books)
+    bq_store(emb, "embedding", DIM, str(tmp_path / "bq"), id_col="vec_id")
+    cat.set_bq_index("td_jobs", "embedding", path=str(tmp_path / "bq"))
+    return cat
+
+
+def test_takedown_job_count_and_receipts(spark, vector_tiers):
+    """A four-tier takedown with verify runs in a handful of Spark
+    jobs: the id batch is built once, the receipts are counted on the
+    rewrites, the rewritten stores are re-read without schema
+    inference, and the verify is one job over every tier."""
+    from sqlite_vector_spark.sinks import takedown
+
+    sc = spark.sparkContext
+    victims = [3, 17, 42, 99, 250, 498, 42]
+    sc.setJobGroup("td-jobs", "takedown")
+    try:
+        rep = takedown(spark, vector_tiers, "td_jobs", "embedding", victims, verify=True)
+        jobs = list(sc.statusTracker().getJobIdsForGroup("td-jobs"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    flat = {"deleted_rows": 6, "rows_after": 494, "partitions_rewritten": -1,
+            "strategy": "in_place"}
+    assert rep["quantized"] == rep["pq"] == rep["bq"] == flat
+    assert rep["ivf"] == {"deleted_rows": 6, "rows_after": 214, "partitions_rewritten": 2,
+                          "strategy": "in_place"}
+    assert rep["verified"] == {"quantized": 0, "ivf": 0, "pq": 0, "bq": 0}
+    assert len(jobs) <= 18, len(jobs)
+
+
+def test_mih_rebuild_refuses_remote_flat_band_store(spark, emb, tmp_path, monkeypatch):
+    """The MIH rebuild arm swaps a FLAT band store by rename, so on a
+    remote filesystem it refuses with the in-place arm's ValueError
+    before writing anything — it neither mangles the URI into a path
+    under the working directory nor leaves a staged rebuild behind."""
+    from sqlite_vector_spark import fsutil
+    from sqlite_vector_spark.catalog import VectorCatalog
+    from sqlite_vector_spark.operators.bq import bq_band_store, bq_encode
+    from sqlite_vector_spark.sinks import takedown
+    from sqlite_vector_spark.versioned import versioned_store_init
+
+    monkeypatch.chdir(tmp_path)
+    emb.createOrReplaceTempView("td_mock")
+    cat = VectorCatalog(str(tmp_path / "cat"))
+    cat.vector_init(emb, "td_mock", "embedding", f"type=FLOAT32,dimension={DIM},distance=L2")
+    codes = bq_encode(emb, "embedding", DIM, id_col="vec_id")
+    versioned_store_init(codes, str(tmp_path / "bq"))
+    cat.set_bq_index("td_mock", "embedding", path=str(tmp_path / "bq"))
+    mih = f"mock:{tmp_path}/mih"
+    bq_band_store(codes, DIM, mih, band_bits=8)
+    cat.set_mih_index("td_mock", "embedding", path=mih, band_bits=8)
+    with pytest.raises(ValueError, match="remote filesystem"):
+        takedown(spark, cat, "td_mock", "embedding", [1, 2, 3], verify=True)
+    assert not any(p.name.startswith("mock:") for p in tmp_path.iterdir())
+    assert not fsutil.exists(spark, mih + "__deleting")
+    assert not fsutil.exists(spark, mih + "__pre_delete")
