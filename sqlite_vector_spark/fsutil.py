@@ -30,6 +30,8 @@ from __future__ import annotations
 
 import re
 
+from py4j.java_gateway import JavaClass
+
 _SCHEME_RE = re.compile(r"^[A-Za-z][A-Za-z0-9+.\-]*:")
 
 
@@ -109,8 +111,9 @@ def active_spark():
 
 def fs_for(spark, path: str):
     """(hadoop Path, FileSystem) for a path, resolved by scheme."""
-    jvm = spark._jvm
-    jp = jvm.org.apache.hadoop.fs.Path(path)
+    # a JavaClass handle is built in Python; jvm.org.apache... lookups
+    # cost a py4j round trip per package name
+    jp = JavaClass("org.apache.hadoop.fs.Path", spark._jvm._gateway_client)(path)
     return jp, jp.getFileSystem(spark._jsc.hadoopConfiguration())
 
 

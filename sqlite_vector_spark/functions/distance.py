@@ -234,6 +234,32 @@ def distance_tree_sql(a: str, b: str, metric: str | Metric = Metric.L2) -> str:
     return snap_zero_sql(_TREES[m](a, b))
 
 
+def distance_expr(
+    a: str | Column,
+    b: str | Column | Sequence[float],
+    metric: str | Metric = Metric.L2,
+    size_bytes: int | None = None,
+) -> str | Column:
+    """distance()'s two arms: the SQL text of the snapped fold, or,
+    for a literal query the backend rule sends to the Arrow/NumPy
+    kernel, that kernel's pandas UDF Column. A scan that builds its
+    plan as one SQL statement (search.scan) splices the text; a UDF
+    has no SQL text."""
+    m = parse_metric(metric) if isinstance(metric, str) else metric
+    sa = sql_operand(a)
+    if isinstance(b, (list, tuple)):
+        # runtime backend dispatch, mirroring init_distance_functions
+        # (reference distance-cpu.c:797-812): the Arrow/NumPy kernel
+        # only exists for literal query vectors (column-vs-column stays
+        # codegen). The default "auto" resolves by dim and scan size at
+        # plan-build time; both backends give bit-identical values.
+        from sqlite_vector_spark.version import resolve_backend
+
+        if resolve_backend(len(b), size_bytes) == "arrow-numpy":
+            return distance_pandas_udf(m, b)(F.col(a) if isinstance(a, str) else a)
+    return distance_tree_sql(sa, sql_operand(b), m)
+
+
 def distance(
     a: str | Column,
     b: str | Column | Sequence[float],
@@ -249,19 +275,8 @@ def distance(
     ``size_bytes`` is what a scan knows of its input's size (see
     version.resolve_backend); None keeps the per-dim rule.
     """
-    m = parse_metric(metric) if isinstance(metric, str) else metric
-    sa = sql_operand(a)
-    if isinstance(b, (list, tuple)):
-        # runtime backend dispatch, mirroring init_distance_functions
-        # (reference distance-cpu.c:797-812): the Arrow/NumPy kernel
-        # only exists for literal query vectors (column-vs-column stays
-        # codegen). The default "auto" resolves by dim and scan size at
-        # plan-build time; both backends give bit-identical values.
-        from sqlite_vector_spark.version import resolve_backend
-
-        if resolve_backend(len(b), size_bytes) == "arrow-numpy":
-            return distance_pandas_udf(m, b)(F.col(a) if isinstance(a, str) else a)
-    return F.expr(distance_tree_sql(sa, sql_operand(b), m))
+    d = distance_expr(a, b, metric, size_bytes)
+    return d if isinstance(d, Column) else F.expr(d)
 
 
 def batch_matrix(col, dtype="float64", lanes: bool = False):

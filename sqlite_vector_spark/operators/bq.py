@@ -36,6 +36,7 @@ from sqlite_vector_spark.functions.distance import (
     literal_sql,
     sql_operand,
 )
+from sqlite_vector_spark.operators.search import frames_sql, rerank, scan, scan_sql
 from sqlite_vector_spark.operators.topk import topk_per_key
 
 
@@ -68,24 +69,19 @@ def bq_encode_col(vec: str | Column, dim: int, thresholds: Sequence[float] | Non
     ``vec[w*64 + i] > thresholds[w*64 + i]``. Lane order matches the
     oracle's bit build exactly; the 64th lane of a word lands in the
     BIGINT sign bit (two's-complement addition of disjoint bits == OR,
-    so the packing is still exact)."""
-    v = F.col(vec) if isinstance(vec, str) else vec
+    so the packing is still exact). One F.expr call at any dim (an
+    operand per sql_operand's rule); per-lane Column calls cost a py4j
+    round trip each."""
+    v = sql_operand(vec)
     t = _check_thresholds(dim, thresholds)
     words = []
     for w in range(_n_words(dim)):
-        lanes = min(64, dim - w * 64)
-        bits = [
-            F.when(
-                F.element_at(v, w * 64 + i + 1).cast("double") > F.lit(t[w * 64 + i]),
-                F.shiftleft(F.lit(1).cast("long"), i),
-            ).otherwise(F.lit(0).cast("long"))
-            for i in range(lanes)
-        ]
-        acc = bits[0]
-        for b in bits[1:]:
-            acc = acc + b
-        words.append(acc)
-    return F.array(*words)
+        words.append(" + ".join(
+            f"CASE WHEN CAST(element_at({v}, {w * 64 + i + 1}) AS DOUBLE) > {literal_sql(t[w * 64 + i])} "
+            f"THEN shiftleft(CAST(1 AS BIGINT), {i}) ELSE CAST(0 AS BIGINT) END"
+            for i in range(min(64, dim - w * 64))
+        ))
+    return F.expr(f"array({', '.join(words)})")
 
 
 def bq_encode_arrow_udf(dim: int, thresholds: Sequence[float] | None = None):
@@ -150,16 +146,23 @@ def bq_query_words(query: Sequence[float], thresholds: Sequence[float] | None = 
     return words
 
 
+def hamming_sql(bits: str, query_words: Sequence[int]) -> str:
+    """SQL text of the BIGINT Hamming distance between the code column
+    ``bits`` and the query words (hamming_col's tree)."""
+    q = literal_sql([int(w) for w in query_words])
+    terms = f"zip_with({sql_operand(bits)}, {q}, (x, y) -> CAST(bit_count(x ^ y) AS BIGINT))"
+    return f"aggregate({terms}, CAST(0 AS BIGINT), (x, y) -> x + y)"
+
+
 def hamming_col(bits: str | Column, query_words: Sequence[int]) -> Column:
     """BIGINT Hamming distance: Σ_w popcount(bits[w] XOR q[w]) in word
     order — integer-exact, mirrored by the oracle's ordered fold. The
     query words ride in as ONE array literal zipped with the code
     words: a per-word ``long`` literal would be inlined into the
     generated code, so every new query would compile a new class."""
-    q = [int(w) for w in query_words]
     if isinstance(bits, str):  # one F.expr call, the same tree as below
-        terms = f"zip_with({sql_operand(bits)}, {literal_sql(q)}, (x, y) -> CAST(bit_count(x ^ y) AS BIGINT))"
-        return F.expr(f"aggregate({terms}, CAST(0 AS BIGINT), (x, y) -> x + y)")
+        return F.expr(hamming_sql(bits, query_words))
+    q = [int(w) for w in query_words]
     terms = F.zip_with(bits, array_literal(q), lambda x, y: F.bit_count(x.bitwiseXOR(y)).cast("long"))
     return F.aggregate(terms, F.lit(0).cast("long"), lambda acc, t: acc + t)
 
@@ -178,13 +181,7 @@ def bq_scan(
     if k < 0:
         raise ValueError("k must be >= 0")
     qw = bq_query_words(query, thresholds)
-    scored = codes_df.where(F.col(bits_col).isNotNull()).select(
-        F.col(id_col).cast("bigint").alias("id"),
-        hamming_col(bits_col, qw).alias("hamming"),
-    )
-    if k == 0:
-        return scored.limit(0)
-    return scored.orderBy(F.col("hamming").asc(), F.col("id").asc()).limit(k)
+    return scan(codes_df, bits_col, hamming_sql(bits_col, qw), k, id_col, name="hamming")
 
 
 def bq_rerank_scan(
@@ -203,33 +200,45 @@ def bq_rerank_scan(
     true distances out, recall governed by the prefilter width. Pass
     a persisted ``codes_df`` in production (same contract as
     pq_rerank_scan)."""
-    from sqlite_vector_spark.functions.distance import distance
-    from sqlite_vector_spark.sources import plan_size_bytes
-
-    dim = len(query)
     codes = (
         codes_df
         if codes_df is not None
-        else bq_encode(df, vec_col, dim, thresholds, id_col=id_col)
+        else bq_encode(df, vec_col, len(query), thresholds, id_col=id_col)
     )
-    cand = bq_scan(codes, query, prefilter, thresholds).select("id")
-    full = df.where(F.col(vec_col).isNotNull()).select(
-        F.col(id_col).cast("bigint").alias("id"), F.col(vec_col).alias("vec")
-    )
+    ham = hamming_sql("bits", bq_query_words(query, thresholds))
+    cand = f"SELECT id FROM ({scan_sql('codes', 'bits', ham, prefilter, name='hamming')})"
+    return hamming_rerank(df, vec_col, query, k, prefilter, metric, id_col, cand, codes=codes)
+
+
+def hamming_rerank(
+    df: DataFrame,
+    vec_col: str,
+    query: Sequence[float],
+    k: int,
+    prefilter: int,
+    metric: str,
+    id_col: str,
+    candidates: str,
+    **frames: DataFrame,
+) -> DataFrame:
+    """Exact top-k over the rows of ``df`` whose id the Hamming
+    prefilter query ``candidates`` (over ``frames``, at most
+    ``prefilter`` ids) returns: search.rerank, sized by the rerank's
+    own input."""
+    from sqlite_vector_spark.sources import plan_size_bytes
+    from sqlite_vector_spark.version import small_scan
+
     # the rerank scores at most ``prefilter`` rows (an 8-byte id and
     # dim doubles each) and at most the whole frame: the smaller known
-    # bound sizes its backend
-    rerank_bytes = prefilter * 8 * (dim + 1)
-    full_bytes = plan_size_bytes(full)
-    if full_bytes is not None:
-        rerank_bytes = min(rerank_bytes, full_bytes)
-    return (
-        full.join(F.broadcast(cand), "id", "left_semi")
-        .select("id", distance("vec", [float(x) for x in query], metric,
-                               size_bytes=rerank_bytes).alias("distance"))
-        .orderBy(F.col("distance").asc(), F.col("id").asc())
-        .limit(k)
-    )
+    # bound sizes its backend (the frame is sized only when the first
+    # bound is not already below the gate)
+    size = prefilter * 8 * (len(query) + 1)
+    if not small_scan(size):
+        full = frames_sql(scan_sql("src", vec_col, sql_operand(vec_col), None, id_col, "vec"), src=df)
+        full_bytes = plan_size_bytes(full)
+        if full_bytes is not None:
+            size = min(size, full_bytes)
+    return rerank(df, vec_col, query, k, metric, id_col, candidates, size, **frames)
 
 
 @dataclass
@@ -540,29 +549,14 @@ def bq_project_rerank_scan(
     """Projected-bit Hamming prefilter + exact rerank — the
     production 1-bit recipe (recall governed by plane count p and
     prefilter width; p is the quality lever, bytes stay p/8)."""
-    from sqlite_vector_spark.functions.distance import distance
-
     codes = (
         codes_df
         if codes_df is not None
         else bq_project_encode(df, vec_col, planes, center, id_col=id_col)
     )
     qw = bq_project_query_words(query, planes, center)
-    cand = (
-        codes.select("id", hamming_col("bits", qw).alias("hamming"))
-        .orderBy(F.col("hamming").asc(), F.col("id").asc())
-        .limit(prefilter)
-        .select("id")
-    )
-    full = df.where(F.col(vec_col).isNotNull()).select(
-        F.col(id_col).cast("bigint").alias("id"), F.col(vec_col).alias("vec")
-    )
-    return (
-        full.join(F.broadcast(cand), "id", "left_semi")
-        .select("id", distance(F.col("vec"), [float(x) for x in query], metric).alias("distance"))
-        .orderBy(F.col("distance").asc(), F.col("id").asc())
-        .limit(k)
-    )
+    cand = f"SELECT id FROM ({scan_sql('codes', None, hamming_sql('bits', qw), prefilter, name='hamming')})"
+    return rerank(df, vec_col, query, k, metric, id_col, cand, codes=codes)
 
 
 def hamming_pair_col(a: str | Column, b: str | Column) -> Column:
@@ -885,6 +879,7 @@ def bq_band_scan(
     thresholds: Sequence[float] | None = None,
     planes=None,
     center: Sequence[float] | None = None,
+    schemas: dict | None = None,
 ) -> DataFrame:
     """Single-query Hamming top-k over a bq_band_store directory: the
     query's m (band, value) probes become a pruned disjunction —
@@ -894,7 +889,30 @@ def bq_band_scan(
     query (complete within Hamming m-1). ``planes`` selects
     projected-code probes (sequential-fold query encode) for a store
     built from bq_project_encode codes — ``dim`` must then equal the
-    plane count and ``thresholds`` is ignored."""
+    plane count and ``thresholds`` is ignored. ``schemas``: see
+    sinks.read_parquet."""
+    from sqlite_vector_spark.sinks import read_store
+
+    text = band_scan_sql("bands", query, dim, k, band_bits, thresholds, planes, center)
+    # read_store, not read.parquet: a band store migrated to the
+    # VERSIONED layout resolves through its live manifest (r13 router
+    # contract). No partition_values filter here — the probe touches
+    # EVERY band partition by construction (one (b, bv) term per
+    # band), so the pruning lever is the bv row-group skip either way.
+    return frames_sql(text, bands=read_store(spark, dest, schemas=schemas))
+
+
+def band_scan_sql(
+    src: str,
+    query: Sequence[float],
+    dim: int,
+    k: int,
+    band_bits: int = 16,
+    thresholds: Sequence[float] | None = None,
+    planes=None,
+    center: Sequence[float] | None = None,
+) -> str:
+    """bq_band_scan's statement over the band-store relation ``src``."""
     if k < 1:
         raise ValueError("k must be >= 1")
     if planes is not None:
@@ -907,22 +925,10 @@ def bq_band_scan(
         qw = bq_query_words(query, thresholds)
     per_word = 64 // band_bits
     mask = (1 << band_bits) - 1
-    # read_store, not read.parquet: a band store migrated to the
-    # VERSIONED layout resolves through its live manifest (r13 router
-    # contract). No partition_values filter here — the probe touches
-    # EVERY band partition by construction (one (b, bv) term per
-    # band), so the pruning lever is the bv row-group skip either way.
-    from sqlite_vector_spark.sinks import read_store
-
-    stored = read_store(spark, dest)
-    cond = None
+    probes = None
     for w, i in _band_layout(dim, band_bits):
-        b = w * per_word + i
-        bv = (qw[w] >> (i * band_bits)) & mask
-        term = (F.col("b") == F.lit(b)) & (F.col("bv") == F.lit(int(bv)))
-        cond = term if cond is None else (cond | term)
-    cand = stored.where(cond).select("id", "bits").groupBy("id").agg(
-        F.first("bits").alias("bits")
-    )
-    scored = cand.select("id", hamming_col("bits", qw).alias("hamming"))
-    return scored.orderBy(F.col("hamming").asc(), F.col("id").asc()).limit(k)
+        term = f"(b = {w * per_word + i} AND bv = {(qw[w] >> (i * band_bits)) & mask})"
+        # parenthesized: the parser would balance a flat OR chain
+        probes = term if probes is None else f"({probes} OR {term})"
+    cand = f"(SELECT id, first(bits) AS bits FROM {src} WHERE {probes} GROUP BY id)"
+    return scan_sql(cand, None, hamming_sql("bits", qw), k, name="hamming")

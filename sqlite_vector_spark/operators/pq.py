@@ -55,6 +55,7 @@ from sqlite_vector_spark.functions.distance import (
     snap_zero_sql,
     sql_operand,
 )
+from sqlite_vector_spark.operators.search import readable, rerank, scan, scan_sql
 from sqlite_vector_spark.operators.topk import topk_per_key
 from sqlite_vector_spark.types import Metric, parse_metric
 
@@ -374,21 +375,25 @@ def adc_lut(query: Sequence[float], codebooks: Codebooks) -> list[list[float]]:
     ]
 
 
-def adc_distance_col(codes: str, luts: Sequence[Sequence[float]], metric: str | Metric = "L2") -> Column:
-    """Approximate distance from PQ codes: sequential left fold of
-    LUT[s][code_s] in subspace order (aggregate preserves array
+def adc_distance_sql(codes: str, luts: Sequence[Sequence[float]], metric: str | Metric = "L2") -> str:
+    """Approximate distance from PQ codes, as SQL text: sequential left
+    fold of LUT[s][code_s] in subspace order (aggregate preserves array
     order — the oracle mirrors with the same ordered fold), then
     sqrt for L2. Only L2/SQUARED_L2 decompose additively over
     subspaces; other metrics must rerank in full precision. ``codes``
-    names the code column: the expression, LUT literal included, is
-    one F.expr call."""
+    names the code column; the LUT is one array literal."""
     m = parse_metric(metric) if isinstance(metric, str) else metric
     if m not in (Metric.L2, Metric.SQUARED_L2):
         raise ValueError(f"ADC supports L2/SQUARED_L2 (additive over subspaces), got {m}")
     c = sql_operand(codes)
     lut = literal_sql([[float(v) for v in lut_s] for lut_s in luts])
     d2 = fold_sum_sql(f"zip_with({c}, {lut}, (x, y) -> element_at(y, CAST(x + 1 AS INT)))")
-    return F.expr(snap_zero_sql(f"sqrt({d2})" if m is Metric.L2 else d2))
+    return snap_zero_sql(f"sqrt({d2})" if m is Metric.L2 else d2)
+
+
+def adc_distance_col(codes: str, luts: Sequence[Sequence[float]], metric: str | Metric = "L2") -> Column:
+    """adc_distance_sql as a Column, in one F.expr call."""
+    return F.expr(adc_distance_sql(codes, luts, metric))
 
 
 def adc_distance_arrow_udf(luts: Sequence[Sequence[float]], metric: str | Metric = "L2"):
@@ -475,20 +480,21 @@ def pq_scan(
     codegen form is one LUT array literal, ``zip_with`` and
     ``aggregate`` at any M*KSUB, so a table Catalyst sizes below
     AUTO_SCAN_BYTES is scored in the JVM."""
-    from sqlite_vector_spark.sources import plan_size_bytes
-
     if k < 0:
         raise ValueError("k must be >= 0")
+    return scan(codes_df, codes_col, _adc_distance(codes_df, codes_col, query, codebooks, metric),
+                k, id_col)
+
+
+def _adc_distance(codes_df: DataFrame, codes_col: str, query, codebooks, metric) -> str | Column:
+    """pq_scan's score: the ADC fold's SQL text, or the Arrow LUT
+    gather when the backend rule picks it for this code table."""
+    from sqlite_vector_spark.sources import plan_size_bytes
+
     luts = adc_lut([float(x) for x in query], codebooks)
-    base = codes_df.where(F.col(codes_col).isNotNull())
     if _pq_backend(codebooks, plan_size_bytes(codes_df)) == "arrow-numpy":
-        dist = adc_distance_arrow_udf(luts, metric)(F.col(codes_col))
-    else:
-        dist = adc_distance_col(codes_col, luts, metric)
-    scored = base.select(F.col(id_col).cast("bigint").alias("id"), dist.alias("distance"))
-    if k == 0:
-        return scored.limit(0)
-    return scored.orderBy(F.col("distance").asc(), F.col("id").asc()).limit(k)
+        return adc_distance_arrow_udf(luts, metric)(F.col(codes_col))
+    return adc_distance_sql(codes_col, luts, metric)
 
 
 def pq_rerank_scan(
@@ -513,20 +519,10 @@ def pq_rerank_scan(
     without it every call re-encodes the corpus in-plan, which turns
     the cheap stage 1 into a full vector scan (measured 29s vs ~1s at
     1M x 768 — the stored-codes path is the whole point of PQ)."""
-    from sqlite_vector_spark.functions.distance import distance
-    from sqlite_vector_spark.operators.search import full_scan
-
     codes = codes_df if codes_df is not None else pq_encode(df, vec_col, codebooks, id_col=id_col)
-    cand = pq_scan(codes, query, codebooks, prefilter, "L2").select("id")
-    full = df.where(F.col(vec_col).isNotNull()).select(
-        F.col(id_col).cast("bigint").alias("id"), F.col(vec_col).alias("vec")
-    )
-    return (
-        full.join(F.broadcast(cand), "id", "left_semi")
-        .select("id", distance(F.col("vec"), [float(x) for x in query], metric).alias("distance"))
-        .orderBy(F.col("distance").asc(), F.col("id").asc())
-        .limit(k)
-    )
+    codes, adc = readable(codes, _adc_distance(codes, "codes", query, codebooks, "L2"))
+    cand = f"SELECT id FROM ({scan_sql('codes', 'codes', adc, prefilter)})"
+    return rerank(df, vec_col, query, k, metric, id_col, cand, codes=codes)
 
 
 def ivf_pq_scan(
@@ -1094,6 +1090,7 @@ def ivf_pq_stored_scan(
     nprobe: int = 2,
     metric: str | Metric = "L2",
     residual: bool = False,
+    schemas: dict | None = None,
 ) -> DataFrame:
     """ADC top-k over an ivf_pq_store directory: probe-cluster IN
     filter (PartitionFilters — pinned in tests/test_pq.py), LUT fold
@@ -1103,7 +1100,8 @@ def ivf_pq_stored_scan(
     computed on (query - centroid[p]) — nprobe partition-pruned
     branches unioned, then one global top-k. LUT count is
     nprobe*M*KSUB driver doubles (metadata math); the per-row work is
-    the same M-term fold either way."""
+    the same M-term fold either way. ``schemas``: see
+    sinks.read_parquet."""
     q = [float(x) for x in query]
     from sqlite_vector_spark.operators.ann import probe_clusters
     from sqlite_vector_spark.sinks import read_store
@@ -1111,7 +1109,7 @@ def ivf_pq_stored_scan(
     probes = [int(p) for p in probe_clusters(q, centroids, nprobe)]
     # both arms only ever read probe partitions — the residual arm's
     # per-probe cluster filters operate within this pruned set
-    stored = read_store(spark, dest, "cluster", probes)
+    stored = read_store(spark, dest, "cluster", probes, schemas=schemas)
     if not residual:
         return pq_scan(stored, q, codebooks, k, metric)
     return ivf_pq_residual_adc_scan(stored, q, centroids, codebooks, k, nprobe, metric)
@@ -1141,7 +1139,7 @@ def ivf_pq_residual_adc_scan(
     selecting the probe's LUT fold. The previous per-probe
     filter-and-union form re-walked an in-plan
     scan+assign+residual+encode subtree once PER PROBE (nprobe x the
-    corpus work); per-row math is the same adc_distance_col
+    corpus work); per-row math is the same adc_distance_sql
     expression either way, so results are identical. The arrow-numpy
     backend is also one pass: a cluster-aware LUT-gather kernel
     (adc_residual_distance_arrow_udf) scores mixed probed clusters in
@@ -1158,21 +1156,17 @@ def ivf_pq_residual_adc_scan(
     for p in probes:
         q_res = [qq - cc for qq, cc in zip(q, [float(x) for x in centroids[p]])]
         luts_by_probe.append((int(p), adc_lut(q_res, codebooks)))
-    pruned = codes_df.where(F.col("cluster").isin([p for p, _ in luts_by_probe]))
+    pruned = codes_df.where(F.expr(f"cluster IN ({', '.join(str(int(p)) for p in probes)})"))
     if _pq_backend(codebooks) == "arrow-numpy":
         dist = adc_residual_distance_arrow_udf(luts_by_probe, m)(
             F.col("codes"), F.col("cluster")
         )
     else:
-        dist = None
-        for p, luts in luts_by_probe:
-            cond = F.col("cluster") == p
-            expr = adc_distance_col("codes", luts, m)
-            dist = F.when(cond, expr) if dist is None else dist.when(cond, expr)
-    scored = pruned.select(F.col("id").cast("bigint").alias("id"), dist.alias("distance"))
-    if k == 0:
-        return scored.limit(0)
-    return scored.orderBy(F.col("distance").asc(), F.col("id").asc()).limit(k)
+        whens = " ".join(
+            f"WHEN cluster = {p} THEN {adc_distance_sql('codes', luts, m)}" for p, luts in luts_by_probe
+        )
+        dist = f"CASE {whens} END"
+    return scan(pruned, None, dist, k)
 
 
 def pq_memory_bytes(n_rows: int, dim: int, m: int, ksub: int, bytes_per_value: int = 4) -> dict:

@@ -9,7 +9,7 @@ Parity (SURVEY.md §2.1 rows 13/15):
   sort — a pure projection.
 
 Spark-first physical plan:
-- ``orderBy(distance, id).limit(k)`` compiles to
+- ``ORDER BY distance, id LIMIT k`` compiles to
   **TakeOrderedAndProject**: each partition keeps a local k-heap, the
   driver merges P×k candidates — the distributed generalization of the
   reference's k-slot arrays. No full sort, no shuffle of the corpus;
@@ -29,11 +29,120 @@ from __future__ import annotations
 from collections.abc import Sequence
 
 import pyspark.sql.functions as F
+from py4j.java_gateway import JavaClass
 from pyspark.sql import Column, DataFrame
 
-from sqlite_vector_spark.functions.distance import distance, sql_operand
+from sqlite_vector_spark.functions.distance import distance_expr, sql_operand
 from sqlite_vector_spark.sources import plan_size_bytes
 from sqlite_vector_spark.types import Metric
+
+_LOGICAL = "org.apache.spark.sql.catalyst.plans.logical."
+#: the column an Arrow UDF distance is read from inside a statement
+_UDF_COL = "_sv_distance"
+
+
+def frames_sql(text: str, **frames: DataFrame) -> DataFrame:
+    """``spark.sql(text)`` in which each keyword names its DataFrame:
+    one parse and one analysis, a handful of py4j calls. Each frame
+    enters as a CTE over its analyzed plan, the relation ``WITH name
+    AS (...)`` would define, and Catalyst inlines it, so the plan is
+    the one DataFrame calls would build and a cached frame is still
+    served from its cache. Unlike ``spark.sql(text, name=df)`` no temp
+    view is registered or dropped: dropping a temp view uncaches every
+    cached plan equal to its own, a preloaded replica included."""
+    spark = next(iter(frames.values())).sparkSession
+    gw = spark._jvm._gateway_client
+    none = JavaClass("scala.Option", gw).empty()
+    alias, ident = JavaClass(_LOGICAL + "SubqueryAlias", gw), JavaClass(
+        "org.apache.spark.sql.catalyst.AliasIdentifier", gw
+    )
+    ctes = [
+        JavaClass("scala.Tuple3", gw)(name, alias(ident(name), df._jdf.logicalPlan()), none)
+        for name, df in frames.items()
+    ]
+    jss = spark._jsparkSession
+    plan = JavaClass(_LOGICAL + "UnresolvedWith", gw)(
+        jss.sessionState().sqlParser().parsePlan(text),
+        JavaClass("org.apache.spark.api.python.PythonUtils", gw).toSeq(ctes),
+        False,
+    )
+    return DataFrame(JavaClass("org.apache.spark.sql.classic.Dataset", gw).ofRows(jss, plan), spark)
+
+
+def scan_sql(
+    src: str,
+    column: str | None,
+    dist: str,
+    k: int | None,
+    id_col: str = "id",
+    name: str = "distance",
+) -> str:
+    """SQL text of the one single-query scan shape over the relation
+    ``src``: the rows whose ``column`` is not NULL (every row when
+    None) as (id BIGINT, ``name`` = ``dist``), ordered by (``name``,
+    id) and cut at ``k`` (None: every row, in no order). ``ORDER BY
+    ... LIMIT`` plans as TakeOrderedAndProject."""
+    text = f"SELECT CAST({sql_operand(id_col)} AS BIGINT) AS id, {dist} AS {name} FROM {src}"
+    if column is not None:
+        text += f" WHERE {sql_operand(column)} IS NOT NULL"
+    return text if k is None else f"{text} ORDER BY {name}, id LIMIT {int(k)}"
+
+
+def readable(df: DataFrame, dist: str | Column) -> tuple[DataFrame, str]:
+    """``(df, text)`` such that ``text`` reads ``dist`` in a statement
+    over ``df``. SQL text passes through; an Arrow UDF Column has no
+    SQL text, so it is added to ``df`` as a column and read by name
+    (Catalyst pushes the scan's NOT NULL filter below it)."""
+    if isinstance(dist, Column):
+        return df.withColumn(_UDF_COL, dist), sql_operand(_UDF_COL)
+    return df, dist
+
+
+def scan(
+    df: DataFrame,
+    column: str | None,
+    dist: str | Column,
+    k: int | None,
+    id_col: str = "id",
+    name: str = "distance",
+) -> DataFrame:
+    """scan_sql over ``df`` as one statement. ``dist`` is the SQL text
+    of the score, or the Arrow UDF Column the size gate chose."""
+    df, dist = readable(df, dist)
+    return frames_sql(scan_sql("src", column, dist, k, id_col, name), src=df)
+
+
+def rerank(
+    df: DataFrame,
+    column: str,
+    query: Sequence[float],
+    k: int,
+    metric: str | Metric,
+    id_col: str,
+    candidates: str,
+    size_bytes: int | None = None,
+    **frames: DataFrame,
+) -> DataFrame:
+    """The second stage of a two-stage search: exact top-k over the
+    rows of ``df`` whose id the query ``candidates`` (over ``frames``)
+    returns, joined as a broadcast semi-join before any row is scored.
+    One statement; an Arrow distance (``size_bytes`` sizes the
+    backend, see distance_expr) scores the joined rows in a second."""
+    dist = distance_expr("vec", [float(x) for x in query], metric, size_bytes=size_bytes)
+    rows = scan_sql("src", column, sql_operand(column), None, id_col, name="vec")
+    joined = f"SELECT /*+ BROADCAST(c) */ * FROM ({rows}) LEFT SEMI JOIN ({candidates}) c USING (id)"
+    if isinstance(dist, Column):
+        return scan(frames_sql(joined, src=df, **frames), None, dist, k)
+    return frames_sql(scan_sql(f"({joined})", None, dist, k), src=df, **frames)
+
+
+def _scan_distance(df: DataFrame, column: str, query, metric) -> str | Column:
+    """A literal query on an input Catalyst sizes below
+    version.AUTO_SCAN_BYTES is scored by the codegen fold at any dim:
+    a single-query scan that small finishes sooner in the JVM than an
+    Arrow UDF job's Python round trip (measurements in version.py)."""
+    size = None if isinstance(query, Column) else plan_size_bytes(df)
+    return distance_expr(column, query, metric, size_bytes=size)
 
 
 def full_scan(
@@ -52,10 +161,7 @@ def full_scan(
     """
     if k < 0:
         raise ValueError("k must be >= 0")
-    scored = full_scan_stream(df, column, query, metric, id_col=id_col)
-    if k == 0:
-        return scored.limit(0)
-    return scored.orderBy(F.col("distance").asc(), F.col("id").asc()).limit(k)
+    return scan(df, column, _scan_distance(df, column, query, metric), k, id_col)
 
 
 def full_scan_stream(
@@ -66,20 +172,8 @@ def full_scan_stream(
     id_col: str = "id",
 ) -> DataFrame:
     """Pipelined exact scoring of every row (no k, no sort) ->
-    DataFrame(id, distance). A narrow projection: zero shuffles.
-
-    A literal query on an input Catalyst sizes below
-    version.AUTO_SCAN_BYTES is scored by the codegen fold at any dim:
-    a single-query scan that small finishes sooner in the JVM than an
-    Arrow UDF job's Python round trip (measurements in version.py)."""
-    size = None if isinstance(query, Column) else plan_size_bytes(df)
-    return (
-        df.where(F.col(column).isNotNull())
-        .select(
-            F.col(id_col).cast("bigint").alias("id"),
-            distance(column, query, metric, size_bytes=size).alias("distance"),
-        )
-    )
+    DataFrame(id, distance). A narrow projection: zero shuffles."""
+    return scan(df, column, _scan_distance(df, column, query, metric), None, id_col)
 
 
 def full_scan_normalized_cosine(
@@ -110,7 +204,7 @@ def full_scan_normalized_cosine(
     declaration — and is equality-tested, not oracle-hash-gated."""
     import math
 
-    from sqlite_vector_spark.functions.distance import snap_zero
+    from sqlite_vector_spark.functions.distance import snap_zero, snap_zero_sql
 
     if k < 0:
         raise ValueError("k must be >= 0")
@@ -118,19 +212,12 @@ def full_scan_normalized_cosine(
     norm = math.sqrt(sum(x * x for x in q))
     if norm == 0.0:
         return full_scan(df, column, q, k, Metric.COSINE, id_col=id_col)
-    qn = [x / norm for x in q]
-    scored = df.where(F.col(column).isNotNull()).select(
-        F.col(id_col).cast("bigint").alias("id"),
-        # distance(DOT) is the NEGATED dot (smaller = closer) and
-        # keeps full_scan's backend dispatch (codegen fold vs Arrow
-        # matmul); 1 + it == 1 − a·q̂ == cosine for unit rows
-        snap_zero(
-            F.lit(1.0) + distance(column, qn, Metric.DOT, size_bytes=plan_size_bytes(df))
-        ).alias("distance"),
-    )
-    if k == 0:
-        return scored.limit(0)
-    return scored.orderBy(F.col("distance").asc(), F.col("id").asc()).limit(k)
+    # the DOT distance is the NEGATED dot (smaller = closer) and keeps
+    # full_scan's backend dispatch (codegen fold vs Arrow matmul);
+    # 1 + it == 1 − a·q̂ == cosine for unit rows
+    d = _scan_distance(df, column, [x / norm for x in q], Metric.DOT)
+    d = snap_zero(F.lit(1.0) + d) if isinstance(d, Column) else snap_zero_sql(f"1.0D + {d}")
+    return scan(df, column, d, k, id_col)
 
 
 def matryoshka_scan(
@@ -170,23 +257,9 @@ def matryoshka_scan(
     # does, so that a coarse_m covering the corpus gives full_scan's values
     size = plan_size_bytes(df)
     prefix = F.expr(f"slice({sql_operand(column)}, 1, {coarse_dim})")
-    coarse = (
-        df.where(F.col(column).isNotNull())
-        .select(
-            F.col(id_col).cast("bigint").alias("id"),
-            distance(prefix, list(query)[:coarse_dim], metric, size_bytes=size).alias("cd"),
-        )
-        .orderBy(F.col("cd").asc(), F.col("id").asc())
-        .limit(coarse_m)
-        .select("id")
+    coarse_src, cd = readable(
+        df, distance_expr(prefix, [float(x) for x in query][:coarse_dim], metric, size_bytes=size)
     )
-    return (
-        df.where(F.col(column).isNotNull())
-        .join(F.broadcast(coarse), F.col(id_col).cast("bigint") == coarse["id"], "left_semi")
-        .select(
-            F.col(id_col).cast("bigint").alias("id"),
-            distance(column, query, metric, size_bytes=size).alias("distance"),
-        )
-        .orderBy(F.col("distance").asc(), F.col("id").asc())
-        .limit(k)
-    )
+    coarse = scan_sql("coarse", column, cd, coarse_m, id_col, name="cd")
+    return rerank(df, column, query, k, metric, id_col, f"SELECT id FROM ({coarse})", size,
+                  coarse=coarse_src)

@@ -147,41 +147,35 @@ def knn(
         # (partition pruning on the query's bands — the 1-bit tier
         # without a full code scan), exact rerank to TRUE distances
         # like prefer="bq"; same opt-in rationale (prefilter width
-        # governs recall)
-        import pyspark.sql.functions as F
+        # governs recall). Both stages are one statement.
+        from sqlite_vector_spark.operators.bq import band_scan_sql, hamming_rerank
+        from sqlite_vector_spark.sinks import read_store
 
-        from sqlite_vector_spark.functions.distance import distance
-        from sqlite_vector_spark.operators.bq import bq_band_scan
-
+        width = prefilter or 10 * k
         # projected stores (set_mih_index planes=) probe in the p-bit
         # projected layout with the registered planes; axis-aligned
         # stores probe threshold sign bits over the column dimension
         if ctx.mih_planes is not None:
-            cand = bq_band_scan(
-                spark, ctx.mih_path, query, len(ctx.mih_planes), prefilter or 10 * k,
-                band_bits=ctx.mih_band_bits or 16,
+            cand = band_scan_sql(
+                "bands", query, len(ctx.mih_planes), width, band_bits=ctx.mih_band_bits or 16,
                 planes=ctx.mih_planes, center=ctx.mih_center,
-            ).select("id")
+            )
         else:
-            cand = bq_band_scan(
-                spark, ctx.mih_path, query, int(ctx.dimension), prefilter or 10 * k,
-                band_bits=ctx.mih_band_bits or 16, thresholds=ctx.bq_thresholds,
-            ).select("id")
-        base = spark.table(table).where(F.col(column).isNotNull()).select(
-            F.col(id_col).cast("bigint").alias("id"), F.col(column).alias("vec")
-        )
-        return (
-            base.join(F.broadcast(cand), "id", "left_semi")
-            .select("id", distance(F.col("vec"), [float(x) for x in query], m).alias("distance"))
-            .orderBy(F.col("distance").asc(), F.col("id").asc())
-            .limit(k)
+            cand = band_scan_sql(
+                "bands", query, int(ctx.dimension), width, band_bits=ctx.mih_band_bits or 16,
+                thresholds=ctx.bq_thresholds,
+            )
+        bands = read_store(spark, ctx.mih_path, schemas=catalog.store_schemas)
+        return hamming_rerank(
+            spark.table(table), column, query, k, width, m, id_col, f"SELECT id FROM ({cand})",
+            bands=bands,
         )
     if prefer == "ivf_pq":
         from sqlite_vector_spark.operators.pq import ivf_pq_stored_scan
 
         return ivf_pq_stored_scan(
             spark, ctx.pq_path, _pq_query(), ctx.ivf_centroids, ctx.pq_codebooks, k,
-            nprobe=nprobe, metric=m, residual=ctx.pq_residual,
+            nprobe=nprobe, metric=m, residual=ctx.pq_residual, schemas=catalog.store_schemas,
         )
     if prefer != "exact" and has_replica:
         # read_store, not read.parquet: a replica migrated to the
@@ -196,11 +190,16 @@ def knn(
         codes = read_store(spark, ctx.quantized_path, schemas=catalog.store_schemas)
         if where is not None:
             import pyspark.sql.functions as F
-            from pyspark.errors import AnalysisException
+            from pyspark.errors import AnalysisException, ParseException
 
+            # the predicate is parsed alone, as one expression: text
+            # that is not one (a trailing clause, unbalanced
+            # parentheses) raises ParseException
             try:
                 codes = codes.where(F.expr(where))
                 codes.schema  # force analysis so a missing column raises HERE
+            except ParseException:
+                raise
             except AnalysisException as exc:
                 raise ValueError(
                     f"the quantized replica for {table}.{column} cannot answer "
@@ -221,7 +220,7 @@ def knn(
     if where is not None:
         import pyspark.sql.functions as F
 
-        base = base.where(F.expr(where))  # pushes into the base scan
+        base = base.where(F.expr(where))  # one expression; pushes into the base scan
     mm = m if isinstance(m, Metric) else parse_metric(m)
     if mm is Metric.COSINE and ctx.normalized:
         from sqlite_vector_spark.operators.search import full_scan_normalized_cosine

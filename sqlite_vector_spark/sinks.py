@@ -23,7 +23,10 @@ module adds the Spark-native sink layer a pipeline needs:
 from __future__ import annotations
 
 import pyspark.sql.functions as F
+from py4j.java_gateway import JavaClass
 from pyspark.sql import DataFrame
+
+from sqlite_vector_spark.functions.distance import sql_operand
 
 
 def write_partitioned(df: DataFrame, path: str, partition_col: str,
@@ -1037,8 +1040,8 @@ def read_store(spark, path: str, column: str | None = None, values=None,
     generations never count as residuals.
 
     ``column``/``values`` keep only rows whose ``column`` is in
-    ``values`` — the probe readers' pruning (IVF clusters, LSH
-    buckets): a flat store partitioned by ``column`` prunes at
+    ``values``, integers — the probe readers' pruning (IVF clusters,
+    LSH buckets): a flat store partitioned by ``column`` prunes at
     planning time (PartitionFilters), a versioned one through its
     manifest (versioned.read_versioned_pruned).
 
@@ -1052,7 +1055,9 @@ def read_store(spark, path: str, column: str | None = None, values=None,
             return read_versioned(spark, path, schemas=schemas)
         return read_versioned_pruned(spark, path, column, values, schemas=schemas)
     df = read_parquet(spark, [path], schemas)
-    return df if column is None else df.where(F.col(column).isin(list(values)))
+    if column is None:
+        return df
+    return df.where(F.expr(f"{sql_operand(column)} IN ({', '.join(str(int(v)) for v in values)})"))
 
 
 def read_parquet(spark, paths: list[str], schemas: dict | None = None,
@@ -1089,8 +1094,8 @@ def read_parquet(spark, paths: list[str], schemas: dict | None = None,
 
 def _file_set(df: DataFrame):
     """The JVM set of data files a parquet read lists."""
-    jvm = df.sparkSession._jvm
-    return jvm.scala.collection.mutable.ArraySeq.make(df._jdf.inputFiles()).toSet()
+    seq = JavaClass("scala.collection.mutable.ArraySeq", df.sparkSession._jvm._gateway_client)
+    return seq.make(df._jdf.inputFiles()).toSet()
 
 
 def _remember_schema(spark, path: str, schema, schemas: dict | None) -> None:

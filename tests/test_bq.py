@@ -50,6 +50,41 @@ def test_encode_arrow_equals_codegen(emb):
     assert a == b
 
 
+def _column_api_encode(v, dim, thresholds):
+    """bq_encode_col's tree built from per-lane Column calls (its
+    earlier form): the reference for its one-string build."""
+    words = []
+    for w in range((dim + 63) // 64):
+        acc = None
+        for i in range(min(64, dim - w * 64)):
+            bit = F.when(
+                F.element_at(v, w * 64 + i + 1).cast("double") > F.lit(thresholds[w * 64 + i]),
+                F.shiftleft(F.lit(1).cast("long"), i),
+            ).otherwise(F.lit(0).cast("long"))
+            acc = bit if acc is None else acc + bit
+        words.append(acc)
+    return F.array(*words)
+
+
+@pytest.mark.parametrize("dim", [64, 100])
+def test_encode_one_string_equals_column_api(spark, dim):
+    """bq_encode_col, parsed from one string, gives the Column-API
+    tree's codes bit for bit and the same optimized plan, with
+    thresholds of every sign, a NaN lane value and a multi-word
+    code."""
+    from sqlite_vector_spark.plans import normalized_plan
+
+    rng = np.random.default_rng(dim)
+    t = [float(x) for x in rng.normal(0.0, 0.5, dim)]
+    rows = [(i, [float(x) for x in rng.normal(size=dim)]) for i in range(30)]
+    rows.append((30, [float("nan")] + [0.0] * (dim - 1)))
+    df = spark.createDataFrame(rows, "id long, vec array<float>")
+    one = df.select("id", bq_encode_col("vec", dim, t).alias("bits"))
+    ref = df.select("id", _column_api_encode(F.col("vec"), dim, t).alias("bits"))
+    assert normalized_plan(one) == normalized_plan(ref)
+    assert sorted(one.collect()) == sorted(ref.collect())
+
+
 def test_multiword_packing(spark):
     """dim > 64 packs into multiple words; Hamming sums across them."""
     dim = 150

@@ -1,12 +1,14 @@
 """Single-query kNN on small inputs stays in the JVM.
 
-router.knn on the five store tiers (exact, quantized, ivf, bq, pq) at
-dim >= AUTO_DIM: a sized input below version.AUTO_SCAN_BYTES is scored
-by the codegen folds (no Arrow UDF), the plan is built without a Spark
-job once the catalog has read each store's schema, and queries that
-differ only in their vector reuse the compiled classes. Inputs above
-the gate keep the Arrow kernel, and the schema reuse never hides a
-rebuilt or appended store.
+router.knn on the store tiers (exact, quantized, ivf, bq, pq, ivf_pq,
+mih) at dim >= AUTO_DIM: a sized input below version.AUTO_SCAN_BYTES
+is scored by the codegen folds (no Arrow UDF), the plan is built as
+one SQL statement in a bounded number of py4j calls and without a
+Spark job once the catalog has read each store's schema, and queries
+that differ only in their vector reuse the compiled classes. Inputs
+above the gate keep the Arrow kernel, the schema reuse never hides a
+rebuilt or appended store, a ``where=`` predicate is parsed as one
+expression, and a preloaded replica is still read from its cache.
 """
 
 from __future__ import annotations
@@ -15,19 +17,36 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
+from py4j import clientserver, protocol
+from pyspark.errors import ParseException
 
 from sqlite_vector_spark import router
 from sqlite_vector_spark.catalog import VectorCatalog
 from sqlite_vector_spark.operators.ann import ivf_store, ivf_store_append
-from sqlite_vector_spark.operators.bq import bq_rerank_scan, bq_store
-from sqlite_vector_spark.operators.pq import pq_fit, pq_store
-from sqlite_vector_spark.operators.quantize import vector_quantize, vector_quantize_update
+from sqlite_vector_spark.operators.bq import bq_band_store, bq_encode, bq_rerank_scan, bq_store
+from sqlite_vector_spark.operators.pq import ivf_pq_store, pq_fit
+from sqlite_vector_spark.operators.quantize import (
+    vector_quantize,
+    vector_quantize_preload,
+    vector_quantize_update,
+)
 from sqlite_vector_spark.operators.search import full_scan
+from sqlite_vector_spark.sinks import read_store
 from sqlite_vector_spark.sources import plan_size_bytes
 from sqlite_vector_spark.version import AUTO_DIM, AUTO_SCAN_BYTES
 
 N, DIM, C = 600, 64, 8
-TIERS = ("exact", "quantized", "ivf", "bq", "pq")
+TIERS = ("exact", "quantized", "ivf", "bq", "pq", "ivf_pq", "mih")
+#: the mih tier's band probes are literal (b, bv) terms, which Parquet
+#: needs as literals to skip row groups and which codegen inlines, so
+#: each new query compiles its scan stage
+COMPILE_FREE = tuple(t for t in TIERS if t != "mih")
+#: py4j commands sent to build a warm query, per tier (releases of
+#: collected Python proxies not counted): one SQL statement, the store
+#: read with its schema check and the size gate. Built from Column
+#: calls, the same plans took 143 to 667 (README, "One statement per
+#: single-query kNN").
+ROUND_TRIPS = {"exact": 21, "quantized": 42, "ivf": 46, "bq": 44, "pq": 42, "ivf_pq": 46, "mih": 44}
 
 
 def _write_vectors(path, ids, vecs, **cols):
@@ -37,8 +56,10 @@ def _write_vectors(path, ids, vecs, **cols):
 
 @pytest.fixture(scope="module")
 def tiers(spark, tmp_path_factory):
-    """A 600 x 64 corpus registered as table sq_corpus with all five
-    tiers built; returns (catalog, root, vectors, centroids)."""
+    """A 600 x 64 corpus registered as table sq_corpus with every tier
+    built; returns (catalog, root, vectors, centroids). The PQ code
+    table is an ivf_pq_store, so it serves both the flat ADC scan
+    (prefer="pq" reads every cluster) and the probed one (ivf_pq)."""
     root = str(tmp_path_factory.mktemp("single_query"))
     rng = np.random.default_rng(7)
     centers = rng.normal(0.0, 1.0, (C, DIM))
@@ -53,8 +74,10 @@ def tiers(spark, tmp_path_factory):
     cat.set_ivf_index("sq_corpus", "vec", path=f"{root}/ivf", centroids=centers.tolist())
     bq_store(df, "vec", DIM, f"{root}/bq")
     cat.set_bq_index("sq_corpus", "vec", path=f"{root}/bq")
+    bq_band_store(bq_encode(df, "vec", DIM), DIM, f"{root}/mih")
+    cat.set_mih_index("sq_corpus", "vec", path=f"{root}/mih")
     books = pq_fit(df, "vec", 8, 16, DIM, iters=2)
-    pq_store(df, "vec", books, f"{root}/pq")
+    ivf_pq_store(df, "vec", centers.tolist(), books, f"{root}/pq")
     cat.set_pq_index("sq_corpus", "vec", path=f"{root}/pq", codebooks=books)
     return cat, root, vecs, centers
 
@@ -96,6 +119,27 @@ def test_small_tier_builds_without_jobs_or_arrow(spark, tiers, tier):
 
 
 @pytest.mark.parametrize("tier", TIERS)
+def test_build_round_trip_budget(spark, tiers, tier, monkeypatch):
+    """Building a warm query sends at most ROUND_TRIPS[tier] py4j
+    commands: the plan is one parsed statement, not one command per
+    Column call (a layer count that host load cannot move)."""
+    cat, _, vecs, _ = tiers
+    router.knn(spark, cat, "sq_corpus", "vec", _query(vecs, 0), 10, prefer=tier)
+    send, sent = clientserver.ClientServerConnection.send_command, []
+    release = protocol.MEMORY_COMMAND_NAME + protocol.MEMORY_DEL_SUBCOMMAND_NAME
+
+    def counting(conn, command, *args, **kwargs):
+        if not command.startswith(release):
+            sent.append(command)
+        return send(conn, command, *args, **kwargs)
+
+    monkeypatch.setattr(clientserver.ClientServerConnection, "send_command", counting)
+    router.knn(spark, cat, "sq_corpus", "vec", _query(vecs, 1), 10, prefer=tier)
+    monkeypatch.undo()
+    assert len(sent) <= ROUND_TRIPS[tier]
+
+
+@pytest.mark.parametrize("tier", COMPILE_FREE)
 def test_steady_state_queries_compile_no_classes(spark, tiers, tier):
     """Queries that differ only in their vector generate the same code:
     query values reach it as array literals by reference, never inlined,
@@ -172,3 +216,35 @@ def test_appended_rows_are_seen(spark, tiers, tmp_path):
         ids = [r["id"] for r in
                router.knn(spark, cat2, "sq_corpus", "vec", new_vec, 5, prefer=tier).collect()]
         assert N + 1 in ids, tier
+
+
+@pytest.mark.parametrize("where", ["label = 1 ORDER BY id", "label = 1) OR (1 = 1"])
+def test_where_is_parsed_as_one_expression(spark, tiers, tmp_path, where):
+    """A predicate that is not one SQL expression raises on both tiers
+    that take ``where=``; it never becomes part of the statement."""
+    cat, _, vecs, _ = tiers
+    src = spark.table("sq_corpus")
+    cat2 = VectorCatalog(str(tmp_path / "catalog"))
+    cat2.vector_init(src, "sq_corpus", "vec", f"type=FLOAT32,dimension={DIM},distance=L2")
+    vector_quantize(src, "vec", str(tmp_path / "replica"), catalog=cat2, table="sq_corpus",
+                    include_cols=["label"])
+    q = _query(vecs, 4)
+    for c, tier in ((cat, "exact"), (cat2, "quantized")):
+        with pytest.raises(ParseException):
+            router.knn(spark, c, "sq_corpus", "vec", q, 10, prefer=tier, where=where)
+        rows = router.knn(spark, c, "sq_corpus", "vec", q, 10, prefer=tier, where="label = 1").collect()
+        assert len(rows) == 10 and all(r["id"] % 3 == 1 for r in rows), tier
+
+
+def test_preloaded_replica_is_served_from_cache(spark, tiers):
+    """A preloaded replica answers the quantized tier from memory, and
+    answering does not uncache it: the next query reads it too."""
+    cat, root, vecs, _ = tiers
+    cached = vector_quantize_preload(read_store(spark, f"{root}/quantized"))
+    try:
+        for i in (5, 6):
+            res = router.knn(spark, cat, "sq_corpus", "vec", _query(vecs, i), 10, prefer="quantized")
+            assert "InMemoryTableScan" in _plan(res)
+            assert len(res.collect()) == 10
+    finally:
+        cached.unpersist(blocking=True)
