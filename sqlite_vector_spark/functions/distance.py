@@ -139,6 +139,14 @@ def sql_operand(x) -> str:
     )
 
 
+def in_sql(x: str, values: Sequence[int]) -> str:
+    """SQL text of ``x IN (values)`` over integers, ``x`` a column name
+    read as sql_operand reads it. No values is ``false``: ``IN ()``
+    does not parse, and an empty set keeps no row."""
+    values = [str(int(v)) for v in values]
+    return f"{sql_operand(x)} IN ({', '.join(values)})" if values else "false"
+
+
 def lambda_var(name: str, *outer: str) -> str:
     """``name`` for a lambda variable whose body also holds the SQL
     texts ``outer``, with ``_`` prepended until no identifier in them

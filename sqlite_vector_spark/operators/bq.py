@@ -148,7 +148,7 @@ def bq_query_words(query: Sequence[float], thresholds: Sequence[float] | None = 
 
 def hamming_sql(bits: str, query_words: Sequence[int]) -> str:
     """SQL text of the BIGINT Hamming distance between the code column
-    ``bits`` and the query words (hamming_col's tree)."""
+    ``bits`` and the query words: hamming_col's tree in one string."""
     q = literal_sql([int(w) for w in query_words])
     terms = f"zip_with({sql_operand(bits)}, {q}, (x, y) -> CAST(bit_count(x ^ y) AS BIGINT))"
     return f"aggregate({terms}, CAST(0 AS BIGINT), (x, y) -> x + y)"
@@ -160,10 +160,8 @@ def hamming_col(bits: str | Column, query_words: Sequence[int]) -> Column:
     query words ride in as ONE array literal zipped with the code
     words: a per-word ``long`` literal would be inlined into the
     generated code, so every new query would compile a new class."""
-    if isinstance(bits, str):  # one F.expr call, the same tree as below
-        return F.expr(hamming_sql(bits, query_words))
     q = [int(w) for w in query_words]
-    terms = F.zip_with(bits, array_literal(q), lambda x, y: F.bit_count(x.bitwiseXOR(y)).cast("long"))
+    terms = F.zip_with(F.col(bits) if isinstance(bits, str) else bits, array_literal(q), lambda x, y: F.bit_count(x.bitwiseXOR(y)).cast("long"))
     return F.aggregate(terms, F.lit(0).cast("long"), lambda acc, t: acc + t)
 
 

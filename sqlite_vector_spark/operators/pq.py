@@ -51,6 +51,7 @@ from sqlite_vector_spark.functions.distance import (
     batch_matrix,
     distance_tree_sql,
     fold_sum_sql,
+    in_sql,
     literal_sql,
     snap_zero_sql,
     sql_operand,
@@ -389,11 +390,6 @@ def adc_distance_sql(codes: str, luts: Sequence[Sequence[float]], metric: str | 
     lut = literal_sql([[float(v) for v in lut_s] for lut_s in luts])
     d2 = fold_sum_sql(f"zip_with({c}, {lut}, (x, y) -> element_at(y, CAST(x + 1 AS INT)))")
     return snap_zero_sql(f"sqrt({d2})" if m is Metric.L2 else d2)
-
-
-def adc_distance_col(codes: str, luts: Sequence[Sequence[float]], metric: str | Metric = "L2") -> Column:
-    """adc_distance_sql as a Column, in one F.expr call."""
-    return F.expr(adc_distance_sql(codes, luts, metric))
 
 
 def adc_distance_arrow_udf(luts: Sequence[Sequence[float]], metric: str | Metric = "L2"):
@@ -1156,8 +1152,10 @@ def ivf_pq_residual_adc_scan(
     for p in probes:
         q_res = [qq - cc for qq, cc in zip(q, [float(x) for x in centroids[p]])]
         luts_by_probe.append((int(p), adc_lut(q_res, codebooks)))
-    pruned = codes_df.where(F.expr(f"cluster IN ({', '.join(str(int(p)) for p in probes)})"))
-    if _pq_backend(codebooks) == "arrow-numpy":
+    pruned = codes_df.where(F.expr(in_sql("cluster", probes)))
+    if not luts_by_probe:  # nprobe=0 probes nothing: no row to score
+        dist = "CAST(NULL AS DOUBLE)"
+    elif _pq_backend(codebooks) == "arrow-numpy":
         dist = adc_residual_distance_arrow_udf(luts_by_probe, m)(
             F.col("codes"), F.col("cluster")
         )

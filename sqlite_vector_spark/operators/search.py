@@ -49,7 +49,18 @@ def frames_sql(text: str, **frames: DataFrame) -> DataFrame:
     the one DataFrame calls would build and a cached frame is still
     served from its cache. Unlike ``spark.sql(text, name=df)`` no temp
     view is registered or dropped: dropping a temp view uncaches every
-    cached plan equal to its own, a preloaded replica included."""
+    cached plan equal to its own, a preloaded replica included.
+
+    Written against Spark 4.1 (checked on 4.1.2). It builds Catalyst
+    internals over py4j, signatures that are not public API and have
+    changed between minor versions; check them on any Spark upgrade:
+    ``UnresolvedWith(child: LogicalPlan, cteRelations: Seq[(String,
+    SubqueryAlias, Option[Int])], allowRecursion: Boolean)``,
+    ``SubqueryAlias(AliasIdentifier, LogicalPlan)``,
+    ``AliasIdentifier(String)`` and
+    ``org.apache.spark.sql.classic.Dataset.ofRows(SparkSession,
+    LogicalPlan)``. Every router.knn tier runs through here, so any
+    tier test exercises them."""
     spark = next(iter(frames.values())).sparkSession
     gw = spark._jvm._gateway_client
     none = JavaClass("scala.Option", gw).empty()

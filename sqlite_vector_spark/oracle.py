@@ -1558,7 +1558,7 @@ def _pq_lut_cte() -> str:
 def _pq_adc_dist() -> str:
     """ADC distance: sequential fold of lf[s*KSUB + cl[s+1] + 1] in
     subspace order (mirrors F.aggregate over zip_with in
-    pq.adc_distance_col), then sqrt + snap."""
+    pq.adc_distance_sql), then sqrt + snap."""
     terms = f"list_transform(range(0, {PQ_M}), s -> lf[s*{PQ_KSUB} + cl[s+1] + 1])"
     return snap(f"sqrt({_fold(terms)})")
 

@@ -26,7 +26,7 @@ import pyspark.sql.functions as F
 from py4j.java_gateway import JavaClass
 from pyspark.sql import DataFrame
 
-from sqlite_vector_spark.functions.distance import sql_operand
+from sqlite_vector_spark.functions.distance import in_sql
 
 
 def write_partitioned(df: DataFrame, path: str, partition_col: str,
@@ -1057,7 +1057,7 @@ def read_store(spark, path: str, column: str | None = None, values=None,
     df = read_parquet(spark, [path], schemas)
     if column is None:
         return df
-    return df.where(F.expr(f"{sql_operand(column)} IN ({', '.join(str(int(v)) for v in values)})"))
+    return df.where(F.expr(in_sql(column, values)))
 
 
 def read_parquet(spark, paths: list[str], schemas: dict | None = None,

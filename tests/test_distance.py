@@ -230,7 +230,7 @@ def test_one_call_scan_plans_equal_column_api_plans(spark, emb):
     the BQ Hamming fold. full_scan and pq_scan are checked whole, under
     set_backend("codegen")."""
     from sqlite_vector_spark.operators import pq as pq_mod
-    from sqlite_vector_spark.operators.bq import bq_encode, hamming_col
+    from sqlite_vector_spark.operators.bq import bq_encode, hamming_col, hamming_sql
     from sqlite_vector_spark.operators.dedup import _pair_sides
     from sqlite_vector_spark.operators.search import full_scan
     from sqlite_vector_spark.sql import distance_sql
@@ -288,7 +288,7 @@ def test_one_call_scan_plans_equal_column_api_plans(spark, emb):
 
     bits = bq_encode(emb, "embedding", 64, id_col="vec_id")
     words = [-(1 << 63), 12345]
-    assert normalized_plan(bits.select(hamming_col("bits", words).alias("h"))) == \
+    assert normalized_plan(bits.select(F.expr(hamming_sql("bits", words)).alias("h"))) == \
         normalized_plan(bits.select(hamming_col(F.col("bits"), words).alias("h")))
 
 

@@ -14,7 +14,7 @@ import pytest
 
 from sqlite_vector_spark.operators.pq import (
     adc_distance_arrow_udf,
-    adc_distance_col,
+    adc_distance_sql,
     adc_lut,
     ivf_pq_scan,
     pq_codebooks_first,
@@ -105,7 +105,7 @@ def test_adc_arrow_udf_matches_codegen(spark, emb, books):
     q = [math.cos(i * 0.2) for i in range(DIM)]
     luts = adc_lut(q, books)
     codes_df = pq_encode(emb, "embedding", books, id_col="vec_id")
-    a = codes_df.select("id", adc_distance_col("codes", luts, "L2").alias("d")).collect()
+    a = codes_df.select("id", F.expr(adc_distance_sql("codes", luts, "L2")).alias("d")).collect()
     b = codes_df.select("id", adc_distance_arrow_udf(luts, "L2")(F.col("codes")).alias("d")).collect()
     da = {r.id: r.d for r in a}
     db = {r.id: r.d for r in b}
@@ -117,7 +117,7 @@ def test_adc_arrow_udf_matches_codegen(spark, emb, books):
 def test_adc_rejects_nonadditive_metric(books):
     q = [0.0] * DIM
     with pytest.raises(ValueError, match="additive"):
-        adc_distance_col("codes", adc_lut(q, books), "COSINE")
+        adc_distance_sql("codes", adc_lut(q, books), "COSINE")
 
 
 def test_pq_fit_matches_numpy_lloyd(spark):
@@ -810,7 +810,7 @@ def test_residual_adc_scan_single_pass_both_backends(spark, emb):
                 if backend == "arrow-numpy":
                     dist = adc_distance_arrow_udf(luts, "L2")(F.col("codes"))
                 else:
-                    dist = adc_distance_col("codes", luts, "L2")
+                    dist = F.expr(adc_distance_sql("codes", luts, "L2"))
                 branches.append(
                     table.where(F.col("cluster") == int(p)).select(
                         F.col("id").cast("bigint").alias("id"), dist.alias("distance")

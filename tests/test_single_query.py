@@ -24,7 +24,7 @@ from sqlite_vector_spark import router
 from sqlite_vector_spark.catalog import VectorCatalog
 from sqlite_vector_spark.operators.ann import ivf_store, ivf_store_append
 from sqlite_vector_spark.operators.bq import bq_band_store, bq_encode, bq_rerank_scan, bq_store
-from sqlite_vector_spark.operators.pq import ivf_pq_store, pq_fit
+from sqlite_vector_spark.operators.pq import ivf_pq_store, ivf_pq_stored_scan, pq_fit, pq_store
 from sqlite_vector_spark.operators.quantize import (
     vector_quantize,
     vector_quantize_preload,
@@ -57,9 +57,9 @@ def _write_vectors(path, ids, vecs, **cols):
 @pytest.fixture(scope="module")
 def tiers(spark, tmp_path_factory):
     """A 600 x 64 corpus registered as table sq_corpus with every tier
-    built; returns (catalog, root, vectors, centroids). The PQ code
-    table is an ivf_pq_store, so it serves both the flat ADC scan
-    (prefer="pq" reads every cluster) and the probed one (ivf_pq)."""
+    but ivf_pq built; returns (catalog, root, vectors, centroids). The
+    PQ code table is a flat pq_store; the ivf_pq tier reads its own
+    catalog (see ivf_pq_catalog)."""
     root = str(tmp_path_factory.mktemp("single_query"))
     rng = np.random.default_rng(7)
     centers = rng.normal(0.0, 1.0, (C, DIM))
@@ -77,9 +77,32 @@ def tiers(spark, tmp_path_factory):
     bq_band_store(bq_encode(df, "vec", DIM), DIM, f"{root}/mih")
     cat.set_mih_index("sq_corpus", "vec", path=f"{root}/mih")
     books = pq_fit(df, "vec", 8, 16, DIM, iters=2)
-    ivf_pq_store(df, "vec", centers.tolist(), books, f"{root}/pq")
+    pq_store(df, "vec", books, f"{root}/pq")
     cat.set_pq_index("sq_corpus", "vec", path=f"{root}/pq", codebooks=books)
     return cat, root, vecs, centers
+
+
+@pytest.fixture(scope="module")
+def ivf_pq_catalog(spark, tiers):
+    """A second catalog over sq_corpus whose PQ index is an
+    ivf_pq_store (codes partitioned by IVF cluster): a column has one
+    PQ index, and the first catalog's serves prefer="pq" from the flat
+    layout."""
+    cat, root, _, centers = tiers
+    df = spark.table("sq_corpus")
+    cat2 = VectorCatalog(f"{root}/catalog_ivf_pq")
+    cat2.vector_init(df, "sq_corpus", "vec", f"type=FLOAT32,dimension={DIM},distance=L2")
+    cat2.set_ivf_index("sq_corpus", "vec", path=f"{root}/ivf", centroids=centers.tolist())
+    books = cat.get("sq_corpus", "vec").pq_codebooks
+    ivf_pq_store(df, "vec", centers.tolist(), books, f"{root}/ivf_pq")
+    cat2.set_pq_index("sq_corpus", "vec", path=f"{root}/ivf_pq", codebooks=books)
+    return cat2
+
+
+@pytest.fixture
+def cat(request, tiers, tier):
+    """The catalog that serves ``tier``."""
+    return request.getfixturevalue("ivf_pq_catalog") if tier == "ivf_pq" else tiers[0]
 
 
 def _query(vecs, i):
@@ -98,11 +121,11 @@ def test_gate_sizes_the_fixture_small(spark, tiers):
 
 
 @pytest.mark.parametrize("tier", TIERS)
-def test_small_tier_builds_without_jobs_or_arrow(spark, tiers, tier):
+def test_small_tier_builds_without_jobs_or_arrow(spark, tiers, tier, cat):
     """Once the catalog has read the tier's store, building the query
     starts no Spark job (no schema inference, no hidden action) and
     its plan has no Python UDF."""
-    cat, _, vecs, _ = tiers
+    _, _, vecs, _ = tiers
     sc = spark.sparkContext
     router.knn(spark, cat, "sq_corpus", "vec", _query(vecs, 0), 10, prefer=tier)
     group = f"sq-build-{tier}"
@@ -119,11 +142,11 @@ def test_small_tier_builds_without_jobs_or_arrow(spark, tiers, tier):
 
 
 @pytest.mark.parametrize("tier", TIERS)
-def test_build_round_trip_budget(spark, tiers, tier, monkeypatch):
+def test_build_round_trip_budget(spark, tiers, tier, cat, monkeypatch):
     """Building a warm query sends at most ROUND_TRIPS[tier] py4j
     commands: the plan is one parsed statement, not one command per
     Column call (a layer count that host load cannot move)."""
-    cat, _, vecs, _ = tiers
+    _, _, vecs, _ = tiers
     router.knn(spark, cat, "sq_corpus", "vec", _query(vecs, 0), 10, prefer=tier)
     send, sent = clientserver.ClientServerConnection.send_command, []
     release = protocol.MEMORY_COMMAND_NAME + protocol.MEMORY_DEL_SUBCOMMAND_NAME
@@ -140,11 +163,11 @@ def test_build_round_trip_budget(spark, tiers, tier, monkeypatch):
 
 
 @pytest.mark.parametrize("tier", COMPILE_FREE)
-def test_steady_state_queries_compile_no_classes(spark, tiers, tier):
+def test_steady_state_queries_compile_no_classes(spark, tiers, tier, cat):
     """Queries that differ only in their vector generate the same code:
     query values reach it as array literals by reference, never inlined,
     so five fresh queries after a warm one compile zero classes."""
-    cat, _, vecs, _ = tiers
+    _, _, vecs, _ = tiers
     metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
     router.knn(spark, cat, "sq_corpus", "vec", _query(vecs, 2), 10, prefer=tier).collect()
     before = metrics.METRIC_COMPILATION_TIME().getCount()
@@ -248,3 +271,17 @@ def test_preloaded_replica_is_served_from_cache(spark, tiers):
             assert len(res.collect()) == 10
     finally:
         cached.unpersist(blocking=True)
+
+
+@pytest.mark.parametrize("tier", ("ivf", "ivf_pq"))
+def test_zero_probes_return_no_rows(spark, tiers, tier, cat):
+    """nprobe=0 probes no cluster: the probed tiers return no rows
+    (an empty ``IN ()`` list would not parse)."""
+    _, root, vecs, centers = tiers
+    assert router.knn(spark, cat, "sq_corpus", "vec", _query(vecs, 8), 10, prefer=tier,
+                      nprobe=0).collect() == []
+    if tier == "ivf_pq":
+        books = cat.get("sq_corpus", "vec").pq_codebooks
+        got = ivf_pq_stored_scan(spark, f"{root}/ivf_pq", _query(vecs, 8), centers.tolist(), books,
+                                 10, nprobe=0, residual=True)
+        assert got.collect() == []
