@@ -354,21 +354,17 @@ def bq_store_append(
 
     enriched = bq_encode(new_df, vec_col, dim, thresholds, id_col=id_col, backend=backend)
     wide = dim > _OBS_BIAS_MAX_DIM
-    exprs = [F.count(F.lit(1)).alias("n")]
+    metrics = "count(1) AS n"
     if wide:
         enriched = enriched.localCheckpoint(eager=True)
     else:
         # bit j of the packed code: (bits[w] >> i) & 1 — arithmetic
         # shift is fine, the & 1 keeps only the target bit
-        exprs += [
-            F.sum(
-                F.shiftright(F.element_at(F.col("bits"), j // 64 + 1), j % 64)
-                .bitwiseAND(F.lit(1))
-                .cast("long")
-            ).alias(f"b{j}")
+        metrics += "".join(
+            f", sum(CAST(shiftright(element_at(bits, {j // 64 + 1}), {j % 64}) & 1 AS BIGINT)) AS b{j}"
             for j in range(dim)
-        ]
-    got = write_observed(enriched, dest, exprs)
+        )
+    got = write_observed(enriched, dest, metrics)
     if got is None:
         return BqAppendReport(0, 0.0, baseline_bit_bias, 0.0, False)
     n = int(got["n"])

@@ -436,11 +436,14 @@ def vector_quantize_memory(codes_df: DataFrame, codes_col: str = "qvec") -> int:
 
 def vector_quantize_preload(codes_df: DataFrame) -> DataFrame:
     """persist + materialize (parity: vector_quantize_preload,
-    sqlite-vector.c:1338-1404)."""
+    sqlite-vector.c:1338-1404). The cache is filled by one job that
+    scans every partition into the ``noop`` sink; ``count()`` would
+    add a shuffle to a final aggregate, which adaptive execution runs
+    as 3 jobs."""
     from pyspark import StorageLevel
 
     codes_df.persist(StorageLevel.MEMORY_AND_DISK)
-    codes_df.count()
+    codes_df.write.format("noop").mode("overwrite").save()
     return codes_df
 
 

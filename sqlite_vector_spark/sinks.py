@@ -22,9 +22,12 @@ module adds the Spark-native sink layer a pipeline needs:
 
 from __future__ import annotations
 
+import json
+
 import pyspark.sql.functions as F
 from py4j.java_gateway import JavaClass
 from pyspark.sql import DataFrame
+from pyspark.sql.types import StructType
 
 from sqlite_vector_spark.functions.distance import in_sql
 
@@ -101,8 +104,10 @@ def write_observed(df: DataFrame, dest: str, metrics, mode: str = "append",
                    partition_col: str | None = None, sort_within=None,
                    columns=None):
     """Write ``df`` to a store and return the ``metrics`` aggregates
-    (Columns over ``df``) observed on that same write, as a dict keyed
-    by alias — or None when an append had nothing to write. The one
+    observed on that same write, as a dict keyed by alias — or None
+    when an append had nothing to write. ``metrics`` are Columns over
+    ``df``, or one SQL select list of aggregates over its columns,
+    parsed once whatever its length (see _observe_sql). The one
     mechanism behind every store append that reports statistics of its
     batch (vector_quantize_update, pq_store_append,
     ivf_pq_store_append, bq_store_append, bq_band_store(_append)): the
@@ -133,11 +138,39 @@ def write_observed(df: DataFrame, dest: str, metrics, mode: str = "append",
     obs = Observation()
 
     def finish(out: DataFrame) -> DataFrame:
-        out = out.observe(obs, *metrics)
+        out = _observe_sql(out, obs, metrics) if isinstance(metrics, str) else out.observe(obs, *metrics)
         return out if columns is None else out.select(*columns)
 
     _write_store(df, dest, mode, partition_col, sort_within, finish=finish)
     return obs.get
+
+
+def _observe_sql(df: DataFrame, obs, text: str) -> DataFrame:
+    """``df.observe(obs, *metrics)`` for the metrics of the select list
+    ``text``, in about a dozen py4j calls for any number of them:
+    ``observe`` costs a few calls per Column call of each metric, 0.6 s
+    of driver time for bq_store_append's 65 at dim 64. The list is
+    parsed once and its expressions become the CollectMetrics node
+    ``Dataset.observe`` would build, so the plan is the same.
+
+    Written against Spark 4.1 (checked on 4.1.2), like
+    search.frames_sql, over internals to check on any Spark upgrade:
+    ``CollectMetrics(String, Seq[NamedExpression], LogicalPlan,
+    Long)``, ``ObservationManager.register(Observation, Dataset)`` and
+    the ``_jvm`` / ``_jo`` fields that pyspark's ``Observation._on``
+    sets for ``Observation.get``."""
+    spark = df.sparkSession
+    jss, gw = spark._jsparkSession, spark._jvm._gateway_client
+    obs._jvm = spark._jvm
+    obs._jo = JavaClass("org.apache.spark.sql.Observation", gw)()
+    jss.observationManager().register(obs._jo, df._jdf)
+    plan = JavaClass("org.apache.spark.sql.catalyst.plans.logical.CollectMetrics", gw)(
+        obs._jo.name(),
+        jss.sessionState().sqlParser().parsePlan(f"SELECT {text}").projectList(),
+        df._jdf.logicalPlan(),
+        df._jdf.id(),
+    )
+    return DataFrame(JavaClass("org.apache.spark.sql.classic.Dataset", gw).ofRows(jss, plan), spark)
 
 
 def _write_store(df: DataFrame, path: str, mode: str,
@@ -475,9 +508,8 @@ def delete_ids(spark, path: str, ids, id_col: str = "id", partition_col: str | N
 def _delete_ids(spark, path: str, batch: DataFrame, id_col: str = "id",
                 partition_col: str | None = None, sort_within=None,
                 remote_ok: bool = False, schemas: dict | None = None) -> dict:
-    """delete_ids over an id batch. The store is read through
-    ``schemas`` (read_parquet's cache), which then records the schema
-    the rewrite wrote, so the next read infers nothing."""
+    """delete_ids over an id batch, reading the store through
+    ``schemas`` (read_parquet's cache)."""
     from pyspark.sql import Observation
 
     from sqlite_vector_spark import fsutil
@@ -510,7 +542,6 @@ def _delete_ids(spark, path: str, batch: DataFrame, id_col: str = "id",
 
         _flat_swap(spark, path, lambda tmp: _write_store(
             flagged, tmp, "overwrite", sort_within=sort_within, finish=finish))
-        _remember_schema(spark, path, df.schema, schemas)
         m = obs.get
         return {
             "deleted_rows": m["deleted"],
@@ -577,7 +608,6 @@ def _delete_ids(spark, path: str, batch: DataFrame, id_col: str = "id",
             fsutil.rename(spark, f"{tmp}/{d}", f"{root}/{d}")
     fsutil.delete(spark, tmp, recursive=True)
     spark.catalog.refreshByPath(path)
-    _remember_schema(spark, path, df.schema, schemas)
     return {
         "deleted_rows": deleted,
         "rows_after": obs.get["rows"],  # within the rewritten partitions
@@ -1062,21 +1092,35 @@ def read_store(spark, path: str, column: str | None = None, values=None,
 
 def read_parquet(spark, paths: list[str], schemas: dict | None = None,
                  base_path: str | None = None) -> DataFrame:
-    """``spark.read.parquet(*paths)``, reusing a schema this reader
-    inferred before while that is provably the schema a fresh
-    inference would return. Inference reads data-file footers in a
-    Spark job (~120 ms per single-query read at 6000 x 64); a read
-    with the schema supplied runs none, and still matches a cached
-    (preloaded) frame of the same files.
+    """``spark.read.parquet(*paths)`` with the schema a fresh inference
+    would return, supplied so that the read runs no Spark job.
+    ``spark.read.parquet`` infers the schema in a job that opens a
+    data file's footer (~120 ms per single-query read at 6000 x 64);
+    a read with the schema supplied runs none, and still matches a
+    cached (preloaded) frame of the same files.
 
-    ``schemas`` maps (base_path, *paths) to (schema, data-file set).
-    A hit is read with the schema supplied, and kept only when the
-    data files Spark lists for it are the set the schema was inferred
-    from: data files are immutable once written (every writer gives
-    each file a fresh name), so an equal set infers an equal schema. A
-    rebuild, append or delete changes the set and falls back to
-    inference, which refreshes the entry. The sets are compared in the
-    JVM: pulling file names over py4j costs a round trip per file."""
+    The schema comes from, in order:
+
+    1. ``schemas``, a dict the caller keeps across reads, mapping
+       (base_path, *paths) to (schema, data-file set). A hit is read
+       with the schema supplied, and kept only when the data files
+       Spark lists for it are the set the schema was read for: data
+       files are immutable once written (every writer gives each file
+       a fresh name), so an equal set has an equal schema. The sets
+       are compared in the JVM: pulling file names over py4j costs a
+       round trip per file.
+    2. The footer that inference would open: the first listed data
+       file in path order, read on the driver (see _footer_schema).
+       Spark writes the exact schema into every file's footer; the
+       read is listed once without a schema to find the file, and
+       directory discovery still adds the partition columns.
+    3. Inference, when the footer carries no Spark schema (a file from
+       another writer), ``spark.sql.parquet.mergeSchema`` is on, the
+       first file is a summary file, or a data column shares its name
+       with a discovered partition column.
+
+    A miss, and a hit whose file set changed (a rebuild, append or
+    delete), refreshes the entry."""
     def reader():  # a DataFrameReader is mutable: one per read
         return spark.read if base_path is None else spark.read.option("basePath", base_path)
 
@@ -1086,25 +1130,67 @@ def read_parquet(spark, paths: list[str], schemas: dict | None = None,
         df = reader().schema(hit[0]).parquet(*paths)
         if _file_set(df).equals(hit[1]):
             return df
-    df = reader().parquet(*paths)
+    listed = reader().schema(StructType()).parquet(*paths)
+    schema = _footer_schema(listed)
+    df = reader().parquet(*paths) if schema is None else reader().schema(schema).parquet(*paths)
     if schemas is not None:
         schemas[key] = (df.schema, _file_set(df))
     return df
+
+
+#: the footer key under which Spark's parquet writer stores the
+#: written schema as JSON (ParquetReadSupport.SPARK_METADATA_KEY)
+_SPARK_SCHEMA_KEY = "org.apache.spark.sql.parquet.row.metadata"
+
+
+def _footer_schema(listed: DataFrame) -> StructType | None:
+    """The data schema Spark's parquet inference would return for the
+    files ``listed`` (a read with an empty schema: its columns are the
+    discovered partition columns), read from one footer on the driver
+    in a dozen py4j calls; None where inference must decide.
+
+    Inference without mergeSchema opens the first summary file, else
+    the first data file, and takes the JSON schema Spark stored in its
+    key-value metadata (ParquetUtils.inferSchema, Spark 4.1). The
+    listing's first file in path order is that file: a summary file
+    (``_metadata``, ``_common_metadata``) sorts before its sibling
+    data files and falls back. A data column named like a partition
+    column also falls back: a supplied schema would give the column the
+    written type, where inference keeps the type discovered from the
+    directory names."""
+    spark = listed.sparkSession
+    if spark.conf.get("spark.sql.parquet.mergeSchema", "false").lower() == "true":
+        return None
+    jvm, gw = spark._jvm, spark._jvm._gateway_client
+    files = listed._jdf.inputFiles()
+    if len(files) == 0:
+        return None
+    first = jvm.java.util.Collections.min(JavaClass("scala.jdk.javaapi.CollectionConverters", gw).asJava(
+        JavaClass("scala.collection.mutable.ArraySeq", gw).make(files)
+    ))
+    if first.rsplit("/", 1)[-1] in ("_metadata", "_common_metadata"):
+        return None
+    footer = jvm.org.apache.spark.sql.execution.datasources.parquet.ParquetFooterReader.readFooter(
+        jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+            jvm.org.apache.hadoop.fs.Path(jvm.java.net.URI(first)),
+            spark._jsparkSession.sessionState().newHadoopConf(),
+        ),
+        jvm.org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS,
+    )
+    text = footer.getFileMetaData().getKeyValueMetaData().get(_SPARK_SCHEMA_KEY)
+    if text is None:
+        return None
+    schema = StructType.fromJson(json.loads(text))
+    parts = {f.name.lower() for f in listed.schema.fields}
+    if any(f.name.lower() in parts for f in schema.fields):
+        return None
+    return schema
 
 
 def _file_set(df: DataFrame):
     """The JVM set of data files a parquet read lists."""
     seq = JavaClass("scala.collection.mutable.ArraySeq", df.sparkSession._jvm._gateway_client)
     return seq.make(df._jdf.inputFiles()).toSet()
-
-
-def _remember_schema(spark, path: str, schema, schemas: dict | None) -> None:
-    """After a rewrite of the flat or directory-partitioned store
-    ``path``, record ``schema`` — the schema the rewrite wrote — for
-    the store's new file set in read_parquet's cache, so the next read
-    of the store runs no inference job."""
-    if schemas is not None:
-        schemas[(None, path)] = (schema, _file_set(spark.read.schema(schema).parquet(path)))
 
 
 def vacuum_store(path: str, spark=None) -> dict:

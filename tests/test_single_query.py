@@ -4,11 +4,12 @@ router.knn on the store tiers (exact, quantized, ivf, bq, pq, ivf_pq,
 mih) at dim >= AUTO_DIM: a sized input below version.AUTO_SCAN_BYTES
 is scored by the codegen folds (no Arrow UDF), the plan is built as
 one SQL statement in a bounded number of py4j calls and without a
-Spark job once the catalog has read each store's schema, and queries
-that differ only in their vector reuse the compiled classes. Inputs
-above the gate keep the Arrow kernel, the schema reuse never hides a
-rebuilt or appended store, a ``where=`` predicate is parsed as one
-expression, and a preloaded replica is still read from its cache.
+Spark job, from a fresh catalog too (store schemas come from parquet
+footers), and queries that differ only in their vector reuse the
+compiled classes. Inputs above the gate keep the Arrow kernel, the
+schema reuse never hides a rebuilt or appended store, a ``where=``
+predicate is parsed as one expression, and a replica preloaded in one
+Spark job is still read from its cache.
 """
 
 from __future__ import annotations
@@ -33,6 +34,7 @@ from sqlite_vector_spark.operators.quantize import (
 from sqlite_vector_spark.operators.search import full_scan
 from sqlite_vector_spark.sinks import read_store
 from sqlite_vector_spark.sources import plan_size_bytes
+from sqlite_vector_spark.sql import route_sql
 from sqlite_vector_spark.version import AUTO_DIM, AUTO_SCAN_BYTES
 
 N, DIM, C = 600, 64, 8
@@ -41,6 +43,8 @@ TIERS = ("exact", "quantized", "ivf", "bq", "pq", "ivf_pq", "mih")
 #: needs as literals to skip row groups and which codegen inlines, so
 #: each new query compiles its scan stage
 COMPILE_FREE = tuple(t for t in TIERS if t != "mih")
+#: the tiers that read a store written by the library
+STORE_TIERS = tuple(t for t in TIERS if t != "exact")
 #: py4j commands sent to build a warm query, per tier (releases of
 #: collected Python proxies not counted): one SQL statement, the store
 #: read with its schema check and the size gate. Built from Column
@@ -113,6 +117,17 @@ def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
+def _jobs_of(spark, group, fn):
+    """fn() and the ids of the Spark jobs it started."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        return fn(), list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+
 def test_gate_sizes_the_fixture_small(spark, tiers):
     cat, root, _, _ = tiers
     assert DIM >= AUTO_DIM
@@ -126,16 +141,9 @@ def test_small_tier_builds_without_jobs_or_arrow(spark, tiers, tier, cat):
     starts no Spark job (no schema inference, no hidden action) and
     its plan has no Python UDF."""
     _, _, vecs, _ = tiers
-    sc = spark.sparkContext
     router.knn(spark, cat, "sq_corpus", "vec", _query(vecs, 0), 10, prefer=tier)
-    group = f"sq-build-{tier}"
-    sc.setJobGroup(group, "router.knn build")
-    try:
-        res = router.knn(spark, cat, "sq_corpus", "vec", _query(vecs, 1), 10, prefer=tier)
-        jobs = list(sc.statusTracker().getJobIdsForGroup(group))
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
+    res, jobs = _jobs_of(spark, f"sq-build-{tier}", lambda: router.knn(
+        spark, cat, "sq_corpus", "vec", _query(vecs, 1), 10, prefer=tier))
     assert jobs == []
     assert "EvalPython" not in _plan(res)
     assert len(res.collect()) == 10
@@ -259,18 +267,55 @@ def test_where_is_parsed_as_one_expression(spark, tiers, tmp_path, where):
         assert len(rows) == 10 and all(r["id"] % 3 == 1 for r in rows), tier
 
 
-def test_preloaded_replica_is_served_from_cache(spark, tiers):
-    """A preloaded replica answers the quantized tier from memory, and
-    answering does not uncache it: the next query reads it too."""
+def _check_preload(spark, tiers, preload, group):
+    """``preload()`` starts one Spark job, and the quantized tier then
+    answers from the cache, query after query."""
     cat, root, vecs, _ = tiers
-    cached = vector_quantize_preload(read_store(spark, f"{root}/quantized"))
+    _, jobs = _jobs_of(spark, group, preload)
     try:
+        assert len(jobs) == 1
         for i in (5, 6):
             res = router.knn(spark, cat, "sq_corpus", "vec", _query(vecs, i), 10, prefer="quantized")
             assert "InMemoryTableScan" in _plan(res)
             assert len(res.collect()) == 10
     finally:
-        cached.unpersist(blocking=True)
+        read_store(spark, f"{root}/quantized").unpersist(blocking=True)
+
+
+def test_preloaded_replica_is_served_from_cache(spark, tiers):
+    """Reading and preloading the replica runs one Spark job, the scan
+    that fills the cache. The preloaded replica answers the quantized
+    tier from memory, and answering does not uncache it: the next
+    query reads it too."""
+    root = tiers[1]
+    _check_preload(spark, tiers, lambda: vector_quantize_preload(
+        read_store(spark, f"{root}/quantized")), "sq-preload-call")
+
+
+def test_sql_preload_runs_one_job(spark, tiers):
+    """``SELECT vector_quantize_preload(...)`` reads and caches the
+    replica in one Spark job too, and the quantized tier reads it."""
+    cat = tiers[0]
+    _check_preload(spark, tiers, lambda: route_sql(
+        spark, cat, "SELECT vector_quantize_preload('sq_corpus', 'vec')"), "sq-preload-sql")
+
+
+@pytest.mark.parametrize("tier", STORE_TIERS)
+def test_fresh_catalog_builds_without_jobs(spark, tiers, tier, cat):
+    """A catalog opened afresh has read no store: its first query on a
+    store tier reads the store's schema from a parquet footer on the
+    driver, so building the plan starts no Spark job either."""
+    _, _, vecs, _ = tiers
+    fresh = VectorCatalog(cat.root)
+    fresh.vector_init(spark.table("sq_corpus"), "sq_corpus", "vec",
+                      f"type=FLOAT32,dimension={DIM},distance=L2")
+    assert fresh.store_schemas == {}
+    res, jobs = _jobs_of(spark, f"sq-fresh-{tier}", lambda: router.knn(
+        spark, fresh, "sq_corpus", "vec", _query(vecs, 1), 10, prefer=tier))
+    assert jobs == []
+    assert fresh.store_schemas
+    want = router.knn(spark, cat, "sq_corpus", "vec", _query(vecs, 1), 10, prefer=tier)
+    assert res.collect() == want.collect()
 
 
 @pytest.mark.parametrize("tier", ("ivf", "ivf_pq"))

@@ -520,6 +520,56 @@ def test_write_partitioned_tasks_per_value_parallelizes_hot_value(spark, tmp_pat
     assert len(files(p3, 0)) == 1  # default keeps one file per value
 
 
+def _jobs_of(spark, group, fn):
+    """fn() and the ids of the Spark jobs it started."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        return fn(), list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+
+def test_read_parquet_schema_from_footer(spark, emb, tmp_path):
+    """read_parquet's schema equals the one spark.read.parquet infers,
+    for every kind of store the library writes, and comes from a
+    footer without a Spark job; a directory written by another parquet
+    writer has no Spark schema in its footers and is inferred."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as papq
+
+    from sqlite_vector_spark.operators.ann import ivf_store
+    from sqlite_vector_spark.operators.quantize import vector_quantize
+    from sqlite_vector_spark.sinks import read_parquet, read_store
+    from sqlite_vector_spark.versioned import versioned_store_init
+
+    base = emb.select(F.col("vec_id").alias("id"), F.col("embedding").alias("vec"), "label")
+    base.write.parquet(str(tmp_path / "flat"))
+    centers = [r.vec for r in base.limit(4).collect()]
+    ivf_store(base, "vec", centers, str(tmp_path / "ivf"))
+    versioned_store_init(base.withColumn("cluster", F.col("id") % 4), str(tmp_path / "versioned"),
+                         partition_col="cluster")
+    vector_quantize(emb, "embedding", str(tmp_path / "replica"), id_col="vec_id",
+                    include_cols=["label"])
+    for name in ("flat", "ivf", "versioned", "replica"):
+        path = str(tmp_path / name)
+        want = spark.read.parquet(path).schema
+        got, jobs = _jobs_of(spark, f"footer-{name}", lambda: read_parquet(spark, [path]))
+        assert got.schema == want, name
+        assert jobs == [], name
+        assert read_store(spark, path).schema == want, name
+    assert "cluster" in spark.read.parquet(str(tmp_path / "ivf")).columns
+    path = str(tmp_path / "arrow")
+    os.makedirs(path)
+    papq.write_table(pa.table({"id": [1, 2], "x": [0.5, 1.5]}), f"{path}/part-0.parquet")
+    got, jobs = _jobs_of(spark, "footer-arrow", lambda: read_parquet(spark, [path]))
+    assert got.schema == spark.read.parquet(path).schema
+    assert len(jobs) >= 1  # the inference fallback
+
+
 def _vectors(spark, lo, hi, dim=16):
     import numpy as np
 

@@ -526,7 +526,7 @@ def test_takedown_stream_state_reads_sidecar_params(spark, docs, tmp_path):
 
 @pytest.mark.slow
 def test_label_state_swap_on_scheme_root(spark, docs, tmp_path):
-    """r13: the label-state re-solve swap (_rewrite_label_state) goes
+    """r13: the label-state re-solve swap (_label_state_takedown) goes
     through the FS layer, so a label state rooted at a non-file
     scheme swaps too — same delete == rebuild result, retained
     ``__pre_delete`` layout, sidecar preserved."""
@@ -632,8 +632,9 @@ def vector_tiers(spark, emb, tmp_path):
 def test_takedown_job_count_and_receipts(spark, vector_tiers):
     """A four-tier takedown with verify runs in a handful of Spark
     jobs: the id batch is built once, the receipts are counted on the
-    rewrites, the rewritten stores are re-read without schema
-    inference, and the verify is one job over every tier."""
+    rewrites, every store read takes its schema from a parquet footer
+    or the catalog instead of an inference job, and the verify is one
+    job over every tier."""
     from sqlite_vector_spark.sinks import takedown
 
     sc = spark.sparkContext
@@ -651,7 +652,7 @@ def test_takedown_job_count_and_receipts(spark, vector_tiers):
     assert rep["ivf"] == {"deleted_rows": 6, "rows_after": 214, "partitions_rewritten": 2,
                           "strategy": "in_place"}
     assert rep["verified"] == {"quantized": 0, "ivf": 0, "pq": 0, "bq": 0}
-    assert len(jobs) <= 18, len(jobs)
+    assert len(jobs) <= 14, len(jobs)
 
 
 def test_mih_rebuild_refuses_remote_flat_band_store(spark, emb, tmp_path, monkeypatch):
