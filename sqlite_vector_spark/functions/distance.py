@@ -38,9 +38,9 @@ Scale notes:
   the reference's SIMD kernels, distance-cpu.c:755-812): one Arrow
   batch in, vectorized NumPy out. The default "auto" backend picks it
   for literal-query distances at dim >= AUTO_DIM (32), except on scans
-  known to read less than AUTO_SCAN_BYTES (4 MiB), where the Python
-  round trip costs more than the fold; both constants and their
-  measurements are in version.py. It folds each lane in the tree's
+  known to read at most scale.SCAN_BYTES (4 MiB), where the Python
+  round trip costs more than the fold; the measurements are next to
+  each constant (version.py, scale.py). It folds each lane in the tree's
   order, so the two backends give bit-identical distances.
 """
 

@@ -31,6 +31,7 @@ import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
+from sqlite_vector_spark import scale
 from sqlite_vector_spark.functions.distance import distance, dot_sum_sql, norm_sql, snap_zero_sql
 from sqlite_vector_spark.functions.text import HASH_P, polyhash, shingles_from_words, words
 from sqlite_vector_spark.types import Metric, parse_metric
@@ -42,30 +43,6 @@ NUM_HASHES = 8
 LSH_BANDS = 4
 ROWS_PER_BAND = 2
 SHINGLE_N = 3
-
-#: embedding_neardup_pairs runs its collision-bucket prefilter only
-#: when Catalyst estimates the input at/above this many bytes (or
-#: cannot size it — the scale-safe default). Below it, the extra
-#: aggregation + semi-join pass costs more than the full bucket
-#: self-join it would bound; above it, the prefilter is what keeps
-#: the pair join from shuffling the non-colliding vector payload
-#: (r14 10M x 768 probe: 2 x 61 GB wasted shuffle -> ENOSPC without
-#: it). Env-overridable for cluster tuning; the default keeps
-#: local-mode benches on the direct-join shape.
-import os as _os
-
-PREFILTER_MIN_BYTES = int(
-    _os.environ.get("SPARK_GRAFT_PREFILTER_MIN_BYTES", str(256 << 20))
-)
-
-#: edit_distance_pairs pulls candidate texts with one semi-join scan
-#: + checkpoints only when the corpus text is estimated at/above this
-#: many bytes (or unsized); below it the two extra checkpoint jobs
-#: cost more wall-clock than the second corpus scan they save.
-TEXT_PULL_MIN_BYTES = int(
-    _os.environ.get("SPARK_GRAFT_TEXT_PULL_MIN_BYTES", str(256 << 20))
-)
-
 
 def exact_dedup(df: DataFrame, key_cols: Sequence[str], id_col: str) -> DataFrame:
     """One row per distinct key: (keys..., dup_count, keeper_id=min id).
@@ -1142,13 +1119,13 @@ def embedding_neardup_pairs(
     ~4% + dups. Size P so lambda <~ 0.05 at the target corpus; more
     planes -> higher speed / lower recall.
 
-    r15 (VERDICT r14 #2): the prefilter is GATED on Catalyst's input
-    size estimate — below PREFILTER_MIN_BYTES the extra aggregation +
-    semi-join pass costs more wall-clock than the full bucket
-    self-join it would bound (the r14 sf0.1 0.55x regression), so
-    small/local inputs take the direct join; at/above the threshold
-    (and whenever the estimate is unavailable — scale-safe default)
-    the prefilter bounds the vector shuffle to collision buckets.
+    r15 (VERDICT r14 #2): the prefilter is GATED on the input's size
+    (scale gate "prefilter") — within the partition budget the extra
+    aggregation + semi-join pass costs more wall-clock than the full
+    bucket self-join it would bound (the r14 sf0.1 0.55x regression),
+    so small/local inputs take the direct join; above it, or unsized,
+    the prefilter bounds the vector shuffle to collision buckets (r14
+    10M x 768 probe: 2 x 61 GB wasted shuffle -> ENOSPC without it).
     The semi-join is NOT broadcast-hinted: collision buckets are
     ~5-10% of rows at probe scale, so a forced broadcast grows
     linearly with the corpus (a driver/executor OOM cliff at 100 TB);
@@ -1156,15 +1133,12 @@ def embedding_neardup_pairs(
     it is not. Results are identical either way — singleton buckets
     produce no (a < b) pairs.
     """
-    from sqlite_vector_spark.sources import plan_size_bytes
-
     base = df.where(F.col(vec_col).isNotNull()).select(
         F.col(id_col).cast("bigint").alias("id"),
         F.col(vec_col).alias("v"),
         hyperplane_bucket(vec_col, planes).alias("bucket"),
     )
-    est = plan_size_bytes(df)
-    if est is None or est >= PREFILTER_MIN_BYTES:
+    if scale.large("prefilter", df):
         # collision buckets only: ~#collision-buckets x 8B rows
         # (bounded by #true near-dup groups + random-collision tail)
         hot = (
@@ -1678,22 +1652,19 @@ def edit_distance_pairs(
 
     Scale shape: the O(len^2)-per-pair kernel is gated behind the LSH
     candidate generator, so pair volume is the LSH bucket-collision
-    count, never corpus^2. ABOVE TEXT_PULL_MIN_BYTES (or when the
-    corpus cannot be sized): the candidate set is checkpointed (it
+    count, never corpus^2. ABOVE the partition budget, or unsized
+    (scale gate "text_pull"): the candidate set is checkpointed (it
     feeds the id set and the pair join), the candidate docs' texts
     are pulled with ONE corpus scan (broadcast semi-join) and
     checkpointed, and each text rides into the pair through two
     small attach joins (r14, the embedding_pair_distances /
     jaccard_pairs candidate-bounded pattern — reads the corpus text
-    once instead of twice). BELOW the threshold the extra checkpoint
+    once instead of twice). WITHIN the budget the extra checkpoint
     jobs cost more than the saved scan (the r14 sf0.1 0.59x
     regression), so small/local inputs take the direct two-scan
     attach (r15 adaptive gate, VERDICT r14 #4). Results identical
     either way."""
-    from sqlite_vector_spark.sources import plan_size_bytes
-
-    est = plan_size_bytes(docs)
-    if est is not None and est < TEXT_PULL_MIN_BYTES:
+    if not scale.large("text_pull", docs):
         cand = cand.select(
             F.col("a").cast("bigint").alias("a"), F.col("b").cast("bigint").alias("b")
         )

@@ -31,7 +31,6 @@ needing bit-parity with the oracle use the window path or
 
 from __future__ import annotations
 
-import os
 from collections.abc import Iterator, Sequence
 
 import pyspark.sql.functions as F
@@ -40,32 +39,8 @@ from pyspark.sql.functions import broadcast
 
 from sqlite_vector_spark.functions.distance import EPS_SNAP, batch_matrix, distance, fold_distances
 from sqlite_vector_spark.operators.topk import topk_per_key
-from sqlite_vector_spark.sources import plan_size_bytes, widen
+from sqlite_vector_spark.sources import widen
 from sqlite_vector_spark.types import Metric, parse_metric
-
-
-#: auto-salt sizing (topk_per_key's salt="auto"): one window partition
-#: holds all of a key's rows, so cap the estimated bytes any single
-#: window partition sees; above the budget the rank window goes
-#: two-phase with salt = ceil(size / budget), capped at SALT_MAX.
-#: Env-overridable so a deployment can tune the budget, and a plan
-#: audit can force the salted shape, without code edits.
-SALT_BYTES_PER_PARTITION = int(
-    os.environ.get("SPARK_GRAFT_SALT_BYTES_PER_PARTITION", str(256 << 20))
-)
-SALT_MAX = 64
-
-
-def _auto_salt(corpus: DataFrame) -> int | None:
-    """Derive the window salt from Catalyst's size estimate of the
-    corpus plan (sources.plan_size_bytes): no job is run. Returns None
-    (no salting) when the estimate is below one partition budget or
-    unavailable."""
-    size = plan_size_bytes(corpus)
-    if size is None:
-        return None
-    s = -(-size // SALT_BYTES_PER_PARTITION)  # ceil
-    return min(SALT_MAX, s) if s >= 2 else None
 
 
 def knn_join(

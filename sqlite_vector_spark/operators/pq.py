@@ -46,6 +46,7 @@ import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
+from sqlite_vector_spark import scale
 from sqlite_vector_spark.functions.distance import (
     EPS_SNAP,
     batch_matrix,
@@ -81,15 +82,15 @@ def _pq_backend(codebooks: Codebooks, size_bytes: int | None = None) -> str:
     ann._assign_backend: honour a pinned backend; auto routes on the
     m*ksub FOLD count — each codebook entry is its own argmin
     expression tree, so fold count (not raw literals) drives the
-    codegen cost (AUTO_PQ_FOLDS, measured in version.py). A scan that
-    passes ``size_bytes`` below AUTO_SCAN_BYTES stays codegen at any
+    codegen cost (AUTO_PQ_FOLDS, measured in version.py). A scan whose
+    ``size_bytes`` is within the scale "scan" gate stays codegen at any
     fold count (see pq_scan)."""
-    from sqlite_vector_spark.version import AUTO_PQ_FOLDS, small_scan, vector_backend
+    from sqlite_vector_spark.version import AUTO_PQ_FOLDS, vector_backend
 
     active = vector_backend()
     if active != "auto":
         return active
-    if small_scan(size_bytes):
+    if not scale.large("scan", size_bytes):
         return "codegen"
     m, ksub, _dsub = _check_codebooks(codebooks)
     return "arrow-numpy" if m * ksub >= AUTO_PQ_FOLDS else "codegen"
@@ -474,8 +475,8 @@ def pq_scan(
     rows; TakeOrderedAndProject keeps P*k rows leaving the executors.
     Backend-dispatched on the code table's size, then on M*KSUB: the
     codegen form is one LUT array literal, ``zip_with`` and
-    ``aggregate`` at any M*KSUB, so a table Catalyst sizes below
-    AUTO_SCAN_BYTES is scored in the JVM."""
+    ``aggregate`` at any M*KSUB, so a table Catalyst sizes within
+    scale.SCAN_BYTES is scored in the JVM."""
     if k < 0:
         raise ValueError("k must be >= 0")
     return scan(codes_df, codes_col, _adc_distance(codes_df, codes_col, query, codebooks, metric),
@@ -485,10 +486,8 @@ def pq_scan(
 def _adc_distance(codes_df: DataFrame, codes_col: str, query, codebooks, metric) -> str | Column:
     """pq_scan's score: the ADC fold's SQL text, or the Arrow LUT
     gather when the backend rule picks it for this code table."""
-    from sqlite_vector_spark.sources import plan_size_bytes
-
     luts = adc_lut([float(x) for x in query], codebooks)
-    if _pq_backend(codebooks, plan_size_bytes(codes_df)) == "arrow-numpy":
+    if _pq_backend(codebooks, scale.size(codes_df)) == "arrow-numpy":
         return adc_distance_arrow_udf(luts, metric)(F.col(codes_col))
     return adc_distance_sql(codes_col, luts, metric)
 

@@ -40,6 +40,7 @@ from collections.abc import Sequence
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, Window
 
+from sqlite_vector_spark import scale
 from sqlite_vector_spark.operators.topk import topk_per_key
 
 #: classic Robertson/Sparck-Jones constants
@@ -328,9 +329,12 @@ def bm25_batch_topk(
         .select("id", F.explode(arr).alias("x"))
         .select(F.col("x.qid").alias("qid"), "id", F.col("x.score").alias("score"))
     )
-    # rank window: see topk.topk_per_key; the salt is sized from docs
+    # rank window: see topk.topk_per_key; the ranked frame is
+    # docs x queries, so the salt is sized from both
     order = [F.col("score").desc(), F.col("id").asc()]
-    return topk_per_key(exploded, ["qid"], order, k, salt="auto", size_from=docs)
+    docs_bytes = scale.size(docs)
+    size = None if docs_bytes is None else docs_bytes * len(queries)
+    return topk_per_key(exploded, ["qid"], order, k, salt="auto", size_from=size)
 
 
 def rrf_fuse_batch(

@@ -32,8 +32,8 @@ import pyspark.sql.functions as F
 from py4j.java_gateway import JavaClass
 from pyspark.sql import Column, DataFrame
 
+from sqlite_vector_spark import scale
 from sqlite_vector_spark.functions.distance import distance_expr, sql_operand
-from sqlite_vector_spark.sources import plan_size_bytes
 from sqlite_vector_spark.types import Metric
 
 _LOGICAL = "org.apache.spark.sql.catalyst.plans.logical."
@@ -148,11 +148,11 @@ def rerank(
 
 
 def _scan_distance(df: DataFrame, column: str, query, metric) -> str | Column:
-    """A literal query on an input Catalyst sizes below
-    version.AUTO_SCAN_BYTES is scored by the codegen fold at any dim:
-    a single-query scan that small finishes sooner in the JVM than an
-    Arrow UDF job's Python round trip (measurements in version.py)."""
-    size = None if isinstance(query, Column) else plan_size_bytes(df)
+    """A literal query on an input Catalyst sizes within
+    scale.SCAN_BYTES is scored by the codegen fold at any dim: a
+    single-query scan that small finishes sooner in the JVM than an
+    Arrow UDF job's Python round trip (measurements in scale.py)."""
+    size = None if isinstance(query, Column) else scale.size(df)
     return distance_expr(column, query, metric, size_bytes=size)
 
 
@@ -266,7 +266,7 @@ def matryoshka_scan(
         raise ValueError("coarse_m must be >= k (rerank cannot widen)")
     # both passes pick their backend by the corpus's size, as full_scan
     # does, so that a coarse_m covering the corpus gives full_scan's values
-    size = plan_size_bytes(df)
+    size = scale.size(df)
     prefix = F.expr(f"slice({sql_operand(column)}, 1, {coarse_dim})")
     coarse_src, cd = readable(
         df, distance_expr(prefix, [float(x) for x in query][:coarse_dim], metric, size_bytes=size)

@@ -16,6 +16,8 @@ from collections.abc import Sequence
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, Window
 
+from sqlite_vector_spark import scale
+
 
 def topk_per_key(
     df: DataFrame,
@@ -23,7 +25,7 @@ def topk_per_key(
     order: Sequence[Column],
     k: int,
     salt: int | str | None = None,
-    size_from: DataFrame | None = None,
+    size_from: DataFrame | int | None = None,
 ) -> DataFrame:
     """Rows of ``df`` ranked ``1..k`` within each ``keys`` group by
     ``order``: ``df``'s columns plus an int ``rank``, filtered to
@@ -40,11 +42,9 @@ def topk_per_key(
     every row that beats it in its bucket beats it globally too.
 
     ``salt`` is ``None`` (one window), an int >= 1 (pinned; 1 means
-    one window), or ``"auto"``: sized from Catalyst's estimate of
-    ``size_from`` by ``knn_join._auto_salt``, with no salting under
-    one partition budget (SPARK_GRAFT_SALT_BYTES_PER_PARTITION, 256 MB
-    by default) and ceil(size / budget) capped at SALT_MAX above it.
-    Any other value raises ValueError.
+    one window), or ``"auto"``: ``scale.salt(size_from)``, where
+    ``size_from`` is the frame to size or its known bytes. Any other
+    value raises ValueError.
     """
     if not (
         salt is None
@@ -53,9 +53,7 @@ def topk_per_key(
     ):
         raise ValueError(f"salt must be 'auto', None or an int >= 1, got {salt!r}")
     if salt == "auto":
-        from sqlite_vector_spark.operators.knn_join import _auto_salt
-
-        salt = _auto_salt(size_from)
+        salt = scale.salt(size_from)
     if salt is not None and salt > 1:
         w1 = Window.partitionBy(*keys, F.pmod(F.col("id"), F.lit(salt))).orderBy(*order)
         df = df.withColumn("__r1", F.row_number().over(w1)).where(F.col("__r1") <= k).drop("__r1")

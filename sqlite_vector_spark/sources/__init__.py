@@ -79,23 +79,6 @@ def widen(df: DataFrame) -> DataFrame:
     return df
 
 
-def plan_size_bytes(df: DataFrame) -> int | None:
-    """Catalyst's size estimate of the optimized plan — plan metadata,
-    no job runs. Returns None when the estimate is unavailable or is
-    the unknown-size sentinel (spark.sql.defaultSizeInBytes ~
-    Long.MaxValue). On Spark 4.1 parquet scans and localCheckpoint
-    frames (eager or lazy) are sized; a frame built with
-    createDataFrame(rdd, schema) is not. The scale-adaptive operators
-    gate on this the way widen() gates on inputFiles(): cheap
-    local-mode behavior below a threshold, the shuffle-bounding shape
-    above it (knn_join._auto_salt sizes the top-k salt from it too)."""
-    try:
-        size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    except Exception:
-        return None
-    return None if size >= 1 << 59 else size
-
-
 def load_tables(spark: SparkSession, sf_dir: str, names=TABLES) -> dict[str, DataFrame]:
     return {n: table(spark, sf_dir, n) for n in names}
 

@@ -8,12 +8,14 @@ CPU ISAs: ``codegen`` = Catalyst higher-order-function expressions
 UDFs over NumPy.
 """
 
+from sqlite_vector_spark import scale
+
 __version__ = "0.1.0"
 
 #: Execution backends, analogous to CPU/SSE2/AVX2/NEON in the reference.
 #: "auto" mirrors the reference's runtime SIMD dispatch: it resolves to
 #: arrow-numpy for literal-query distances at dim >= AUTO_DIM and codegen
-#: otherwise, except that a scan known to read less than AUTO_SCAN_BYTES
+#: otherwise, except that a scan known to read at most scale.SCAN_BYTES
 #: stays codegen. Oracle-gated paths pin "codegen" (see __spark_entry__)
 #: because the NumPy pairwise sum is not bit-identical to the
 #: sequential fold the DuckDB oracle performs.
@@ -42,19 +44,6 @@ AUTO_ASSIGN_LITERALS = 4096
 #: folds) stay codegen where the Python round-trip dominates.
 AUTO_PQ_FOLDS = 128
 
-#: Size gate for SINGLE-QUERY SCANS (search.full_scan_stream, pq.pq_scan,
-#: the bq_rerank_scan rerank), in bytes of the scanned input: the
-#: frame's Catalyst estimate (sources.plan_size_bytes), or a known
-#: candidate count times its row width. Below it the scan stays codegen
-#: whatever the dim or LUT size: an Arrow UDF job pays a Python worker
-#: round trip that the JVM projection does not. Measured exact
-#: single-query L2 scans at dim 64 (4-vCPU VM, local[4], one parquet
-#: file, median of 6; Arrow / codegen): 6k rows (2.2 MB estimate)
-#: 399 / 339 ms, 24k rows (6.9 MB) 456 / 452 ms, 48k rows (13.2 MB)
-#: 502 / 708 ms, 96k rows (25.8 MB) 556 / 1009 ms. Unsized inputs
-#: keep the dim / fold rules.
-AUTO_SCAN_BYTES = 4 << 20
-
 _active_backend = "auto"
 
 
@@ -77,19 +66,13 @@ def set_backend(name: str) -> None:
     _active_backend = name
 
 
-def small_scan(size_bytes: int | None) -> bool:
-    """True when a scan is known to read less than AUTO_SCAN_BYTES
-    (None = unsized, never small)."""
-    return size_bytes is not None and size_bytes < AUTO_SCAN_BYTES
-
-
 def resolve_backend(dim: int | None = None, size_bytes: int | None = None) -> str:
     """Concrete backend for a literal-query distance of dimension
     ``dim`` under the active setting: "auto" picks arrow-numpy at
     dim >= AUTO_DIM unless ``size_bytes``, the scanned input's size
-    when the caller knows it, is below AUTO_SCAN_BYTES."""
+    when the caller knows it, is within the scale "scan" gate."""
     if _active_backend != "auto":
         return _active_backend
-    if dim is None or dim < AUTO_DIM or small_scan(size_bytes):
+    if dim is None or dim < AUTO_DIM or not scale.large("scan", size_bytes):
         return "codegen"
     return "arrow-numpy"

@@ -20,12 +20,13 @@ import os
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
+from sqlite_vector_spark import scale
 from sqlite_vector_spark.functions.distance import distance, vector_literal
 from sqlite_vector_spark.operators.knn_join import knn_join
 from sqlite_vector_spark.operators.quantize import quantize_codes_column
 from sqlite_vector_spark.operators.search import full_scan, full_scan_stream
 from sqlite_vector_spark.operators.topk import topk_per_key
-from sqlite_vector_spark.sources import plan_size_bytes, table, widen
+from sqlite_vector_spark.sources import table, widen
 
 # ---------------------------------------------------------------- shared constants (oracle.py mirrors these)
 
@@ -687,18 +688,6 @@ def knn_join_back(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: recall_at_k computes both ranking arms from ONE corpus pass (plus a
-#: bounded survivor checkpoint) when Catalyst estimates the embedding
-#: table at/above this many bytes or cannot size it; below it the
-#: extra checkpoint job costs more wall-clock than the corpus scan it
-#: saves (r14 paired A/B at sf0.1: 2.36 two-scan vs 2.61 single-pass —
-#: the trade inverts once the scan dominates). Results are identical
-#: on both arms (pinned by tests/test_retrieval.py).
-RECALL_SINGLE_PASS_MIN_BYTES = int(
-    os.environ.get("SPARK_GRAFT_RECALL_SINGLE_PASS_MIN_BYTES", str(256 << 20))
-)
-
-
 def recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference's own recall harness (QUANTIZATION.md:44-76):
     |approx top-k ∩ exact top-k| / k per query -> (qid, recall)."""
@@ -712,8 +701,11 @@ def recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
         return topk_per_key(scored, keys, order, RECALL_K, salt=16)
 
     prm = _shared_params(emb)
-    est = plan_size_bytes(emb)
-    if est is None or est >= RECALL_SINGLE_PASS_MIN_BYTES:
+    # scale gate "single_pass": within the partition budget the extra
+    # checkpoint job costs more wall-clock than the corpus scan it
+    # saves (r14 paired A/B at sf0.1: 2.36 two-scan vs 2.61
+    # single-pass); results are identical on both arms
+    if scale.large("single_pass", emb):
         # single-pass arm (r15, VERDICT r14 #9): both arms' distances
         # from ONE corpus x queries pass. The per-arm rows are emitted
         # by a map-side explode (so neither arm's subtree can be

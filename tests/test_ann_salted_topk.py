@@ -11,12 +11,10 @@ correctness argument: any global top-k row is top-k of its
 
 from __future__ import annotations
 
-import importlib
-
 import pyspark.sql.functions as F
 import pytest
 
-kj = importlib.import_module("sqlite_vector_spark.operators.knn_join")
+from sqlite_vector_spark import scale
 
 
 @pytest.fixture(scope="module")
@@ -40,12 +38,12 @@ def _rows(df):
 def _forced(build):
     """Build the frame under a 1 KiB salt budget (forces the two-phase
     window for any parquet-sized input), restoring the module global."""
-    orig = kj.SALT_BYTES_PER_PARTITION
-    kj.SALT_BYTES_PER_PARTITION = 1 << 10
+    orig = scale.BUDGET_BYTES
+    scale.BUDGET_BYTES = 1 << 10
     try:
         return build()
     finally:
-        kj.SALT_BYTES_PER_PARTITION = orig
+        scale.BUDGET_BYTES = orig
 
 
 def test_ivf_knn_join_salted_identical(spark, emb):

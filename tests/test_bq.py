@@ -245,6 +245,31 @@ def test_bq_store_append_equals_rebuild(spark, emb, tmp_path):
     assert rep_bad.drift > 0.15 and rep_bad.rebuild_recommended
 
 
+def test_bq_store_append_wide_arm_equals_observed(spark, emb, tmp_path, monkeypatch):
+    """Codes wider than _OBS_BIAS_MAX_DIM take the checkpoint +
+    mapInPandas arm instead of dim+1 observe metrics. With the cap at
+    32, a dim-64 append reports exactly what the observed arm reports,
+    and its bias is bq_bit_bias of the encoded batch."""
+    import pyspark.sql.functions as F
+
+    from sqlite_vector_spark.operators import bq
+
+    dim = 64
+    batch = emb.where(F.col("vec_id") % 2 == 1)
+
+    def append(dest):
+        return bq.bq_store_append(
+            batch, "embedding", dim, str(tmp_path / dest), id_col="vec_id", baseline_bit_bias=0.01
+        )
+
+    observed = append("observed")
+    monkeypatch.setattr(bq, "_OBS_BIAS_MAX_DIM", 32)
+    wide = append("wide")
+    assert wide == observed and wide.n_appended == batch.count()
+    codes = bq.bq_encode(batch, "embedding", dim, id_col="vec_id")
+    assert wide.mean_bit_bias == bq.bq_bit_bias(codes, dim)
+
+
 # ---------------------------------------------------------------- multi-index Hamming join
 
 

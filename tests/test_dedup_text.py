@@ -103,49 +103,39 @@ def test_embedding_neardup_finds_identical_vectors(spark):
     assert normalized_plan(enum) == normalized_plan(embedding_neardup_pairs(df, "id", "v", planes, threshold=0.01))
 
 
-def test_embedding_neardup_prefilter_gate_identical(spark, emb):
+def test_embedding_neardup_prefilter_gate_identical(spark, emb, monkeypatch):
     """The r15 size-gated collision prefilter must be invisible in
     the results: forcing the prefilter ON (threshold 0) and OFF
     (threshold huge) returns the same pair set on real vectors —
     singleton buckets can produce no (a < b) pair, so dropping them
     before the self-join only removes rows the join would discard."""
+    from sqlite_vector_spark import scale
     from sqlite_vector_spark import workload as w
-    from sqlite_vector_spark.operators import dedup as dd
 
     planes, t = w.HYPERPLANES, w.NEARDUP_T  # known non-empty at sf0.001
-    orig = dd.PREFILTER_MIN_BYTES
-    try:
-        dd.PREFILTER_MIN_BYTES = 0  # always prefilter
-        on = sorted(
-            (r.a, r.b, r.distance)
-            for r in embedding_neardup_pairs(emb, "vec_id", "embedding", planes, t).collect()
-        )
-        dd.PREFILTER_MIN_BYTES = 1 << 60  # never prefilter
-        off = sorted(
-            (r.a, r.b, r.distance)
-            for r in embedding_neardup_pairs(emb, "vec_id", "embedding", planes, t).collect()
-        )
-    finally:
-        dd.PREFILTER_MIN_BYTES = orig
+
+    def pairs(budget):
+        monkeypatch.setattr(scale, "BUDGET_BYTES", budget)
+        got = embedding_neardup_pairs(emb, "vec_id", "embedding", planes, t)
+        return sorted((r.a, r.b, r.distance) for r in got.collect())
+
+    on = pairs(0)  # always prefilter
+    off = pairs(1 << 60)  # never prefilter
     assert on == off and len(on) > 0
 
 
-def test_edit_distance_pairs_pull_gate_identical(spark, docs):
+def test_edit_distance_pairs_pull_gate_identical(spark, docs, monkeypatch):
     """The r15 size-gated candidate text pull must be invisible in
     the results: the direct two-scan attach (below threshold) and the
     checkpointed semi-join pull (above) return identical rows."""
-    from sqlite_vector_spark.operators import dedup as dd
+    from sqlite_vector_spark import scale
     from sqlite_vector_spark.operators.dedup import edit_distance_pairs, lsh_candidate_pairs
 
     cand = lsh_candidate_pairs(docs, "doc_id", "text")
-    orig = dd.TEXT_PULL_MIN_BYTES
-    try:
-        dd.TEXT_PULL_MIN_BYTES = 1 << 60  # force the direct shape
-        direct = sorted(map(tuple, edit_distance_pairs(cand, docs).collect()))
-        dd.TEXT_PULL_MIN_BYTES = 0  # force the candidate-bounded pull
-        pulled = sorted(map(tuple, edit_distance_pairs(cand, docs).collect()))
-    finally:
-        dd.TEXT_PULL_MIN_BYTES = orig
+    monkeypatch.setattr(scale, "BUDGET_BYTES", 1 << 60)  # force the direct shape
+    direct = sorted(map(tuple, edit_distance_pairs(cand, docs).collect()))
+    monkeypatch.setattr(scale, "BUDGET_BYTES", 0)  # force the candidate-bounded pull
+    pulled = sorted(map(tuple, edit_distance_pairs(cand, docs).collect()))
     assert direct == pulled and len(direct) > 0
 
 

@@ -41,15 +41,11 @@ def test_join_back_broadcasts_results(spark, emb):
     assert joined.count() == 6
 
 
-def test_auto_salt_thresholds_and_identical_results(spark, emb):
+def test_auto_salt_thresholds_and_identical_results(spark, emb, monkeypatch):
     """VERDICT r5 #7: the two-phase window engages automatically when
     Catalyst's corpus size estimate crosses the per-partition budget,
     and salted results are identical to the plain window's."""
-    import pyspark.sql.functions as F
-
-    import importlib
-
-    kj = importlib.import_module("sqlite_vector_spark.operators.knn_join")
+    from sqlite_vector_spark import scale
 
     queries = emb.where("vec_id < 2").select(
         F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
@@ -62,26 +58,22 @@ def test_auto_salt_thresholds_and_identical_results(spark, emb):
         return plan.count("Window [row_number()")
 
     # small parquet corpus under the budget: single window, no salt
-    plain = kj.knn_join(queries, emb, 5, "L2", corpus_vec="embedding", corpus_id="vec_id")
+    plain = knn_join(queries, emb, 5, "L2", corpus_vec="embedding", corpus_id="vec_id")
     assert n_windows(plain) == 1
     # derived salt crosses the threshold when the budget shrinks
-    orig = kj.SALT_BYTES_PER_PARTITION
-    kj.SALT_BYTES_PER_PARTITION = 1 << 10
-    try:
-        salted = kj.knn_join(queries, emb, 5, "L2", corpus_vec="embedding", corpus_id="vec_id")
-        assert n_windows(salted) == 2  # local bucket top-k + global window
-        assert [tuple(r) for r in salted.orderBy("qid", "rank").collect()] == [
-            tuple(r) for r in plain.orderBy("qid", "rank").collect()
-        ]
+    monkeypatch.setattr(scale, "BUDGET_BYTES", 1 << 10)
+    salted = knn_join(queries, emb, 5, "L2", corpus_vec="embedding", corpus_id="vec_id")
+    assert n_windows(salted) == 2  # local bucket top-k + global window
+    assert [tuple(r) for r in salted.orderBy("qid", "rank").collect()] == [
+        tuple(r) for r in plain.orderBy("qid", "rank").collect()
+    ]
 
-        # Catalyst sizes a localCheckpoint; a createDataFrame(rdd,
-        # schema) frame is unsized and never salts
-        ckpt = emb.select("vec_id", "embedding").localCheckpoint(eager=True)
-        assert kj._auto_salt(ckpt) is not None
-        unsized = spark.createDataFrame(emb.rdd, emb.schema)
-        assert kj._auto_salt(unsized) is None
-    finally:
-        kj.SALT_BYTES_PER_PARTITION = orig
+    # Catalyst sizes a localCheckpoint; a createDataFrame(rdd, schema)
+    # frame is unsized, and unsized counts as large: the cap
+    ckpt = emb.select("vec_id", "embedding").localCheckpoint(eager=True)
+    assert scale.salt(ckpt) is not None
+    unsized = spark.createDataFrame(emb.rdd, emb.schema)
+    assert scale.salt(unsized) == scale.SALT_MAX
 
 
 def _tiny_join(spark, fn, salt):

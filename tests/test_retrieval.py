@@ -177,44 +177,59 @@ def test_ivf_recall_curve_monotone(spark):
     assert 0.0 <= recalls[0] <= 1.0
 
 
-def test_ivf_recall_curve_salted_tier_window_identical(spark):
+def test_ivf_recall_curve_salted_tier_window_identical(spark, monkeypatch):
     """The r15 two-phase (salted) tier top-K must be invisible in the
-    results: forcing _auto_salt on (tiny partition budget) and the
+    results: forcing the salt on (tiny partition budget) and the
     local default (no salting) return the same curve. Any (qid, pos)
     tier top-K row is top-K of its own salt bucket, so phase 1 cannot
     drop a survivor."""
-    import importlib
-
+    from sqlite_vector_spark import scale
     from sqlite_vector_spark import workload as w
 
-    kj = importlib.import_module("sqlite_vector_spark.operators.knn_join")
     sf = "/root/testdata/sf0.001"
     plain = [(r.nprobe, r.recall) for r in w.ivf_recall_curve_q(spark, sf).collect()]
-    orig = kj.SALT_BYTES_PER_PARTITION
-    kj.SALT_BYTES_PER_PARTITION = 1 << 10  # force the salted shape
-    try:
-        salted = [(r.nprobe, r.recall) for r in w.ivf_recall_curve_q(spark, sf).collect()]
-    finally:
-        kj.SALT_BYTES_PER_PARTITION = orig
+    monkeypatch.setattr(scale, "BUDGET_BYTES", 1 << 10)  # force the salted shape
+    salted = [(r.nprobe, r.recall) for r in w.ivf_recall_curve_q(spark, sf).collect()]
     assert salted == plain
 
 
-def test_recall_at_k_single_pass_arm_identical(spark):
+def test_recall_at_k_single_pass_arm_identical(spark, monkeypatch):
     """The r15 single-pass arm of recall_at_k (both ranking arms from
-    one corpus pass + survivor checkpoint, taken when Catalyst sizes
-    the input at/above RECALL_SINGLE_PASS_MIN_BYTES) must be invisible
+    one corpus pass + survivor checkpoint, taken when the input is
+    above the partition budget) must be invisible
     in the results: forcing it and the local default (two-scan form)
     return identical (qid, recall) rows. Per-arm row sets and distance
     expressions are shared, and row_number's (distance, id) ordering
     is total, so survivors cannot differ."""
+    from sqlite_vector_spark import scale
     from sqlite_vector_spark import workload as w
 
     sf = "/root/testdata/sf0.001"
     plain = sorted(map(tuple, w.recall_at_k(spark, sf).collect()))
-    orig = w.RECALL_SINGLE_PASS_MIN_BYTES
-    w.RECALL_SINGLE_PASS_MIN_BYTES = 0  # force the single-pass arm
-    try:
-        single = sorted(map(tuple, w.recall_at_k(spark, sf).collect()))
-    finally:
-        w.RECALL_SINGLE_PASS_MIN_BYTES = orig
+    monkeypatch.setattr(scale, "BUDGET_BYTES", 0)  # force the single-pass arm
+    single = sorted(map(tuple, w.recall_at_k(spark, sf).collect()))
     assert single == plain
+
+
+def test_bm25_batch_topk_salt_sized_from_docs_times_queries(spark, docs, monkeypatch):
+    """bm25_batch_topk ranks docs x queries rows, so its salt is sized
+    from the docs estimate times the query count: a budget between
+    the two sizes salts the window, and the salted rows equal the
+    plain window's."""
+    from sqlite_vector_spark import scale
+    from sqlite_vector_spark.operators.retrieval import bm25_batch_topk
+    from sqlite_vector_spark.workload import BM25_BATCH
+
+    def windows(df):
+        return df._jdf.queryExecution().executedPlan().toString().count("Window [row_number()")
+
+    def rows(df):
+        return [tuple(r) for r in df.orderBy("qid", "rank").collect()]
+
+    plain = bm25_batch_topk(docs, BM25_BATCH, 5)
+    assert windows(plain) == 1
+    monkeypatch.setattr(scale, "BUDGET_BYTES", 2 * scale.size(docs))
+    assert len(BM25_BATCH) > 2
+    salted = bm25_batch_topk(docs, BM25_BATCH, 5)
+    assert windows(salted) == 2
+    assert rows(salted) == rows(plain)

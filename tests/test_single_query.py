@@ -1,7 +1,7 @@
 """Single-query kNN on small inputs stays in the JVM.
 
 router.knn on the store tiers (exact, quantized, ivf, bq, pq, ivf_pq,
-mih) at dim >= AUTO_DIM: a sized input below version.AUTO_SCAN_BYTES
+mih) at dim >= AUTO_DIM: a sized input within scale.SCAN_BYTES
 is scored by the codegen folds (no Arrow UDF), the plan is built as
 one SQL statement in a bounded number of py4j calls and without a
 Spark job, from a fresh catalog too (store schemas come from parquet
@@ -21,7 +21,7 @@ import pytest
 from py4j import clientserver, protocol
 from pyspark.errors import ParseException
 
-from sqlite_vector_spark import router
+from sqlite_vector_spark import router, scale
 from sqlite_vector_spark.catalog import VectorCatalog
 from sqlite_vector_spark.operators.ann import ivf_store, ivf_store_append
 from sqlite_vector_spark.operators.bq import bq_band_store, bq_encode, bq_rerank_scan, bq_store
@@ -33,9 +33,8 @@ from sqlite_vector_spark.operators.quantize import (
 )
 from sqlite_vector_spark.operators.search import full_scan
 from sqlite_vector_spark.sinks import read_store
-from sqlite_vector_spark.sources import plan_size_bytes
 from sqlite_vector_spark.sql import route_sql
-from sqlite_vector_spark.version import AUTO_DIM, AUTO_SCAN_BYTES
+from sqlite_vector_spark.version import AUTO_DIM
 
 N, DIM, C = 600, 64, 8
 TIERS = ("exact", "quantized", "ivf", "bq", "pq", "ivf_pq", "mih")
@@ -131,8 +130,7 @@ def _jobs_of(spark, group, fn):
 def test_gate_sizes_the_fixture_small(spark, tiers):
     cat, root, _, _ = tiers
     assert DIM >= AUTO_DIM
-    size = plan_size_bytes(spark.table("sq_corpus"))
-    assert size is not None and size < AUTO_SCAN_BYTES
+    assert not scale.large("scan", spark.table("sq_corpus"))
 
 
 @pytest.mark.parametrize("tier", TIERS)
@@ -185,18 +183,18 @@ def test_steady_state_queries_compile_no_classes(spark, tiers, tier, cat):
 
 
 def test_input_above_gate_keeps_arrow(spark, tiers, tmp_path):
-    """A scan Catalyst sizes at or above AUTO_SCAN_BYTES, and a BQ
+    """A scan Catalyst sizes above scale.SCAN_BYTES, and a BQ
     rerank whose candidates (prefilter, bounded by the frame) are that
     large, keep the Arrow kernel."""
     rng = np.random.default_rng(11)
     n = 20000
     _write_vectors(str(tmp_path / "big.parquet"), np.arange(n), rng.normal(0.0, 1.0, (n, DIM)))
     big = spark.read.parquet(str(tmp_path / "big.parquet"))
-    assert plan_size_bytes(big) >= AUTO_SCAN_BYTES
+    assert scale.large("scan", big)
     q = rng.normal(0.0, 1.0, DIM).tolist()
     assert "ArrowEvalPython" in _plan(full_scan(big, "vec", q, 10))
 
-    wide = AUTO_SCAN_BYTES // (8 * (DIM + 1)) + 1
+    wide = scale.SCAN_BYTES // (8 * (DIM + 1)) + 1
     assert "ArrowEvalPython" in _plan(bq_rerank_scan(big, "vec", q, 10, wide))
     assert "ArrowEvalPython" not in _plan(bq_rerank_scan(big, "vec", q, 10, 100))
     # a prefilter wider than a small frame is bounded by the frame

@@ -8,6 +8,7 @@ import duckdb
 import pytest
 
 import __spark_entry__ as entry
+from sqlite_vector_spark import scale
 from tests.conftest import SF_SMOKE
 
 SPOT = [
@@ -113,8 +114,18 @@ def test_every_query_runs_and_has_oracle(spark):
     assert not missing, f"queries without oracle: {missing}"
 
 
-@pytest.mark.parametrize("name", SPOT)
-def test_spot_oracle_match(spark, duck, name):
+#: every entry that reaches a byte gate, spot-checked again with the
+#: partition budget at 1 byte: each gate then takes its scale arm (the
+#: salted window, the collision prefilter, the text pull, the single
+#: pass), which no sf0.001 input reaches on its own
+FORCED = ["knn_join_l2", "bm25_batch_topk", "embedding_neardup", "edit_distance_pairs", "recall_at_k"]
+
+
+@pytest.mark.parametrize("name", SPOT + [f"{n}-forced" for n in FORCED])
+def test_spot_oracle_match(spark, duck, name, monkeypatch):
+    if name.endswith("-forced"):
+        name = name.removesuffix("-forced")
+        monkeypatch.setattr(scale, "BUDGET_BYTES", 1)
     qs, osql = entry.queries(), entry.oracle_sql()
     sdf = qs[name](spark, SF_SMOKE)
     scols = sorted(sdf.columns)

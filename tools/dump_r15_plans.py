@@ -11,8 +11,8 @@ e93c867 is produced from a detached worktree at a77932b.
 
 The *_salted_after.txt dumps (the two-phase top-k shape of
 ivf_knn_join_l2 / ivf_pq_knn_join_l2 / bq_knn_join_hamming /
-bq_band_join) force the salt gate with
-SPARK_GRAFT_SALT_BYTES_PER_PARTITION=1024; the DEFAULT sf0.1 plans
+bq_band_join) force the salt gate with a 1 KiB partition budget
+(SPARK_GRAFT_PARTITION_BYTES=1024); the DEFAULT sf0.1 plans
 are byte-identical to the pre-change tree (verified by worktree
 diff), which is why no plain _after dumps are committed for them.
 """
@@ -40,8 +40,8 @@ TARGETS = [
     "boilerplate_strip_q",
     # VERDICT r14 #9: gated single-pass recall harness. The default
     # (sf0.1) plan is the two-scan arm == the pre-change plan; dump
-    # the scale arm with SPARK_GRAFT_RECALL_SINGLE_PASS_MIN_BYTES=0
-    # and tag single_pass_after.
+    # the scale arm with SPARK_GRAFT_PARTITION_BYTES=1 and tag
+    # single_pass_after.
     "recall_at_k",
 ]
 

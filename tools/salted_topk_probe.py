@@ -4,7 +4,8 @@ pattern extended to the ANN join family).
 
 Synthesizes an N x D float32 embeddings table (deterministic
 id-seeded pseudo-noise) big enough that Catalyst's estimate crosses
-SALT_BYTES_PER_PARTITION, then times both window forms interleaved
+the partition budget (scale.BUDGET_BYTES, env
+SPARK_GRAFT_PARTITION_BYTES), then times both window forms interleaved
 (min-of-R) in ONE session and checks the collected top-k rows are
 equal. The salted form's claim is a SCALE property (bounded reduce
 partitions per query on a real cluster); locally the expectation is
@@ -47,7 +48,7 @@ def main():
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")
-    from sqlite_vector_spark.operators import knn_join as kj
+    from sqlite_vector_spark import scale
     from sqlite_vector_spark.operators.ann import ivf_knn_join
 
     root = tempfile.mkdtemp(prefix="salt_probe_")
@@ -64,7 +65,7 @@ def main():
             .parquet(dest)
         )
         emb = spark.read.parquet(dest)
-        est = int(emb._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+        est = scale.size(emb)
         cent = [list(r.embedding) for r in emb.orderBy("vec_id").limit(C).collect()]
         queries = emb.where(F.col("vec_id") < NQ).select(
             F.col("vec_id").alias("qid"), F.col("embedding").alias("qv")
@@ -75,24 +76,24 @@ def main():
                 queries, emb, cent, K, nprobe=NPROBE, id_col="vec_id", vec_col="embedding"
             )
 
-        auto_salt = kj._auto_salt(emb)
+        auto_salt = scale.salt(emb)
         spark.sparkContext.setJobDescription("salted_topk_probe warmup")
         build().count()
         res = {"plain": [], "salted": []}
         rows = {}
-        orig = kj.SALT_BYTES_PER_PARTITION
+        orig = scale.BUDGET_BYTES
         for r in range(RUNS):
             for arm, budget in (("plain", 1 << 60), ("salted", orig)):
-                kj.SALT_BYTES_PER_PARTITION = budget
+                scale.BUDGET_BYTES = budget
                 spark.sparkContext.setJobDescription(f"ivf_knn_join {arm} run{r}")
                 t0 = time.time()
                 got = sorted(map(tuple, build().collect()))
                 res[arm].append(round(time.time() - t0, 3))
                 rows[arm] = got
-        kj.SALT_BYTES_PER_PARTITION = orig
+        scale.BUDGET_BYTES = orig
         print(json.dumps({
             "n": N, "dim": DIM, "cpus": int(CPUS),
-            "plan_size_bytes": est, "auto_salt": auto_salt,
+            "size_bytes": est, "auto_salt": auto_salt,
             "plain_s": res["plain"], "salted_s": res["salted"],
             "plain_min": min(res["plain"]), "salted_min": min(res["salted"]),
             "rows_equal": rows["plain"] == rows["salted"],
