@@ -54,6 +54,7 @@ import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import Column
 
+from sqlite_vector_spark import scale
 from sqlite_vector_spark.types import Metric, parse_metric
 
 #: 8 * FLT_EPSILON — reference nearly_zero_float32 (sqlite-vector.c:994-996)
@@ -246,13 +247,14 @@ def distance_expr(
     a: str | Column,
     b: str | Column | Sequence[float],
     metric: str | Metric = Metric.L2,
-    size_bytes: int | None = None,
+    size_from: scale.Source = None,
 ) -> str | Column:
     """distance()'s two arms: the SQL text of the snapped fold, or,
     for a literal query the backend rule sends to the Arrow/NumPy
     kernel, that kernel's pandas UDF Column. A scan that builds its
     plan as one SQL statement (search.scan) splices the text; a UDF
-    has no SQL text."""
+    has no SQL text. ``size_from`` is the input a scan reads (see
+    version.resolve_backend)."""
     m = parse_metric(metric) if isinstance(metric, str) else metric
     sa = sql_operand(a)
     if isinstance(b, (list, tuple)):
@@ -263,7 +265,7 @@ def distance_expr(
         # plan-build time; both backends give bit-identical values.
         from sqlite_vector_spark.version import resolve_backend
 
-        if resolve_backend(len(b), size_bytes) == "arrow-numpy":
+        if resolve_backend(len(b), size_from) == "arrow-numpy":
             return distance_pandas_udf(m, b)(F.col(a) if isinstance(a, str) else a)
     return distance_tree_sql(sa, sql_operand(b), m)
 

@@ -30,7 +30,6 @@ import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
-from sqlite_vector_spark import scale
 from sqlite_vector_spark.functions.distance import (
     array_literal,
     batch_matrix,
@@ -228,16 +227,11 @@ def hamming_rerank(
     ``prefilter`` ids) returns: search.rerank, sized by the rerank's
     own input."""
     # the rerank scores at most ``prefilter`` rows (an 8-byte id and
-    # dim doubles each) and at most the whole frame: the smaller known
-    # bound sizes its backend (the frame is sized only when the first
-    # bound is not already within the gate)
-    size = prefilter * 8 * (len(query) + 1)
-    if scale.large("scan", size):
-        full = frames_sql(scan_sql("src", vec_col, sql_operand(vec_col), None, id_col, "vec"), src=df)
-        full_bytes = scale.size(full)
-        if full_bytes is not None:
-            size = min(size, full_bytes)
-    return rerank(df, vec_col, query, k, metric, id_col, candidates, size, **frames)
+    # dim doubles each) and at most the whole frame: two bounds on its
+    # input, and the frame is sized only when the first is not already
+    # within the scan gate
+    bound = prefilter * 8 * (len(query) + 1)
+    return rerank(df, vec_col, query, k, metric, id_col, candidates, (bound, df), **frames)
 
 
 @dataclass

@@ -76,21 +76,21 @@ def _check_codebooks(codebooks: Codebooks) -> tuple[int, int, int]:
     return m, ksub, dsub
 
 
-def _pq_backend(codebooks: Codebooks, size_bytes: int | None = None) -> str:
+def _pq_backend(codebooks: Codebooks, size_from: scale.Source = None) -> str:
     """codegen (bit-exact literal folds — the oracle path) vs
     arrow-numpy (O(1) plan size). Same dispatch contract as
     ann._assign_backend: honour a pinned backend; auto routes on the
     m*ksub FOLD count — each codebook entry is its own argmin
     expression tree, so fold count (not raw literals) drives the
     codegen cost (AUTO_PQ_FOLDS, measured in version.py). A scan whose
-    ``size_bytes`` is within the scale "scan" gate stays codegen at any
-    fold count (see pq_scan)."""
+    input ``size_from`` is within the scale "scan" gate stays codegen
+    at any fold count (see pq_scan); without one the gate is not asked."""
     from sqlite_vector_spark.version import AUTO_PQ_FOLDS, vector_backend
 
     active = vector_backend()
     if active != "auto":
         return active
-    if not scale.large("scan", size_bytes):
+    if size_from is not None and not scale.large("scan", size_from):
         return "codegen"
     m, ksub, _dsub = _check_codebooks(codebooks)
     return "arrow-numpy" if m * ksub >= AUTO_PQ_FOLDS else "codegen"
@@ -487,7 +487,7 @@ def _adc_distance(codes_df: DataFrame, codes_col: str, query, codebooks, metric)
     """pq_scan's score: the ADC fold's SQL text, or the Arrow LUT
     gather when the backend rule picks it for this code table."""
     luts = adc_lut([float(x) for x in query], codebooks)
-    if _pq_backend(codebooks, scale.size(codes_df)) == "arrow-numpy":
+    if _pq_backend(codebooks, codes_df) == "arrow-numpy":
         return adc_distance_arrow_udf(luts, metric)(F.col(codes_col))
     return adc_distance_sql(codes_col, luts, metric)
 

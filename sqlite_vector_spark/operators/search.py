@@ -131,29 +131,20 @@ def rerank(
     metric: str | Metric,
     id_col: str,
     candidates: str,
-    size_bytes: int | None = None,
+    size_from: scale.Source = None,
     **frames: DataFrame,
 ) -> DataFrame:
     """The second stage of a two-stage search: exact top-k over the
     rows of ``df`` whose id the query ``candidates`` (over ``frames``)
     returns, joined as a broadcast semi-join before any row is scored.
-    One statement; an Arrow distance (``size_bytes`` sizes the
+    One statement; an Arrow distance (``size_from`` sizes the
     backend, see distance_expr) scores the joined rows in a second."""
-    dist = distance_expr("vec", [float(x) for x in query], metric, size_bytes=size_bytes)
+    dist = distance_expr("vec", [float(x) for x in query], metric, size_from=size_from)
     rows = scan_sql("src", column, sql_operand(column), None, id_col, name="vec")
     joined = f"SELECT /*+ BROADCAST(c) */ * FROM ({rows}) LEFT SEMI JOIN ({candidates}) c USING (id)"
     if isinstance(dist, Column):
         return scan(frames_sql(joined, src=df, **frames), None, dist, k)
     return frames_sql(scan_sql(f"({joined})", None, dist, k), src=df, **frames)
-
-
-def _scan_distance(df: DataFrame, column: str, query, metric) -> str | Column:
-    """A literal query on an input Catalyst sizes within
-    scale.SCAN_BYTES is scored by the codegen fold at any dim: a
-    single-query scan that small finishes sooner in the JVM than an
-    Arrow UDF job's Python round trip (measurements in scale.py)."""
-    size = None if isinstance(query, Column) else scale.size(df)
-    return distance_expr(column, query, metric, size_bytes=size)
 
 
 def full_scan(
@@ -172,7 +163,7 @@ def full_scan(
     """
     if k < 0:
         raise ValueError("k must be >= 0")
-    return scan(df, column, _scan_distance(df, column, query, metric), k, id_col)
+    return scan(df, column, distance_expr(column, query, metric, size_from=df), k, id_col)
 
 
 def full_scan_stream(
@@ -184,7 +175,7 @@ def full_scan_stream(
 ) -> DataFrame:
     """Pipelined exact scoring of every row (no k, no sort) ->
     DataFrame(id, distance). A narrow projection: zero shuffles."""
-    return scan(df, column, _scan_distance(df, column, query, metric), None, id_col)
+    return scan(df, column, distance_expr(column, query, metric, size_from=df), None, id_col)
 
 
 def full_scan_normalized_cosine(
@@ -226,7 +217,7 @@ def full_scan_normalized_cosine(
     # the DOT distance is the NEGATED dot (smaller = closer) and keeps
     # full_scan's backend dispatch (codegen fold vs Arrow matmul);
     # 1 + it == 1 − a·q̂ == cosine for unit rows
-    d = _scan_distance(df, column, [x / norm for x in q], Metric.DOT)
+    d = distance_expr(column, [x / norm for x in q], Metric.DOT, size_from=df)
     d = snap_zero(F.lit(1.0) + d) if isinstance(d, Column) else snap_zero_sql(f"1.0D + {d}")
     return scan(df, column, d, k, id_col)
 
@@ -266,11 +257,10 @@ def matryoshka_scan(
         raise ValueError("coarse_m must be >= k (rerank cannot widen)")
     # both passes pick their backend by the corpus's size, as full_scan
     # does, so that a coarse_m covering the corpus gives full_scan's values
-    size = scale.size(df)
     prefix = F.expr(f"slice({sql_operand(column)}, 1, {coarse_dim})")
     coarse_src, cd = readable(
-        df, distance_expr(prefix, [float(x) for x in query][:coarse_dim], metric, size_bytes=size)
+        df, distance_expr(prefix, [float(x) for x in query][:coarse_dim], metric, size_from=df)
     )
     coarse = scan_sql("coarse", column, cd, coarse_m, id_col, name="cd")
-    return rerank(df, column, query, k, metric, id_col, f"SELECT id FROM ({coarse})", size,
+    return rerank(df, column, query, k, metric, id_col, f"SELECT id FROM ({coarse})", df,
                   coarse=coarse_src)

@@ -4,8 +4,10 @@ The reference keeps no index and scans everything. The Spark port's
 extra job is to pick a shuffle-bounding shape once an input is large,
 the way ``sources.widen`` gates on ``inputFiles()``: the cheap local
 shape below a limit, the scale shape above it. Every such byte gate
-asks ``large(gate, src)``, with ``src`` a frame (sized by ``size``),
-a byte bound the caller knows, or None. An input Catalyst cannot size
+asks ``large(gate, src)``: "scan" (version.resolve_backend,
+pq._pq_backend) on SCAN_BYTES; "salt" (topk.topk_per_key),
+"prefilter", "text_pull" (dedup) and "single_pass"
+(workload.recall_at_k) on BUDGET_BYTES. An input Catalyst cannot size
 counts as LARGE, the scale-safe arm: on a small input it costs some
 extra work, while the small arm on a large input loses the shuffle
 bound. Each decision is logged at DEBUG on the ``sqlite_vector_spark``
@@ -24,7 +26,10 @@ from pyspark.sql import DataFrame
 #: bytes one partition of a scale-shaped stage is budgeted: a rank
 #: window's key partition, a bucket self-join, a corpus text pull.
 #: Above it every "budget" gate takes its large arm, and the rank
-#: window salts. Setting it to 1 forces every budget gate large.
+#: window salts. Setting it to 1 forces every budget gate large. The
+#: ANN joins (knn_join, ann, pq, bq) size a rank window from their
+#: corpus, the rows one query's partition holds; bm25_batch_topk sizes
+#: it from docs x queries, the whole frame it ranks, so it salts sooner.
 BUDGET_BYTES = int(os.environ.get("SPARK_GRAFT_PARTITION_BYTES", str(256 << 20)))
 
 #: single-query scans known to read at most this many bytes keep the
@@ -38,16 +43,6 @@ SCAN_BYTES = 4 << 20
 
 #: most buckets a salted rank window splits one key into
 SALT_MAX = 64
-
-#: every byte gate -> the name of the limit it compares against, read
-#: when the gate is asked, so a patched constant applies
-GATES = {
-    "salt": "BUDGET_BYTES",  # topk.topk_per_key(salt="auto")
-    "prefilter": "BUDGET_BYTES",  # dedup.embedding_neardup_pairs
-    "text_pull": "BUDGET_BYTES",  # dedup.edit_distance_pairs
-    "single_pass": "BUDGET_BYTES",  # workload.recall_at_k
-    "scan": "SCAN_BYTES",  # version.resolve_backend, pq._pq_backend, bq.hamming_rerank
-}
 
 _log = logging.getLogger("sqlite_vector_spark")
 
@@ -66,25 +61,41 @@ def size(df: DataFrame) -> int | None:
     return None if est >= 1 << 59 else est
 
 
-def _bytes(src: DataFrame | int | None) -> int | None:
-    return size(src) if isinstance(src, DataFrame) else src
+#: what a gate sizes: a frame, its known bytes, None (unsized), or a
+#: tuple of bounds on one input, sized in order until one is within
+#: the limit (a later frame is sized only when needed)
+Source = DataFrame | int | None | tuple
 
 
-def large(gate: str, src: DataFrame | int | None) -> bool:
-    """True when ``src`` is above ``gate``'s limit (see GATES) or
-    cannot be sized."""
-    est = _bytes(src)
-    out = est is None or est > globals()[GATES[gate]]
+def _bytes(src: Source, limit: int) -> int | None:
+    if not isinstance(src, tuple):
+        return size(src) if isinstance(src, DataFrame) else src
+    known = []
+    for s in src:
+        est = _bytes(s, limit)
+        if est is not None:
+            known.append(est)
+            if est <= limit:
+                break
+    return min(known, default=None)
+
+
+def large(gate: str, src: Source) -> bool:
+    """True when ``src`` is above ``gate``'s limit (SCAN_BYTES for
+    "scan", else BUDGET_BYTES) or cannot be sized."""
+    limit = SCAN_BYTES if gate == "scan" else BUDGET_BYTES
+    est = _bytes(src, limit)
+    out = est is None or est > limit
     _log.debug("size gate %s: %s -> %s", gate, "unsized" if est is None else est,
                "large" if out else "small")
     return out
 
 
-def salt(src: DataFrame | int | None) -> int | None:
+def salt(src: Source) -> int | None:
     """Rank-window salt for an input of ``src``'s size: None (one
     window) within the budget, else ceil(size / budget) capped at
     SALT_MAX; SALT_MAX when unsized."""
-    est = _bytes(src)
+    est = _bytes(src, BUDGET_BYTES)
     if not large("salt", est):
         return None
     if est is None:

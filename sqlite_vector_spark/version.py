@@ -66,13 +66,15 @@ def set_backend(name: str) -> None:
     _active_backend = name
 
 
-def resolve_backend(dim: int | None = None, size_bytes: int | None = None) -> str:
+def resolve_backend(dim: int | None = None, size_from: scale.Source = None) -> str:
     """Concrete backend for a literal-query distance of dimension
     ``dim`` under the active setting: "auto" picks arrow-numpy at
-    dim >= AUTO_DIM unless ``size_bytes``, the scanned input's size
-    when the caller knows it, is within the scale "scan" gate."""
+    dim >= AUTO_DIM unless ``size_from``, the input a scan reads (a
+    frame or its known bytes, see scale.Source), is within the scale
+    "scan" gate. A caller with no scan input passes None and the gate
+    is not asked."""
     if _active_backend != "auto":
         return _active_backend
-    if dim is None or dim < AUTO_DIM or not scale.large("scan", size_bytes):
+    if dim is None or dim < AUTO_DIM or (size_from is not None and not scale.large("scan", size_from)):
         return "codegen"
     return "arrow-numpy"

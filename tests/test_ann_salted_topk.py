@@ -35,18 +35,16 @@ def _rows(df):
     return [tuple(r) for r in df.orderBy("qid", "rank").collect()]
 
 
-def _forced(build):
+def _forced(monkeypatch, build):
     """Build the frame under a 1 KiB salt budget (forces the two-phase
-    window for any parquet-sized input), restoring the module global."""
-    orig = scale.BUDGET_BYTES
-    scale.BUDGET_BYTES = 1 << 10
-    try:
+    window for any parquet-sized input); the budget is restored when
+    the build returns."""
+    with monkeypatch.context() as m:
+        m.setattr(scale, "BUDGET_BYTES", 1 << 10)
         return build()
-    finally:
-        scale.BUDGET_BYTES = orig
 
 
-def test_ivf_knn_join_salted_identical(spark, emb):
+def test_ivf_knn_join_salted_identical(monkeypatch, spark, emb):
     from sqlite_vector_spark.operators.ann import ivf_knn_join
 
     cent = [list(r.embedding) for r in emb.orderBy("vec_id").limit(8).collect()]
@@ -61,12 +59,12 @@ def test_ivf_knn_join_salted_identical(spark, emb):
 
     plain = build()
     assert _n_rank_windows(plain) == 1  # small corpus: plan unchanged
-    salted = _forced(build)
+    salted = _forced(monkeypatch, build)
     assert _n_rank_windows(salted) == 2
     assert _rows(salted) == _rows(plain)
 
 
-def test_ivf_pq_knn_join_salted_identical(spark, emb, books):
+def test_ivf_pq_knn_join_salted_identical(monkeypatch, spark, emb, books):
     from sqlite_vector_spark.operators.ann import ivf_assign
     from sqlite_vector_spark.operators.pq import ivf_pq_knn_join, pq_encode_col
 
@@ -86,12 +84,12 @@ def test_ivf_pq_knn_join_salted_identical(spark, emb, books):
 
     plain = build()
     assert _n_rank_windows(plain) == 1
-    salted = _forced(build)
+    salted = _forced(monkeypatch, build)
     assert _n_rank_windows(salted) == 2
     assert _rows(salted) == _rows(plain)
 
 
-def test_bq_knn_join_salted_identical(spark, emb):
+def test_bq_knn_join_salted_identical(monkeypatch, spark, emb):
     from sqlite_vector_spark.operators.bq import bq_encode, bq_knn_join
 
     codes = bq_encode(emb, "embedding", 64, id_col="vec_id")
@@ -104,12 +102,12 @@ def test_bq_knn_join_salted_identical(spark, emb):
 
     plain = build()
     assert _n_rank_windows(plain) == 1
-    salted = _forced(build)
+    salted = _forced(monkeypatch, build)
     assert _n_rank_windows(salted) == 2
     assert _rows(salted) == _rows(plain)
 
 
-def test_bm25_batch_topk_salted_identical(spark, docs):
+def test_bm25_batch_topk_salted_identical(monkeypatch, spark, docs):
     from sqlite_vector_spark.operators.retrieval import bm25_batch_topk
 
     queries = [(0, ["the", "of"]), (1, ["and", "data"])]
@@ -119,12 +117,12 @@ def test_bm25_batch_topk_salted_identical(spark, docs):
 
     plain = build()
     assert _n_rank_windows(plain) == 1
-    salted = _forced(build)
+    salted = _forced(monkeypatch, build)
     assert _n_rank_windows(salted) == 2
     assert _rows(salted) == _rows(plain)
 
 
-def test_bq_band_join_salted_identical(spark, emb, tmp_path):
+def test_bq_band_join_salted_identical(monkeypatch, spark, emb, tmp_path):
     from sqlite_vector_spark.operators.bq import bq_band_join, bq_band_store, bq_encode
 
     codes = bq_encode(emb, "embedding", 64, id_col="vec_id")
@@ -139,6 +137,6 @@ def test_bq_band_join_salted_identical(spark, emb, tmp_path):
 
     plain = build()
     assert _n_rank_windows(plain) == 1
-    salted = _forced(build)
+    salted = _forced(monkeypatch, build)
     assert _n_rank_windows(salted) == 2
     assert _rows(salted) == _rows(plain)

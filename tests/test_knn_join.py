@@ -68,10 +68,11 @@ def test_auto_salt_thresholds_and_identical_results(spark, emb, monkeypatch):
         tuple(r) for r in plain.orderBy("qid", "rank").collect()
     ]
 
-    # Catalyst sizes a localCheckpoint; a createDataFrame(rdd, schema)
-    # frame is unsized, and unsized counts as large: the cap
+    # Catalyst sizes a localCheckpoint (the streaming neardup batch
+    # relies on it); a createDataFrame(rdd, schema) frame is unsized,
+    # and unsized counts as large: the cap
     ckpt = emb.select("vec_id", "embedding").localCheckpoint(eager=True)
-    assert scale.salt(ckpt) is not None
+    assert scale.size(ckpt) is not None
     unsized = spark.createDataFrame(emb.rdd, emb.schema)
     assert scale.salt(unsized) == scale.SALT_MAX
 

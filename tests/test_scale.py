@@ -30,6 +30,33 @@ def test_stream_is_unsized(spark):
     assert scale.size(spark.readStream.format("rate").load()) is None
 
 
+def test_bounds_on_one_input(spark, caplog):
+    """A tuple of bounds is small once one known bound is within the
+    limit; later frames are then not sized, and only unknown bounds
+    leave it large."""
+    stream = spark.readStream.format("rate").load()
+    caplog.set_level(logging.DEBUG, logger="sqlite_vector_spark")
+    assert not scale.large("scan", (scale.SCAN_BYTES + 1, 5, stream))
+    assert scale.large("scan", (scale.SCAN_BYTES + 1, stream))
+    assert scale.large("scan", (None, stream))
+    assert [r.getMessage() for r in caplog.records] == [
+        "size gate scan: 5 -> small",
+        f"size gate scan: {scale.SCAN_BYTES + 1} -> large",
+        "size gate scan: unsized -> large",
+    ]
+
+
+def test_no_scan_input_asks_no_gate(caplog):
+    """A backend choice with no scan input (an encode, a stream's
+    per-dim rule) is not a size decision and logs none."""
+    from sqlite_vector_spark.version import resolve_backend, vector_backend
+
+    caplog.set_level(logging.DEBUG, logger="sqlite_vector_spark")
+    got = resolve_backend(64)
+    assert got == ("arrow-numpy" if vector_backend() == "auto" else vector_backend())
+    assert not caplog.records
+
+
 def _knn(spark, emb):
     from sqlite_vector_spark.operators.knn_join import knn_join
 
@@ -81,7 +108,6 @@ def test_gate_decision_is_logged(spark, caplog, gate, sized):
     """A small parquet input takes each gate's small arm and logs its
     estimate; the same rows through createDataFrame(rdd, schema) are
     unsized and take the large arm."""
-    assert set(GATES) == set(scale.GATES)
     table, build = GATES[gate]
     df = spark.read.parquet(f"{SF_SMOKE}/{table}.parquet")
     if not sized:
