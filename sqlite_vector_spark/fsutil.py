@@ -3,13 +3,14 @@
 The maintenance verbs (delete/compact/vacuum/takedown, batch and
 streaming) walk store layouts with a handful of metadata operations:
 list a prefix, stat/exists, rename, delete, read/write a small JSON
-sidecar. Written with ``os``/``shutil`` those verbs only run where
-the store root is a local path; routed through the Hadoop FileSystem
-API resolved from the path's scheme they run unchanged on file:,
-hdfs:, s3a:, ... — the same resolution Spark itself uses for the
-data files (versioned.py pioneered this for manifests in r12; r13
-generalizes it so STREAMING state lifecycle verbs work on object
-stores too, VERDICT r12 #2).
+sidecar. Every one of them goes through this module, which resolves a
+path's Hadoop FileSystem from its scheme and, for a scheme-less path,
+from ``fs.defaultFS`` — the same resolution Spark itself uses for the
+data files. A plain path on a deployment whose default filesystem is
+an object store is therefore walked where Spark wrote it, not on the
+driver's local disk (an ``os.listdir`` there returns nothing, and a
+takedown receipt built on it reads clean while the ids are still
+stored).
 
 Cost note for object stores: ``rename`` on a local/HDFS filesystem
 is an atomic metadata move; S3-class stores implement it as
@@ -21,9 +22,12 @@ the batch stores' preferred object-store mode is the rename-free
 manifest scheme (versioned.py) and the streaming verbs rename only
 bounded per-epoch dirs.
 
-Local paths (no scheme) take the plain ``os`` fast path — identical
-semantics, no JVM round-trips, and no behavior change for the
-existing local-store users.
+Measured through this layer (the ``mock:`` scheme forces it) at 1M
+rows, every lifecycle verb landed within session noise of the former
+``os`` path (SCALE.md, "Streaming lifecycle through the FS layer").
+The one exception kept is ``walk_files``'s local arm: there the
+Hadoop listing's per-file py4j round-trips cost 97 s on a
+3x4096-dir store that ``os.walk`` lists in under 0.1 s.
 """
 
 from __future__ import annotations
@@ -94,17 +98,15 @@ def _active_spark_or_none():
 
 
 def active_spark():
-    """The current SparkSession, required for remote filesystem access.
-
-    Raised loudly instead of silently falling back to ``os`` calls: a
-    verb that walked a remote root with os.listdir would report an
-    empty store and 'succeed'."""
+    """The current SparkSession, which resolves every path's Hadoop
+    filesystem. Raises when there is none: guessing a filesystem
+    without one could walk the wrong disk and report an empty store."""
     spark = _active_spark_or_none()
     if spark is None:
         raise RuntimeError(
-            "this path carries a URI scheme, which needs an active "
-            "SparkSession to resolve its Hadoop filesystem — start one "
-            "(or pass spark=) before running maintenance on remote stores"
+            "store and state paths resolve through the Hadoop FileSystem, "
+            "which needs an active SparkSession — start one (or pass "
+            "spark=) before running maintenance verbs"
         )
     return spark
 
@@ -127,24 +129,23 @@ def is_dir(spark, path: str) -> bool:
     return bool(fs.exists(jp)) and bool(fs.getFileStatus(jp).isDirectory())
 
 
-def list_names(spark, path: str) -> list[str]:
-    """Child names under a directory; [] when it does not exist."""
+def list_names(spark, path: str, pattern: str | None = None) -> list[str]:
+    """Child names under a directory; [] when it does not exist.
+    ``pattern`` is a glob on the child NAME (``_sv_*.json``), applied
+    in the JVM; unlike ``globStatus``, metacharacters in ``path``
+    itself stay literal. The names come back joined into one string,
+    so a listing costs the same few py4j round-trips however many
+    children the directory has (``getPath().getName()`` per child
+    would cost two each)."""
     jp, fs = fs_for(spark, path)
     if not fs.exists(jp):
         return []
-    return [st.getPath().getName() for st in fs.listStatus(jp)]
-
-
-def list_dirs(spark, path: str) -> list[str]:
-    """Child DIRECTORY names under a path, one listStatus round-trip
-    (an exists-per-child probe would cost C RPCs on an object store);
-    [] when the path does not exist."""
-    jp, fs = fs_for(spark, path)
-    if not fs.exists(jp):
-        return []
-    return [
-        st.getPath().getName() for st in fs.listStatus(jp) if st.isDirectory()
-    ]
+    gw = spark._jvm._gateway_client
+    sts = fs.listStatus(jp) if pattern is None else fs.listStatus(
+        jp, JavaClass("org.apache.hadoop.fs.GlobFilter", gw)(pattern))
+    paths = JavaClass("org.apache.hadoop.fs.FileUtil", gw).stat2Paths(sts)
+    text = JavaClass("scala.collection.mutable.ArraySeq", gw).make(paths).mkString("\n")
+    return [p.rsplit("/", 1)[1] for p in text.split("\n")] if text else []
 
 
 def mkdirs(spark, path: str) -> None:
@@ -165,10 +166,8 @@ def rename(spark, src: str, dst: str) -> None:
     corrupts the verb's accounting, so both normalize to OSError."""
     from py4j.protocol import Py4JJavaError
 
-    jvm = spark._jvm
-    jsrc = jvm.org.apache.hadoop.fs.Path(src)
-    jdst = jvm.org.apache.hadoop.fs.Path(dst)
-    fs = jsrc.getFileSystem(spark._jsc.hadoopConfiguration())
+    jsrc, fs = fs_for(spark, src)
+    jdst = JavaClass("org.apache.hadoop.fs.Path", spark._jvm._gateway_client)(dst)
     try:
         ok = fs.rename(jsrc, jdst)
     except Py4JJavaError as e:
@@ -180,17 +179,18 @@ def rename(spark, src: str, dst: str) -> None:
 
 def walk_files(spark, path: str) -> list[tuple[str, int]]:
     """Recursive (absolute_path, size) listing of every FILE under a
-    directory; [] when absent. Scheme-less paths walk with os.scandir:
-    the Hadoop RemoteIterator costs ~3 py4j round-trips PER FILE from
-    Python (~2 ms each — measured 97 s for a 3x4096-dir store where
-    os.walk takes <0.1 s, the real cost behind the r13 probe's 94 s
-    'vacuum' that VERDICT r13 #3 attributed to per-file deletes).
-    Scheme-carrying paths keep the iterator: there the LIST RPCs are
-    the unavoidable dominant cost and the py4j tax rides along on the
-    driver."""
+    directory; [] when absent. A scheme-less path that resolves to the
+    local filesystem (``is_remote`` says so — the rule the flat-swap
+    refusal uses) walks with ``os.walk``: the Hadoop listing costs ~3
+    py4j round-trips PER FILE from Python (~2 ms each — measured 97 s
+    for a 3x4096-dir store where os.walk takes <0.1 s, the real cost
+    behind the r13 probe's 94 s 'vacuum' that VERDICT r13 #3
+    attributed to per-file deletes). Every other path lists through
+    its Hadoop filesystem: there the LIST RPCs are the unavoidable
+    dominant cost and the py4j tax rides along on the driver."""
     import os
 
-    if not has_scheme(path):
+    if not has_scheme(path) and not is_remote(path, spark):
         out: list[tuple[str, int]] = []
         for dirpath, _dirnames, filenames in os.walk(path):
             for fn in filenames:
@@ -226,18 +226,26 @@ def walk_files(spark, path: str) -> list[tuple[str, int]]:
 
 
 def du_bytes(spark, path: str) -> int:
-    """Recursive byte size (ContentSummary); 0 when absent."""
-    jp, fs = fs_for(spark, path)
-    if not fs.exists(jp):
-        return 0
-    return int(fs.getContentSummary(jp).getLength())
+    """Recursive byte total of the files under a path; 0 when absent.
+    The one bytes-freed accounting of every vacuum verb, summed over
+    walk_files, so checksum sidecars count on no scheme."""
+    return sum(size for _, size in walk_files(spark, path))
+
+
+def _object_fs(fs):
+    """The filesystem small objects are read and written with: ``fs``
+    itself, or under ``file:`` the raw one beneath its checksum layer,
+    so a sidecar gets no hidden ``.crc`` and still reads after it is
+    edited or restored outside Hadoop. Listings keep the checksummed
+    one, which hides the ``.crc`` files Spark's own writes leave."""
+    return fs.getRawFileSystem() if fs.getScheme() == "file" else fs
 
 
 def put_text(spark, path: str, text: str) -> None:
     """PUT one small object (overwrite) — the commit primitive for
     manifests and sidecars."""
     jp, fs = fs_for(spark, path)
-    out = fs.create(jp, True)
+    out = _object_fs(fs).create(jp, True)
     try:
         out.write(bytearray(text.encode("utf-8")))
     finally:
@@ -251,8 +259,7 @@ def put_text_atomic(spark, path: str, text: str) -> None:
     S3-class adapters). A direct overwriting ``create()`` at the
     final name is truncate-then-write — a crash in between leaves a
     truncated object that bricks every later verb reading it (ADVICE
-    r13 #4; the local ``os.replace`` path has guarded this since
-    r11). Rename refuses an existing destination on most schemes, so
+    r13 #4). Rename refuses an existing destination on most schemes, so
     an existing object is deleted first: the vulnerable window
     shrinks from the whole write to the gap between two metadata
     ops, and a crash there leaves the intact ``.tmp`` beside the
@@ -267,9 +274,9 @@ def put_text_atomic(spark, path: str, text: str) -> None:
 
 
 def get_text(spark, path: str) -> str:
-    jvm = spark._jvm
+    gw = spark._jvm._gateway_client
     jp, fs = fs_for(spark, path)
-    stream = fs.open(jp)
-    baos = jvm.java.io.ByteArrayOutputStream()
-    jvm.org.apache.hadoop.io.IOUtils.copyBytes(stream, baos, 65536, True)
+    stream = _object_fs(fs).open(jp)
+    baos = JavaClass("java.io.ByteArrayOutputStream", gw)()
+    JavaClass("org.apache.hadoop.io.IOUtils", gw).copyBytes(stream, baos, 65536, True)
     return bytes(baos.toByteArray()).decode("utf-8")

@@ -847,7 +847,7 @@ def _label_state_takedown(spark, path: str, deleted_ids, resolve) -> dict:
     ``resolve(labels, batch)`` re-solves the affected components and
     the result replaces the state, its row count observed on the
     write: a flat state through sinks._flat_swap (a label state is
-    tiny, so the rename's copy cost on a scheme-carrying root is
+    tiny, so the rename's copy cost on a remote root is
     negligible), a VERSIONED one as a new manifest generation (a
     directory swap would silently downgrade its layout to flat)."""
     from sqlite_vector_spark.sinks import _flat_swap, _id_batch, read_store, write_observed

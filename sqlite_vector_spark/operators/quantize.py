@@ -43,7 +43,6 @@ non-finite rule (FIXTURES.md F4 "constant vectors").
 from __future__ import annotations
 
 import math
-import shutil
 from collections.abc import Sequence
 from dataclasses import dataclass
 
@@ -449,19 +448,14 @@ def vector_quantize_preload(codes_df: DataFrame) -> DataFrame:
 
 def vector_quantize_cleanup(codes_df: DataFrame | None = None, dest_path: str | None = None, catalog=None, table: str | None = None, column: str | None = None) -> None:
     """unpersist + drop the replica (parity: vector_quantize_cleanup,
-    sqlite-vector.c:1501-1524). Scheme-carrying replica roots (a
-    versioned/remote replica, r13) delete through the Hadoop FS layer
-    — shutil.rmtree on a URI silently no-ops under ignore_errors,
-    which would leave the store on disk while the catalog forgets it."""
+    sqlite-vector.c:1501-1524). The replica is deleted through fsutil,
+    on whatever filesystem Spark wrote it to (a missing one is a no-op)."""
     from sqlite_vector_spark import fsutil
 
     if codes_df is not None:
         codes_df.unpersist()
     if dest_path:
-        if fsutil.has_scheme(dest_path):
-            fsutil.delete(fsutil.active_spark(), dest_path, recursive=True)
-        else:
-            shutil.rmtree(dest_path, ignore_errors=True)
+        fsutil.delete(fsutil.active_spark(), dest_path, recursive=True)
     if catalog is not None and table and column:
         ctx = catalog.get(table, column)
         ctx.qscale = ctx.qoffset = ctx.resolved_qtype = ctx.quantized_path = None

@@ -263,57 +263,26 @@ def write_params_sidecar(path: str, params: dict) -> None:
     non-default LSH family and later maintained with the defaults
     would silently re-solve wrong (r10 judge What's-wrong #2).
 
-    Scheme-carrying roots (s3a:, hdfs:, ...) write through the Hadoop
-    FS layer — one overwriting PUT, which is itself the atomic commit
-    on an object store (r13, VERDICT r12 #2: the sidecar was the last
-    local-only write on a remote streaming state)."""
-    import json
-    import os
-
+    Written through fsutil.put_text_atomic (tmp + rename): a crash
+    mid-write must not leave a truncated sidecar that bricks every
+    later maintenance verb on the store."""
     from sqlite_vector_spark import fsutil
 
-    body = json.dumps(params, indent=1)
-    if fsutil.has_scheme(path):
-        # tmp+rename, same crash posture as the local os.replace path
-        # below (ADVICE r13 #4): never truncate the live sidecar
-        fsutil.put_text_atomic(
-            fsutil.active_spark(), f"{path.rstrip('/')}/{_SIDECAR}", body
-        )
-        return
-    os.makedirs(path, exist_ok=True)
-    # Write-temp-then-rename: a crash mid-dump must not leave a
-    # truncated sidecar that bricks every later maintenance verb on
-    # the store (os.replace is atomic on POSIX within a filesystem).
-    final = os.path.join(path, _SIDECAR)
-    tmp = final + ".tmp"
-    with open(tmp, "w") as f:
-        f.write(body)
-    os.replace(tmp, final)
+    fsutil.put_text_atomic(fsutil.active_spark(), f"{path.rstrip('/')}/{_SIDECAR}",
+                           json.dumps(params, indent=1))
 
 
 def read_params_sidecar(path: str) -> dict | None:
-    """Read a store's frozen-params sidecar; None when absent (stores
-    written before r11, or external layouts). Scheme-carrying roots
-    read through the Hadoop FS layer."""
-    import json
-    import os
-
+    """Read a store's frozen-params sidecar through fsutil; None when
+    absent (stores written before r11, or external layouts)."""
     from sqlite_vector_spark import fsutil
 
-    if fsutil.has_scheme(path):
-        spark = fsutil.active_spark()
-        p = f"{path.rstrip('/')}/{_SIDECAR}"
-        if not fsutil.exists(spark, p):
-            return None
-        text = fsutil.get_text(spark, p)
-    else:
-        p = os.path.join(path, _SIDECAR)
-        if not os.path.exists(p):
-            return None
-        with open(p) as f:
-            text = f.read()
+    spark = fsutil.active_spark()
+    p = f"{path.rstrip('/')}/{_SIDECAR}"
+    if not fsutil.exists(spark, p):
+        return None
     try:
-        return json.loads(text)
+        return json.loads(fsutil.get_text(spark, p))
     except json.JSONDecodeError as e:
         raise ValueError(
             f"corrupt frozen-params sidecar {p!r}: {e}. The store's "
@@ -365,34 +334,18 @@ def _params_equal(a, b) -> bool:
     return a == b
 
 
-def _preserve_sidecars(old_root: str, new_root: str) -> None:
-    """After a whole-directory swap (unpartitioned delete/compact),
-    copy ``_sv_*.json`` sidecars from the superseded layout into the
-    new one — the rewrite job only writes parquet, and losing the
-    params sidecar would downgrade every later maintenance call to
-    unchecked defaults. Scheme-carrying roots copy through the Hadoop
-    FS layer (sidecars are small JSON, a get+put is the copy)."""
-    import os
-    import shutil
-
+def _preserve_sidecars(spark, old_root: str, new_root: str) -> None:
+    """After a whole-directory swap, copy ``_sv_*.json`` sidecars from
+    the superseded layout into the new one — the rewrite job only
+    writes parquet, and losing the params sidecar would downgrade
+    every later maintenance call to unchecked defaults. One filtered
+    listing, then a get+put per sidecar (they are small JSON)."""
     from sqlite_vector_spark import fsutil
 
-    if fsutil.has_scheme(old_root) or fsutil.has_scheme(new_root):
-        spark = fsutil.active_spark()
-        for fname in fsutil.list_names(spark, old_root):
-            if fname.startswith("_sv_") and fname.endswith(".json"):
-                dest = f"{new_root.rstrip('/')}/{fname}"
-                if not fsutil.exists(spark, dest):
-                    fsutil.put_text(
-                        spark, dest,
-                        fsutil.get_text(spark, f"{old_root.rstrip('/')}/{fname}"),
-                    )
-        return
-    for fname in os.listdir(old_root):
-        if fname.startswith("_sv_") and fname.endswith(".json"):
-            dest = os.path.join(new_root, fname)
-            if not os.path.exists(dest):
-                shutil.copy2(os.path.join(old_root, fname), dest)
+    old, new = old_root.rstrip("/"), new_root.rstrip("/")
+    for fname in fsutil.list_names(spark, old, "_sv_*.json"):
+        if not fsutil.exists(spark, f"{new}/{fname}"):
+            fsutil.put_text(spark, f"{new}/{fname}", fsutil.get_text(spark, f"{old}/{fname}"))
 
 
 def _id_batch(spark, ids) -> DataFrame:
@@ -427,40 +380,48 @@ def _id_batch(spark, ids) -> DataFrame:
     return batch
 
 
-def _refuse_remote_flat(spark, path: str) -> None:
+def _refuse_remote_flat(spark, path: str, verb: str = "delete_ids") -> None:
     """Refuse a directory swap of a FLAT store on a remote filesystem,
     before anything is written: there the swap's rename is a copy."""
     from sqlite_vector_spark import fsutil
 
     if fsutil.is_remote(path, spark=spark):
         raise ValueError(
-            "delete_ids: this FLAT store is on a remote filesystem, where the "
+            f"{verb}: this FLAT store is on a remote filesystem, where the "
             "directory swap's rename is a copy; migrate it to a versioned "
             "store (sqlite_vector_spark.versioned.versioned_store_init) — its "
             "manifest pointer-flip swap needs no rename and runs on any "
-            "Hadoop-supported object store — or pass remote_ok=True to accept "
-            "the bounded copy cost (the streaming-state verbs do: one "
-            "micro-batch epoch dir per swap)"
+            "Hadoop-supported object store (delete_ids also takes "
+            "remote_ok=True to accept the bounded copy cost; the "
+            "streaming-state verbs do: one micro-batch epoch dir per swap)"
         )
 
 
-def _flat_swap(spark, path: str, write):
-    """The delete family's whole-directory swap, through fsutil on any
-    scheme: ``write(tmp)`` stages ``<root>__deleting``, the previous
-    ``<root>__pre_delete`` is dropped, the root moves there (kept for
-    draining readers until the next delete), the staged dir takes its
-    place, ``_sv_*.json`` sidecars carry over and cached listings are
-    refreshed. Returns what ``write`` returned."""
+def _flat_swap(spark, path: str, write, staging: str = "__deleting",
+               retained: str = "__pre_delete", settle=None):
+    """The one whole-directory swap of the delete family and
+    compact_store, through fsutil on any scheme: ``write(tmp)`` stages
+    ``<root><staging>`` (raising there leaves the store untouched),
+    the previous ``<root><retained>`` is dropped, the root moves there
+    (kept for draining readers until the next swap), the staged dir
+    takes its place, ``_sv_*.json`` sidecars carry over,
+    ``settle(root, old)`` runs when given (compact_store's salvage)
+    and cached listings are refreshed. Returns what ``write``
+    returned."""
     from sqlite_vector_spark import fsutil
 
     root = fsutil.norm_root(path)
-    tmp, old = root + "__deleting", root + "__pre_delete"
+    tmp, old = root + staging, root + retained
     out = write(tmp)
     if fsutil.exists(spark, old):
         fsutil.delete(spark, old, recursive=True)
     fsutil.rename(spark, root, old)
     fsutil.rename(spark, tmp, root)
-    _preserve_sidecars(old, root)
+    _preserve_sidecars(spark, old, root)
+    if settle is not None:
+        settle(root, old)
+    # Spark's shared FileStatusCache otherwise serves the PRE-swap
+    # listing to the next read, which fails on the vanished files
     spark.catalog.refreshByPath(path)
     return out
 
@@ -580,7 +541,7 @@ def _delete_ids(spark, path: str, batch: DataFrame, id_col: str = "id",
     prefix = f"{partition_col}="
     by_value = {
         unquote(d[len(prefix):]): d
-        for d in fsutil.list_dirs(spark, root)
+        for d in fsutil.list_names(spark, root, "*=*")
         if d.startswith(prefix)
     }
     unmatched = [v for v in affected if str(v) not in by_value]
@@ -601,7 +562,7 @@ def _delete_ids(spark, path: str, batch: DataFrame, id_col: str = "id",
     if fsutil.exists(spark, old):
         fsutil.delete(spark, old, recursive=True)
     fsutil.mkdirs(spark, old)
-    rewritten = set(fsutil.list_dirs(spark, tmp))
+    rewritten = set(fsutil.list_names(spark, tmp, "*=*"))
     for d in sorted(part_dirs):
         fsutil.rename(spark, f"{root}/{d}", f"{old}/{d}")
         if d in rewritten:  # absent == every row of d was deleted
@@ -615,22 +576,17 @@ def _delete_ids(spark, path: str, batch: DataFrame, id_col: str = "id",
     }
 
 
-def _detect_partition_col(root: str) -> str | None:
+def _detect_partition_col(spark, root: str) -> str | None:
     """Directory-partitioned parquet stores carry their partition
     column in the layout (``col=value`` dirs); detect it so cascade
-    deletes prune whatever layout each store was written with. Remote
-    (non-os.listdir-able) roots return None — the versioned dispatch
-    resolves their partition column from the manifest instead."""
-    import os
+    deletes prune whatever layout each store was written with. One
+    listing filtered to the ``*=*`` children; None when there are none
+    (a flat store, or a versioned root, whose partition column the
+    manifest carries)."""
+    from sqlite_vector_spark import fsutil
 
-    try:
-        names = os.listdir(root)
-    except OSError:
-        return None
-    for d in names:
-        if "=" in d and os.path.isdir(os.path.join(root, d)):
-            return d.split("=", 1)[0]
-    return None
+    names = fsutil.list_names(spark, root, "*=*")
+    return names[0].split("=", 1)[0] if names else None
 
 
 def delete_ids_everywhere(
@@ -693,7 +649,7 @@ def delete_ids_everywhere(
                 reports[name] = _rebuild_band_store_from_codes(spark, ctx, schemas)
             continue
         reports[name] = _delete_ids(
-            spark, path, batch, id_col, _detect_partition_col(path), sort_within,
+            spark, path, batch, id_col, _detect_partition_col(spark, path), sort_within,
             schemas=schemas,
         )
         reports[name]["strategy"] = "in_place"
@@ -834,7 +790,7 @@ def takedown(
         )
 
     def _delete(path, col, sort_within=None):
-        return _delete_ids(spark, path, ids_df, col, _detect_partition_col(path),
+        return _delete_ids(spark, path, ids_df, col, _detect_partition_col(spark, path),
                            sort_within, schemas=schemas)
 
     def _band_chain():
@@ -977,9 +933,9 @@ def verify_ids_absent(spark, catalog, table: str, column: str, ids, id_col: str 
     ]:
         if not state_dir:
             continue
-        # the shared epoch lister walks scheme-carrying state roots
-        # through the Hadoop FS layer (r13), so a remote state's
-        # residuals are audited, not silently skipped as "no dir"
+        # the shared epoch lister walks every state root through its
+        # Hadoop filesystem (fsutil), so a remote state's residuals
+        # are audited, not silently skipped as "no dir"
         scol = (read_params_sidecar(state_dir) or {}).get("id_col", "doc_id")
         report[tier] = 0
         for sub, col in subs:
@@ -1208,62 +1164,31 @@ def vacuum_store(path: str, spark=None) -> dict:
     belong to a running maintenance writer. Returns
     {removed: [...], bytes_freed: N}.
 
-    Versioned stores (pass ``spark`` so the manifest scheme can be
-    detected on any Hadoop filesystem) route to
-    versioned.vacuum_versioned — same retained-generation reclaim,
-    rename-free layout."""
+    Walks through fsutil with ``spark`` or the active session. A
+    versioned store routes to versioned.vacuum_versioned — same
+    retained-generation reclaim, rename-free layout."""
     import os
-    import shutil
 
-    if spark is not None:
-        from sqlite_vector_spark.versioned import is_versioned, vacuum_versioned
+    from sqlite_vector_spark import fsutil
+    from sqlite_vector_spark.versioned import is_versioned, vacuum_versioned
 
-        if is_versioned(spark, path):
-            return vacuum_versioned(spark, path)
-
-    root = os.path.abspath(path.rstrip("/"))
-    if not os.path.isdir(root):
+    spark = spark or fsutil.active_spark()
+    if is_versioned(spark, path):
+        return vacuum_versioned(spark, path)
+    root = fsutil.norm_root(path)
+    if not fsutil.is_dir(spark, root):
         raise RuntimeError(
             f"vacuum_store: store {path!r} does not exist — its retained "
             "layouts may be the only copy; refusing to remove them"
         )
-    if os.path.isdir(os.path.join(root, "_sv_manifests")):
-        # versioned store but no session to route through: returning
-        # {removed: []} here would look like success while superseded
-        # generations accumulate — the one silent-degrade this verb
-        # must not have (advisor-class gap, r12 review)
-        raise RuntimeError(
-            f"vacuum_store: {path!r} is a VERSIONED store (_sv_manifests "
-            "present); pass spark= so the vacuum can walk its manifests "
-            "— the flat-layout sweep would free nothing"
-        )
     removed, freed = [], 0
     for suffix in ("__pre_delete", "__pre_compact"):
         p = root + suffix
-        if os.path.isdir(p):
-            freed += dir_bytes(p)
-            shutil.rmtree(p)
+        if fsutil.is_dir(spark, p):
+            freed += fsutil.du_bytes(spark, p)
+            fsutil.delete(spark, p, recursive=True)
             removed.append(os.path.basename(p))
     return {"removed": removed, "bytes_freed": freed}
-
-
-def dir_bytes(path: str) -> int:
-    """Recursive on-disk byte total of a directory — the one
-    bytes-freed accounting used by every vacuum verb (vacuum_store
-    here, streaming.scoring.vacuum_stream_state), so a future behavior
-    change applies to all reports at once. Scheme-carrying roots stat
-    through the Hadoop FS ContentSummary."""
-    import os
-
-    from sqlite_vector_spark import fsutil
-
-    if fsutil.has_scheme(path):
-        return fsutil.du_bytes(fsutil.active_spark(), path)
-    return sum(
-        os.path.getsize(os.path.join(dp, f))
-        for dp, _, fs in os.walk(path)
-        for f in fs
-    )
 
 
 _VECTOR_TIERS = ("quantized", "ivf", "pq", "bq", "mih")
@@ -1313,7 +1238,7 @@ def compact_everywhere(
             continue
         reports[name] = compact_store(
             spark, path,
-            partition_col=_detect_partition_col(path),
+            partition_col=_detect_partition_col(spark, path),
             target_file_bytes=target_file_bytes,
             sort_within=sort_within,
         )
@@ -1348,15 +1273,6 @@ def vacuum_everywhere(spark, catalog, table: str, column: str) -> dict:
     return reports
 
 
-def _uri_to_local(uri: str) -> str:
-    """``file:`` URI from DataFrame.inputFiles() -> decoded local
-    path. Spark percent-encodes specials (space, %, non-ASCII string
-    partition values) in the URI form; os.walk sees the raw names."""
-    from urllib.parse import unquote
-
-    return unquote(uri.removeprefix("file:"))
-
-
 def compact_store(
     spark,
     path: str,
@@ -1375,8 +1291,12 @@ def compact_store(
     the within-file sort (pass ``sort_within`` to restore row-group
     min/max skipping, e.g. ['bv'] for the MIH band store).
 
-    Concurrency contract (local filesystem only — the swap uses
-    os.rename, so remote schemes are rejected up front):
+    A versioned store compacts through its manifests. A FLAT store is
+    swapped by _flat_swap (``__compacting`` staged, ``__pre_compact``
+    retained), so one on a remote filesystem, where that rename is a
+    copy, is refused up front (_refuse_remote_flat).
+
+    Concurrency contract:
     - Run from the single maintenance writer, between ingest triggers
       (e.g. after an availableNow stream drains). Files a concurrent
       writer commits AFTER the snapshot listing are still SALVAGED:
@@ -1398,7 +1318,9 @@ def compact_store(
     Returns {"files_before", "files_after", "rows", "salvaged_files"}.
     """
     import os
+    from urllib.parse import unquote, urlsplit
 
+    from sqlite_vector_spark import fsutil
     from sqlite_vector_spark.versioned import compact_versioned, is_versioned
 
     if is_versioned(spark, path):
@@ -1406,102 +1328,72 @@ def compact_store(
             spark, path, target_file_bytes=target_file_bytes,
             sort_within=sort_within,
         )
+    _refuse_remote_flat(spark, path, "compact_store")
     df = spark.read.parquet(path)
-    snapshot = df.inputFiles()
-    if not all(f.startswith("file:") or f.startswith("/") for f in snapshot):
-        raise ValueError(
-            "compact_store: this FLAT store is not on a local filesystem, and "
-            "the flat swap is os.rename; migrate it to a versioned store "
-            "(sqlite_vector_spark.versioned.versioned_store_init) — its "
-            "manifest pointer-flip swap needs no rename and runs on any "
-            "Hadoop-supported object store"
-        )
-    # inputFiles() returns URIs: percent-decode them to filesystem
-    # paths (a space / % / string partition value URL-encodes, and a
-    # raw-name snap_rel would then match NOTHING in _salvage_late_files
-    # — salvage would re-add EVERY pre-compaction file and double the
-    # store). Refuse up front if any decoded path fails stat: salvage
-    # bookkeeping keyed on an unverifiable snapshot is how silent
-    # duplication happens.
-    snapshot_paths = [_uri_to_local(f) for f in snapshot]
-    missing = [p for p in snapshot_paths if not os.path.isfile(p)]
+    # inputFiles() returns URIs: percent-decode their paths (a space /
+    # % / string partition value URL-encodes, and a raw-name snap_rel
+    # would then match NOTHING in _salvage_late_files — salvage would
+    # re-add EVERY pre-compaction file and double the store). Refuse
+    # up front if any decoded path is missing from one listing of the
+    # store: salvage bookkeeping keyed on an unverifiable snapshot is
+    # how silent duplication happens.
+    snapshot = [unquote(urlsplit(f).path) for f in df.inputFiles()]
+    root = fsutil.norm_root(path)
+    listed = dict(fsutil.walk_files(spark, root))
+    missing = [p for p in snapshot if p not in listed]
     if missing:
         raise RuntimeError(
-            f"compact_store: {len(missing)} snapshot file(s) cannot be stat'd "
-            f"after URI decode (e.g. {missing[0]!r}); aborting before any "
-            "rewrite — the salvage pass cannot be made reliable for this store"
+            f"compact_store: {len(missing)} snapshot file(s) are not in the "
+            f"store's listing after URI decode (e.g. {missing[0]!r}); aborting "
+            "before any rewrite — the salvage pass cannot be made reliable "
+            "for this store"
         )
-    files_before = len(snapshot)
-    rows = df.count()
+    root_path = fsutil.fs_for(spark, root)[0].toUri().getPath()
+    snap_rel = {os.path.relpath(p, root_path) for p in snapshot}
+    report = {"files_before": len(snapshot), "rows": df.count()}
     # size from the CURRENT files (bytes on disk ~ post-compression)
-    total_bytes = 0
-    for p in snapshot_paths:
-        try:
-            total_bytes += os.path.getsize(p)
-        except OSError:
-            pass  # raced a concurrent delete after the stat gate
-    if total_bytes == 0:
-        # stat failed (e.g. URL-encoded names): keep parallelism
-        # rather than collapsing a possibly huge store into one file
-        target_files = max(1, files_before // 8)
-    else:
-        target_files = max(1, int(total_bytes // target_file_bytes) + 1)
-    tmp = path.rstrip("/") + "__compacting"
-    old = path.rstrip("/") + "__pre_compact"
-    # one write job; files-per-partition bounded by repartitioning
-    # on the partition key (rows of one key land in one task)
-    _write_store(df, tmp, "overwrite", partition_col, sort_within,
-                 num_partitions=target_files)
-    out = spark.read.parquet(tmp)
-    if out.count() != rows:
-        raise RuntimeError("compaction row-count mismatch — store left untouched")
-    files_after = len(out.inputFiles())
-    if os.path.exists(old):
-        import shutil
+    target_files = max(1, sum(listed[p] for p in snapshot) // target_file_bytes + 1)
 
-        shutil.rmtree(old)  # previous compaction's retained layout
-    root = path.rstrip("/")
-    os.rename(root, old)
-    os.rename(tmp, root)
-    _preserve_sidecars(old, root)
-    root_abs = os.path.abspath(root)
-    snap_rel = {os.path.relpath(p, root_abs) for p in snapshot_paths}
-    salvaged = _salvage_late_files(root, old, snap_rel)
-    # drop this session's cached file listings for the swapped path —
-    # Spark's shared FileStatusCache otherwise serves the PRE-swap
-    # listing to the next read and it fails on the vanished files
-    spark.catalog.refreshByPath(path)
-    return {
-        "files_before": files_before,
-        "files_after": files_after,
-        "rows": rows,
-        "salvaged_files": salvaged,
-    }
+    def write(tmp):
+        # one write job; files-per-partition bounded by repartitioning
+        # on the partition key (rows of one key land in one task)
+        _write_store(df, tmp, "overwrite", partition_col, sort_within,
+                     num_partitions=target_files)
+        out = spark.read.parquet(tmp)
+        if out.count() != report["rows"]:
+            raise RuntimeError("compaction row-count mismatch — store left untouched")
+        report["files_after"] = len(out.inputFiles())
+
+    def settle(new_root, old):
+        report["salvaged_files"] = _salvage_late_files(spark, new_root, old, snap_rel)
+
+    _flat_swap(spark, path, write, "__compacting", "__pre_compact", settle)
+    return report
 
 
-def _salvage_late_files(root: str, old: str, snap_rel: set) -> int:
+def _salvage_late_files(spark, root: str, old: str, snap_rel: set) -> int:
     """Move data files a concurrent writer added AFTER the compaction
     snapshot (present in the superseded layout ``old`` but not in the
-    snapshot listing) into the new layout at ``root``. Spark part-
-    file names are UUID-unique, so no collisions. Marker files
-    (_SUCCESS, CRC) AND metadata directories (a streaming file-sink's
+    snapshot listing ``snap_rel``, paths relative to the store root)
+    into the new layout at ``root``, through fsutil. Spark part-file
+    names are UUID-unique, so no collisions. Marker files (_SUCCESS,
+    CRC) AND metadata directories (a streaming file-sink's
     ``_spark_metadata`` log — its manifest lists the pre-compaction
     files, so copying it over would point reads at vanished paths;
     the compacted store intentionally reads as a plain parquet
     directory) are skipped. Returns the number salvaged."""
     import os
 
+    from sqlite_vector_spark import fsutil
+
+    old_path = fsutil.fs_for(spark, old)[0].toUri().getPath()
     salvaged = 0
-    for dirpath, dirs, files in os.walk(old):
-        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
-        for fname in files:
-            if fname.startswith(("_", ".")):
-                continue
-            full = os.path.join(dirpath, fname)
-            rel = os.path.relpath(full, old)
-            if rel not in snap_rel:
-                dest = os.path.join(root, rel)
-                os.makedirs(os.path.dirname(dest), exist_ok=True)
-                os.rename(full, dest)
-                salvaged += 1
+    for full, _size in fsutil.walk_files(spark, old):
+        rel = os.path.relpath(full, old_path)
+        if rel in snap_rel or any(c.startswith(("_", ".")) for c in rel.split("/")):
+            continue
+        if "/" in rel:
+            fsutil.mkdirs(spark, f"{root}/{rel.rsplit('/', 1)[0]}")
+        fsutil.rename(spark, f"{old}/{rel}", f"{root}/{rel}")
+        salvaged += 1
     return salvaged

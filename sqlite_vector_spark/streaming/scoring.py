@@ -29,121 +29,6 @@ from sqlite_vector_spark.functions.distance import distance
 from sqlite_vector_spark.types import Metric
 
 
-class _LocalOps:
-    """Local-filesystem walk for the state verbs — byte-identical to
-    the pre-r13 os/shutil behavior (the hot path for every local
-    state; no JVM round-trips)."""
-
-    @staticmethod
-    def listdir(p):
-        import os
-
-        try:
-            return os.listdir(p)
-        except OSError:
-            return []
-
-    @staticmethod
-    def isdir(p):
-        import os
-
-        return os.path.isdir(p)
-
-    @staticmethod
-    def exists(p):
-        import os
-
-        return os.path.exists(p)
-
-    @staticmethod
-    def rename(src, dst):
-        import os
-
-        os.rename(src, dst)
-
-    @staticmethod
-    def rmtree(p):
-        import shutil
-
-        shutil.rmtree(p)
-
-    @staticmethod
-    def makedirs(p):
-        import os
-
-        os.makedirs(p)
-
-    @staticmethod
-    def du(p):
-        from sqlite_vector_spark.sinks import dir_bytes
-
-        return dir_bytes(p)
-
-
-class _HadoopOps:
-    """Scheme-resolved walk (fsutil / Hadoop FileSystem API): the SAME
-    verbs run on hdfs:/s3a:/... state roots (r13, VERDICT r12 #2 — a
-    streaming state written to an object store could previously never
-    be compacted, vacuumed, or taken down there). rename on an
-    S3-class store is a bounded copy of one epoch dir; the verbs run
-    stream-stopped from the single-maintenance-writer seat, so rename
-    atomicity is not load-bearing (fsutil docstring)."""
-
-    def __init__(self, spark):
-        self.spark = spark
-
-    def listdir(self, p):
-        from sqlite_vector_spark import fsutil
-
-        return fsutil.list_names(self.spark, p)
-
-    def isdir(self, p):
-        from sqlite_vector_spark import fsutil
-
-        return fsutil.is_dir(self.spark, p)
-
-    def exists(self, p):
-        from sqlite_vector_spark import fsutil
-
-        return fsutil.exists(self.spark, p)
-
-    def rename(self, src, dst):
-        from sqlite_vector_spark import fsutil
-
-        fsutil.rename(self.spark, src, dst)
-
-    def rmtree(self, p):
-        from sqlite_vector_spark import fsutil
-
-        fsutil.delete(self.spark, p, recursive=True)
-
-    def makedirs(self, p):
-        from sqlite_vector_spark import fsutil
-
-        fsutil.mkdirs(self.spark, p)
-
-    def du(self, p):
-        from sqlite_vector_spark import fsutil
-
-        return fsutil.du_bytes(self.spark, p)
-
-
-_LOCAL_OPS = _LocalOps()
-
-
-def _state_ops(root: str, spark=None):
-    """Pick the walk for a state root by scheme: plain paths keep the
-    os fast path, scheme-carrying roots go through the Hadoop FS layer
-    (resolving the active session when none is passed — raising, not
-    silently walking a remote root with os.listdir and reporting an
-    empty state)."""
-    from sqlite_vector_spark import fsutil
-
-    if fsutil.has_scheme(root):
-        return _HadoopOps(spark if spark is not None else fsutil.active_spark())
-    return _LOCAL_OPS
-
-
 def _epoch_ids(root: str, below: int | None = None, spark=None) -> list[int]:
     """Sorted epoch ids under a state root (``epoch=<digits>`` dirs).
 
@@ -151,12 +36,14 @@ def _epoch_ids(root: str, below: int | None = None, spark=None) -> list[int]:
     (``epoch=3.tmp``, ``epoch=3__pre_delete``, ``epoch=4__compacting``)
     must be skipped, not crash every micro-batch. ``below`` bounds the
     listing exclusively (a replayed epoch must not see its own crashed
-    attempt's partial output). Scheme-carrying roots list through the
-    Hadoop FS layer (r13); a missing root is [] either way."""
+    attempt's partial output). Lists through fsutil (the session's
+    Hadoop filesystem when ``spark`` is None); a missing root is []."""
     import re
 
-    ops = _state_ops(root, spark)
-    matches = (re.fullmatch(r"epoch=(\d+)", d) for d in ops.listdir(root))
+    from sqlite_vector_spark import fsutil
+
+    names = fsutil.list_names(spark or fsutil.active_spark(), root, "epoch=*")
+    matches = (re.fullmatch(r"epoch=(\d+)", d) for d in names)
     ids = sorted(int(m.group(1)) for m in matches if m)
     return ids if below is None else [e for e in ids if e < below]
 
@@ -373,9 +260,9 @@ def ingest_stream_neardup(
     the same inputs it saw the first time. Readers take
     ``labels/epoch=<max>`` as current; the extra ``epoch`` partition
     column on bands/docs is ignored by the probe joins. Any
-    Hadoop-supported filesystem (r13: epoch discovery and the sidecar
-    route through the FS layer on scheme-carrying roots; the same
-    single-maintenance-writer scope as compact_store)."""
+    Hadoop-supported filesystem (epoch discovery and the sidecar go
+    through fsutil; the same single-maintenance-writer scope as
+    compact_store)."""
     import os
 
     from sqlite_vector_spark.operators.dedup import (
@@ -814,14 +701,13 @@ def compact_stream_state(
     """
     import os
 
-    # scheme-resolved walk (r13): plain paths keep the os fast path,
-    # hdfs:/s3a:/... roots go through the Hadoop FS layer — the same
-    # verb, any supported store (os.path.join only concatenates with
-    # '/', which is URI-safe)
-    ops = _state_ops(state_dir, spark)
+    from sqlite_vector_spark import fsutil
+
+    # every walk goes through fsutil, so any Hadoop-supported store
+    # works (os.path.join only concatenates with '/', which is URI-safe)
     roots = [
         d for d in ("bands", "buckets", "docs", "vecs")
-        if ops.isdir(os.path.join(state_dir, d))
+        if fsutil.is_dir(spark, os.path.join(state_dir, d))
     ]
     labels_root = os.path.join(state_dir, "labels")
     if not roots:
@@ -839,6 +725,20 @@ def compact_stream_state(
             return {"below_epoch": None, "labels_dropped": [],
                     "read_paths": {"before": 0, "after": 0}}
         below_epoch = data_max  # exclusive: the newest epoch stays replayable
+
+    def retire(root: str, epochs) -> str:
+        """Move ``epoch=<e>`` dirs and their ``__pre_delete`` leftovers
+        into a fresh ``<root>__pre_compact`` (one retained generation)."""
+        retained = root + "__pre_compact"
+        if fsutil.exists(spark, retained):
+            fsutil.delete(spark, retained, recursive=True)
+        fsutil.mkdirs(spark, retained)
+        moved = [f"epoch={e}" for e in epochs]
+        leftovers = set(fsutil.list_names(spark, root, "*__pre_delete"))
+        moved += [f"{d}__pre_delete" for d in moved if f"{d}__pre_delete" in leftovers]
+        for d in moved:
+            fsutil.rename(spark, os.path.join(root, d), os.path.join(retained, d))
+        return retained
 
     report: dict = {"below_epoch": below_epoch, "labels_dropped": []}
     paths_before = paths_after = 0
@@ -872,20 +772,12 @@ def compact_stream_state(
         else:  # docs / vecs mirrors: flat (same no-coalesce rationale)
             df.write.mode("overwrite").parquet(staging)
         # retain superseded dirs (one generation), then promote staging
-        retained = root + "__pre_compact"
-        if ops.exists(retained):
-            ops.rmtree(retained)
-        ops.makedirs(retained)
-        for e in folded:
-            ops.rename(os.path.join(root, f"epoch={e}"), os.path.join(retained, f"epoch={e}"))
-            leftover = os.path.join(root, f"epoch={e}__pre_delete")
-            if ops.isdir(leftover):  # takedown retention of a folded epoch
-                ops.rename(leftover, os.path.join(retained, f"epoch={e}__pre_delete"))
+        retained = retire(root, folded)
         if name == "buckets":  # plane-family sidecar must survive the fold
             from sqlite_vector_spark.sinks import _preserve_sidecars
 
-            _preserve_sidecars(os.path.join(retained, f"epoch={base}"), staging)
-        ops.rename(staging, os.path.join(root, f"epoch={base}"))
+            _preserve_sidecars(spark, os.path.join(retained, f"epoch={base}"), staging)
+        fsutil.rename(spark, staging, os.path.join(root, f"epoch={base}"))
         spark.catalog.refreshByPath(root)
         report[name] = {"folded": folded, "base": base}
         paths_after += len(all_eps) - len(folded) + 1
@@ -894,18 +786,7 @@ def compact_stream_state(
     # labeling for every surviving reader), drop the dead ones
     label_eps = _epoch_ids(labels_root, below_epoch, spark=spark)
     if len(label_eps) > 1:
-        retained = labels_root + "__pre_compact"
-        if ops.exists(retained):
-            ops.rmtree(retained)
-        ops.makedirs(retained)
-        for e in label_eps[:-1]:
-            ops.rename(
-                os.path.join(labels_root, f"epoch={e}"),
-                os.path.join(retained, f"epoch={e}"),
-            )
-            leftover = os.path.join(labels_root, f"epoch={e}__pre_delete")
-            if ops.isdir(leftover):
-                ops.rename(leftover, os.path.join(retained, f"epoch={e}__pre_delete"))
+        retire(labels_root, label_eps[:-1])
         report["labels_dropped"] = label_eps[:-1]
         spark.catalog.refreshByPath(labels_root)
     report["read_paths"] = {"before": paths_before, "after": paths_after}
@@ -924,32 +805,31 @@ def vacuum_stream_state(state_dir: str, spark=None) -> dict:
     refuse-on-surprise posture as sinks.vacuum_store: an
     ``epoch=N__pre_delete`` whose live ``epoch=N`` dir is MISSING is
     skipped (a crashed swap may have left it the only copy), never
-    removed. Run once readers have drained. Scheme-carrying roots walk
-    through the Hadoop FS layer (pass ``spark`` or have an active
-    session; r13). Returns
+    removed. Run once readers have drained. Walks through fsutil (pass
+    ``spark`` or have an active session). Returns
     {"removed": [...], "skipped": [...], "bytes_freed": N}."""
     import os
 
-    ops = _state_ops(state_dir, spark)
+    from sqlite_vector_spark import fsutil
+
+    spark = spark or fsutil.active_spark()
     removed, skipped, freed = [], [], 0
     for name in ("bands", "buckets", "docs", "vecs", "labels"):
         root = os.path.join(state_dir, name)
-        if not ops.isdir(root):
+        if not fsutil.is_dir(spark, root):
             continue
         live = {f"epoch={e}" for e in _epoch_ids(root, spark=spark)}
         retained = root + "__pre_compact"
-        if ops.isdir(retained) and live:  # root still has a live epoch
-            freed += ops.du(retained)
-            ops.rmtree(retained)
+        if fsutil.is_dir(spark, retained) and live:  # root still has a live epoch
+            freed += fsutil.du_bytes(spark, retained)
+            fsutil.delete(spark, retained, recursive=True)
             removed.append(f"{name}__pre_compact")
-        for d in sorted(ops.listdir(root)):
-            if not d.endswith("__pre_delete"):
-                continue
+        for d in sorted(fsutil.list_names(spark, root, "*__pre_delete")):
             rel = os.path.join(name, d)
             if d.removesuffix("__pre_delete") in live:
                 p = os.path.join(root, d)
-                freed += ops.du(p)
-                ops.rmtree(p)
+                freed += fsutil.du_bytes(spark, p)
+                fsutil.delete(spark, p, recursive=True)
                 removed.append(rel)
             else:
                 skipped.append(rel)  # live twin missing: may be the only copy

@@ -2,7 +2,7 @@
 delete/compact/takedown family (round 12, VERDICT r11 #3).
 
 The flat maintenance verbs (sinks.delete_ids / compact_store) swap
-layouts with ``os.rename`` — atomic and cheap on a local filesystem,
+layouts with a directory rename — atomic and cheap on a local filesystem,
 impossible on an object store (S3-class stores have no rename; a
 "rename" is a copy of every byte). At the 100 TB design point the
 store lives on an object store, so the lifecycle verbs need a swap
@@ -394,23 +394,18 @@ def migrate_to_versioned(
     For a catalog-registered tier use sinks.migrate_tier_to_versioned,
     which also flips the catalog pointer so the router serves the
     versioned replica immediately."""
-    from sqlite_vector_spark import fsutil
+    from sqlite_vector_spark.sinks import _detect_partition_col, _preserve_sidecars
 
     srcp, destp = src.rstrip("/"), dest.rstrip("/")
     if is_versioned(spark, srcp):
         raise ValueError(f"migrate_to_versioned: {src!r} is already a versioned store")
     if partition_col == "auto":
-        partition_col = next(
-            (d.split("=", 1)[0] for d in fsutil.list_dirs(spark, srcp) if "=" in d),
-            None,
-        )
+        partition_col = _detect_partition_col(spark, srcp)
     df = spark.read.parquet(srcp)
     n = df.count()
     rep = versioned_store_init(df, destp, partition_col=partition_col,
                                sort_within=sort_within)
-    for fname in fsutil.list_names(spark, srcp):
-        if fname.startswith("_sv_") and fname.endswith(".json"):
-            _put_text(spark, f"{destp}/{fname}", _get_text(spark, f"{srcp}/{fname}"))
+    _preserve_sidecars(spark, srcp, destp)
     out = read_versioned(spark, destp).count()
     if out != n:  # manifest committed; fail loudly, source untouched
         raise RuntimeError(
@@ -556,7 +551,7 @@ def vacuum_versioned(spark: SparkSession, root: str, retain: int = 1) -> dict:
     removed_files, freed = [], 0
     for gen in _list_names(spark, f"{rootp}/data"):
         gen_prefix = f"data/{gen}"
-        # fsutil.walk_files: os fast path on scheme-less roots — the
+        # fsutil.walk_files: os fast path on local roots — the
         # per-file py4j round-trips of the Hadoop iterator dominated
         # the r13 probe's vacuum (97 s walking a 3x4096-dir store the
         # deletes clear in <1 s; VERDICT r13 #3's real cause)

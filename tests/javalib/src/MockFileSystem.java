@@ -101,6 +101,20 @@ public class MockFileSystem extends RawLocalFileSystem {
     return super.create(f, permission, overwrite, bufferSize, replication, blockSize, progress);
   }
 
+  /** The overload FileSystem.create(Path, boolean) lands on (no permission argument). */
+  @Override
+  public FSDataOutputStream create(
+      Path f,
+      boolean overwrite,
+      int bufferSize,
+      short replication,
+      long blockSize,
+      Progressable progress)
+      throws IOException {
+    log("create", f);
+    return super.create(f, overwrite, bufferSize, replication, blockSize, progress);
+  }
+
   @Override
   public FileStatus getFileStatus(Path f) throws IOException {
     log("stat", f);

@@ -45,8 +45,8 @@ def test_fs_ops_roundtrip(spark, tmp_path, scheme):
     assert not fsutil.is_dir(spark, f"{root}/a/x.json")
     assert fsutil.get_text(spark, f"{root}/a/x.json") == '{"k": 1}'
     assert fsutil.list_names(spark, root) == ["a"]
-    assert fsutil.list_dirs(spark, root) == ["a"]
-    assert fsutil.list_dirs(spark, f"{root}/a") == []  # file-only child
+    assert fsutil.list_names(spark, f"{root}/a", "*.json") == ["x.json"]
+    assert fsutil.list_names(spark, f"{root}/a", "*.txt") == []
     assert fsutil.list_names(spark, f"{root}/missing") == []
     assert fsutil.du_bytes(spark, f"{root}/a") > 0
     fsutil.rename(spark, f"{root}/a", f"{root}/b")
@@ -136,6 +136,76 @@ def test_is_remote_schemeless_follows_default_fs(spark, tmp_path):
         ).write.parquet(dest)
         with pytest.raises(ValueError, match="remote filesystem"):
             delete_ids(spark, dest, [1, 2], id_col="id")
+    finally:
+        hconf.set("fs.defaultFS", prev)
+
+
+def test_schemeless_paths_follow_default_fs(spark, tmp_path):
+    """A SCHEME-LESS store or state root resolves through fs.defaultFS,
+    as Spark's own data files do: with the default filesystem set to
+    the recording mock:, the sidecar verbs, the stream-epoch lister
+    behind verify_ids_absent, vector_quantize_cleanup and walk_files
+    must each show their metadata ops in the mock's log. An os.*
+    walk here would look at the driver's local disk instead — on an
+    object-store deployment it finds nothing, and a takedown receipt
+    reads clean while the ids are still stored."""
+    import pyspark.sql.functions as F
+
+    from sqlite_vector_spark.catalog import VectorCatalog
+    from sqlite_vector_spark.operators.quantize import vector_quantize_cleanup
+    from sqlite_vector_spark.sinks import (
+        read_params_sidecar,
+        verify_ids_absent,
+        write_params_sidecar,
+    )
+
+    jfs = spark._jvm.MockFileSystem
+
+    def ops_of(fn):
+        jfs.startRecording()
+        try:
+            fn()
+        finally:
+            raw = jfs.stopRecording()
+        return [tuple(line.split(" ", 1)) for line in raw.splitlines() if line]
+
+    vecs = spark.range(6).select(
+        F.col("id").alias("vec_id"), F.array(F.col("id").cast("float"), F.lit(1.0)).alias("vec"))
+    cat = VectorCatalog(str(tmp_path / "cat"))  # catalog JSON stays driver-local
+    cat.vector_init(vecs, "fs_default", "vec", "type=FLOAT32,dimension=2,distance=L2")
+    hconf = spark.sparkContext._jsc.hadoopConfiguration()
+    prev = hconf.get("fs.defaultFS", "file:///")
+    hconf.set("fs.defaultFS", "mock:///")
+    try:
+        side = str(tmp_path / "side")
+        ops = ops_of(lambda: write_params_sidecar(side, {"dim": 2}))
+        assert ("create", f"{side}/_sv_params.json.tmp") in ops
+        got = {}
+        ops = ops_of(lambda: got.update(p=read_params_sidecar(side)))
+        assert got["p"] == {"dim": 2}
+        assert ("open", f"{side}/_sv_params.json") in ops
+
+        state = str(tmp_path / "sstate")
+        write_params_sidecar(state, {"id_col": "doc_id"})
+        spark.createDataFrame([(1, "a"), (2, "b")], "doc_id bigint, text string").write.parquet(
+            f"{state}/docs/epoch=0")
+        spark.createDataFrame([(1, 1), (2, 1)], "id bigint, cluster bigint").write.parquet(
+            f"{state}/labels/epoch=0")
+        cat.set_stream_state("fs_default", "vec", state_dir=state)
+        ops = ops_of(lambda: got.update(
+            r=verify_ids_absent(spark, cat, "fs_default", "vec", [1])))
+        assert got["r"]["stream_state"] == 2  # doc 1 in docs/ and labels/
+        assert ("list", f"{state}/docs") in ops and ("list", f"{state}/labels") in ops
+
+        replica = str(tmp_path / "replica")
+        vecs.write.parquet(replica)
+        ops = ops_of(lambda: vector_quantize_cleanup(dest_path=replica))
+        assert ("delete", replica) in ops
+        assert not fsutil.exists(spark, replica)
+
+        ops = ops_of(lambda: got.update(w=fsutil.walk_files(spark, state)))
+        assert any(p.endswith(".parquet") for p, _ in got["w"])
+        assert ("list", state) in ops
     finally:
         hconf.set("fs.defaultFS", prev)
 

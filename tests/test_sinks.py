@@ -123,7 +123,7 @@ def test_compact_store_url_encoded_partition_values(spark, emb, tmp_path):
     }
 
 
-def test_compact_store_salvages_late_files(tmp_path):
+def test_compact_store_salvages_late_files(spark, tmp_path):
     """Files a concurrent writer commits between the snapshot listing
     and the swap end up only in the superseded layout; the salvage
     pass moves them into the new layout and leaves snapshot files
@@ -142,7 +142,7 @@ def test_compact_store_salvages_late_files(tmp_path):
     (old / "part=1" / "part-0002-late.parquet").write_bytes(b"late")
     (old / "_SUCCESS").write_bytes(b"")  # marker skipped
     snap_rel = {os.path.join("part=1", "part-0001-snap.parquet")}
-    n = _salvage_late_files(str(root), str(old), snap_rel)
+    n = _salvage_late_files(spark, str(root), str(old), snap_rel)
     assert n == 1
     assert (root / "part=1" / "part-0002-late.parquet").read_bytes() == b"late"
     assert not (root / "part=1" / "part-0001-snap.parquet").exists()

@@ -284,8 +284,8 @@ def test_projected_mih_store_falls_back_to_in_place(spark, emb, tmp_path):
     assert not (left & {3, 17}) and left
 
 
-def test_params_sidecar_atomic_write_and_corruption_refusal(tmp_path):
-    """The sidecar is written temp-then-os.replace so a crash cannot
+def test_params_sidecar_atomic_write_and_corruption_refusal(spark, tmp_path):
+    """The sidecar is written temp-then-rename so a crash cannot
     leave truncated JSON; if a sidecar IS corrupt (external cause),
     reading it raises a clear ValueError naming the file instead of a
     bare JSONDecodeError that bricks maintenance opaquely (advisor

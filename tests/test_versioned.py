@@ -289,21 +289,24 @@ def test_versioned_unpartitioned_full_wipe(spark, tmp_path):
         read_versioned(spark, path)
 
 
-def test_vacuum_store_refuses_versioned_without_spark(spark, tmp_path):
-    """vacuum_store(path) without spark= on a versioned store used to
-    return {removed: [], bytes_freed: 0} — success-shaped output while
-    superseded generations accumulate (r12 review). It now refuses and
-    names the fix; with spark= it routes to the manifest-aware
-    vacuum."""
+def test_vacuum_store_versioned_without_spark_uses_active_session(spark, tmp_path):
+    """vacuum_store(path) without spark= on a versioned store once
+    returned {removed: [], bytes_freed: 0} — success-shaped output
+    while superseded generations accumulate (r12 review). It now
+    resolves the active session and routes to the manifest-aware
+    vacuum, so its report equals the one with spark= passed."""
     from sqlite_vector_spark.sinks import vacuum_store
-    from sqlite_vector_spark.versioned import versioned_store_init
+    from sqlite_vector_spark.versioned import delete_ids_versioned, versioned_store_init
 
-    path = str(tmp_path / "vstore")
-    versioned_store_init(_frame(spark, 20), path, partition_col=None)
-    with pytest.raises(RuntimeError, match="VERSIONED"):
-        vacuum_store(path)
-    rep = vacuum_store(path, spark=spark)
-    assert "bytes_freed" in rep
+    def superseded(name):
+        path = str(tmp_path / name)
+        versioned_store_init(_frame(spark, 20), path, partition_col=None)
+        delete_ids_versioned(spark, path, [1, 2])  # one superseded generation
+        return path
+
+    rep = vacuum_store(superseded("a"))
+    assert rep["bytes_freed"] > 0
+    assert rep == vacuum_store(superseded("b"), spark=spark)
 
 
 def test_versioned_reader_survives_pointer_flip_until_vacuum(spark, tmp_path):

@@ -15,6 +15,18 @@ so that two trees' dumps diff clean when their plans are the same:
 
 It exits non-zero when any entry fails to build, so an identical
 failure in both trees cannot pass for an identical plan.
+
+``--formatted DIR TAG query...`` writes ``.explain('formatted')`` of
+each named ``sqlite_vector_spark.workload`` function to
+``DIR/<query>_<TAG>.txt`` (a trailing ``_q`` dropped from the file
+name) and prints its Exchange / Scan / Python-eval counts — the
+before/after dumps under ``plans/`` were made this way:
+
+    python tools/dump_plans.py /root/testdata/sf0.1 --formatted plans/r15 after \
+        ivf_recall_curve_q bq_band_join_q
+
+Explain only, no execution, so fixture builds are limited to what plan
+construction itself needs (centroid collects, cached stores).
 """
 
 from __future__ import annotations
@@ -30,6 +42,13 @@ if "--plans-dir" in sys.argv:
     _i = sys.argv.index("--plans-dir")
     PLANS_DIR = sys.argv[_i + 1]
     del sys.argv[_i : _i + 2]
+FORMATTED = None
+if "--formatted" in sys.argv:
+    _i = sys.argv.index("--formatted")
+    FORMATTED = sys.argv[_i + 1 :]
+    del sys.argv[_i:]
+    if len(FORMATTED) < 3:
+        sys.exit("usage: dump_plans.py [sf_dir] --formatted DIR TAG query...")
 SF = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
 
 
@@ -52,6 +71,33 @@ def dump_query_plans(spark, sf: str, out_dir: str) -> int:
         with open(os.path.join(out_dir, f"{name}.txt"), "w") as f:
             f.write(text + "\n")
     return errors
+
+
+def dump_formatted(spark, sf: str, out_dir: str, tag: str, names) -> None:
+    """Write each named workload function's formatted physical plan to
+    ``out_dir/<name>_<tag>.txt``; an explain failure is written in its
+    place."""
+    import io
+    from contextlib import redirect_stdout
+
+    from sqlite_vector_spark import workload as w
+
+    os.makedirs(out_dir, exist_ok=True)
+    for name in names:
+        try:
+            buf = io.StringIO()
+            with redirect_stdout(buf):
+                getattr(w, name)(spark, sf).explain("formatted")
+            plan = buf.getvalue()
+        except Exception as exc:  # noqa: BLE001
+            plan = f"EXPLAIN FAILED: {type(exc).__name__}: {exc}\n"
+        path = os.path.join(out_dir, f"{name.removesuffix('_q')}_{tag}.txt")
+        with open(path, "w") as f:
+            f.write(plan)
+        n_py = plan.count("EvalPython") + plan.count("MapInArrow")
+        print(f"{name.removesuffix('_q')}: {len(plan.splitlines())} lines, "
+              f"Exchange x{plan.count('Exchange')}, Scan x{plan.count('Scan parquet')}, "
+              f"PythonEval x{n_py} -> {path}")
 
 
 def condense(plan: str, max_lines: int = 40) -> str:
@@ -82,6 +128,11 @@ def main():
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")
+    if FORMATTED:
+        spark.conf.set("spark.sql.session.timeZone", "UTC")
+        dump_formatted(spark, SF, FORMATTED[0], FORMATTED[1], FORMATTED[2:])
+        spark.stop()
+        return
     if PLANS_DIR:
         errors = dump_query_plans(spark, SF, PLANS_DIR)
         spark.stop()
